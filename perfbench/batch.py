@@ -1,21 +1,12 @@
 """The ``batch`` workload: the canonical scan → shuffle → reduce →
-write job as an ``HJob``, a multi-get read-back, and registry rows
-checked against their DuckDB oracles."""
+write job as an ``HJob``, then multi-gets that read its sums back."""
 
 from __future__ import annotations
 
-import hashlib
-import os
-import sys
-
 import numpy as np
 
+from datagen import KEY_STRIDE
 from ops import rowkey
-
-# the executor-bound weighted-Jaccard prefix join; README.md says why
-# the other rows are left out
-REGISTRY_ROWS = ("dedup_weighted_jaccard",)
-ORACLE_TABLES = ("orders", "lineitem", "documents", "embeddings")
 
 
 def rollup_job(table, lineitem_path: str):
@@ -65,7 +56,7 @@ def rollup_job(table, lineitem_path: str):
 def monthly_sums(lineitem, keys: list[int]) -> dict[int, dict[str, int]]:
     """Per-key monthly quantity sums, computed once per run from the
     generated line items (the read-back's expected increments)."""
-    okey = lineitem.column("l_orderkey").to_numpy()
+    okey = lineitem.column("l_orderkey").to_numpy() // KEY_STRIDE
     mask = np.isin(okey, keys)
     months = np.datetime_as_string(
         lineitem.column("l_shipdate").to_numpy()[mask].astype("datetime64[M]")
@@ -85,6 +76,11 @@ def pair_count(lineitem) -> int:
     return len(np.unique(okey * 10_000 + month))
 
 
+def order_count(lineitem) -> int:
+    """Distinct orders in the line items: the rows one rollup touches."""
+    return len(np.unique(lineitem.column("l_orderkey").to_numpy()))
+
+
 def readback(table, spark, model, keys, sums, passes_done: int):
     rows = table.query2(spark).with_keys([rowkey(k) for k in keys]).with_all_columns().multi_map()
 
@@ -94,36 +90,4 @@ def readback(table, spark, model, keys, sums, passes_done: int):
         return len(rows) == len(keys) and all(model.matches(rows.get(rowkey(k)), k) for k in keys)
 
     return check
-
-
-# -- registry rows ------------------------------------------------------
-
-
-def result_hash(cols, rows) -> str:
-    """Order-insensitive hash of a result: its column names plus the
-    value multiset ``tools/check_correctness.py`` compares."""
-    tools = os.path.join(os.getcwd(), "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    from check_correctness import as_multiset
-
-    ms = as_multiset(list(cols), [tuple(r) for r in rows])
-    items = sorted(repr(kv) for kv in ms.items())
-    return hashlib.sha256(repr((sorted(cols), items)).encode()).hexdigest()
-
-
-def oracle_hashes(data_dir: str, oracle_sql: dict) -> dict[str, str]:
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        for t in ORACLE_TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data_dir}/{t}.parquet')")
-        out = {}
-        for name in REGISTRY_ROWS:
-            res = con.execute(oracle_sql[name])
-            out[name] = result_hash([d[0] for d in res.description], res.fetchall())
-        return out
-    finally:
-        con.close()
 

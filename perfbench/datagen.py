@@ -1,10 +1,11 @@
 """Seeded synthetic inputs for the benchmark.
 
-Writes the four parquet tables the workloads read (``orders``,
-``lineitem``, ``documents``, ``embeddings``) with the column names and
-types of the repo's TPC-H-ish sf0.1 fixtures: 150 k orders,
-~600 k line items, 5 000 documents over a 30-word vocabulary, 2 000
-64-d embeddings.  The same seed always yields byte-identical tables.
+Writes the two parquet tables the workloads read (``orders`` and
+``lineitem``) with the column names and types of the repo's TPC-H-ish
+fixtures: 75 k orders and ~300 k line items, half of sf0.1.  Order
+keys are spaced ``KEY_STRIDE`` apart over sf0.1's key range, so the
+6-digit rowkeys still fall into 15 prefix partitions.  The same seed
+always yields byte-identical tables.
 """
 
 from __future__ import annotations
@@ -15,21 +16,13 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-N_ORDERS = 150_000
-N_DOCS = 5_000
-N_VECS = 2_000
-DIM = 64
+N_ORDERS = 75_000
+KEY_STRIDE = 2
 
 STATUSES = np.array(["F", "O", "P"])
 PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
 FLAGS = np.array(["A", "N", "R"])
 LINESTATUS = np.array(["F", "O"])
-VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key line "
-    "merge order part query row scan slow small sort spark stream table the "
-    "value vector window"
-).split()
-LANGS = np.array(["en", "en", "en", "de", "es", "fr", "zh"])
 EPOCH_1995 = np.datetime64("1995-01-01", "us")
 DAY_US = 86_400_000_000
 
@@ -37,7 +30,7 @@ DAY_US = 86_400_000_000
 def orders(rng: np.random.Generator, n: int) -> pa.Table:
     days = rng.integers(0, 2404, n)  # 1995-01-01 .. 2001-08-01
     return pa.table({
-        "o_orderkey": pa.array(np.arange(n, dtype=np.int64)),
+        "o_orderkey": pa.array(np.arange(n, dtype=np.int64) * KEY_STRIDE),
         "o_custkey": pa.array(rng.integers(0, 15_000, n, dtype=np.int64)),
         "o_orderstatus": pa.array(STATUSES[rng.integers(0, 3, n)]),
         "o_totalprice": pa.array(np.round(rng.uniform(850.0, 550_000.0, n), 2)),
@@ -56,7 +49,7 @@ def lineitem(rng: np.random.Generator, order_dates: np.ndarray) -> pa.Table:
     price = np.round(qty * rng.uniform(900.0, 2_100.0, n), 2)
     ship = order_dates[okey] + rng.integers(1, 122, n) * DAY_US
     return pa.table({
-        "l_orderkey": pa.array(okey),
+        "l_orderkey": pa.array(okey * KEY_STRIDE),
         "l_partkey": pa.array(rng.integers(0, 20_000, n, dtype=np.int64)),
         "l_suppkey": pa.array(rng.integers(0, 1_000, n, dtype=np.int64)),
         "l_linenumber": pa.array(linenumber),
@@ -67,45 +60,6 @@ def lineitem(rng: np.random.Generator, order_dates: np.ndarray) -> pa.Table:
         "l_returnflag": pa.array(FLAGS[rng.integers(0, 3, n)]),
         "l_linestatus": pa.array(LINESTATUS[rng.integers(0, 2, n)]),
         "l_shipdate": pa.array(ship.astype("datetime64[us]"), pa.timestamp("us")),
-    })
-
-
-def documents(rng: np.random.Generator, n: int) -> pa.Table:
-    vocab = np.array(VOCAB)
-    source = rng.integers(0, 20, n)
-    texts = []
-    for s in source:
-        # src0 is the decontamination benchmark set; short documents keep
-        # its Bloom filter unsaturated, so the export manifest is non-empty
-        lo, hi = (5, 9) if s == 0 else (8, 90)
-        texts.append(" ".join(vocab[rng.integers(0, len(vocab), int(rng.integers(lo, hi)))]))
-    # near-duplicates (a few words swapped) and exact duplicates, so the
-    # dedup rows have pairs to find
-    for i in rng.choice(n, n // 20, replace=False):
-        src = texts[int(rng.integers(0, n))].split(" ")
-        for j in rng.integers(0, len(src), max(1, len(src) // 12)):
-            src[j] = vocab[int(rng.integers(0, len(vocab)))]
-        texts[i] = " ".join(src)
-    for i in rng.choice(n, max(1, n // 600), replace=False):
-        texts[i] = texts[int(rng.integers(0, n))]
-    return pa.table({
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array(LANGS[rng.integers(0, len(LANGS), n)]),
-        "source": pa.array([f"src{s}" for s in source]),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    })
-
-
-def embeddings(rng: np.random.Generator, n: int) -> pa.Table:
-    centers = rng.normal(size=(10, DIM))
-    label = rng.integers(0, 10, n)
-    v = centers[label] + rng.normal(scale=1.5, size=(n, DIM))
-    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
-    return pa.table({
-        "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-        "embedding": pa.array(list(v), pa.list_(pa.float32())),
-        "label": pa.array(label.astype(np.int32)),
     })
 
 
@@ -121,8 +75,6 @@ def generate(out_dir: str, seed: int, orders_only: bool = False) -> dict[str, pa
         tabs["lineitem"] = lineitem(
             rng, tabs["orders"].column("o_orderdate").to_numpy().astype("datetime64[us]")
         )
-        tabs["documents"] = documents(rng, N_DOCS)
-        tabs["embeddings"] = embeddings(rng, N_VECS)
     for name, t in tabs.items():
         pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"), compression="zstd")
     return tabs

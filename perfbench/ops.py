@@ -1,7 +1,8 @@
 """Seeded operation sequences.  Pure Python + NumPy: no Spark here, so
 the sequences can be checked without a session.
 
-Keys follow a Zipf (s = 1.0) law over the 150 k order keys, with the
+Keys are order indexes (order ``k`` has order key ``k * KEY_STRIDE``)
+and follow a Zipf (s = 1.0) law over the 75 k orders, with the
 rank → key mapping permuted by the seed, so hot keys land in different
 partitions on different seeds while one seed always yields one
 sequence.
@@ -14,18 +15,19 @@ from typing import Iterator
 
 import numpy as np
 
-from datagen import N_ORDERS
+from datagen import KEY_STRIDE, N_ORDERS
 
 MULTIGET_KEYS = 50
+READBACKS_PER_PASS = 2
 PUTS_PER_BATCH = 20
 INCREMENTS_PER_BATCH = 20
 GETS_PER_CYCLE = 4
 
 
 def rowkey(k: int) -> str:
-    """6-digit zero-padded rowkey; its first 2 characters name one of
-    the 15 storage partitions."""
-    return f"{k:06d}"
+    """6-digit zero-padded order key of order index ``k``; its first 2
+    characters name one of the 15 storage partitions."""
+    return f"{k * KEY_STRIDE:06d}"
 
 
 class ZipfKeys:
@@ -65,6 +67,9 @@ def kv_write_cycles(seed: int, stream: int = 0) -> Iterator[dict]:
         yield {"puts": puts, "increments": incs, "gets": gets}
 
 
-def batch_readback_keys(seed: int) -> list[int]:
+def batch_readback_keys(seed: int) -> list[list[int]]:
+    """The key sets of one pass's read-back multi-gets: disjoint, each
+    ``MULTIGET_KEYS`` keys."""
     rng = np.random.default_rng([seed, 3])
-    return sorted(ZipfKeys(rng).draw_distinct(MULTIGET_KEYS))
+    keys = ZipfKeys(rng).draw_distinct(MULTIGET_KEYS * READBACKS_PER_PASS)
+    return [sorted(keys[i:i + MULTIGET_KEYS]) for i in range(0, len(keys), MULTIGET_KEYS)]

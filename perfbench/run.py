@@ -1,15 +1,15 @@
-"""hpaste_spark benchmark: KV writes with read-your-writes gets, and a batch pass.
+"""hpaste_spark benchmark: KV writes with read-your-writes gets, and a batch rollup.
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload kv_write --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload kv_write --seed 1 --seconds 10 --trace 0
 
 One closed-loop client drives one workload from this process through
 the public API (``HTable.query2``/``put``/``increment``,
-``OpBase.execute``, ``HJob.run``, ``__spark_entry__.queries()``) on
-``get_spark()`` defaults, checks every result, and prints one JSON
-object as the last line of stdout.  ``--trace 0`` reports the
-end-to-end metrics, ``--trace 1`` the per-layer ones (see README.md).
+``OpBase.execute``, ``HJob.run``) on ``get_spark()`` defaults, checks
+every result, and prints one JSON object as the last line of stdout.
+Every workload reports every metric: ``--trace 0`` the end-to-end
+ones, ``--trace 1`` the per-layer ones (see README.md).
 A run record with the set-up breakdown, tail percentiles, sample
 counts and a host-drift probe goes to ``.perfbench/records/``; the
 traced run also writes its spans there.
@@ -40,35 +40,35 @@ import ops as opseq  # noqa: E402
 from spans import Tracer, spark_job_stats  # noqa: E402
 
 WORKLOADS = ("kv_write", "batch")
-WARM_WRITE_CYCLES = 2
+# after two untimed cycles the first timed write still ran ~15 % slow
+WARM_WRITE_CYCLES = 3
+# on a cold JVM the rollup takes ~2.5x its steady time, and the second
+# and third passes still ~1.4x and ~1.15x; after four untimed passes the
+# timed ones run flat
+WARM_PASSES = 4
 TAIL_BEYOND = 10
 MIN_WRITES = 3
-MIN_PASSES = 2
+MIN_PASSES = 3
 
-# What each workload reports: a metric is emitted only where the
-# workload runs the operation behind it as a main part.
-END_TO_END = {
-    "kv_write": ("setup_s", "get_p50_ms", "write_p50_ms", "ops_per_s", "ok_op_share",
-                 "bytes_stored_per_user_byte"),
-    "batch": ("setup_s", "pass_s", "ok_op_share", "bytes_stored_per_user_byte"),
-}
-_COMMON = ("process.peak_rss_mb", "spark.stages_per_op", "spark.tasks_per_op",
-           "spark.executor_run_ms_per_op", "spark.executor_cpu_ms_per_op", "spark.gc_ms_per_op",
-           "spark.shuffle_bytes_per_op")
-_READ = ("storage.read_ms", "query.to_df_ms", "query.exec_ms", "row.build_rows_ms")
-PER_LAYER = {
-    "kv_write": (*_READ, *_COMMON, "storage.read_calls_per_op", "query.spark_jobs_per_get",
-                 "mutations.execute_ms", "mutations.spark_jobs_per_batch",
-                 "storage.write_partial_ms", "storage.vacuum_ms",
-                 "storage.partitions_rewritten_share", "storage.bytes_written_per_user_byte",
-                 "storage.files_per_snapshot", "trace.overhead_pct", "trace.self_cost_pct"),
-    "batch": (*_READ, *_COMMON, "storage.write_ms", "storage.vacuum_ms",
-              "mutations.bulk_merge_ms", "job.map_ms", "job.reduce_ms", "job.sink_ms",
-              "job.spark_jobs", "registry.dedup_weighted_jaccard.build_s",
-              "registry.dedup_weighted_jaccard.plan_s", "registry.dedup_weighted_jaccard.exec_s",
-              "registry.dedup_weighted_jaccard.spark_jobs", "dedup.weighted_jaccard_pairs_ms",
-              "trace.self_cost_pct"),
-}
+# Every workload runs a read op and a write op: kv_write a point get
+# and one OpBase batch, batch a 50-key read-back multi-get and the
+# HJob rollup (whose sink merges into the table).  So every workload
+# reports every metric below; a cycle is kv_write's batch + its gets,
+# or batch's rollup + its read-backs.
+ROLE = {"get": "read", "readback": "read", "write": "write", "rollup": "write"}
+END_TO_END = ("setup_s", "cycle_s", "read_p50_ms", "write_p50_ms", "ok_op_share",
+              "bytes_stored_per_user_byte")
+PER_LAYER = (
+    "process.peak_rss_mb",
+    "storage.read_ms", "storage.read_calls_per_read", "query.to_df_ms", "query.exec_ms",
+    "row.build_rows_ms", "spark.jobs_per_read",
+    "mutations.self_ms", "storage.write_ms", "storage.vacuum_ms",
+    "storage.partitions_rewritten_share", "storage.bytes_written_per_user_byte",
+    "storage.files_per_snapshot", "spark.jobs_per_write",
+    "spark.stages_per_op", "spark.tasks_per_op", "spark.executor_run_ms_per_op",
+    "spark.executor_cpu_ms_per_op", "spark.gc_ms_per_op", "spark.shuffle_bytes_per_op",
+    "trace.overhead_pct", "trace.self_cost_pct",
+)
 
 
 def tail(xs: list[float]) -> tuple[float, float] | None:
@@ -91,6 +91,17 @@ def cpu_probe() -> float:
     return time.perf_counter() - t0
 
 
+def steal_s() -> float | None:
+    """CPU time the hypervisor gave other guests (the ``steal`` column of
+    ``/proc/stat``), in seconds; None where the kernel does not say."""
+    try:
+        with open("/proc/stat") as fh:
+            fields = fh.readline().split()
+        return int(fields[8]) / os.sysconf("SC_CLK_TCK")
+    except (OSError, IndexError, ValueError):
+        return None
+
+
 def median_ms(xs: list[float]) -> float:
     return statistics.median(xs) * 1000.0
 
@@ -103,15 +114,14 @@ class Run:
         self.tracing = bool(args.trace)
         self.tracer = Tracer()
         self.spark = None
-        self.entry = None
         self.attempted = 0
         self.failed = 0
         self.kind_attempts: dict[str, int] = {}
-        # kv_write traces every other cycle, so each traced cycle has the
-        # same shape and the untraced ones measure the tracing overhead;
-        # batch traces every op
-        self.trace_on = args.workload == "batch"
+        # a traced run traces every other cycle, so each traced cycle has
+        # the same shape and the untraced ones measure the tracing overhead
+        self.trace_on = False
         self.walls: dict[str, list[float]] = {}
+        self.cycles: list[float] = []
         self.traced: list[dict] = []  # per traced op: kind, wall, spark stats
         self.untraced: dict[str, list[float]] = {}
         self.extra: dict[str, list[float]] = {}  # per-layer values gathered by checks
@@ -134,9 +144,6 @@ class Run:
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
         })
         self.spark.sparkContext.setLogLevel("ERROR")
-        import __spark_entry__
-
-        self.entry = __spark_entry__
 
     def peak_rss_mb(self) -> float:
         py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
@@ -229,14 +236,14 @@ class Run:
 
     # -- tracing ----------------------------------------------------------
     def install_spans(self) -> None:
-        from hpaste_spark.operators import dedup, mutations
+        from hpaste_spark.operators import mutations
         from hpaste_spark.plans import query
         from hpaste_spark.sources.storage import ParquetStorage
 
         w = self.tracer.wrap
         w(ParquetStorage, "read", "storage.read")
         w(ParquetStorage, "write", "storage.write")
-        w(ParquetStorage, "write_partial", "storage.write_partial")
+        w(ParquetStorage, "write_partial", "storage.write")
         w(ParquetStorage, "vacuum_versions", "storage.vacuum")
         w(query.Query2Builder, "to_df", "query.to_df")
         for terminal in ("single_option", "multi_map"):
@@ -244,7 +251,6 @@ class Run:
         w(query, "build_rows", "row.build_rows")
         w(mutations.OpBase, "execute", "mutations.execute")
         w(mutations, "bulk_merge_increments", "mutations.bulk_merge")
-        w(dedup, "weighted_jaccard_pairs", "dedup.weighted_jaccard_pairs")
 
     # -- workloads --------------------------------------------------------
     def build_table(self, orders_path: str, name: str):
@@ -252,33 +258,41 @@ class Run:
         table = kv.build(self.spark, orders_path, os.path.join(self.dir, name))
         return table, time.perf_counter() - t0
 
-    def write_cycle(self, table, model, cycle, timed=True):
+    def write_cycle(self, table, model, cycle, timed=True) -> float:
         spark = self.spark
-        n_parts = len([e for e in os.listdir(
-            table.storage.snapshot_dir(table.storage.current_version())) if e.startswith("_kp=")])
+        # logical bytes of the batch: rowkey + status per put, rowkey +
+        # "w" + 8 per increment
+        user = sum(6 + len(s) for s in cycle["puts"].values()) + len(cycle["increments"]) * (6 + 1 + 8)
 
         def call():
             check = kv.write_batch(table, spark, model, cycle["puts"], cycle["increments"])
-            return lambda: check() and (not timed or self.note_write(table, cycle, n_parts))
+            return lambda: check() and (not timed or self.note_write(table, user))
 
-        self.op("write", call, timed)
+        wall = self.op("write", call, timed)
         for k in cycle["gets"]:
-            self.op("get", lambda k=k: kv.get(table, spark, model, k), timed)
+            wall += self.op("get", lambda k=k: kv.get(table, spark, model, k), timed)
+        return wall
 
-    def note_write(self, table, cycle, n_parts: int) -> bool:
+    def note_write(self, table, user_bytes: int) -> bool:
+        """In a traced run, record what a commit left on disk: the share
+        of partitions holding a freshly written file, the fresh bytes per
+        logical byte written, and the snapshot's file count."""
         if not self.tracing:
             return True
-        touched = {opseq.rowkey(k)[:2] for k in (*cycle["puts"], *cycle["increments"])}
-        self.extra.setdefault("storage.partitions_rewritten_share", []).append(len(touched) / n_parts)
         root = table.storage.snapshot_dir(table.storage.current_version())
-        fresh = 0
-        for dirpath, _, names in os.walk(root):
-            for name in names:
-                st = os.stat(os.path.join(dirpath, name))
-                if st.st_nlink == 1:  # not hardlinked from the previous snapshot
-                    fresh += st.st_size
-        user = sum(6 + len(s) for s in cycle["puts"].values()) + len(cycle["increments"]) * (6 + 1 + 8)
-        self.extra.setdefault("storage.bytes_written_per_user_byte", []).append(fresh / user)
+        parts = [e for e in os.listdir(root) if e.startswith("_kp=")]
+        fresh = rewritten = 0
+        for part in parts:
+            part_fresh = 0
+            for dirpath, _, names in os.walk(os.path.join(root, part)):
+                for name in names:
+                    st = os.stat(os.path.join(dirpath, name))
+                    if st.st_nlink == 1:  # not hardlinked from the previous snapshot
+                        part_fresh += st.st_size
+            fresh += part_fresh
+            rewritten += part_fresh > 0
+        self.extra.setdefault("storage.partitions_rewritten_share", []).append(rewritten / len(parts))
+        self.extra.setdefault("storage.bytes_written_per_user_byte", []).append(fresh / user_bytes)
         self.extra.setdefault("storage.files_per_snapshot", []).append(kv.snapshot_bytes(table)[1])
         return True
 
@@ -298,15 +312,16 @@ class Run:
             if self.kv_done(t_start):
                 break
             self.trace_on = not self.trace_on
-            self.write_cycle(table, model, cycle)
-        m = self.latency_metrics()
-        m["bytes_stored_per_user_byte"] = (kv.snapshot_bytes(table)[0] / model.user_bytes(), "ratio")
-        return m
+            self.cycles.append(self.write_cycle(table, model, cycle))
+        return {"bytes_stored_per_user_byte": (kv.snapshot_bytes(table)[0] / model.user_bytes(), "ratio")}
 
-    def batch_pass(self, st, data_dir, oracle, timed=True) -> float:
-        spark, entry = self.spark, self.entry
-        table, model, keys, sums = st["table"], st["model"], st["keys"], st["sums"]
+    def batch_pass(self, st, data_dir, timed=True) -> float:
+        spark = self.spark
+        table, model, sums = st["table"], st["model"], st["sums"]
         job = batch.rollup_job(table, os.path.join(data_dir, "lineitem.parquet"))
+        # each pass starts from a collected heap, so garbage left by the
+        # previous pass is not billed to this one
+        spark.sparkContext._jvm.System.gc()
 
         def rollup():
             result = job.run(spark)
@@ -314,63 +329,52 @@ class Run:
             if timed and self.tracing:
                 for task, secs in result.timings.items():
                     self.extra.setdefault(f"job.{task}_ms", []).append(secs * 1000.0)
-            return lambda: result.ok and result.task_order == ["map", "reduce", "sink"]
+
+            def check():
+                return (result.ok and result.task_order == ["map", "reduce", "sink"]
+                        and (not timed or self.note_write(table, st["rollup_user_bytes"])))
+
+            return check
 
         wall = self.op("rollup", rollup, timed)
-        wall += self.op("readback", lambda: batch.readback(
-            table, spark, model, keys, sums, st["passes"]), timed)
-        queries = entry.queries()
-        for name in batch.REGISTRY_ROWS:
-
-            def call(name=name):
-                with self.tracer.span(f"registry.{name}.build"):
-                    df = queries[name](spark, data_dir)
-                if self.tracer.enabled:
-                    with self.tracer.span(f"registry.{name}.plan"):
-                        df._jdf.queryExecution().executedPlan()
-                with self.tracer.span(f"registry.{name}.exec"):
-                    rows = df.collect()
-                cols = df.columns
-                return lambda: batch.result_hash(cols, rows) == oracle[name]
-
-            wall += self.op(name, call, timed)
+        # likewise the read-backs do not pay for the rollup's garbage
+        spark.sparkContext._jvm.System.gc()
+        for keys in st["keys"]:
+            wall += self.op("readback", lambda keys=keys: batch.readback(
+                table, spark, model, keys, sums, st["passes"]), timed)
         return wall
 
     def setup_batch(self, tabs, data_dir):
         table, build_s = self.build_table(os.path.join(data_dir, "orders.parquet"), "batch")
         keys = opseq.batch_readback_keys(self.args.seed)
         model = kv.Model(tabs["orders"])
+        lineitem = tabs["lineitem"]
+        pairs = batch.pair_count(lineitem)
+        # each (order, month) pair is one hits entry: 7-char key + 8 bytes
+        st = {"table": table, "model": model, "keys": keys, "passes": 0,
+              "sums": batch.monthly_sums(lineitem, [k for ks in keys for k in ks]),
+              "user_bytes": model.user_bytes() + pairs * (7 + 8),
+              "rollup_user_bytes": batch.order_count(lineitem) * 6 + pairs * (7 + 8)}
         t0 = time.perf_counter()
-        oracle = batch.oracle_hashes(data_dir, self.entry.oracle_sql())
-        self.record["oracle_s"] = time.perf_counter() - t0
-        st = {"table": table, "model": model, "keys": keys, "lineitem": tabs["lineitem"],
-              "sums": batch.monthly_sums(tabs["lineitem"], keys), "passes": 0,
-              "user_bytes": model.user_bytes(), "oracle": oracle}
-        t0 = time.perf_counter()
-        self.batch_pass(st, data_dir, oracle, timed=False)
+        for _ in range(WARM_PASSES):
+            self.batch_pass(st, data_dir, timed=False)
         return st, build_s, time.perf_counter() - t0
 
     def run_batch(self, st, data_dir) -> dict:
-        passes = []
         t_start = time.perf_counter()
         # at least MIN_PASSES, then whole passes that fit in the window
-        while len(passes) < MIN_PASSES or (time.perf_counter() - t_start
-                                           + statistics.median(passes) <= self.args.seconds):
-            # each pass starts from a collected heap, so garbage left by
-            # the previous pass is not billed to this one
-            self.spark.sparkContext._jvm.System.gc()
-            passes.append(self.batch_pass(st, data_dir, st["oracle"]))
-        self.record["pass_s"] = passes
+        while len(self.cycles) < MIN_PASSES or (time.perf_counter() - t_start
+                                                + statistics.median(self.cycles) <= self.args.seconds):
+            self.trace_on = not self.trace_on
+            self.cycles.append(self.batch_pass(st, data_dir))
         stored = kv.snapshot_bytes(st["table"])[0]
-        # each (order, month) pair is one hits entry: 7-char key + 8 bytes
-        user = st["user_bytes"] + batch.pair_count(st["lineitem"]) * (7 + 8)
-        return {"pass_s": (statistics.median(passes), "s"),
-                "bytes_stored_per_user_byte": (stored / user, "ratio")}
+        return {"bytes_stored_per_user_byte": (stored / st["user_bytes"], "ratio")}
 
     # -- the run ------------------------------------------------------------
     def execute(self) -> dict:
         a = self.args
         self.record["probe_start_s"] = cpu_probe()
+        steal0 = steal_s()
         data_dir = os.path.join(self.dir, "data")
         t0 = time.perf_counter()
         tabs = datagen.generate(data_dir, a.seed, orders_only=a.workload != "batch")
@@ -391,17 +395,25 @@ class Run:
         t_loop = time.perf_counter()
         m = self.run_batch(state, data_dir) if a.workload == "batch" else self.run_kv(state)
         self.record["loop_s"] = time.perf_counter() - t_loop
+        m.update(self.latency_metrics())
         m["setup_s"] = (setup_s, "s")
         m["ok_op_share"] = ((self.attempted - self.failed) / max(1, self.attempted), "share")
         self.record["probe_end_s"] = cpu_probe()
-        self.record["walls"] = self.walls
+        steal1 = steal_s()
+        if steal0 is not None and steal1 is not None:
+            self.record["steal_s"] = steal1 - steal0
+        self.record.update(walls=self.walls, cycles=self.cycles)
 
-        metrics = self.layer_metrics() if self.tracing else m
         if self.tracing:
-            metrics["process.peak_rss_mb"] = (self.peak_rss_mb(), "MB")
-        want = (PER_LAYER if self.tracing else END_TO_END)[a.workload]
-        if set(metrics) != set(want):
-            raise RuntimeError(f"metrics {sorted(metrics)} differ from the declared {sorted(want)}")
+            m = self.layer_metrics()
+            m["process.peak_rss_mb"] = (self.peak_rss_mb(), "MB")
+        want = PER_LAYER if self.tracing else END_TO_END
+        missing = set(want) - set(m)
+        if missing:
+            raise RuntimeError(f"declared metrics {sorted(missing)} were not measured")
+        # what the layers give beyond the declared metrics stays in the record
+        self.record["diagnostics"] = {k: v[0] for k, v in m.items() if k not in want}
+        metrics = {k: m[k] for k in want}
         self.record["metrics"] = {k: v[0] for k, v in metrics.items()}
         self.write_record()
         return {
@@ -412,21 +424,19 @@ class Run:
         }
 
     def latency_metrics(self) -> dict:
-        m = {}
+        m = {"cycle_s": (statistics.median(self.cycles), "s")}
         tails = {}
-        for kind in ("get", "write"):
-            xs = self.walls[kind]
-            m[f"{kind}_p50_ms"] = (median_ms(xs), "ms")
+        for role in ("read", "write"):
+            xs = [w for kind, ws in self.walls.items() if ROLE[kind] == role for w in ws]
+            m[f"{role}_p50_ms"] = (median_ms(xs), "ms")
             # with the samples one run affords the tail rule's percentile
             # sits at or below the median: a diagnostic, not a metric
             t = tail(xs)
             if t is not None:
-                tails[kind] = {"ms": t[0] * 1000.0, "percentile": t[1], "samples": len(xs)}
-                print(f"perfbench: {kind} tail p{t[1]:.1f} of {len(xs)} samples "
+                tails[role] = {"ms": t[0] * 1000.0, "percentile": t[1], "samples": len(xs)}
+                print(f"perfbench: {role} tail p{t[1]:.1f} of {len(xs)} samples "
                       f"= {t[0] * 1000.0:.1f} ms", file=sys.stderr)
         self.record["tails"] = tails
-        busy = sum(sum(v) for v in self.walls.values())
-        m["ops_per_s"] = ((self.attempted - self.failed) / busy, "1/s")
         return m
 
     def layer_metrics(self) -> dict:
@@ -449,37 +459,30 @@ class Run:
             raise RuntimeError(f"span self times do not sum to op wall time (rel err {err})")
 
         m: dict[str, tuple[float, str]] = {}
-        for span, metric in (
-            ("storage.read", "storage.read_ms"),
-            ("storage.write", "storage.write_ms"),
-            ("storage.write_partial", "storage.write_partial_ms"),
-            ("storage.vacuum", "storage.vacuum_ms"),
-            ("query.to_df", "query.to_df_ms"),
-            ("query.exec", "query.exec_ms"),
-            ("row.build_rows", "row.build_rows_ms"),
-            ("mutations.execute", "mutations.execute_ms"),
-            ("mutations.bulk_merge", "mutations.bulk_merge_ms"),
-            ("dedup.weighted_jaccard_pairs", "dedup.weighted_jaccard_pairs_ms"),
+        for spans, metric in (
+            (("storage.read",), "storage.read_ms"),
+            (("storage.write",), "storage.write_ms"),
+            (("storage.vacuum",), "storage.vacuum_ms"),
+            (("query.to_df",), "query.to_df_ms"),
+            (("query.exec",), "query.exec_ms"),
+            (("row.build_rows",), "row.build_rows_ms"),
+            (("mutations.execute", "mutations.bulk_merge"), "mutations.self_ms"),
         ):
-            if span in by_name:
-                m[metric] = (median_ms(by_name[span]), "ms")
-        gets = [o for o in self.traced if o["kind"] == "get"]
-        if gets:
-            m["storage.read_calls_per_op"] = (statistics.mean(
-                per_op[o["op_id"]].get("storage.read", 0) for o in gets), "count")
-        jobs_metric = {"get": "query.spark_jobs_per_get", "write": "mutations.spark_jobs_per_batch",
-                       "rollup": "job.spark_jobs"}
-        for name in batch.REGISTRY_ROWS:
-            jobs_metric[name] = f"registry.{name}.spark_jobs"
-            for part in ("build", "plan", "exec"):
-                # inclusive: build covers the callable's own eager jobs
-                xs = [s.seconds for s in tr.spans if s.name == f"registry.{name}.{part}"]
-                if xs:
-                    m[f"registry.{name}.{part}_s"] = (statistics.median(xs), "s")
-        for kind, metric in jobs_metric.items():
-            xs = [o["jobs"] for o in self.traced if o["kind"] == kind]
+            xs = [x for span in spans for x in by_name.get(span, ())]
             if xs:
-                m[metric] = (statistics.mean(xs), "count")
+                m[metric] = (median_ms(xs), "ms")
+        reads = [o for o in self.traced if ROLE[o["kind"]] == "read"]
+        if reads:
+            m["storage.read_calls_per_read"] = (statistics.mean(
+                per_op[o["op_id"]].get("storage.read", 0) for o in reads), "count")
+        for role in ("read", "write"):
+            xs = [o["jobs"] for o in self.traced if ROLE[o["kind"]] == role]
+            if xs:
+                m[f"spark.jobs_per_{role}"] = (statistics.mean(xs), "count")
+        # per op kind, for the record: jobs per get, per OpBase batch, per rollup
+        for kind in sorted({o["kind"] for o in self.traced}):
+            m[f"spark.jobs_per_op.{kind}"] = (statistics.mean(
+                o["jobs"] for o in self.traced if o["kind"] == kind), "count")
         if self.traced:
             for key, metric, unit in (
                 ("stages", "spark.stages_per_op", "count"),
@@ -527,11 +530,10 @@ def parse_args(argv):
 def main(argv=None) -> int:
     args = parse_args(argv)
     root = os.getcwd()
-    for need in ("hpaste_spark/__init__.py", "__spark_entry__.py", "tools/check_correctness.py"):
-        if not os.path.isfile(os.path.join(root, need)):
-            print(f"perfbench: {need} not found; run from the root of an hpaste_spark checkout",
-                  file=sys.stderr)
-            return 2
+    if not os.path.isfile(os.path.join(root, "hpaste_spark", "__init__.py")):
+        print("perfbench: hpaste_spark/ not found; run from the root of an hpaste_spark checkout",
+              file=sys.stderr)
+        return 2
     sys.path.insert(0, root)
     os.environ["TZ"] = "UTC"  # collected timestamps compare against UTC model values
     time.tzset()

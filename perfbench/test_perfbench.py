@@ -25,7 +25,7 @@ def test_one_seed_yields_one_op_sequence():
 
     assert cycles(7) == cycles(7) and cycles(7) != cycles(8)
     assert cycles(7) != cycles(7, stream=1)
-    assert ops.batch_readback_keys(7) == ops.batch_readback_keys(7)
+    assert ops.batch_readback_keys(7) == ops.batch_readback_keys(7) != ops.batch_readback_keys(8)
 
 
 def test_write_cycles_read_back_their_own_writes():
@@ -34,7 +34,10 @@ def test_write_cycles_read_back_their_own_writes():
         assert len(written) == ops.PUTS_PER_BATCH + ops.INCREMENTS_PER_BATCH
         assert all(0 <= k < datagen.N_ORDERS for k in written)
         assert len(cycle["gets"]) == ops.GETS_PER_CYCLE and set(cycle["gets"]) <= written
-    assert len(set(ops.batch_readback_keys(3))) == ops.MULTIGET_KEYS
+    groups = ops.batch_readback_keys(3)
+    assert len(groups) == ops.READBACKS_PER_PASS
+    assert all(len(g) == ops.MULTIGET_KEYS for g in groups)
+    assert len({k for g in groups for k in g}) == ops.MULTIGET_KEYS * ops.READBACKS_PER_PASS
 
 
 def test_one_seed_yields_one_dataset(tmp_path):
@@ -43,7 +46,9 @@ def test_one_seed_yields_one_dataset(tmp_path):
     for name in a:
         assert a[name].equals(b[name]), name
     assert a["orders"].num_rows == datagen.N_ORDERS
-    assert 500_000 < a["lineitem"].num_rows < 700_000
+    assert 250_000 < a["lineitem"].num_rows < 350_000
+    prefixes = {ops.rowkey(k)[:2] for k in (0, datagen.N_ORDERS - 1)}
+    assert prefixes == {"00", "14"}
     assert datagen.generate(str(tmp_path / "c"), 5, orders_only=True)["orders"].equals(a["orders"])
 
 
@@ -64,8 +69,8 @@ def _declared():
 
 def test_declared_metrics_match_benchmark_json():
     e2e, layers = _declared()
-    assert {m for ms in run.END_TO_END.values() for m in ms} == set(e2e)
-    assert {m for ms in run.PER_LAYER.values() for m in ms} == set(layers)
+    assert list(run.END_TO_END) == list(e2e)
+    assert list(run.PER_LAYER) == list(layers)
 
 
 @pytest.mark.parametrize("workload", run.WORKLOADS)
@@ -81,11 +86,11 @@ def test_short_run_emits_every_metric_with_its_unit(workload, trace):
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] and result["failed"] == 0 and result["attempted"] >= 1
     declared = _declared()[trace]
-    want = (run.PER_LAYER if trace else run.END_TO_END)[workload]
-    assert set(result["metrics"]) == set(want)
+    # every workload reports every declared metric
+    assert set(result["metrics"]) == set(declared)
     for name, m in result["metrics"].items():
         assert set(m) == {"value", "unit"} and m["unit"] == declared[name], name
-        assert isinstance(m["value"], (int, float))
+        assert isinstance(m["value"], (int, float)) and not isinstance(m["value"], bool)
 
 
 def test_refuses_to_run_outside_a_checkout(tmp_path):
