@@ -25,6 +25,7 @@ from hpaste_spark.functions import vectors as V
 from hpaste_spark.functions.money import (davg, dsum, dsum_disc, dsum_mul,
     dsum_units_total, money, sql_avg2, sql_money, sql_sum2)
 from hpaste_spark.functions.timeutil import epoch_us
+from hpaste_spark.operators.artifacts import ensure_artifact, scratch_dir
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -32,6 +33,10 @@ SF0001 = "/root/testdata/sf0.001"
 #: corpus-memory rule: executor storage memory is for dimension-sized
 #: tables only)
 _DISK_ONLY = _SL.DISK_ONLY
+
+#: root of every standing artifact tree (ensure_artifact) and every
+#: stream staging / landing dir (scratch_dir); gitignored
+_SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
@@ -1925,24 +1930,6 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_INDEX_VERSION = 4  # r13b: trained_version drift clock in meta
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    """Scratch location keyed by fixture IDENTITY (mtime+size of the
-    embeddings file and the index-code version), not just the sf name —
-    a regenerated fixture or changed clustering code must rebuild, never
-    silently serve a stale index."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVF_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVF_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivf_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
-
-
 @q("sim_ivf_topk_stored", _IVF_TOPK_ORACLE)
 def sim_ivf_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over a STORED index (similarity.build_ivf_index):
@@ -1955,9 +1942,10 @@ def sim_ivf_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hpaste_spark.operators.similarity import build_ivf_index, ivf_topk_indexed
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = _ivf_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "vectors", "_SUCCESS")):
-        build_ivf_index(emb, idx, k_centroids=8)
+    idx = ensure_artifact(
+        _SCRATCH, "ivf_index", sf_dir, "embeddings", _IVF_INDEX_VERSION,
+        lambda path: build_ivf_index(emb, path, k_centroids=8),
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return ivf_topk_indexed(spark, idx, qv, k=10, nprobe=2)
 
@@ -2189,29 +2177,14 @@ def sim_ivf_knn_join_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hpaste_spark.operators.similarity import build_ivf_index, ivf_knn_join_indexed
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = _ivf_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "vectors", "_SUCCESS")):
-        build_ivf_index(emb, idx, k_centroids=8)
+    idx = ensure_artifact(
+        _SCRATCH, "ivf_index", sf_dir, "embeddings", _IVF_INDEX_VERSION,
+        lambda path: build_ivf_index(emb, path, k_centroids=8),
+    )
     qs = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivf_knn_join_indexed(spark, idx, qs, k=5, nprobe=2)
-
-
-def _ivf_appended_dir(sf_dir: str) -> str:
-    """Separate tree from _ivf_index_dir: built in two steps (build on
-    the standing corpus slice, append the delta)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVF_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVF_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivf_index_appended",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the appended index equals "cluster the ORIGINAL slice, assign
@@ -2244,10 +2217,8 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs over the build slice, assignment over all vectors.  Centroid
     drift under heavy appends is real; the periodic re-cluster (a
     fresh build) is the compaction step, like an LSM major
-    compaction.  Guarded by the _APPENDED marker so a crash between
-    build and append rebuilds instead of serving the half-index."""
-    import shutil
-
+    compaction.  A crash between build and append rebuilds instead
+    of serving the half-index (ensure_artifact's completion marker)."""
     from hpaste_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
@@ -2255,37 +2226,20 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivf_appended_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
         append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivf_index_appended", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
+    )
     qs = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivf_knn_join_indexed(spark, path, qs, k=5, nprobe=2)
-
-
-def _ivf_compacted_dir(sf_dir: str) -> str:
-    """Separate tree from _ivf_appended_dir: built in THREE steps
-    (build on the standing slice, append the delta, compact)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVF_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVF_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivf_index_compacted",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # compaction re-clusters the WHOLE stored corpus, so the compacted
@@ -2307,11 +2261,8 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     restoration claim made executable.  k_centroids passed explicitly
     (8 — the full corpus seeds all 8 groups; the build slice does too,
     but the maintenance job states its target k rather than inheriting
-    whatever the artifact currently has).  Guarded by a _COMPACTED
-    marker so a crash mid-lifecycle rebuilds instead of serving a
-    half-state."""
-    import shutil
-
+    whatever the artifact currently has).  A crash mid-lifecycle
+    rebuilds instead of serving a half-state."""
     from hpaste_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
@@ -2320,38 +2271,21 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivf_compacted_dir(sf_dir)
-    marker = os.path.join(path, "_COMPACTED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
         append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_ivf_index(spark, path, k_centroids=8)
-        with open(marker, "w") as fh:
-            fh.write("build+append+compact complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivf_index_compacted", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
+    )
     qs = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivf_knn_join_indexed(spark, path, qs, k=5, nprobe=2)
-
-
-def _ivf_minor_dir(sf_dir: str) -> str:
-    """Separate tree from _ivf_compacted_dir: build on the standing
-    slice, append the delta, then the MINOR (layout-only) compaction."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVF_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVF_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivf_index_minor",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the minor pass is layout-only — geometry frozen, so the artifact
@@ -2381,8 +2315,6 @@ def sim_ivf_knn_join_minor_compacted(
     wrong).  Reference context: the HBase minor/major compaction
     split (store-file consolidation vs full rewrite) the reference's
     standing tables rely on."""
-    import shutil
-
     from hpaste_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
@@ -2391,40 +2323,21 @@ def sim_ivf_knn_join_minor_compacted(
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivf_minor_dir(sf_dir)
-    marker = os.path.join(path, "_MINOR_COMPACTED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
         append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_ivf_files(spark, path)
-        with open(marker, "w") as fh:
-            fh.write("build+append+minor-compact complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivf_index_minor", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
+    )
     qs = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivf_knn_join_indexed(spark, path, qs, k=5, nprobe=2)
-
-
-def _ivf_drift_dir(sf_dir: str) -> str:
-    """Scratch tree for the drift monitor's standing artifact (build on
-    the corpus + append the reversed-axes delta), fingerprinted like
-    the other stored-index trees so a testdata refresh or layout bump
-    rebuilds it."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVF_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVF_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivf_index_drift",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # Drift-recall monitor for the appended-IVF posture (round-11 verdict
@@ -2548,8 +2461,6 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     invisible at the gated SFs (sf0.01: 10 queries, sf0.1: exactly
     100).  All three recalls hash-gate against the full DuckDB replay
     — exact twins, not bands."""
-    import shutil
-
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
         append_ivf_index,
@@ -2564,15 +2475,14 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("vec_id") + 1_000_001).alias("vec_id"),
         F.reverse(F.col("e")).alias("e"),
     )
-    path = _ivf_drift_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivf_index(emb, path, k_centroids=8, vec_col="e")
         append_ivf_index(spark, path, delta, vec_col="e")
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivf_index_drift", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
+    )
     q_df = delta.filter(
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
         & ((F.col("vec_id") - 1_000_001) < 5000)
@@ -5076,11 +4986,7 @@ def stream_sketch_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
     )
-    here = os.path.dirname(os.path.abspath(__file__))
-    land = os.path.join(
-        here, ".scratch", "stream_hdr",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    land = scratch_dir(_SCRATCH, "stream_hdr", sf_dir)
     shutil.rmtree(land, ignore_errors=True)
 
     def sink(partial: DataFrame, batch_id: int) -> None:
@@ -5107,21 +5013,6 @@ def stream_sketch_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: bump to invalidate cached HDR baseline artifacts when the bucket
 #: rule or the registry build window changes
 _HDR_BASELINE_VERSION = 2  # r10: meta gained a version column
-
-
-def _hdr_baseline_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _bloom_filter_dir, separate tree."""
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_HDR_BASELINE_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_HDR_BASELINE_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "hdr_baseline",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 @q(
@@ -5205,12 +5096,13 @@ def sketch_hdr_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
         epoch_us(F.col("ts")).alias("_us"),
     )
-    path = _hdr_baseline_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        build_hdr_baseline(
+    path = ensure_artifact(
+        _SCRATCH, "hdr_baseline", sf_dir, "events", _HDR_BASELINE_VERSION,
+        lambda path: build_hdr_baseline(
             vals.filter(F.col("_us") <= mid).select("event_type", "v"),
             path, "v", "event_type", sub_bits=7,
-        )
+        ),
+    )
     base_sk, meta = read_hdr_baseline(spark, path)
     cur_sk = hdr_sketch(
         vals.filter(F.col("_us") > mid).select("event_type", "v"),
@@ -5688,11 +5580,7 @@ def _stage_multibatch_documents(sf_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(
-        here, ".scratch", "stream_src_mb",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_documents",
-    )
+    out = os.path.join(scratch_dir(_SCRATCH, "stream_src_mb", sf_dir), "documents")
     os.makedirs(out, exist_ok=True)
     for old in os.listdir(out):
         os.remove(os.path.join(out, old))
@@ -5751,11 +5639,7 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
         .select("source", F.explode(word_shingles(F.col("text"), 3)).alias("_sh"))
     )
-    here = os.path.dirname(os.path.abspath(__file__))
-    land = os.path.join(
-        here, ".scratch", "stream_kmv",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    land = scratch_dir(_SCRATCH, "stream_kmv", sf_dir)
     shutil.rmtree(land, ignore_errors=True)
 
     def sink(partial: DataFrame, batch_id: int) -> None:
@@ -6818,31 +6702,13 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_INDEX_VERSION = 2  # r10: meta gained a version column
 
 
-def _lsh_index_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _bloom_filter_dir, separate tree."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_LSH_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_LSH_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "lsh_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
-
-
 def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the write-once corpus band index (docs with id % 10 != 0,
     the standing-corpus split every incremental query uses) if absent;
-    returns its path.  Guard on meta/_SUCCESS: build_lsh_index writes
-    bands FIRST and meta LAST, so the meta guard subsumes bands and a
-    crash mid-build can never leave a half-readable artifact."""
+    returns its path."""
     from hpaste_spark.operators.dedup import build_lsh_index
 
-    path = _lsh_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
+    def build(path: str) -> None:
         docs = _t(spark, sf_dir, "documents").filter(
             F.length(F.trim(F.col("text"))) > 0
         )
@@ -6850,7 +6716,10 @@ def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") % 10 != 0), path,
             num_hashes=16, bands=4, shingle=3,
         )
-    return path
+
+    return ensure_artifact(
+        _SCRATCH, "lsh_index", sf_dir, "documents", _LSH_INDEX_VERSION, build
+    )
 
 
 # the stored probe reads the identical band relation the in-plan form
@@ -6882,56 +6751,33 @@ def dedup_incremental_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_appended_dir(sf_dir: str) -> str:
-    """Separate tree from _lsh_index_dir: this artifact is built in two
-    steps (build on the old corpus, append the delta) and must never be
-    confused with the one-shot index the _stored query reads."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_LSH_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_LSH_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "lsh_index_appended",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
-
-
 def _ensure_lsh_index_appended(spark: SparkSession, sf_dir: str) -> str:
     """Two-step artifact for the append-equivalence gate: build the
     index on PART of the standing corpus (doc_id % 7 != 3 — 'the index
     as of yesterday'), then append_lsh_index the remainder ('today's
-    ingest').  Guard on meta version >= 2 (r10 ADVICE: an exact == 2
-    would misclassify a legitimately multi-appended artifact as torn
-    and rebuild it every run, silently defeating the standing-artifact
-    posture): version 1 means a crash landed between build and append,
-    so the artifact is rebuilt from scratch (re-appending onto a
-    maybe-partial append would duplicate band rows and inflate
+    ingest').  A crash between build and append leaves no completion
+    marker, so the artifact is rebuilt from scratch (re-appending onto
+    a maybe-partial append would duplicate band rows and inflate
     n_bands — the idempotence caveat the append_lsh_index docstring
     documents)."""
-    import shutil
-
     from hpaste_spark.operators.dedup import append_lsh_index, build_lsh_index
 
-    path = _lsh_appended_dir(sf_dir)
-    if os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        meta = spark.read.parquet(os.path.join(path, "meta")).first()
-        if ("version" in meta.__fields__) and meta["version"] >= 2:
-            return path
-        shutil.rmtree(path, ignore_errors=True)
-    corpus = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim(F.col("text"))) > 0)
-        .filter(F.col("doc_id") % 10 != 0)
+    def build(path: str) -> None:
+        corpus = (
+            _t(spark, sf_dir, "documents")
+            .filter(F.length(F.trim(F.col("text"))) > 0)
+            .filter(F.col("doc_id") % 10 != 0)
+        )
+        build_lsh_index(
+            corpus.filter(F.col("doc_id") % 7 != 3), path,
+            num_hashes=16, bands=4, shingle=3,
+        )
+        append_lsh_index(spark, path, corpus.filter(F.col("doc_id") % 7 == 3))
+
+    return ensure_artifact(
+        _SCRATCH, "lsh_index_appended", sf_dir, "documents",
+        _LSH_INDEX_VERSION, build,
     )
-    build_lsh_index(
-        corpus.filter(F.col("doc_id") % 7 != 3), path,
-        num_hashes=16, bands=4, shingle=3,
-    )
-    append_lsh_index(spark, path, corpus.filter(F.col("doc_id") % 7 == 3))
-    return path
 
 
 # append(A, B) ≡ build(A ∪ B) by construction (band rows are per-doc and
@@ -7838,21 +7684,6 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_INDEX_VERSION = 5  # r13b: trained_version drift clock in meta
 
 
-def _pq_index_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _ivf_index_dir, separate tree."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_PQ_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_PQ_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "pq_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
-
-
 @q("sim_pq_topk_stored", _PQ_TOPK_ORACLE)
 def sim_pq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-10 over a STORED PQ index (similarity.build_pq_index):
@@ -7864,27 +7695,12 @@ def sim_pq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hpaste_spark.operators.similarity import build_pq_index, pq_topk_indexed
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = _pq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-        build_pq_index(emb, idx, m=4, k=16)
+    idx = ensure_artifact(
+        _SCRATCH, "pq_index", sf_dir, "embeddings", _PQ_INDEX_VERSION,
+        lambda path: build_pq_index(emb, path, m=4, k=16),
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return pq_topk_indexed(spark, idx, qv, topk=10)
-
-
-def _pq_appended_dir(sf_dir: str) -> str:
-    """Separate tree from _pq_index_dir: built in two steps (codebooks
-    trained on the standing slice, delta encoded under them)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_PQ_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_PQ_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "pq_index_appended",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the appended PQ index == "train codebooks on the standing slice,
@@ -7916,10 +7732,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     the build slice, encoding over all vectors.  Codebook drift under
     heavy appends degrades the delta's quantization; the re-train is a
     fresh build_pq_index on the CORPUS (the artifact stores only
-    codes, deliberately).  Guarded by the _APPENDED marker like the
-    IVF twin."""
-    import shutil
-
+    codes, deliberately)."""
     from hpaste_spark.operators.similarity import (
         append_pq_index,
         build_pq_index,
@@ -7927,35 +7740,18 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _pq_appended_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_pq_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16
         )
         append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "pq_index_appended", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return pq_topk_indexed(spark, path, qv, topk=10)
-
-
-def _pq_compacted_dir(sf_dir: str) -> str:
-    """Separate tree from _pq_appended_dir: built in THREE steps
-    (build on the standing slice, append the delta, compact)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_PQ_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_PQ_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "pq_index_compacted",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # PQ compaction consolidates code FILES only — codes cannot be
@@ -7977,10 +7773,7 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended one — same oracle, which is exactly the read-back-identity
     claim made executable against DuckDB.  Journaled maintenance: the
     swap goes through swap_live_dir and the artifact's meta version
-    bumps; readers require_clean.  _COMPACTED marker guard like the
-    IVF twin."""
-    import shutil
-
+    bumps; readers require_clean."""
     from hpaste_spark.operators.similarity import (
         append_pq_index,
         build_pq_index,
@@ -7989,35 +7782,17 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _pq_compacted_dir(sf_dir)
-    marker = os.path.join(path, "_COMPACTED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
         append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_pq_index(spark, path)
-        with open(marker, "w") as fh:
-            fh.write("build+append+compact complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "pq_index_compacted", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return pq_topk_indexed(spark, path, qv, topk=10)
-
-
-def _pq_retrained_dir(sf_dir: str) -> str:
-    """Separate tree from _pq_compacted_dir: build on the standing
-    slice, append the delta, then the BLUE/GREEN re-train on the full
-    corpus (root swap)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_PQ_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_PQ_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "pq_index_retrained",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the blue/green re-train rebuilds codebooks + encoding from the FULL
@@ -8043,10 +7818,7 @@ def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     must now answer with FULL-CORPUS codebooks, i.e. the original
     sim_pq_topk_stored oracle bit-for-bit — recall restoration for the
     compression leg made executable, exactly the claim the IVF twin
-    (sim_ivf_knn_join_compacted) makes for the coarse leg.  _RETRAINED
-    marker guard like the other lifecycle fixtures."""
-    import shutil
-
+    (sim_ivf_knn_join_compacted) makes for the coarse leg."""
     from hpaste_spark.operators.similarity import (
         append_pq_index,
         build_pq_index,
@@ -8055,34 +7827,17 @@ def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _pq_retrained_dir(sf_dir)
-    marker = os.path.join(path, "_RETRAINED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
         append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         retrain_pq_index(spark, emb, path)
-        with open(marker, "w") as fh:
-            fh.write("build+append+retrain complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "pq_index_retrained", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return pq_topk_indexed(spark, path, qv, topk=10)
-
-
-def _pq_drift_dir(sf_dir: str) -> str:
-    """Scratch tree for the PQ drift monitor's standing artifact (build
-    on the corpus + append the reversed-axes delta)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_PQ_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_PQ_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "pq_index_drift",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # The full DuckDB replay of the PQ drift monitor: reversed-axes delta,
@@ -8168,8 +7923,6 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget, exact L2² truth over the union.  Both recalls hash-gate
     against the full DuckDB replay (codebook training, per-variant
     encoding, ADC scoring, exact truth — exact twins, not bands)."""
-    import shutil
-
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
         append_pq_index,
@@ -8184,15 +7937,14 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1_000_001).alias("vec_id"),
         F.reverse(F.col("e")).alias("e"),
     )
-    path = _pq_drift_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_pq_index(emb, path, m=4, k=16, vec_col="e")
         append_pq_index(spark, path, delta, vec_col="e")
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "pq_index_drift", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
+    )
     union = emb.unionByName(delta)
     q_df = delta.filter(
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
@@ -8370,18 +8122,16 @@ def dedup_semantic_2level_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TWO_LEVEL_INDEX_VERSION = 2
 
 
-def _two_level_index_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _ivf_index_dir, separate tree."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_TWO_LEVEL_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_TWO_LEVEL_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "two_level_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
+def _two_level_index(spark: SparkSession, sf_dir: str) -> str:
+    """The stored two-level index (k1=4, k2=3) over the embeddings
+    fixture, built on first use."""
+    from hpaste_spark.operators.similarity import build_two_level_index
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return ensure_artifact(
+        _SCRATCH, "two_level_index", sf_dir, "embeddings",
+        _TWO_LEVEL_INDEX_VERSION,
+        lambda path: build_two_level_index(emb, path, k1=4, k2=3),
     )
 
 
@@ -8395,12 +8145,8 @@ def dedup_semantic_2level_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamicpruningexpression partition pruning — plan-tested).  Same
     (k1=4, k2=3) as dedup_semantic_2level, hence the same oracle."""
     from hpaste_spark.operators.dedup import semantic_dedup_two_level_stored
-    from hpaste_spark.operators.similarity import build_two_level_index
 
-    emb = _t(spark, sf_dir, "embeddings")
-    idx = _two_level_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "vectors", "_SUCCESS")):
-        build_two_level_index(emb, idx, k1=4, k2=3)
+    idx = _two_level_index(spark, sf_dir)
     return semantic_dedup_two_level_stored(spark, idx, threshold=0.4)
 
 
@@ -8538,21 +8284,6 @@ def sim_ivfadc_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFADC_INDEX_VERSION = 5  # r13b: trained_version drift clock in meta
 
 
-def _ivfadc_index_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _ivf_index_dir, separate tree."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVFADC_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVFADC_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivfadc_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
-
-
 @q("sim_ivfadc_topk_stored", _IVFADC_ORACLE)
 def sim_ivfadc_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual IVFADC over the STORED index (build_ivfadc_index):
@@ -8565,26 +8296,12 @@ def sim_ivfadc_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    ivfadc_topk_indexed)
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = _ivfadc_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "codes", "_SUCCESS")):
-        build_ivfadc_index(emb, idx, k_centroids=8, m=4, k=16)
+    idx = ensure_artifact(
+        _SCRATCH, "ivfadc_index", sf_dir, "embeddings", _IVFADC_INDEX_VERSION,
+        lambda path: build_ivfadc_index(emb, path, k_centroids=8, m=4, k=16),
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return ivfadc_topk_indexed(spark, idx, qv, nprobe=2, m=4, topk=10)
-
-
-def _ivfadc_appended_dir(sf_dir: str) -> str:
-    """Separate tree from _ivfadc_index_dir: two-step build+append."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVFADC_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVFADC_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivfadc_index_appended",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the appended IVFADC index == "train coarse + residual quantizers on
@@ -8619,10 +8336,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained CTEs restricted to the build slice, assignment/encoding/
     probing over all vectors.  Drift compounds across BOTH frozen
     geometries here; the re-train is a fresh build_ivfadc_index on the
-    corpus (the artifact stores codes, not raw vectors).  _APPENDED
-    marker guard as the IVF/PQ twins."""
-    import shutil
-
+    corpus (the artifact stores codes, not raw vectors)."""
     from hpaste_spark.operators.similarity import (
         append_ivfadc_index,
         build_ivfadc_index,
@@ -8630,35 +8344,19 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivfadc_appended_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
         append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivfadc_index_appended", sf_dir, "embeddings",
+        _IVFADC_INDEX_VERSION, build,
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return ivfadc_topk_indexed(spark, path, qv, nprobe=2, m=4, topk=10)
-
-
-def _ivfadc_compacted_dir(sf_dir: str) -> str:
-    """Separate tree from _ivfadc_appended_dir: built in THREE steps
-    (build on the standing slice, append the delta, compact)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVFADC_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVFADC_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivfadc_index_compacted",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # IVFADC compaction consolidates the per-(append, cid) code fragments
@@ -8677,9 +8375,7 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     in.  Rows, cids, and probe-side partition pruning unchanged BY
     CONSTRUCTION — the compacted index answers the residual-ADC
     top-10 bit-identically to the appended one, same oracle, the
-    read-back identity made executable.  _COMPACTED marker guard."""
-    import shutil
-
+    read-back identity made executable."""
     from hpaste_spark.operators.similarity import (
         append_ivfadc_index,
         build_ivfadc_index,
@@ -8688,37 +8384,20 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivfadc_compacted_dir(sf_dir)
-    marker = os.path.join(path, "_COMPACTED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
         append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_ivfadc_index(spark, path)
-        with open(marker, "w") as fh:
-            fh.write("build+append+compact complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivfadc_index_compacted", sf_dir, "embeddings",
+        _IVFADC_INDEX_VERSION, build,
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return ivfadc_topk_indexed(spark, path, qv, nprobe=2, m=4, topk=10)
-
-
-def _ivfadc_retrained_dir(sf_dir: str) -> str:
-    """Separate tree from _ivfadc_compacted_dir: build on the standing
-    slice, append the delta, then the blue/green re-train on the full
-    corpus (root swap)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVFADC_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVFADC_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivfadc_index_retrained",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # the blue/green re-train refreshes BOTH frozen geometries (coarse
@@ -8736,10 +8415,7 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned meta, version chain carried forward, root rename-aside
     swap under the dying root's journal.  Must answer the original
     sim_ivfadc_topk_stored oracle bit-for-bit: recall restoration for
-    the coarse AND residual legs in one executable claim.  _RETRAINED
-    marker guard."""
-    import shutil
-
+    the coarse AND residual legs in one executable claim."""
     from hpaste_spark.operators.similarity import (
         append_ivfadc_index,
         build_ivfadc_index,
@@ -8748,35 +8424,20 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivfadc_retrained_dir(sf_dir)
-    marker = os.path.join(path, "_RETRAINED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
         append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         retrain_ivfadc_index(spark, emb, path)
-        with open(marker, "w") as fh:
-            fh.write("build+append+retrain complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivfadc_index_retrained", sf_dir, "embeddings",
+        _IVFADC_INDEX_VERSION, build,
+    )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     return ivfadc_topk_indexed(spark, path, qv, nprobe=2, m=4, topk=10)
-
-
-def _ivfadc_drift_dir(sf_dir: str) -> str:
-    """Scratch tree for the IVFADC drift monitor's standing artifact."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_IVFADC_INDEX_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_IVFADC_INDEX_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "ivfadc_index_drift",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
-    )
 
 
 # Full DuckDB replay of the IVFADC drift monitor: per-variant coarse
@@ -8891,8 +8552,6 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitors, exact L2² truth, both recalls hash-gated against the
     full DuckDB replay of assignment, residual codebooks, encoding,
     and the per-(query, probed-cell) distance tables."""
-    import shutil
-
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
         append_ivfadc_index,
@@ -8907,15 +8566,15 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1_000_001).alias("vec_id"),
         F.reverse(F.col("e")).alias("e"),
     )
-    path = _ivfadc_drift_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if os.path.isdir(path) and not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(marker):
+
+    def build(path: str) -> None:
         build_ivfadc_index(emb, path, k_centroids=8, m=4, k=16, vec_col="e")
         append_ivfadc_index(spark, path, delta, vec_col="e")
-        with open(marker, "w") as fh:
-            fh.write("build+append complete\n")
+
+    path = ensure_artifact(
+        _SCRATCH, "ivfadc_index_drift", sf_dir, "embeddings",
+        _IVFADC_INDEX_VERSION, build,
+    )
     union = emb.unionByName(delta)
     q_df = delta.filter(
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
@@ -9663,18 +9322,18 @@ def bloom_fp_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_FILTER_VERSION = 3  # r10: meta gained a version column
 
 
-def _bloom_filter_dir(sf_dir: str) -> str:
-    """Same fixture-identity keying as _ivf_index_dir, separate tree."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_BLOOM_FILTER_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_BLOOM_FILTER_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "bloom_filter",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
+def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
+    """The write-once Bloom blocklist over the benchmark docs (source
+    src0) that the stored batch and streaming decontamination probe."""
+    from hpaste_spark.operators.dedup import build_bloom_filter
+
+    d = _t(spark, sf_dir, "documents")
+    return ensure_artifact(
+        _SCRATCH, "bloom_filter", sf_dir, "documents", _BLOOM_FILTER_VERSION,
+        lambda path: build_bloom_filter(
+            d.filter(F.col("source") == "src0"), path,
+            n=5, m_bits=16384, k_hashes=3,
+        ),
     )
 
 
@@ -9701,39 +9360,12 @@ def decontaminate_bloom_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination.  The md5 probes are deterministic, so the stored
     bits are the identical relation the in-plan form computes — same
     oracle as decontaminate_bloom."""
-    from hpaste_spark.operators.dedup import (build_bloom_filter,
-                                              decontaminate_bloom_stored)
+    from hpaste_spark.operators.dedup import decontaminate_bloom_stored
 
     d = _t(spark, sf_dir, "documents")
-    path = _bloom_filter_dir(sf_dir)
-    # guard on meta/_SUCCESS, not bits/_SUCCESS: build_bloom_filter
-    # writes bits FIRST, so a crash between the two writes would leave
-    # an artifact that passes a bits-only guard yet fails the meta
-    # read on every subsequent run until manually deleted — meta is
-    # written last and therefore subsumes bits
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        build_bloom_filter(
-            d.filter(F.col("source") == "src0"), path,
-            n=5, m_bits=16384, k_hashes=3,
-        )
+    path = _ensure_bloom_filter(spark, sf_dir)
     return decontaminate_bloom_stored(
         spark, path, d.filter(F.col("source") != "src0")
-    )
-
-
-def _bloom_appended_dir(sf_dir: str) -> str:
-    """Separate tree from _bloom_filter_dir: built in two steps (build
-    on half the blocklist, append the rest)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{int(st.st_mtime)}_{st.st_size}_v{_BLOOM_FILTER_VERSION}"
-    except OSError:
-        fingerprint = f"unknown_v{_BLOOM_FILTER_VERSION}"
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.join(
-        here, ".scratch", "bloom_filter_appended",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{fingerprint}",
     )
 
 
@@ -9754,13 +9386,10 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     the meta version bumps.  Bloom bits are monotone, so the refreshed
     filter is bit-identical to a one-shot build over the full
     benchmark and the full-benchmark oracle hash-gates the probe.
-    Guard on meta version >= 2 (r10 ADVICE: exact == 2 would treat a
-    legitimately multi-appended artifact as torn and rebuild it every
-    run): a crash between build and append (version still 1) rebuilds
-    from scratch rather than serving the half-filter (whose false
-    negatives would let Tuesday's opt-outs ship)."""
-    import shutil
-
+    A crash between build and append leaves no completion marker, so
+    the filter is rebuilt from scratch rather than serving the
+    half-filter (whose false negatives would let Tuesday's opt-outs
+    ship)."""
     from hpaste_spark.operators.dedup import (
         append_bloom_filter,
         build_bloom_filter,
@@ -9768,14 +9397,9 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    path = _bloom_appended_dir(sf_dir)
     bench = d.filter(F.col("source") == "src0")
-    if os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        meta = spark.read.parquet(os.path.join(path, "meta")).first()
-        ok = ("version" in meta.__fields__) and meta["version"] >= 2
-        if not ok:
-            shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
+
+    def build(path: str) -> None:
         build_bloom_filter(
             bench.filter(F.col("doc_id") % 2 == 0), path,
             n=5, m_bits=16384, k_hashes=3,
@@ -9783,6 +9407,11 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_bloom_filter(
             spark, path, bench.filter(F.col("doc_id") % 2 == 1)
         )
+
+    path = ensure_artifact(
+        _SCRATCH, "bloom_filter_appended", sf_dir, "documents",
+        _BLOOM_FILTER_VERSION, build,
+    )
     return decontaminate_bloom_stored(
         spark, path, d.filter(F.col("source") != "src0")
     )
@@ -11374,11 +11003,7 @@ def _stage_stream_dir(sf_dir: str, table: str) -> str:
     symlink dir around the single parquet file (same idiom as
     bench._bench_stream_stream_asof, kept separate so the registry
     never imports bench)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    src_dir = os.path.join(
-        here, ".scratch", "stream_src",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{table}",
-    )
+    src_dir = os.path.join(scratch_dir(_SCRATCH, "stream_src", sf_dir), table)
     os.makedirs(src_dir, exist_ok=True)
     target = os.path.join(sf_dir, f"{table}.parquet")
     # lexists: a dangling symlink must be replaced, and a same-basename
@@ -11436,11 +11061,7 @@ def _stage_multibatch_events(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(
-        here, ".scratch", "stream_src_mb",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_events",
-    )
+    out = os.path.join(scratch_dir(_SCRATCH, "stream_src_mb", sf_dir), "events")
     os.makedirs(out, exist_ok=True)
     for old in os.listdir(out):
         os.remove(os.path.join(out, old))
@@ -11523,7 +11144,12 @@ def _stream_partitions(spark: SparkSession, src_dir: str, python_stateful: bool 
     VERDICT r13 ask #10).  The conf is set only for the duration of the
     stream start/drain and restored after; restarted (recovered)
     queries re-derive the identical value from the same staged source,
-    which also matches the count pinned in their checkpoint."""
+    which also matches the count pinned in their checkpoint.
+
+    The sizing holds only for queries that drain INSIDE the block: a
+    query still running when the conf is restored would plan its later
+    batches under the session default.  So leaving the block with a
+    query that was started in it still active raises."""
     from hpaste_spark.streaming.sizing import (
         source_batch_bytes,
         source_batch_rows,
@@ -11536,9 +11162,18 @@ def _stream_partitions(spark: SparkSession, src_dir: str, python_stateful: bool 
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
+    before = {qh.id for qh in spark.streams.active}
     spark.conf.set(key, str(n))
     try:
         yield n
+        running = [qh.name or qh.id for qh in spark.streams.active
+                   if qh.id not in before]
+        if running:
+            raise RuntimeError(
+                f"streaming queries {running} started inside "
+                "_stream_partitions are still active at its exit; drain "
+                "(awaitTermination) or stop them inside the block"
+            )
     finally:
         spark.conf.set(key, old)
 
@@ -11572,16 +11207,10 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops out of every (re)start; the md5 probes are deterministic, so
     stored and recomputed bits are identical relations and the oracle
     is unchanged."""
-    from hpaste_spark.operators.dedup import build_bloom_filter
     from hpaste_spark.streaming.dedup import stream_bloom_flags_stored
 
     d = _t(spark, sf_dir, "documents")
-    path = _bloom_filter_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        build_bloom_filter(
-            d.filter(F.col("source") == "src0"), path,
-            n=5, m_bits=16384, k_hashes=3,
-        )
+    path = _ensure_bloom_filter(spark, sf_dir)
     src = _stage_stream_dir(sf_dir, "documents")
     stream = (
         spark.readStream.schema(d.schema)
@@ -11635,11 +11264,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.trim(F.col("text"))) > 0)
         .filter(F.col("doc_id") % 10 == 0)
     )
-    here = os.path.dirname(os.path.abspath(__file__))
-    land = os.path.join(
-        here, ".scratch", "stream_inc_dedup",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    land = scratch_dir(_SCRATCH, "stream_inc_dedup", sf_dir)
     shutil.rmtree(land, ignore_errors=True)
 
     def sink(out: DataFrame, batch_id: int) -> None:
@@ -11803,11 +11428,7 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     lefts = stream.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    here = os.path.dirname(os.path.abspath(__file__))
-    land = os.path.join(
-        here, ".scratch", "stream_asof_enrich",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    land = scratch_dir(_SCRATCH, "stream_asof_enrich", sf_dir)
     shutil.rmtree(land, ignore_errors=True)
 
     def sink(out: DataFrame, batch_id: int) -> None:
@@ -12067,11 +11688,7 @@ def stream_tw_tumbling_recovered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure_session(spark)
     src = _stage_multibatch_events(sf_dir)
-    here = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(
-        here, ".scratch", "stream_tw_recovered",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir(_SCRATCH, "stream_tw_recovered", sf_dir)
     land, ckpt = os.path.join(base, "land"), os.path.join(base, "ckpt")
 
     for attempt in (0, 1):
@@ -12263,11 +11880,7 @@ def stream_ss_asof_recovered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pq.write_table(sentinel, os.path.join(src, "04_sentinel.parquet"))
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(
-        here, ".scratch", "stream_ss_asof_recovered",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir(_SCRATCH, "stream_ss_asof_recovered", sf_dir)
     land, ckpt = os.path.join(base, "land"), os.path.join(base, "ckpt")
 
     def _asof_stream() -> DataFrame:

@@ -17,6 +17,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -273,14 +274,13 @@ def _bench_stream_stream_asof(spark, sf_dir: str) -> None:
     may see few rows, but every state write executes."""
     from pyspark.sql import functions as F
 
+    from __spark_entry__ import _SCRATCH
+    from hpaste_spark.operators.artifacts import scratch_dir
     from hpaste_spark.streaming.events import read_event_stream, stream_stream_asof
 
     # the fixture is a single file; the file stream source wants a
     # directory — stage a symlink dir once per fixture
-    src_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".scratch", "stream_events", os.path.basename(os.path.normpath(sf_dir)),
-    )
+    src_dir = scratch_dir(_SCRATCH, "stream_events", sf_dir)
     os.makedirs(src_dir, exist_ok=True)
     link = os.path.join(src_dir, "events.parquet")
     target = os.path.join(sf_dir, "events.parquet")
@@ -305,6 +305,37 @@ def _bench_stream_stream_asof(spark, sf_dir: str) -> None:
 
 
 STREAMING = {"stream_stream_asof": _bench_stream_stream_asof}
+
+
+def _noop_run(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def prebuild(spark, qs: dict, sf_dir: str, names=PREBUILD) -> None:
+    """Run each stored-index query once at the bench SF, untimed, so its
+    write-once artifact exists before the timed run (the timed row then
+    measures the partition-pruned query, which is the operator's
+    point).  A failure, or a name missing from the registry, ends the
+    bench naming the query: going on would silently move the build
+    into that query's timed row."""
+    for name in names:
+        fn = qs.get(name)
+        if fn is None:
+            raise SystemExit(f"bench: PREBUILD query {name} is not in the registry")
+        try:
+            _noop_run(fn(spark, sf_dir))
+        except Exception as exc:
+            raise SystemExit(f"bench: PREBUILD query {name} failed: {exc!r}") from exc
+
+
+def _warm(label: str, call) -> None:
+    """Run one warm-up step; a failure is reported on stderr by name
+    and the bench goes on (its timed row then pays the cold start)."""
+    try:
+        call()
+    except Exception as exc:
+        print(f"bench: warm-up {label} failed: {exc!r}", file=sys.stderr)
+        traceback.print_exc(file=sys.stderr)
 
 
 def _load_prev_detail(here: str) -> "dict | None":
@@ -398,31 +429,19 @@ def main() -> None:
             fn = qs.get(name)
             if fn is None:
                 continue
-            try:
-                fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+            _warm(f"{name} @ {warm_dir}",
+                  lambda: _noop_run(fn(spark, warm_dir)))
         spark.catalog.clearCache()  # drop tiny-SF persisted intermediates
 
     # warm the streaming engine once at the tiny SF (micro-batch
     # planner, state-store classes, the applyInPandasWithState Python
     # worker pool — ~8 s of one-time init that is not the operator)
-    if os.path.isdir("/root/testdata/sf0.001"):
-        for runner in STREAMING.values():
-            try:
-                runner(spark, "/root/testdata/sf0.001")
-            except Exception:
-                pass
+    if os.path.isdir(entry_mod.SF0001):
+        for name, runner in STREAMING.items():
+            _warm(f"{name} @ {entry_mod.SF0001}",
+                  lambda: runner(spark, entry_mod.SF0001))
 
-    # write-once index builds at the bench SF, untimed: the timed run
-    # measures the partition-pruned query, which is the operator's point
-    for name in PREBUILD:
-        fn = qs.get(name)
-        if fn is not None:
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+    prebuild(spark, qs, sf_dir)
 
     cal_start = _calibration_s(spark)
 

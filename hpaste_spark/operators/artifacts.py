@@ -35,6 +35,14 @@ the shared hazards are:
   the single-writer lock: appends and compactions are single-writer
   maintenance actions, and a second concurrent writer fails loudly
   instead of losing a version bump.
+
+Where a standing tree lives and when it counts as built is decided in
+one place, :func:`ensure_artifact`: the tree is keyed on the identity
+of the source table it is built from (basename of the fixture dir,
+mtime and size of the parquet file, and the family's layout version),
+and it is built at most once per key — a build that did not run to the
+end leaves no :data:`BUILT_MARKER`, so the next call discards the
+partial tree and builds it again.
 """
 
 from __future__ import annotations
@@ -44,6 +52,7 @@ import json
 import os
 import shutil
 import time as _time
+from collections.abc import Callable
 
 #: journal file a pending (possibly torn) append leaves at the
 #: artifact root; present == the artifact is mid-append or a crashed
@@ -80,6 +89,12 @@ RETRAIN_TMP_SUFFIX = "_retrain_tmp"
 #: that loses counts under concurrency, and fsck cannot adjudicate a
 #: parquet meta, so the lock (not a journal) is the mechanism there.
 APPEND_LOCK = "_append_lock"
+
+
+#: completion marker :func:`ensure_artifact` writes at a standing
+#: tree's root once its whole build (including any append / compact /
+#: re-train steps) has returned; absent == never built or torn.
+BUILT_MARKER = "_BUILT"
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -1030,3 +1045,46 @@ def recover_artifact_root(path: str, repair: bool = True) -> "list[str]":
         if repair:
             shutil.rmtree(tmp)
     return report
+
+
+def scratch_dir(root: str, kind: str, sf_dir: str) -> str:
+    """``<root>/<kind>/<basename of sf_dir>``: the per-fixture scratch
+    location of a tree of ``kind`` (stream staging and landing dirs,
+    which every call rewrites, so no source fingerprint keys them)."""
+    return os.path.join(root, kind, os.path.basename(os.path.normpath(sf_dir)))
+
+
+def ensure_artifact(
+    root: str,
+    kind: str,
+    sf_dir: str,
+    table: str,
+    version: int,
+    build: Callable[[str], object],
+) -> str:
+    """Path of the standing ``kind`` tree built from
+    ``<sf_dir>/<table>.parquet``, building it first when needed.
+
+    The path is ``scratch_dir(root, kind, sf_dir)`` suffixed with the
+    source file's mtime and size and ``_v<version>``: a regenerated
+    fixture or a bumped layout version gives a new tree, never a stale
+    one.  The source must exist (``os.stat`` raises otherwise).
+
+    Build rule: when :data:`BUILT_MARKER` is present the path is
+    returned as is.  Otherwise any partial tree at the path is removed,
+    ``build(path)`` runs, and the marker is written only after it
+    returns — so a build that raised (or a process that died inside
+    it) is discarded and redone by the next call."""
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    path = (
+        f"{scratch_dir(root, kind, sf_dir)}"
+        f"_{int(st.st_mtime)}_{st.st_size}_v{version}"
+    )
+    marker = os.path.join(path, BUILT_MARKER)
+    if os.path.exists(marker):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    build(path)
+    with open(marker, "w") as fh:
+        fh.write(f"{kind} v{version} built\n")
+    return path

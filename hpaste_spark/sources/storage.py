@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,6 +224,29 @@ class ParquetStorage:
             except FileNotFoundError:
                 pass
 
+    def _commit(self, fill: Callable[[int, str], None]) -> int:
+        """The one commit path of :meth:`write` and :meth:`write_partial`:
+        claim the next version, ``fill(base_version, snapshot_dir)``,
+        publish, vacuum.  A ``fill`` that raises removes the half-written
+        snapshot directory and the claim, so a failed write never leaves
+        an unpublished snapshot that :meth:`versions` would list and
+        ``read(version=...)`` would serve."""
+        base_version = self.current_version()
+        new_version = base_version + 1
+        claim = self._claim(new_version)
+        try:
+            fill(base_version, self.snapshot_dir(new_version))
+        except Exception:
+            shutil.rmtree(self.snapshot_dir(new_version), ignore_errors=True)
+            try:
+                os.unlink(claim)
+            except FileNotFoundError:
+                pass
+            raise
+        self._publish(base_version, new_version, claim)
+        self.vacuum_versions()
+        return new_version
+
     def write(
         self,
         df: DataFrame,
@@ -262,36 +286,26 @@ class ParquetStorage:
                 "marker_file name must start with '_' (Spark readers skip "
                 f"underscore-prefixed files): {marker_file[0]!r}"
             )
-        base_version = self.current_version()
-        new_version = base_version + 1
-        claim = self._claim(new_version)
-        try:
-            out = self.snapshot_dir(new_version)
-            if sort_by_rowkey and "rowkey" in df.columns:
-                # Range-partitioned sort → globally key-ordered files, so
-                # rowkey-range scans prune via parquet min/max, mirroring
-                # HBase's sorted-region start/stop-row scans.
-                df = df.sortWithinPartitions(F.col("rowkey"))
-            writer = df.write.mode("overwrite")
-            if partition and self.partition_prefix_len and "rowkey" in df.columns:
-                df = df.drop("_kp").withColumn(
-                    "_kp", F.substring(F.col("rowkey").cast("string"), 1, self.partition_prefix_len)
-                )
-                writer = df.write.mode("overwrite").partitionBy("_kp")
+        if sort_by_rowkey and "rowkey" in df.columns:
+            # Range-partitioned sort → globally key-ordered files, so
+            # rowkey-range scans prune via parquet min/max, mirroring
+            # HBase's sorted-region start/stop-row scans.
+            df = df.sortWithinPartitions(F.col("rowkey"))
+        writer = df.write.mode("overwrite")
+        if partition and self.partition_prefix_len and "rowkey" in df.columns:
+            df = df.drop("_kp").withColumn(
+                "_kp", F.substring(F.col("rowkey").cast("string"), 1, self.partition_prefix_len)
+            )
+            writer = df.write.mode("overwrite").partitionBy("_kp")
+
+        def fill(base_version: int, out: str) -> None:
             writer.parquet(out)
             if marker_file is not None:
                 with open(os.path.join(out, marker_file[0]), "w") as fh:
                     fh.write(marker_file[1])
             self._carry_markers(base_version, out, marker_file)
-        except Exception:
-            try:
-                os.unlink(claim)
-            except FileNotFoundError:
-                pass
-            raise
-        self._publish(base_version, new_version, claim)
-        self.vacuum_versions()
-        return new_version
+
+        return self._commit(fill)
 
     def _carry_markers(
         self,
@@ -361,12 +375,14 @@ class ParquetStorage:
         the shared inodes survive."""
         assert self.supports_partial_rewrite()
         touched = {f"_kp={p}" for p in touched_prefixes}
-        base_version = self.current_version()
-        new_version = base_version + 1
-        claim = self._claim(new_version)
-        try:
+        if "rowkey" in df.columns:
+            df = df.sortWithinPartitions(F.col("rowkey"))
+        df = df.drop("_kp").withColumn(
+            "_kp", F.substring(F.col("rowkey").cast("string"), 1, self.partition_prefix_len)
+        )
+
+        def fill(base_version: int, out: str) -> None:
             prev = self.snapshot_dir(base_version)
-            out = self.snapshot_dir(new_version)
             os.makedirs(out, exist_ok=True)
             for entry in os.listdir(prev):
                 if entry.startswith("_kp=") and entry not in touched:
@@ -375,21 +391,8 @@ class ParquetStorage:
                     os.makedirs(dst, exist_ok=True)
                     for f in os.listdir(src):
                         os.link(os.path.join(src, f), os.path.join(dst, f))
-            if "rowkey" in df.columns:
-                df = df.sortWithinPartitions(F.col("rowkey"))
-            df = df.drop("_kp").withColumn(
-                "_kp", F.substring(F.col("rowkey").cast("string"), 1, self.partition_prefix_len)
-            )
             df.write.mode("append").partitionBy("_kp").parquet(out)
             self._carry_markers(base_version, out)
-        except Exception:
-            shutil.rmtree(self.snapshot_dir(new_version), ignore_errors=True)
-            try:
-                os.unlink(claim)
-            except FileNotFoundError:
-                pass
-            raise
-        self._publish(base_version, new_version, claim)
-        self.vacuum_versions()
-        return new_version
+
+        return self._commit(fill)
 

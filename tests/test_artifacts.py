@@ -11,6 +11,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from hpaste_spark.operators.artifacts import swap_live_dir  # noqa: E402
@@ -722,3 +724,108 @@ def test_artifact_stats_and_small_files_signal(tmp_path):
     _mk_art(root2, {"bands/b.parquet": "x"})
     s2 = artifact_stats(root2)
     assert s2["appends_since_compact"] is None and s2["version"] is None
+
+
+def _fixture_table(sf_dir, table: str, payload: bytes) -> str:
+    os.makedirs(sf_dir, exist_ok=True)
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    with open(src, "wb") as fh:
+        fh.write(payload)
+    return src
+
+
+def _counting_build(calls: list):
+    def build(path: str) -> None:
+        calls.append(path)
+        _mk(os.path.join(path, "data"), f"build {len(calls)}")
+
+    return build
+
+
+def test_ensure_artifact_builds_once_per_key(tmp_path):
+    """The first call builds and marks the tree; a second call returns
+    the same path without running the build again."""
+    from hpaste_spark.operators.artifacts import BUILT_MARKER, ensure_artifact
+
+    sf = str(tmp_path / "sf0.01")
+    _fixture_table(sf, "embeddings", b"abc")
+    root, calls = str(tmp_path / "scratch"), []
+    p1 = ensure_artifact(root, "ivf_index", sf, "embeddings", 4, _counting_build(calls))
+    assert calls == [p1]
+    assert os.path.isfile(os.path.join(p1, BUILT_MARKER))
+    assert os.path.dirname(p1) == os.path.join(root, "ivf_index")
+    assert os.path.basename(p1).startswith("sf0.01_") and p1.endswith("_3_v4")
+    p2 = ensure_artifact(root, "ivf_index", sf, "embeddings", 4, _counting_build(calls))
+    assert p2 == p1 and len(calls) == 1, "a built tree must not be rebuilt"
+    assert _content(os.path.join(p1, "data")) == "build 1"
+
+
+def test_ensure_artifact_failed_build_is_discarded_and_redone(tmp_path):
+    """A build that raises leaves a partial tree and no marker; the
+    next call removes the partial tree before building again."""
+    from hpaste_spark.operators.artifacts import BUILT_MARKER, ensure_artifact
+
+    sf = str(tmp_path / "sf0.01")
+    _fixture_table(sf, "documents", b"docs")
+    root = str(tmp_path / "scratch")
+
+    def torn(path: str) -> None:
+        _mk(os.path.join(path, "bands"), "half")
+        raise RuntimeError("crash between build and append")
+
+    with pytest.raises(RuntimeError, match="crash between"):
+        ensure_artifact(root, "lsh_index_appended", sf, "documents", 2, torn)
+    (partial,) = os.listdir(os.path.join(root, "lsh_index_appended"))
+    partial = os.path.join(root, "lsh_index_appended", partial)
+    assert os.path.isdir(os.path.join(partial, "bands"))
+    assert not os.path.exists(os.path.join(partial, BUILT_MARKER))
+
+    seen = []
+
+    def clean(path: str) -> None:
+        seen.append(os.path.exists(path))
+        _mk(os.path.join(path, "data"), "full")
+
+    p = ensure_artifact(root, "lsh_index_appended", sf, "documents", 2, clean)
+    assert p == partial and seen == [False], "the partial tree must be removed first"
+    assert not os.path.exists(os.path.join(p, "bands"))
+    assert os.path.isfile(os.path.join(p, BUILT_MARKER))
+
+
+def test_ensure_artifact_keys_on_source_identity_and_version(tmp_path):
+    """A changed source size or mtime, or a bumped version, keys a new
+    tree; a missing source raises instead of keying an unbuildable one."""
+    from hpaste_spark.operators.artifacts import ensure_artifact
+
+    sf = str(tmp_path / "sf0.01")
+    src = _fixture_table(sf, "events", b"12345")
+    os.utime(src, (1_000_000, 1_000_000))
+    root, calls = str(tmp_path / "scratch"), []
+
+    def ensure(version: int = 2) -> str:
+        return ensure_artifact(root, "hdr_baseline", sf, "events", version,
+                               _counting_build(calls))
+
+    base = ensure()
+    assert base.endswith("sf0.01_1000000_5_v2")
+    assert ensure(version=3).endswith("sf0.01_1000000_5_v3")
+    os.utime(src, (2_000_000, 2_000_000))
+    moved = ensure()
+    assert moved.endswith("sf0.01_2000000_5_v2")
+    _fixture_table(sf, "events", b"123456")
+    os.utime(src, (2_000_000, 2_000_000))
+    assert ensure().endswith("sf0.01_2000000_6_v2")
+    assert len(calls) == 4, "every new key builds once"
+    os.remove(src)
+    with pytest.raises(FileNotFoundError):
+        ensure()
+    assert len(calls) == 4
+
+
+def test_scratch_dir_is_keyed_on_fixture_basename(tmp_path):
+    from hpaste_spark.operators.artifacts import scratch_dir
+
+    root = str(tmp_path)
+    assert scratch_dir(root, "stream_hdr", "/data/sf0.1/") == os.path.join(
+        root, "stream_hdr", "sf0.1"
+    )

@@ -62,3 +62,63 @@ def test_no_calibration_falls_back_to_raw(tmp_path):
     out = _run_compare(tmp_path, a, b)
     assert "drift" not in out
     assert "1.50x" in out
+
+
+class _NoopDF:
+    """Stands in for a DataFrame: records the noop-sink run."""
+
+    def __init__(self, log: list, name: str):
+        self.log, self.name = log, name
+
+    @property
+    def write(self):
+        return self
+
+    def format(self, _fmt):
+        return self
+
+    def mode(self, _mode):
+        return self
+
+    def save(self):
+        self.log.append(self.name)
+
+
+def test_prebuild_failure_is_fatal_and_named():
+    """A stored-index build that fails before the timed run must stop
+    the bench (non-zero exit) and name the query; it must never move
+    the build silently into the timed row."""
+    import pytest
+
+    import bench
+
+    ran: list = []
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("index build crashed")
+
+    qs = {
+        "ok_index": lambda spark, sf_dir: _NoopDF(ran, "ok_index"),
+        "broken_index": broken,
+    }
+    bench.prebuild(None, qs, "/sf", ["ok_index"])
+    assert ran == ["ok_index"]
+    with pytest.raises(SystemExit) as exc:
+        bench.prebuild(None, qs, "/sf", ["ok_index", "broken_index"])
+    assert exc.value.code not in (0, None)
+    assert "broken_index" in str(exc.value.code)
+    assert "index build crashed" in str(exc.value.code)
+    with pytest.raises(SystemExit) as exc:
+        bench.prebuild(None, qs, "/sf", ["missing_index"])
+    assert "missing_index" in str(exc.value.code)
+
+
+def test_warm_up_failure_is_reported_by_name(capsys):
+    import bench
+
+    def fail():
+        raise ValueError("cold codegen path")
+
+    bench._warm("sim_ivf_topk @ /sf0.001", fail)
+    err = capsys.readouterr().err
+    assert "sim_ivf_topk @ /sf0.001" in err and "cold codegen path" in err

@@ -33,6 +33,14 @@ def duck():
     return con
 
 
+@pytest.fixture(scope="module")
+def schemas(spark):
+    """Every registry DataFrame built once (plan only — nothing
+    executes beyond the builds' own eager jobs); the Spark-side checks
+    below all read these schemas."""
+    return {name: fn(spark, SF_DIR).schema for name, fn in entry.queries().items()}
+
+
 def test_no_oracle_column_is_hugeint(duck):
     bad = {}
     for name, sql in entry.oracle_sql().items():
@@ -53,19 +61,18 @@ def test_no_oracle_column_is_list_typed(duck):
     assert not bad, f"LIST oracle columns are unhashable in the driver: {bad}"
 
 
-def test_no_spark_query_returns_array_columns(spark):
+def test_no_spark_query_returns_array_columns(schemas):
     from pyspark.sql import types as T
 
     bad = {}
-    for name, fn in entry.queries().items():
-        schema = fn(spark, SF_DIR).schema  # plan only — nothing executes
+    for name, schema in schemas.items():
         arrs = [f.name for f in schema.fields if isinstance(f.dataType, (T.ArrayType, T.MapType))]
         if arrs:
             bad[name] = arrs
     assert not bad, f"array/map output columns are unhashable in the driver: {bad}"
 
 
-def test_oracle_and_spark_column_names_match(spark, duck):
+def test_oracle_and_spark_column_names_match(schemas, duck):
     """The driver sorts columns BY NAME before hashing values, so a
     Spark result aliased `sum_qty` against an oracle emitting
     `sum(l_quantity)` hash-mismatches even on identical values.  Pin
@@ -73,11 +80,9 @@ def test_oracle_and_spark_column_names_match(spark, duck):
     drift fails here, not in a driver round.  (Plan-only on the Spark
     side; DESCRIBE-only on the DuckDB side.)"""
     bad = {}
-    oracles = entry.oracle_sql()
-    queries = entry.queries()
-    for name, sql in oracles.items():
+    for name, sql in entry.oracle_sql().items():
         duck_cols = {c for c, *_ in duck.execute(f"DESCRIBE {sql}").fetchall()}
-        spark_cols = {f.name for f in queries[name](spark, SF_DIR).schema.fields}
+        spark_cols = {f.name for f in schemas[name].fields}
         if duck_cols != spark_cols:
             bad[name] = {"oracle_only": sorted(duck_cols - spark_cols),
                          "spark_only": sorted(spark_cols - duck_cols)}

@@ -147,3 +147,44 @@ def test_concurrent_writers_never_lose_updates(spark, base_dir):
     got = sorted(tbl.query2(spark).with_all_columns().scan_to_iterable(lambda r: r.rowid))
     assert got == ["k1", "k3"]
     assert not os.path.exists(claim), "claim released after publish"
+
+
+def test_failed_write_leaves_no_unpublished_snapshot(spark, base_dir, monkeypatch):
+    """A write that fails after its data landed (here in the sticky-
+    marker copy, the last step before the publish) must leave no
+    snapshot behind — for the full write and the partial rewrite alike.
+    Otherwise versions() lists a version that was never published and
+    read(version=...) serves a batch that was never applied."""
+    import os
+
+    import pytest
+
+    from hpaste_spark.sources.storage import ParquetStorage
+
+    tbl = _make(spark, base_dir)
+    storage = tbl.storage
+    assert storage.supports_partial_rewrite()
+    cur, on_disk = storage.current_version(), storage.versions()
+
+    def fail(*_a, **_k):
+        raise OSError("disk full while carrying markers")
+
+    monkeypatch.setattr(ParquetStorage, "_carry_markers", fail)
+    full = storage.read(spark)
+    attempts = {
+        "write": lambda: storage.write(full),
+        "write_partial": lambda: tbl.put("a7").value("v", 7).execute(spark),
+    }
+    for name, attempt in attempts.items():
+        with pytest.raises(OSError, match="disk full"):
+            attempt()
+        assert storage.versions() == on_disk, name
+        assert storage.current_version() == cur, name
+        with pytest.raises(FileNotFoundError):
+            storage.read(spark, version=cur + 1)
+        assert not os.path.exists(storage._claim_path(cur + 1)), name
+    monkeypatch.undo()
+    tbl.put("a7").value("v", 7).execute(spark)
+    assert storage.current_version() == cur + 1
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"a1": 1, "a2": 2, "a7": 7, "b1": 3, "c1": 4, "c2": 5}

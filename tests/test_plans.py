@@ -481,12 +481,8 @@ def test_stored_two_level_cells_restriction_prunes_cid1_partitions(spark):
     never the full stored corpus."""
     import __spark_entry__ as em
     from hpaste_spark.operators.dedup import semantic_dedup_two_level_stored
-    from hpaste_spark.operators.similarity import build_two_level_index
 
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    idx = em._two_level_index_dir(SF_DIR)
-    if not os.path.exists(os.path.join(idx, "vectors", "_SUCCESS")):
-        build_two_level_index(emb, idx, k1=4, k2=3)
+    idx = em._two_level_index(spark, SF_DIR)
     # realistic cells selection: coarse cells picked by a predicate on
     # the stored centroids table (a selective build side, which is what
     # lets the DPP rule fire; a bare literal list would be a static

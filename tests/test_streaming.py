@@ -1053,6 +1053,40 @@ def test_stream_shuffle_partitions_rule():
         del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
 
+def test_stream_partitions_rejects_a_query_left_running(spark, tmp_path):
+    """_stream_partitions sizes only the queries that drain inside it:
+    leaving the block with a query started there still active raises,
+    and the session conf is restored either way."""
+    import pytest
+
+    import __spark_entry__ as em
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    qh = None
+    with pytest.raises(RuntimeError, match="still active"):
+        with em._stream_partitions(spark, str(tmp_path)):
+            qh = (
+                spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+                .writeStream.format("noop").queryName("left_running").start()
+            )
+    try:
+        assert qh.isActive
+        assert spark.conf.get(key) == before
+    finally:
+        qh.stop()
+    # a query drained inside the block passes the check
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    with em._stream_partitions(spark, src):
+        done = (
+            spark.readStream.schema("id LONG").parquet(src)
+            .writeStream.format("noop").trigger(availableNow=True).start()
+        )
+        done.awaitTermination(120)
+    assert not done.isActive
+
+
 def test_checkpoint_recovery_session_window_state(spark, tmp_path):
     """Checkpoint recovery for the HARDEST state shape — MERGING
     session windows: kill the 3-file session-window stream after the
