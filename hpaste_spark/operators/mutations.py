@@ -9,17 +9,23 @@ deletes → puts → increments in that documented order
 empty batches are no-ops (OpBase.scala:69-71).  Returns
 ``OpsResult(numDeletes, numPuts, numIncrements)`` (OpBase.scala:112-114).
 
-Spark design: the client-staged batch becomes small DataFrames that
-full-outer-merge with the stored snapshot on ``rowkey`` — the same
-shape as a Delta MERGE, so the write path is a distributed join, never
-a driver-side loop, and survives 100 TB tables.  (The full-outer merge
-plans as a sort-merge join on rowkey — Spark cannot broadcast a
-full-outer equi join; with prefix-partitioned storage only the touched
-partitions would be rewritten.)  Cell-level last-writer-wins: a put only
-replaces the cells it names; map-family puts overlay by key
-(map_concat semantics, M2); increments add to ``coalesce(old, 0)``.
-Atomicity unit is the ``execute()`` batch (one snapshot commit) —
-documented divergence from HBase's row-level atomicity (SURVEY §7.2).
+Spark design: the client-staged batch becomes ONE small relation (one
+row per touched key, built from an Arrow table, so it plans as a local
+relation) that merges with the stored snapshot without a shuffle:
+``current LEFT JOIN broadcast(staged)`` updates the stored rows and
+``staged LEFT ANTI JOIN broadcast(current ⋂ batch keys)`` adds the
+inserts.  Both broadcast sides are bounded by the batch the driver
+already holds, so the merge scans only the stored rows it reads (with
+prefix-partitioned storage, only the touched partitions) and never
+sorts or shuffles the table.  The cell rules are SQL text, one
+expression per column (:func:`merge_sql`): cell-level last-writer-wins
+— a put only replaces the cells it names; map-family puts overlay by
+key (map_concat semantics, M2); increments add to ``coalesce(old, 0)``.
+The bulk sinks (:func:`bulk_merge_put`, :func:`bulk_merge_increments`)
+take unbounded DataFrames of rows, so they keep a full-outer join on
+``rowkey`` with the same cell rules.  Atomicity unit is the
+``execute()`` batch (one snapshot commit) — documented divergence from
+HBase's row-level atomicity (SURVEY §7.2).
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hpaste_spark.schema.types import to_spark_value
 
@@ -191,28 +198,45 @@ class OpBase:
             out._increment_count += src._increment_count
         return out
 
-    # -- batch DataFrame construction --------------------------------------
-    def _batch_df(self, spark: SparkSession, staged: dict[Any, _RowOps], default_ts) -> DataFrame:
-        """Render staged cells as a DataFrame with the table schema."""
-        schema = self.table.spark_schema()
-        rows = []
-        for key, ops in staged.items():
-            d: dict[str, Any] = {f.name: None for f in schema.fields}
-            d["rowkey"] = to_spark_value(key)
-            ts_by_family: dict[str, dict] = {}
-            for q, (v, ts) in ops.cells.items():
-                d[q] = v
-                col = self.table._columns[q]
-                ts_by_family.setdefault(col.family.name, {})[q] = ts or default_ts
-            for fname, cells in ops.map_cells.items():
-                d[fname] = {k: v for k, (v, ts) in cells.items()}
-                ts_by_family.setdefault(fname, {}).update(
-                    {k: (ts or default_ts) for k, (v, ts) in cells.items()}
-                )
-            for fname, tsm in ts_by_family.items():
-                d[self.table.families[fname].ts_name] = tsm
-            rows.append(tuple(d[f.name] for f in schema.fields))
-        return spark.createDataFrame(rows, schema)
+    # -- staging -------------------------------------------------------------
+    def _staged(
+        self, spark: SparkSession, puts: dict, increments: dict, default_ts
+    ) -> tuple[DataFrame, list]:
+        """The batch as one relation with one row per touched key:
+        ``rowkey``, the put cells ``p_<column>``, the increment deltas
+        ``i_<column>`` and each kind's per-family timestamp maps
+        (``p_<family>__ts`` / ``i_<family>__ts``).  Only the columns the
+        batch names are staged.  It is built from an Arrow table, so it
+        plans as a local relation: no Python worker, no job.  Naive
+        datetimes are read as local time, as ``createDataFrame`` of a
+        row list reads them.  Returns the relation and its row keys."""
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+
+        rows: dict[Any, dict[str, Any]] = {}
+        for prefix, staged in (("p_", puts), ("i_", increments)):
+            for key, ops in staged.items():
+                row = rows.setdefault(to_spark_value(key), {})
+                for q, (v, ts) in ops.cells.items():
+                    row[prefix + q] = v
+                    fam = self.table._columns[q].family
+                    row.setdefault(prefix + fam.ts_name, {})[q] = ts or default_ts
+                for fname, cells in ops.map_cells.items():
+                    row[prefix + fname] = {k: v for k, (v, ts) in cells.items()}
+                    row.setdefault(prefix + self.table.families[fname].ts_name, {}).update(
+                        {k: (ts or default_ts) for k, (v, ts) in cells.items()}
+                    )
+        table_fields = self.table.spark_schema().fields
+        present = {n for row in rows.values() for n in row}
+        fields = [table_fields[0]] + [
+            T.StructField(prefix + f.name, f.dataType)
+            for prefix in ("p_", "i_")
+            for f in table_fields[1:]
+            if prefix + f.name in present
+        ]
+        schema = T.StructType(fields)
+        data = [(k, *(row.get(f.name) for f in fields[1:])) for k, row in rows.items()]
+        arrow = LocalDataToArrowConversion.convert(data, schema, False)
+        return spark.createDataFrame(arrow, schema), list(rows)
 
     # -- execute ------------------------------------------------------------
     def execute(self, spark: SparkSession | None = None, write_to_wal: bool = True) -> OpsResult:
@@ -228,7 +252,7 @@ class OpBase:
             from pyspark.sql import SparkSession as _S
 
             spark = _S.getActiveSession()
-        default_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        default_ts = _dt.datetime.now(_dt.timezone.utc)
         schema = self.table.spark_schema()
 
         # Partial-rewrite fast path: on prefix-partitioned storage every
@@ -257,10 +281,14 @@ class OpBase:
         empty_put_chains = sum(
             calls for k, calls in self._put_calls.items() if k not in real_puts
         )
-        if real_puts:
-            df = merge_puts(self.table, df, self._batch_df(spark, real_puts, default_ts))
-        if any(o.cells or o.map_cells for o in self.increments.values()):
-            df = merge_increments(self.table, df, self._batch_df(spark, self.increments, default_ts))
+        increments = (
+            self.increments
+            if any(o.cells or o.map_cells for o in self.increments.values())
+            else {}
+        )
+        if real_puts or increments:
+            staged, keys = self._staged(spark, real_puts, increments, default_ts)
+            df = merge_staged(self.table, df, staged, keys)
 
         out = df.select(*[f.name for f in schema.fields])
         if partial:
@@ -339,71 +367,111 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
     return df
 
 
-def _overlay_maps(old: F.Column, new: F.Column) -> F.Column:
-    """map_concat with new-keys-override semantics (M2)."""
-    old_nn = F.coalesce(old, F.map_from_arrays(F.array(), F.array()))
-    new_nn = F.coalesce(new, F.map_from_arrays(F.array(), F.array()))
-    kept = F.map_filter(old_nn, lambda k, v: ~F.array_contains(F.map_keys(new_nn), k))
-    return F.map_concat(kept, new_nn)
-
-
-def merge_puts(table, current: DataFrame, batch: DataFrame) -> DataFrame:
-    """Cell-level last-writer-wins merge (M1-M3)."""
-    cur = current.alias("cur")
-    new = batch.alias("new")
-    joined = cur.join(new, F.col("cur.rowkey") == F.col("new.rowkey"), "full_outer")
-    out_cols = [F.coalesce(F.col("cur.rowkey"), F.col("new.rowkey")).alias("rowkey")]
-    for fam in table.families.values():
-        if fam.is_map_family:
-            out_cols.append(_overlay_maps(F.col(f"cur.{fam.name}"), F.col(f"new.{fam.name}")).alias(fam.name))
-        else:
-            for c in fam.columns.values():
-                out_cols.append(F.coalesce(F.col(f"new.{c.qualifier}"), F.col(f"cur.{c.qualifier}")).alias(c.qualifier))
-        out_cols.append(_overlay_maps(F.col(f"cur.{fam.ts_name}"), F.col(f"new.{fam.ts_name}")).alias(fam.ts_name))
-    return joined.select(*out_cols)
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _is_numeric(dtype) -> bool:
-    from pyspark.sql import types as T
-
     return isinstance(dtype, T.NumericType)
 
 
-def merge_increments(table, current: DataFrame, batch: DataFrame) -> DataFrame:
-    """coalesce(old,0)+delta merge (M8); commutative → batch-aggregatable.
-    Only numeric cells are incrementable (HBase increments are longs,
-    IncrementOp.scala:26); non-numeric columns pass through."""
-    cur = current.alias("cur")
-    new = batch.alias("new")
-    joined = cur.join(new, F.col("cur.rowkey") == F.col("new.rowkey"), "full_outer")
-    out_cols = [F.coalesce(F.col("cur.rowkey"), F.col("new.rowkey")).alias("rowkey")]
+def _empty(dtype) -> str:
+    return f"CAST(map() AS {dtype.simpleString()})"
+
+
+def _overlay(old: str, new: str | None, dtype) -> str:
+    """map_concat with new-keys-override semantics (M2); a null map
+    counts as empty."""
+    old_nn = f"coalesce({old}, {_empty(dtype)})"
+    if new is None:
+        return old_nn
+    new_nn = f"coalesce({new}, {_empty(dtype)})"
+    return (
+        f"map_concat(map_filter({old_nn}, (k__, v__) -> "
+        f"NOT array_contains(map_keys({new_nn}), k__)), {new_nn})"
+    )
+
+
+def merge_sql(table, old, put: dict | None = None, inc: dict | None = None) -> list[str]:
+    """The cell rules, as one SQL expression per stored column after
+    ``rowkey``: the batch's puts, then its increments, over the stored
+    value.  ``old(name)`` is the SQL of the stored cell; ``put`` /
+    ``inc`` map a column name to the SQL of its staged cells (a column
+    they lack has none), and are None when the batch has no puts / no
+    increments.
+
+    - put: a typed cell is replaced when the put names it (M1); map
+      families and the ``__ts`` maps overlay by key (M2, M3).
+    - increment: numeric cells and numeric map values become
+      ``coalesce(old, 0) + delta`` (M8; HBase increments are longs,
+      IncrementOp.scala:26), other cells pass through; the ``__ts``
+      maps overlay.
+
+    Each expression is cast back to the declared type, so an increment
+    of a narrow or decimal column stores the table's own type."""
+    out = []
     for fam in table.families.values():
-        if fam.is_map_family:
-            if _is_numeric(fam.spark_fields()[0].dataType.valueType):
-                oldm = F.coalesce(F.col(f"cur.{fam.name}"), F.map_from_arrays(F.array(), F.array()))
-                newm = F.coalesce(F.col(f"new.{fam.name}"), F.map_from_arrays(F.array(), F.array()))
-                merged = F.map_zip_with(
-                    oldm, newm, lambda k, v1, v2: F.coalesce(v1, F.lit(0)) + F.coalesce(v2, F.lit(0))
-                )
-                out_cols.append(merged.alias(fam.name))
-            else:
-                out_cols.append(F.col(f"cur.{fam.name}").alias(fam.name))
-        else:
-            for c in fam.columns.values():
-                if not _is_numeric(c.dtype):
-                    out_cols.append(F.col(f"cur.{c.qualifier}").alias(c.qualifier))
-                    continue
-                has_delta = F.col(f"new.{c.qualifier}").isNotNull()
-                out_cols.append(
-                    F.when(
-                        has_delta,
-                        F.coalesce(F.col(f"cur.{c.qualifier}"), F.lit(0)) + F.col(f"new.{c.qualifier}"),
+        for field in fam.spark_fields():
+            name, dtype = field.name, field.dataType
+            is_map = name == fam.ts_name or fam.is_map_family
+            e = old(name)
+            if put is not None:
+                new = put.get(name)
+                if is_map:
+                    e = _overlay(e, new, dtype)
+                elif new is not None:
+                    e = f"coalesce({new}, {e})"
+            if inc is not None:
+                new = inc.get(name)
+                if name == fam.ts_name:
+                    e = _overlay(e, new, dtype)
+                elif is_map and _is_numeric(dtype.valueType):
+                    delta = f"coalesce({new or 'NULL'}, {_empty(dtype)})"
+                    e = (
+                        f"map_zip_with(coalesce({e}, {_empty(dtype)}), {delta}, "
+                        f"(k__, v1__, v2__) -> coalesce(v1__, 0) + coalesce(v2__, 0))"
                     )
-                    .otherwise(F.col(f"cur.{c.qualifier}"))
-                    .alias(c.qualifier)
-                )
-        out_cols.append(_overlay_maps(F.col(f"cur.{fam.ts_name}"), F.col(f"new.{fam.ts_name}")).alias(fam.ts_name))
-    return joined.select(*out_cols)
+                elif not is_map and _is_numeric(dtype) and new is not None:
+                    e = f"CASE WHEN {new} IS NULL THEN {e} ELSE coalesce({e}, 0) + {new} END"
+            out.append(f"CAST({e} AS {dtype.simpleString()}) AS {_q(name)}")
+    return out
+
+
+def merge_staged(table, current: DataFrame, staged: DataFrame, keys: list) -> DataFrame:
+    """Merge an ``OpBase`` batch staged by ``OpBase._staged`` (its row
+    keys: ``keys``) into ``current`` with no shuffle, as the union of
+
+    - ``current LEFT JOIN broadcast(staged)``: every stored row, with the
+      batch applied where it names the row;
+    - ``staged LEFT ANTI JOIN broadcast(current ⋂ keys)``: the inserts.
+
+    Both broadcast sides are bounded by the batch the driver holds."""
+    put = {n[2:]: f"new.{_q(n)}" for n in staged.columns if n.startswith("p_")} or None
+    inc = {n[2:]: f"new.{_q(n)}" for n in staged.columns if n.startswith("i_")} or None
+    new = staged.alias("new")
+    updated = current.alias("cur").join(
+        F.broadcast(new), F.col("cur.rowkey") == F.col("new.rowkey"), "left"
+    ).selectExpr("cur.rowkey AS rowkey", *merge_sql(table, lambda n: f"cur.{_q(n)}", put, inc))
+    stored = current.filter(F.col("rowkey").isin(keys)).select(F.col("rowkey").alias("key"))
+    inserted = new.join(
+        F.broadcast(stored), F.col("new.rowkey") == F.col("key"), "left_anti"
+    ).selectExpr("new.rowkey AS rowkey", *merge_sql(table, lambda n: "NULL", put, inc))
+    return updated.union(inserted)
+
+
+def _merge_full_outer(table, current: DataFrame, batch: DataFrame, increments: bool) -> DataFrame:
+    """Full-outer merge of a DataFrame batch in the table schema (its
+    keys are unbounded, so neither side can be broadcast): the batch's
+    cells are puts, or with ``increments`` deltas."""
+    joined = current.alias("cur").join(
+        batch.alias("new"), F.col("cur.rowkey") == F.col("new.rowkey"), "full_outer"
+    )
+    new = {f.name: f"new.{_q(f.name)}" for f in table.spark_schema().fields[1:]}
+    put, inc = (None, new) if increments else (new, None)
+    return joined.selectExpr(
+        "coalesce(cur.rowkey, new.rowkey) AS rowkey",
+        *merge_sql(table, lambda n: f"cur.{_q(n)}", put, inc),
+    )
 
 
 def bulk_merge_increments(
@@ -412,11 +480,11 @@ def bulk_merge_increments(
     """Bulk increment sink: merge a DataFrame of DELTAS (table schema,
     numeric cells = amounts to add, absent cells null) into the table.
 
-    The distributed twin of the IncrementOp client DSL: same
-    merge_increments primitive, but the delta relation stays a
-    DataFrame end to end — no driver collect — so counter-key
-    cardinality is unbounded (the merge is a full-outer join on
-    rowkey, shuffle-sized by the data, not by the driver's memory).
+    The distributed twin of the IncrementOp client DSL: same cell rules
+    (:func:`merge_sql`), but the delta relation stays a DataFrame end to
+    end — no driver collect — so counter-key cardinality is unbounded
+    (the merge is a full-outer join on rowkey, shuffle-sized by the
+    data, not by the driver's memory).
 
     ``marker_file`` is forwarded to the snapshot publish (sidecar
     written before the atomic version flip) — the exactly-once
@@ -425,7 +493,7 @@ def bulk_merge_increments(
 
     spark = _S.getActiveSession()
     current = table.to_df(spark)
-    table.overwrite(merge_increments(table, current, batch_df), marker_file=marker_file)
+    table.overwrite(_merge_full_outer(table, current, batch_df, increments=True), marker_file=marker_file)
 
 
 def bulk_merge_put(table, batch_df: DataFrame) -> None:
@@ -436,7 +504,7 @@ def bulk_merge_put(table, batch_df: DataFrame) -> None:
 
     spark = _S.getActiveSession()
     current = table.to_df(spark)
-    table.overwrite(merge_puts(table, current, batch_df))
+    table.overwrite(_merge_full_outer(table, current, batch_df, increments=False))
 
 
 class MultiTableBatch:

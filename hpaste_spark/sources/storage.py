@@ -25,6 +25,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 VERSION_FILE = "_VERSION"
 
@@ -138,7 +139,14 @@ class ParquetStorage:
         once published, so an old version is a consistent table state).
         ``key_prefixes`` / ``key_prefix_range`` constrain the ``_kp``
         partition column BEFORE it is stripped, so the listing prunes
-        directories."""
+        directories.
+
+        With a ``schema`` (the table's declared one) the snapshot is read
+        with that schema plus a ``_kp STRING`` partition column when the
+        snapshot is prefix-partitioned, so no job runs to infer it.
+        Stored columns the schema lacks are not read; declared columns a
+        snapshot lacks read as null.  ``schema=None`` infers the schema
+        from the files."""
         if not self.exists():
             if schema is None:
                 raise FileNotFoundError(f"table {self.name} does not exist")
@@ -150,8 +158,15 @@ class ParquetStorage:
                 f"table {self.name} has no snapshot v={version} "
                 f"(available: {self.versions()})"
             )
-        df = spark.read.parquet(self.snapshot_dir(version))
-        if "_kp" in df.columns:
+        snap = self.snapshot_dir(version)
+        partitioned = any(e.startswith("_kp=") for e in os.listdir(snap))
+        if schema is None:
+            df = spark.read.parquet(snap)
+        else:
+            if partitioned:
+                schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
+            df = spark.read.schema(schema).parquet(snap)
+        if partitioned:
             if key_prefixes is not None:
                 df = df.filter(F.col("_kp").isin([*key_prefixes]))
             if key_prefix_range is not None:

@@ -19,7 +19,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _emb(spark, n=90, dim=8, seed=7, start=0):

@@ -38,7 +38,7 @@ from hypothesis.stateful import (
     rule,
 )
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hpaste_spark.operators import artifacts as A  # noqa: E402
 

@@ -13,7 +13,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hpaste_spark.operators.artifacts import swap_live_dir  # noqa: E402
 

@@ -12,11 +12,12 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import sys
 
 
 def _run_compare(tmp_path, a: dict, b: dict) -> str:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import importlib
 
     import tools.bench_compare as bc

@@ -14,24 +14,30 @@ against a plain in-memory dict model of the same semantics:
   (matching HBase Put/Increment familyMap semantics)
 
 This fuzzes the distributed join/merge machinery the behavioral tests
-only probe pointwise.
+only probe pointwise.  Every program runs on two layouts: an
+unpartitioned table, and a ``partition_prefix_len=1`` table whose keys
+fall into two prefixes, so the batches after the first take the
+partial-rewrite path (read and rewrite the touched partitions only).
 """
 
 import dataclasses
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hpaste_spark.schema import HTable, Schema
 
-KEYS = ["k1", "k2", "k3"]
+# two key prefixes: the prefix-partitioned layout gets two partitions
+KEYS = ["a1", "a2", "b1"]
 QUALS = ["qa", "qb", "qc"]
 
 
 class PropTable(HTable):
-    def __init__(self, schema: Schema):
-        super().__init__(schema, "prop_table", key_type=str)
+    def __init__(self, schema: Schema, partition_prefix_len: int | None = None):
+        super().__init__(
+            schema, "prop_table", key_type=str, partition_prefix_len=partition_prefix_len
+        )
         meta = self.family("meta")
         self.title = self.column(meta, "title", str)
         self.views = self.column(meta, "views", "long")
@@ -160,23 +166,35 @@ def run_engine(spark, tbl: PropTable, batches: list[list[dict]]) -> dict:
     return out
 
 
+# pinned cases: inserts of absent keys in both prefixes; then, in one
+# batch, a delete followed by a put of the same key and a put plus an
+# increment of another key
+PINNED = [
+    [
+        {"kind": "put", "key": "a1", "title": "a", "views": 1, "m": {"qa": 1}},
+        {"kind": "increment", "key": "b1", "views": 2, "m": {"qb": 3}},
+    ],
+    [
+        {"kind": "delete", "key": "a1", "scope": "row", "quals": {"qa"}},
+        {"kind": "put", "key": "a1", "title": "b", "views": None, "m": {}},
+        {"kind": "put", "key": "b1", "title": "c", "views": 4, "m": {"qa": 2}},
+        {"kind": "increment", "key": "b1", "views": 1, "m": {"qb": 1, "qc": 5}},
+    ],
+]
+
+
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
+@example(batches=PINNED)
 @given(batches=program)
 def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
-    base = str(tmp_path_factory.mktemp("prop"))
-    sch = Schema(base_dir=base)
-    tbl = PropTable(sch)
-    sch.create_all(spark)
-
     model: dict = {}
     for ops in batches:
         apply_model(model, ops)
 
-    got = run_engine(spark, tbl, batches)
     # engine may keep a row whose cells were all deleted/none; normalize:
     # drop fully-empty rows on both sides
     def norm(d):
@@ -186,4 +204,9 @@ def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
             if not (v["title"] is None and v["views"] is None and not v["m"])
         }
 
-    assert norm(got) == norm(model)
+    for prefix_len in (None, 1):
+        sch = Schema(base_dir=str(tmp_path_factory.mktemp("prop")))
+        tbl = PropTable(sch, partition_prefix_len=prefix_len)
+        sch.create_all(spark)
+        got = run_engine(spark, tbl, batches)
+        assert norm(got) == norm(model), f"partition_prefix_len={prefix_len}"

@@ -143,6 +143,53 @@ def test_per_cell_timestamps(spark, base_dir):
     assert row.family_latest_timestamp("viewCounts") == t2
 
 
+def test_naive_timestamps_read_as_local_time(spark, base_dir, monkeypatch):
+    """A naive datetime — a per-cell ``timestamp=`` or a timestamp cell —
+    is read in the process's local time zone, as Spark reads a naive
+    datetime in a row list.  The batch is staged through Arrow, whose
+    UTC-zoned timestamp field would read a naive value as UTC; under a
+    non-UTC ``TZ`` that would shift every stored instant.  A cell put
+    without a timestamp is stamped with the current instant."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        _, tbl = example_schema(base_dir, spark)
+        t = TS(2013, 1, 1, 10, 0)  # 15:00 UTC (EST is UTC-5)
+        before = time.time()
+        (
+            tbl.put("TsRow")
+            .value("title", "Stamped", timestamp=t)
+            .value("creationDate", t)
+            .value_map("viewCounts", {"time1": 1}, timestamps={"time1": t})
+            .put("NowRow")
+            .value("title", "Now")
+            .execute(spark)
+        )
+        stored = {
+            r["rowkey"]: r
+            for r in tbl.to_df(spark).selectExpr(
+                "rowkey",
+                "CAST(meta__ts['title'] AS STRING) AS title_ts",
+                "CAST(creationDate AS STRING) AS created",
+                "CAST(viewCounts__ts['time1'] AS STRING) AS time1_ts",
+                "unix_seconds(meta__ts['title']) AS title_epoch",
+            ).collect()
+        }
+        ts_row = stored["TsRow"]
+        assert (ts_row["title_ts"], ts_row["created"], ts_row["time1_ts"]) == (
+            "2013-01-01 15:00:00",
+        ) * 3
+        assert abs(stored["NowRow"]["title_epoch"] - before) < 120
+        row = tbl.query2(spark).with_key("TsRow").with_all_columns().single()
+        assert row.column_timestamp("title") == t
+        assert row.column("creationDate") == t
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_complex_types_roundtrip(spark, base_dir):
     """ExampleSchema.scala:139-151 (Kitten), :213-240 (Seq/Map)."""
     _, tbl = example_schema(base_dir, spark)

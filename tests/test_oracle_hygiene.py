@@ -14,6 +14,8 @@ query can't silently reintroduce either failure mode.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -96,7 +98,9 @@ def test_survey_registry_count_in_sync():
     means updating SURVEY.md in the same commit."""
     import re
 
-    text = open("/root/repo/SURVEY.md").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "SURVEY.md")) as fh:
+        text = fh.read()
     m = re.search(r"End state: (\d+) registry queries", text)
     assert m, "SURVEY.md end-state paragraph missing the registry count"
     assert int(m.group(1)) == len(entry.queries())

@@ -188,3 +188,48 @@ def test_failed_write_leaves_no_unpublished_snapshot(spark, base_dir, monkeypatc
     assert storage.current_version() == cur + 1
     rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
     assert rows == {"a1": 1, "a2": 2, "a7": 7, "b1": 3, "c1": 4, "c2": 5}
+
+
+def _jobs_in(spark, action) -> int:
+    """Spark jobs ``action`` runs, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_commit_is_shuffle_free(spark, base_dir, monkeypatch):
+    """On prefix-partitioned storage an OpBase batch of puts, increments
+    and inserts merges with broadcast joins only: at most 3 jobs (two
+    broadcasts and the write) and no hash-partitioned exchange in the
+    written plan.  A point get runs at most 2 jobs (no schema
+    inference: the declared schema is read)."""
+    from hpaste_spark.sources.storage import ParquetStorage
+
+    tbl = _make(spark, base_dir)
+    assert tbl.storage.supports_partial_rewrite()
+    written = []
+    write_partial = ParquetStorage.write_partial
+
+    def capture(self, df, touched):
+        written.append(df)
+        return write_partial(self, df, touched)
+
+    monkeypatch.setattr(ParquetStorage, "write_partial", capture)
+    op = tbl.put("a1").value("v", 10).increment("b1").value("v", 4).put("c9").value("v", 9)
+    assert _jobs_in(spark, lambda: op.execute(spark)) <= 3
+    assert len(written) == 1
+    assert "Exchange hashpartitioning" not in plan_of(written[0])
+
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"a1": 10, "a2": 2, "b1": 7, "c1": 4, "c2": 5, "c9": 9}
+    get = tbl.query2(spark).with_key("c2").with_all_columns()
+    assert _jobs_in(spark, get.single) <= 2
+    assert get.single().column("v") == 5

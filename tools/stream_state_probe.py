@@ -11,9 +11,10 @@ Usage: python tools/stream_state_probe.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 STREAMS = (
     "stream_tw_tumbling_multibatch",
