@@ -2207,7 +2207,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF k-NN over an APPEND-refreshED index (the round-9
     standing-artifact posture at the ANN layer): the index is built on
     the standing corpus slice (vec_id % 5 != 1), then
-    similarity.append_ivf_index assigns ONLY the delta slice under the
+    similarity.append_index assigns ONLY the delta slice under the
     artifact's STORED centroids and appends it into the existing cid
     partitions — no re-cluster, no rescan of the standing corpus, and
     probe-side dynamic partition pruning is unchanged.  The honest
@@ -2220,7 +2220,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction.  A crash between build and append rebuilds instead
     of serving the half-index (ensure_artifact's completion marker)."""
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         ivf_knn_join_indexed,
     )
@@ -2231,7 +2231,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_appended", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2251,7 +2251,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPACTION leg of the standing-IVF lifecycle under the hash
     gate (round-11; closes the loop the drift monitor opens): build on
-    the standing slice (vec_id % 5 != 1), append_ivf_index the delta —
+    the standing slice (vec_id % 5 != 1), append_index the delta —
     at this point the artifact answers with BUILD-SLICE centroids (the
     sim_ivf_knn_join_appended oracle) — then similarity.compact_ivf_index
     re-clusters the whole stored corpus.  The compacted index must now
@@ -2264,7 +2264,7 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever the artifact currently has).  A crash mid-lifecycle
     rebuilds instead of serving a half-state."""
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         compact_ivf_index,
         ivf_knn_join_indexed,
@@ -2276,7 +2276,7 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_ivf_index(spark, path, k_centroids=8)
 
     path = ensure_artifact(
@@ -2299,8 +2299,8 @@ def sim_ivf_knn_join_minor_compacted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The MINOR-compaction leg of the standing-IVF lifecycle (round
-    13 — similarity.compact_ivf_files): build on the standing slice
-    (vec_id % 5 != 1), append_ivf_index the delta (one parquet
+    13 — similarity.compact_index_files): build on the standing slice
+    (vec_id % 5 != 1), append_index the delta (one parquet
     fragment per (append, cid) pair — the small-files growth
     artifact_stats signals on), then consolidate the vectors tree
     repartitioned on the STORED cid under the frozen standing
@@ -2316,9 +2316,9 @@ def sim_ivf_knn_join_minor_compacted(
     split (store-file consolidation vs full rewrite) the reference's
     standing tables rely on."""
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
-        compact_ivf_files,
+        compact_index_files,
         ivf_knn_join_indexed,
     )
 
@@ -2328,8 +2328,8 @@ def sim_ivf_knn_join_minor_compacted(
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_ivf_files(spark, path)
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_index_files(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_minor", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2427,8 +2427,8 @@ _IVF_DRIFT_ORACLE = """
 def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DRIFT-RECALL MONITOR the appended-IVF posture needs (round-11
     verdict ask #2; round-12 ask #3 rewired it through the OPERATIONAL
-    helper similarity.ivf_drift_recall, which grades a LIVE stored
-    artifact): append_ivf_index assigns deltas under FROZEN build-time
+    helper similarity.drift_recall, which grades a LIVE stored
+    artifact): append_index assigns deltas under FROZEN build-time
     centroids, and its docstring names periodic re-cluster
     (similarity.compact_ivf_index) as the compaction step — but a daily
     ingest loop needs the NUMBER that says when.  This query builds a
@@ -2436,7 +2436,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     distribution-shifted delta — the corpus with reversed embedding
     axes: drift that preserves the delta's internal neighbor structure,
     the 'new domain arrives' shape), takes delta vectors as queries,
-    and calls ivf_drift_recall to grade recall@10 (nprobe=2,
+    and calls drift_recall to grade recall@10 (nprobe=2,
     k_centroids=8) against exact cosine truth over the stored corpus
     for THREE geometries:
 
@@ -2463,9 +2463,9 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     — exact twins, not bands."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
-        ivf_drift_recall,
+        drift_recall,
     )
 
     emb = _t(spark, sf_dir, "embeddings").select(
@@ -2478,7 +2478,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def build(path: str) -> None:
         build_ivf_index(emb, path, k_centroids=8, vec_col="e")
-        append_ivf_index(spark, path, delta, vec_col="e")
+        append_index(spark, path, delta, vec_col="e")
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_drift", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2487,7 +2487,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
         & ((F.col("vec_id") - 1_000_001) < 5000)
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
-    return ivf_drift_recall(
+    return drift_recall(
         spark, path, q_df, k=10, nprobe=2, candidate_iterations=(1, 2),
         budget=100, vec_col="e",
     )
@@ -7722,7 +7722,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-10 over an APPEND-refreshED PQ index — the standing-
     artifact lifecycle extended to the COMPRESSION leg (round 11;
     LSH/Bloom/HDR/IVF gained appends in r10): codebooks train on the
-    standing slice (vec_id % 5 != 1), then similarity.append_pq_index
+    standing slice (vec_id % 5 != 1), then similarity.append_index
     encodes ONLY the delta slice under the artifact's STORED codebooks
     (m inferred from them — pinned geometry) and appends the code
     rows; the standing corpus is never re-encoded.  The honest
@@ -7734,7 +7734,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh build_pq_index on the CORPUS (the artifact stores only
     codes, deliberately)."""
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
         pq_topk_indexed,
     )
@@ -7745,7 +7745,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pq_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16
         )
-        append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_appended", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7764,8 +7764,8 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPACTION leg of the standing-PQ lifecycle under the hash
     gate (round 12; the IVF twin re-clusters and switches oracles —
     this one must NOT): build codebooks on the standing slice
-    (vec_id % 5 != 1), similarity.append_pq_index the delta — each
-    append adds a code-file fragment — then similarity.compact_pq_index
+    (vec_id % 5 != 1), similarity.append_index the delta — each
+    append adds a code-file fragment — then similarity.compact_index_files
     rewrites the code relation as one file and swaps it in.  Rows are
     unchanged BY CONSTRUCTION (compaction is file layout, never a
     re-train: the artifact deliberately stores only codes), so the
@@ -7775,9 +7775,9 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap goes through swap_live_dir and the artifact's meta version
     bumps; readers require_clean."""
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
-        compact_pq_index,
+        compact_index_files,
         pq_topk_indexed,
     )
 
@@ -7785,8 +7785,8 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
-        append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_pq_index(spark, path)
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_index_files(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_compacted", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7805,11 +7805,11 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("sim_pq_topk_retrained", _PQ_TOPK_ORACLE)
 def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RE-TRAIN leg of the standing-PQ lifecycle under the hash
-    gate (round 13 — similarity.retrain_pq_index, the action
-    pq_drift_recall prices): build codebooks on the standing slice
+    gate (round 13 — similarity.retrain_index, the action
+    drift_recall prices): build codebooks on the standing slice
     (vec_id % 5 != 1) — at this point the artifact answers the
     build-slice oracle (sim_pq_topk_appended) — append the delta, then
-    retrain_pq_index on the FULL corpus: a complete replacement
+    retrain_index on the FULL corpus: a complete replacement
     artifact is built at a sibling root (geometry m/k inherited from
     the artifact's pinned meta), its meta carries the version chain
     forward with a fresh replay ring, and the roots swap rename-aside
@@ -7820,18 +7820,18 @@ def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression leg made executable, exactly the claim the IVF twin
     (sim_ivf_knn_join_compacted) makes for the coarse leg."""
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
         pq_topk_indexed,
-        retrain_pq_index,
+        retrain_index,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
 
     def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
-        append_pq_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        retrain_pq_index(spark, emb, path)
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        retrain_index(spark, emb, path)
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_retrained", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7911,8 +7911,8 @@ _PQ_DRIFT_ORACLE = """
 @q("sim_pq_drift_recall", _PQ_DRIFT_ORACLE)
 def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift-recall monitor for the COMPRESSION leg (round 12 —
-    similarity.pq_drift_recall, the ivf_drift_recall twin):
-    append_pq_index quantizes deltas with FROZEN build-time codebooks,
+    similarity.drift_recall, the drift_recall twin):
+    append_index quantizes deltas with FROZEN build-time codebooks,
     and the artifact cannot re-derive a re-train from itself (it
     stores codes, deliberately), so the monitor grades the LIVE
     build+append artifact against an in-plan re-train on the CORPUS —
@@ -7925,9 +7925,9 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding, ADC scoring, exact truth — exact twins, not bands)."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
-        pq_drift_recall,
+        drift_recall,
     )
 
     emb = _t(spark, sf_dir, "embeddings").select(
@@ -7940,7 +7940,7 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_pq_index(emb, path, m=4, k=16, vec_col="e")
-        append_pq_index(spark, path, delta, vec_col="e")
+        append_index(spark, path, delta, vec_col="e")
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_drift", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7950,8 +7950,8 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
         & ((F.col("vec_id") - 1_000_001) < 5000)
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
-    return pq_drift_recall(
-        spark, path, union, q_df, k=10, budget=100, vec_col="e"
+    return drift_recall(
+        spark, path, q_df, union, k=10, budget=100, vec_col="e"
     )
 
 
@@ -8328,7 +8328,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact lifecycle completed across ALL index families (LSH, Bloom,
     HDR, IVF, PQ, and now the combined coarse+residual artifact): the
     index is built on the standing slice (vec_id % 5 != 1), then
-    similarity.append_ivfadc_index assigns the delta to the STORED
+    similarity.append_index assigns the delta to the STORED
     coarse centroids and residual-encodes it under the STORED residual
     codebooks — both geometries pinned by the artifact, the standing
     corpus never re-assigned or re-encoded, partition pruning
@@ -8338,7 +8338,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometries here; the re-train is a fresh build_ivfadc_index on the
     corpus (the artifact stores codes, not raw vectors)."""
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
         ivfadc_topk_indexed,
     )
@@ -8349,7 +8349,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_appended", sf_dir, "embeddings",
@@ -8369,17 +8369,17 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate (round 12 — with this, EVERY index family's full
     build → append → compact chain is gate-visible): build the
     coarse+residual model on the standing slice (vec_id % 5 != 1),
-    similarity.append_ivfadc_index the delta into its cid partitions,
-    then similarity.compact_ivfadc_index repartitions the code
+    similarity.append_index the delta into its cid partitions,
+    then similarity.compact_index_files repartitions the code
     relation on cid (one file per partition in practice) and swaps it
     in.  Rows, cids, and probe-side partition pruning unchanged BY
     CONSTRUCTION — the compacted index answers the residual-ADC
     top-10 bit-identically to the appended one, same oracle, the
     read-back identity made executable."""
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
-        compact_ivfadc_index,
+        compact_index_files,
         ivfadc_topk_indexed,
     )
 
@@ -8389,8 +8389,8 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_ivfadc_index(spark, path)
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_index_files(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_compacted", sf_dir, "embeddings",
@@ -8407,7 +8407,7 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("sim_ivfadc_topk_retrained", _IVFADC_ORACLE)
 def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RE-TRAIN leg for the COMPLETE production artifact (round 13
-    — similarity.retrain_ivfadc_index, the action ivfadc_drift_recall
+    — similarity.retrain_index, the action drift_recall
     prices): build on the standing slice (vec_id % 5 != 1), append the
     delta (drift compounds across both frozen geometries), then the
     blue/green rebuild on the full corpus — sibling-root build with
@@ -8417,10 +8417,10 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ivfadc_topk_stored oracle bit-for-bit: recall restoration for
     the coarse AND residual legs in one executable claim."""
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
         ivfadc_topk_indexed,
-        retrain_ivfadc_index,
+        retrain_index,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -8429,8 +8429,8 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        retrain_ivfadc_index(spark, emb, path)
+        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        retrain_index(spark, emb, path)
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_retrained", sf_dir, "embeddings",
@@ -8540,7 +8540,7 @@ _IVFADC_DRIFT_ORACLE = """
 @q("sim_ivfadc_drift_recall", _IVFADC_DRIFT_ORACLE)
 def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drift-recall monitor for the COMPLETE production ANN artifact
-    (round 12 — similarity.ivfadc_drift_recall; the monitor family
+    (round 12 — similarity.drift_recall; the monitor family
     covers every index leg: IVF coarse, PQ compression, and their
     composition).  An appended IVFADC compounds BOTH frozen geometries
     — probed-cell coverage under build-time coarse centroids AND the
@@ -8554,9 +8554,9 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-(query, probed-cell) distance tables."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
-        ivfadc_drift_recall,
+        drift_recall,
     )
 
     emb = _t(spark, sf_dir, "embeddings").select(
@@ -8569,7 +8569,7 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_ivfadc_index(emb, path, k_centroids=8, m=4, k=16, vec_col="e")
-        append_ivfadc_index(spark, path, delta, vec_col="e")
+        append_index(spark, path, delta, vec_col="e")
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_drift", sf_dir, "embeddings",
@@ -8580,8 +8580,8 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("vec_id") - 1_000_001) % 50 == 0)
         & ((F.col("vec_id") - 1_000_001) < 5000)
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
-    return ivfadc_drift_recall(
-        spark, path, union, q_df, k=10, nprobe=2, budget=100, vec_col="e"
+    return drift_recall(
+        spark, path, q_df, union, k=10, nprobe=2, budget=100, vec_col="e"
     )
 
 
@@ -12229,7 +12229,7 @@ _SEMANTICS_CHANGED = {
     "dedup_incremental_lsh_appended": 12,
     "decontaminate_bloom_appended": 12,
     # r12: drift monitor rewired through the live-artifact helper
-    # similarity.ivf_drift_recall (stored centroids + stored cids for
+    # similarity.drift_recall (stored centroids + stored cids for
     # the appended variant; candidates in-plan) — oracle unchanged
     "sim_ivf_appended_drift_recall": 12,
     # r13: artifact protocol round — ANN metas gained the delta_sigs
@@ -12252,12 +12252,41 @@ _SEMANTICS_CHANGED = {
     "sim_ivfadc_topk_compacted": 13,
     "sim_ivfadc_drift_recall": 13,
     # r13: K-row centroid tables in ivf_topk / ivf_knn_join /
-    # ivf_drift_recall are driver-materialized instead of persisted
+    # drift_recall are driver-materialized instead of persisted
     # without unpersist (leak per call, r12 ADVICE) — identical values,
     # new plan
     "sim_ivf_topk": 13,
     "sim_ivf_recall": 13,
     "sim_ivf_knn_join": 13,
+    # r15: one ANN index lifecycle over a per-family codec
+    # (similarity.append_index / compact_index_files / drift_recall /
+    # retrain_index, shared build meta writer, _ivfadc_encode, shared
+    # L2²/subspace expressions) — same relations, same oracle, new code
+    # path
+    "sim_ivf_topk_stored": 15,
+    "sim_ivf_knn_join_stored": 15,
+    "sim_ivf_knn_join_appended": 15,
+    "sim_ivf_knn_join_compacted": 15,
+    "sim_ivf_knn_join_minor_compacted": 15,
+    "sim_ivf_appended_drift_recall": 15,
+    "vec_pq_encode": 15,
+    "sim_pq_topk": 15,
+    "sim_pq_recall": 15,
+    "sim_ivf_pq_topk": 15,
+    "sim_pq_topk_stored": 15,
+    "sim_pq_topk_appended": 15,
+    "sim_pq_topk_compacted": 15,
+    "sim_pq_topk_retrained": 15,
+    "sim_pq_drift_recall": 15,
+    "sim_ivfadc_residual_topk": 15,
+    "sim_ivfadc_recall": 15,
+    "sim_ivfadc_rerank": 15,
+    "sim_rerank_recall": 15,
+    "sim_ivfadc_topk_stored": 15,
+    "sim_ivfadc_topk_appended": 15,
+    "sim_ivfadc_topk_compacted": 15,
+    "sim_ivfadc_topk_retrained": 15,
+    "sim_ivfadc_drift_recall": 15,
 }
 
 

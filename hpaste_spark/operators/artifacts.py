@@ -78,8 +78,8 @@ EPOCH_FILE = "_epoch"
 META_FILE = "meta.json"
 
 #: sibling-directory suffix a blue/green re-train
-#: (similarity.retrain_pq_index / retrain_ivfadc_index) builds the
-#: replacement artifact under before the root-level swap_live_dir.
+#: (similarity.retrain_index) builds the replacement artifact under
+#: before the root-level swap_live_dir.
 RETRAIN_TMP_SUFFIX = "_retrain_tmp"
 
 
@@ -995,7 +995,7 @@ def check_artifact(
 
 def recover_artifact_root(path: str, repair: bool = True) -> "list[str]":
     """Adjudicate the ROOT-LEVEL crash states a blue/green re-train
-    (``similarity.retrain_pq_index`` / ``retrain_ivfadc_index``) can
+    (``similarity.retrain_index``) can
     leave at ``path``'s PARENT — the one place :func:`check_artifact`
     cannot see, because its world is the artifact root's interior and
     these states are siblings of the root itself:

@@ -325,25 +325,36 @@ class OpBase:
 
 
 def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict) -> DataFrame:
+    """Apply a batch's deletes to the stored rows: row deletes filter
+    the key out; ``.family()`` deletes null the family's cells (a map
+    family's map) and its ``__ts`` map; ``.values()`` deletes null the
+    named typed cells and drop the named keys from a map family and
+    from the ``__ts`` map.  Scoped deletes compose, per touched column,
+    into ONE ``CASE WHEN rowkey = …`` expression — family deletes then
+    value deletes for each key, as they apply — issued as one
+    projection, so the plan (and its analysis) does not grow with the
+    number of deletes."""
     if rows:
         df = df.filter(~F.col("rowkey").isin(list(rows)))
+    # column -> {key: [cell transform, ...]} in application order
+    steps: dict[str, dict[Any, list]] = {}
+
+    def add(key, column, step) -> None:
+        steps.setdefault(column, {}).setdefault(to_spark_value(key), []).append(step)
+
+    def null(column):
+        return lambda c: F.lit(None).cast(dtypes[column])
+
+    def drop_keys(qs):
+        return lambda c: F.map_filter(c, lambda k, v: ~k.isin(qs))
+
     for key, fams in families.items():
         for fname in fams:
             fam = table.families[fname]
-            cond = F.col("rowkey") == F.lit(to_spark_value(key))
-            if fam.is_map_family:
-                df = df.withColumn(fam.name, F.when(cond, F.lit(None).cast(df.schema[fam.name].dataType)).otherwise(F.col(fam.name)))
-            else:
-                for c in fam.columns.values():
-                    df = df.withColumn(
-                        c.qualifier,
-                        F.when(cond, F.lit(None).cast(df.schema[c.qualifier].dataType)).otherwise(F.col(c.qualifier)),
-                    )
-            df = df.withColumn(
-                fam.ts_name, F.when(cond, F.lit(None).cast(df.schema[fam.ts_name].dataType)).otherwise(F.col(fam.ts_name))
-            )
+            cols = [fam.name] if fam.is_map_family else [c.qualifier for c in fam.columns.values()]
+            for column in cols + [fam.ts_name]:
+                add(key, column, null(column))
     for key, fam_quals in values.items():
-        cond = F.col("rowkey") == F.lit(to_spark_value(key))
         for fname, quals in fam_quals.items():
             fam = table.families[fname]
             qlist = list(quals)
@@ -353,18 +364,24 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
                 targets = [fam.ts_name]
                 for q in qlist:
                     if q in fam.columns:
-                        df = df.withColumn(
-                            q, F.when(cond, F.lit(None).cast(df.schema[q].dataType)).otherwise(F.col(q))
-                        )
-            def _drop_keys(qs):
-                return lambda k, v: ~k.isin(qs)
-
+                        add(key, q, null(q))
             for t in targets:
-                df = df.withColumn(
-                    t,
-                    F.when(cond, F.map_filter(F.col(t), _drop_keys(qlist))).otherwise(F.col(t)),
-                )
-    return df
+                add(key, t, drop_keys(qlist))
+    if not steps:
+        return df
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+
+    def cell(column: str):
+        expr = None
+        for key, fns in steps[column].items():
+            value = F.col(column)
+            for fn in fns:
+                value = fn(value)
+            cond = F.col("rowkey") == F.lit(key)
+            expr = F.when(cond, value) if expr is None else expr.when(cond, value)
+        return expr.otherwise(F.col(column)).alias(column)
+
+    return df.select(*[cell(c) if c in steps else F.col(c) for c in df.columns])
 
 
 def _q(name: str) -> str:

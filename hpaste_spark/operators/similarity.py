@@ -17,7 +17,9 @@ The hyperplane components are generated by a fixed integer formula
 
 from __future__ import annotations
 
+import dataclasses
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -90,11 +92,8 @@ def _flat_dims_join(vdims: DataFrame, cdims: DataFrame, n_dim_rows: "int | None"
 #: cuts its shared model tables (cents / assign / rcb).  Below it the
 #: r13 measurement governs (cuts 1.1-1.4x slower: replays ride idle
 #: cores, cuts serialize); above it a replay is a paid corpus scan.
-#: Probe: plans/r14/ivfadc_cut_probe.md.  Env-overridable for cluster
-#: operators (and for the probe itself).
-IVFADC_CUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_IVFADC_CUT_BYTES", str(1 << 30))
-)
+#: Probe: plans/r14/ivfadc_cut_probe.md (a probe sets this attribute).
+IVFADC_CUT_BYTES = 1 << 30
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -111,28 +110,41 @@ def _plan_size_bytes(df: DataFrame) -> int:
 
 
 def _stored_rows(spark, path: str) -> int:
-    """EXACT row count of a stored parquet tree from FOOTER metadata
-    only — no Spark job, no data scan (r14): the artifact cardinality
-    hard-checks need just the count, and a ``.count()`` over a
-    corpus×m-row codes tree was a full scan job serialized before any
-    useful work.  Falls back to the Spark count when the footers are
-    not locally readable (remote object store)."""
-    try:
-        import glob as _glob
+    """EXACT row count of a stored parquet tree.  A local directory is
+    counted from its FOOTER metadata only — no Spark job, no data scan
+    (r14: the artifact cardinality hard-checks need just the count, and
+    a ``.count()`` over a corpus×m-row codes tree was a full scan job
+    serialized before any useful work); a tree with no data files
+    counts 0, and an unreadable footer raises naming its file instead
+    of being mistaken for an empty or a differently-sized tree.  A
+    non-local path (remote object store) is counted by Spark."""
+    if not os.path.isdir(path):
+        return spark.read.parquet(path).count()
+    import glob
 
-        import pyarrow.parquet as _pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        total, seen = 0, False
-        for f in _glob.glob(
-            os.path.join(path, "**", "*.parquet"), recursive=True
-        ):
-            total += _pq.ParquetFile(f).metadata.num_rows
-            seen = True
-        if seen:
-            return total
-    except Exception:
-        pass
-    return spark.read.parquet(path).count()
+    total = 0
+    for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+        try:
+            total += pq.ParquetFile(f).metadata.num_rows
+        except (OSError, pa.ArrowException) as e:
+            raise ValueError(f"unreadable parquet footer in {f}: {e}") from e
+    return total
+
+
+def _sq_dist(x: str) -> F.Column:
+    """Σ(x−c)² over the rows of a group — the L2² aggregate of every
+    exploded-dims distance in this module (``c``: the codeword or
+    centroid component)."""
+    return F.sum((F.col(x) - F.col("c")) * (F.col(x) - F.col("c")))
+
+
+def _subspace(sd: int) -> "tuple[F.Column, F.Column]":
+    """(sub, wpos) of an exploded dim ``pos``: its subspace of width
+    ``sd`` and its position within it."""
+    return (F.col("pos") / sd).cast("int").alias("sub"), (F.col("pos") % sd).alias("wpos")
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -692,17 +704,14 @@ def build_ivf_index(
     ``mode='append'`` is rejected (the build_lsh_index reasoning, worse
     here: it would append a SECOND centroid relation next to the first,
     and readers would probe/assign under a mixed geometry); refresh a
-    standing index with :func:`append_ivf_index`, re-cluster with
+    standing index with :func:`append_index`, re-cluster with
     :func:`compact_ivf_index`.
 
-    Written LAST: ``{path}/meta.json`` — version, pinned ``dim`` and
-    ``k_centroids``, the clustering epoch (also stamped as an
-    ``_epoch`` sidecar inside both data dirs so
+    Written LAST: ``{path}/meta.json`` (:func:`_write_index_meta`) —
+    pinned ``dim`` and ``k_centroids`` plus the clustering epoch, also
+    stamped as an ``_epoch`` sidecar inside both data dirs so
     :func:`~hpaste_spark.operators.artifacts.check_artifact` can
-    adjudicate a crashed two-directory compaction), and
-    ``last_delta_sig`` for append-retry idempotence.  A plain JSON
-    file, not a parquet relation, deliberately: fsck adjudicates torn
-    appends without a SparkSession.
+    adjudicate a crashed two-directory compaction.
     """
     from hpaste_spark.operators import artifacts
 
@@ -710,7 +719,7 @@ def build_ivf_index(
         raise ValueError(
             "build_ivf_index(mode='append') would write a second centroid "
             "set next to the artifact's pinned geometry; append new "
-            "vectors with append_ivf_index (assigns the delta under the "
+            "vectors with append_index (assigns the delta under the "
             "STORED centroids) and re-cluster with compact_ivf_index"
         )
     dim = len(corpus.select(vec_col).first()[0])
@@ -718,25 +727,43 @@ def build_ivf_index(
     epoch = artifacts.new_epoch()
     try:
         cent.write.mode(mode).parquet(f"{path}/centroids")
-        assign = ivf_assign(corpus, cent, vec_col, id_col)
-        (
-            corpus.join(assign, id_col)
-            .write.mode(mode)
-            .partitionBy("cid")
-            .parquet(f"{path}/vectors")
-        )
+        _write_rows(_ivf_rows(corpus, cent, vec_col, id_col), f"{path}/vectors", True, mode)
     finally:
         cent.unpersist()
     artifacts.write_epoch(f"{path}/centroids", epoch)
     artifacts.write_epoch(f"{path}/vectors", epoch)
+    _write_index_meta(path, "ivf", dim, k_centroids=int(k_centroids), epoch=epoch)
+
+
+def _ivf_rows(df: DataFrame, cent: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """The stored IVF rows of ``df``: each vector with the cid of its
+    nearest centroid in ``cent``."""
+    return df.join(ivf_assign(df, cent, vec_col, id_col), id_col)
+
+
+def _write_rows(rows: DataFrame, dest: str, partitioned: bool, mode: str) -> None:
+    """Write an index data relation — a partitioned one by ``cid``, one
+    directory per inverted list, so a probe prunes to its lists."""
+    writer = rows.write.mode(mode)
+    (writer.partitionBy("cid") if partitioned else writer).parquet(dest)
+
+
+def _write_index_meta(path: str, kind: str, dim: int, **pinned) -> None:
+    """Publish a fresh build: ``{path}/meta.json``, written LAST (the
+    build_lsh_index discipline) — version 1, the pinned ``dim`` and the
+    family's ``pinned`` geometry, ``delta_sigs`` (the append-retry
+    replay ring) and the ``compacted_version`` / ``trained_version``
+    markers.  A plain JSON file, not a parquet relation, deliberately:
+    fsck adjudicates torn appends without a SparkSession."""
+    from hpaste_spark.operators import artifacts
+
     artifacts.write_meta(
         path,
         {
-            "kind": "ivf",
+            "kind": kind,
             "version": 1,
             "dim": int(dim),
-            "k_centroids": int(k_centroids),
-            "epoch": epoch,
+            **pinned,
             "last_delta_sig": None,
             "delta_sigs": [],
             "compacted_version": 1,
@@ -747,7 +774,7 @@ def build_ivf_index(
 
 def _ann_append_open(
     path: str,
-    kind: str,
+    meta: dict,
     new_vectors: DataFrame,
     vec_col: str,
     id_col: str,
@@ -756,24 +783,25 @@ def _ann_append_open(
     """Shared open-the-journal half of the ANN torn-append protocol
     (round-12 verdict ask #1; the LSH delta-first/meta-last posture
     extended to the index artifacts where a torn or retried append is
-    NOT benign — duplicate ids occupy two top-k ranks):
+    NOT benign — duplicate ids occupy two top-k ranks).  The caller
+    has refused a tree with a pending journal (loud, single-writer)
+    and read ``meta``; then:
 
-    1. refuse a tree with a pending journal (loud, single-writer),
-    2. validate the delta's dimensionality against the meta's pinned
+    1. validate the delta's dimensionality against the meta's pinned
        geometry (a wrong-dim delta would mis-split sub/wpos and encode
        garbage with no error — r11 ADVICE),
-    3. compute the delta's content signature; if the meta's sig RING
+    2. compute the delta's content signature; if the meta's sig RING
        (the last :data:`~hpaste_spark.operators.artifacts.
        DELTA_SIG_RING` committed appends — round-13, deepened from the
        depth-1 ``last_delta_sig``) remembers it, the call is a replay
        of a committed append → no-op,
-    4. otherwise open the :data:`~hpaste_spark.operators.artifacts.
+    3. otherwise open the :data:`~hpaste_spark.operators.artifacts.
        APPEND_PENDING` journal with a pre-append file snapshot,
-    5. re-read the meta INSIDE the journal's exclusion window (round-13,
+    4. re-read the meta INSIDE the journal's exclusion window (round-13,
        r12 ADVICE TOCTOU item): if another appender committed between
-       step 2's read and step 4's O_EXCL create, the journaled target
-       version is stale — re-check the replay ring against the fresh
-       meta (abort to a no-op if the race made us a replay) and
+       the caller's read and step 3's O_EXCL create, the journaled
+       target version is stale — re-check the replay ring against the
+       fresh meta (abort to a no-op if the race made us a replay) and
        re-journal with the correct target, so we never publish a
        version another writer already published or clobber its
        signature.
@@ -782,15 +810,6 @@ def _ann_append_open(
     or empty delta) and the caller must write nothing."""
     from hpaste_spark.operators import artifacts
 
-    artifacts.require_clean(path, f"{kind} index")
-    meta = artifacts.read_meta(path)
-    if meta is None or meta.get("kind") != kind:
-        raise ValueError(
-            f"{kind} index at {path} has no meta.json (or a different "
-            "kind) — it predates the append protocol or is not a "
-            f"{kind} artifact; rebuild it with the build_*_index entry "
-            "point before appending"
-        )
     first = new_vectors.select(vec_col).first()
     if first is None:
         return meta, None  # empty delta: nothing to journal or write
@@ -816,75 +835,6 @@ def _ann_append_open(
     return meta, sig
 
 
-def _ann_append_commit(path: str, meta: dict, sig: str) -> int:
-    """Publish half of the protocol: meta LAST (version bump + the sig
-    recorded in the ``delta_sigs`` replay ring), then drop the
-    journal.  Returns the new version."""
-    from hpaste_spark.operators import artifacts
-
-    meta = dict(meta)
-    meta["version"] = meta["version"] + 1
-    artifacts.record_delta_sig(meta, sig)
-    artifacts.commit_append(path, meta)
-    return meta["version"]
-
-
-def append_ivf_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_ivf_index` artifact (the
-    append_lsh_index posture at the ANN layer): assign ONLY the new
-    vectors to the artifact's STORED centroids and append them into
-    their cid partitions — the standing corpus is never rescanned or
-    re-clustered, and the daily embedding ingest costs one assignment
-    pass over the delta plus a partitioned parquet append.
-
-    The centroids are the pinned geometry and they DO NOT move on
-    append (geometry mismatch is impossible by construction — the
-    assignment reads them from the artifact).  Consequence, stated
-    honestly: an appended index equals "build on the original corpus,
-    then assign the delta under those same centroids" — NOT a
-    re-cluster of the union; if the data distribution drifts far from
-    the build-time centroids, recall of the probed lists degrades and
-    the periodic heavier re-cluster (:func:`compact_ivf_index`) is the
-    compaction step, exactly like an LSM major compaction.  Probe-side
-    partition pruning is unchanged: new files land INSIDE the existing
-    cid= partition directories.
-
-    TORN-APPEND PROTOCOL (round-12; see
-    :mod:`hpaste_spark.operators.artifacts`): journal first
-    (``append_pending.json`` with a pre-append file snapshot — its
-    O_EXCL create is also the single-writer lock), delta data next,
-    meta LAST (version bump + the delta's content signature), journal
-    dropped.  A crash anywhere fails readers LOUDLY
-    (:func:`~hpaste_spark.operators.artifacts.require_clean`) instead
-    of serving a silently partial delta; ``check_artifact(path,
-    repair=True)`` rolls a torn append back to exactly the pre-append
-    tree, after which the RETRY is clean — and a retry of an
-    already-committed append is recognized by its signature and
-    becomes a no-op, never a duplicate-id double insert occupying two
-    top-k ranks.  Returns the artifact's (possibly unchanged) meta
-    version."""
-    meta, sig = _ann_append_open(
-        path, "ivf", new_vectors, vec_col, id_col, ["vectors"]
-    )
-    if sig is None:
-        return meta["version"]
-    cent = spark.read.parquet(f"{path}/centroids")
-    assign = ivf_assign(new_vectors, cent, vec_col, id_col)
-    (
-        new_vectors.join(assign, id_col)
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(f"{path}/vectors")
-    )
-    return _ann_append_commit(path, meta, sig)
-
-
 def compact_ivf_index(
     spark,
     path: str,
@@ -894,377 +844,108 @@ def compact_ivf_index(
     id_col: str = "vec_id",
 ) -> None:
     """MAJOR COMPACTION for an append-refreshed :func:`build_ivf_index`
-    artifact — the re-cluster step :func:`append_ivf_index` names as
-    its maintenance counterpart (LSM-style: appends assign the delta
+    artifact — IVF's re-train (LSM-style: appends assign the delta
     under FROZEN build-time centroids, so recall decays as the data
     distribution drifts from them; the periodic heavy pass re-clusters
     the WHOLE standing corpus and restores fresh-build recall).  Run
-    it when the drift monitor (the sim_ivf_appended_drift_recall
-    posture: appended-index recall vs a fresh re-cluster's, graded
-    against exact truth) says the gap is no longer acceptable.
+    it when :func:`drift_recall` (appended-index recall vs a fresh
+    re-cluster's, graded against exact truth) says the gap is no
+    longer acceptable; :func:`ann_maintain` does, at the measured-best
+    ``iterations``.
 
     Equivalent by construction to ``build_ivf_index(stored corpus,
     path)`` with the same (k_centroids, iterations) — pytest pins that
     the compacted index answers queries bit-identically to a fresh
     build on the union.  ``k_centroids`` defaults to the artifact's
     current centroid count.  Also the SMALL-FILES consolidation for
-    the vectors tree: appends accumulate one parquet fragment per
-    (append, cid) pair; the rewrite repartitions on cid so each cid
-    partition lands as one file per shuffle partition that holds it
-    (in practice one file per cid).
+    the vectors tree: the rewrite repartitions on cid, so each cid
+    partition lands as one file in practice.
 
-    OFFLINE, SINGLE-WRITER operation, JOURNALED (round-12 verdict ask
-    #2) with the narrowed rename-aside swap
-    (:func:`hpaste_spark.operators.artifacts.swap_live_dir`).  The
-    ``compact_pending.json`` journal opens at the TOP (round-13, r12
+    OFFLINE, SINGLE-WRITER, JOURNALED (:func:`_rewrite_journaled`):
+    centroids and vectors are rebuilt into ``*_compact_tmp`` dirs
+    stamped with one fresh clustering EPOCH (the two directories
+    belong together iff their epochs match), then vectors swap before
+    centroids.  A crash between the two swaps leaves NEW vectors under
+    OLD centroids — cid numbers are unrelated across clusterings, so
+    that mixed-geometry state would silently collapse recall if
+    served; the journal + epoch stamps make it LOUD instead (readers
+    refuse a journaled tree) and ``check_artifact(path, repair=True)``
+    COMPLETES the remaining centroids swap from its epoch-matching
+    tmp, yielding an index bit-identical to an uninterrupted
+    compaction (pytest-pinned)."""
+    from hpaste_spark.operators import artifacts
+
+    artifacts.require_clean(path, "IVF index")
+
+    def fill(tmp: dict) -> dict:
+        corpus = spark.read.parquet(f"{path}/vectors").drop("cid")
+        k = k_centroids
+        if k is None:
+            k = spark.read.parquet(f"{path}/centroids").count()
+        cent = ivf_centroids(corpus, k, vec_col, id_col, iterations).persist()
+        try:
+            cent.write.mode("overwrite").parquet(tmp["centroids"])
+            _write_rows(
+                # consolidate append fragments per cid
+                _ivf_rows(corpus, cent, vec_col, id_col).repartition("cid"),
+                tmp["vectors"],
+                True,
+                "overwrite",
+            )
+        finally:
+            cent.unpersist()
+        return {"k_centroids": int(k)}
+
+    _rewrite_journaled(path, ["vectors", "centroids"], fill, retrains=True)
+
+
+def _rewrite_journaled(path: str, dirs: "list[str]", fill, retrains: bool = False) -> str:
+    """The journaled single-writer rewrite every compaction shares
+    (round-12 verdict ask #2; :mod:`hpaste_spark.operators.artifacts`).
+    The ``compact_pending.json`` journal opens FIRST (round-13, r12
     ADVICE: its O_EXCL create is the single-writer lock and it must
     cover the LONG Spark tmp-build too — an append that began and
     committed during the build would otherwise be silently discarded
     by the swap while meta kept its version bump and signature,
-    turning the retry into a no-op: silent data loss).  Centroids and
-    vectors are then rebuilt into ``*_compact_tmp`` dirs (reads all
-    complete before any rename) and stamped with a fresh clustering
-    EPOCH (an ``_epoch`` sidecar inside each dir — the two directories
-    belong together iff their epochs match), the swap plan lands in
-    the journal (atomic content replace; until then fsck adjudicates a
-    crash as 'before any swap' and discards the re-derivable tmps),
-    then vectors swap before centroids, then the meta version bumps
-    and the journal drops.  A crash between the two swaps leaves NEW
-    vectors under OLD centroids — cid numbers are unrelated across
-    clusterings, so that mixed-geometry state would silently collapse
-    recall if served; the journal + epoch stamps make it LOUD instead
-    (readers refuse a journaled tree) and ``check_artifact(path,
-    repair=True)`` COMPLETES the remaining centroids swap from its
-    epoch-matching tmp, yielding an index bit-identical to an
-    uninterrupted compaction (pytest-pinned) — it never discards the
-    finished build.  A reader racing the swap fails loudly on a
-    missing path; run in the maintenance window."""
+    turning the retry into a no-op).  ``fill({dir: tmp_dir})`` then
+    builds every ``<dir>_compact_tmp`` and returns the meta updates to
+    journal; the tmps get one fresh epoch stamp, the swap plan lands
+    in the journal (until then fsck adjudicates a crash as 'before any
+    swap' and discards the re-derivable tmps), the dirs swap in list
+    order with the narrowed rename-aside sequence
+    (:func:`~hpaste_spark.operators.artifacts.swap_live_dir`), and
+    :func:`~hpaste_spark.operators.artifacts.finish_compact` bumps the
+    meta and drops the journal.  ``retrains`` also moves
+    ``trained_version`` — only a geometry re-train may; a layout-only
+    rewrite leaves the frozen geometry exactly as drifted as before.
+    Returns the epoch."""
     import shutil
 
     from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import swap_live_dir
 
-    artifacts.require_clean(path, "IVF index")
     artifacts.open_compact(path)  # exclusion covers build+swap+publish
     try:
-        corpus = spark.read.parquet(f"{path}/vectors").drop("cid")
-        if k_centroids is None:
-            k_centroids = spark.read.parquet(f"{path}/centroids").count()
-        tmp_c = f"{path}/centroids_compact_tmp"
-        tmp_v = f"{path}/vectors_compact_tmp"
-        shutil.rmtree(tmp_c, ignore_errors=True)
-        shutil.rmtree(tmp_v, ignore_errors=True)
-        cent = ivf_centroids(
-            corpus, k_centroids, vec_col, id_col, iterations
-        ).persist()
-        try:
-            cent.write.mode("overwrite").parquet(tmp_c)
-            assign = ivf_assign(corpus, cent, vec_col, id_col)
-            (
-                corpus.join(assign, id_col)
-                .repartition("cid")  # consolidate append fragments per cid
-                .write.mode("overwrite")
-                .partitionBy("cid")
-                .parquet(tmp_v)
-            )
-        finally:
-            cent.unpersist()
+        tmps = {d: f"{path}/{d}_compact_tmp" for d in dirs}
+        for tmp in tmps.values():
+            shutil.rmtree(tmp, ignore_errors=True)
+        updates = fill(tmps)
         epoch = artifacts.new_epoch()
-        artifacts.write_epoch(tmp_c, epoch)
-        artifacts.write_epoch(tmp_v, epoch)
-        meta = artifacts.read_meta(path)
-        target = (meta["version"] + 1) if meta is not None else None
-        info = artifacts.journal_compact_swap(
-            path,
-            ["vectors", "centroids"],
-            epoch,
-            target,
-            meta_updates={
-                "k_centroids": int(k_centroids),
-                # the major pass re-trains the geometry; layout-only
-                # compactions deliberately do NOT touch this marker
-                "trained_version": target,
-            },
-        )
+        for tmp in tmps.values():
+            artifacts.write_epoch(tmp, epoch)
+        target = artifacts.read_meta(path)["version"] + 1
+        if retrains:
+            updates["trained_version"] = target
+        info = artifacts.journal_compact_swap(path, dirs, epoch, target, updates)
     except BaseException:
         # a Python failure BEFORE any swap: roll the journal back (the
         # tmp leftovers are re-derivable; the next run clears them).  A
         # crash after journal_compact_swap is fsck's job, not ours.
         artifacts.abort_compact(path)
         raise
-    swap_live_dir(f"{path}/vectors", tmp_v)
-    swap_live_dir(f"{path}/centroids", tmp_c)
+    for d in dirs:
+        artifacts.swap_live_dir(f"{path}/{d}", tmps[d])
     artifacts.finish_compact(path, info)
-
-
-def compact_ivf_files(spark, path: str) -> None:
-    """MINOR (layout-only) compaction for an append-refreshed
-    :func:`build_ivf_index` artifact — the HBase minor/major split the
-    IVF family was missing (round 13): :func:`compact_ivf_index` is
-    the MAJOR pass (re-clusters, changes geometry — and the drift
-    monitor measured that a cheap ``iterations=1`` re-cluster can
-    actively HURT recall), so a small-files trigger alone must not
-    force it.  This pass rewrites ``{path}/vectors`` repartitioned on
-    the STORED ``cid`` — one file per cid partition in practice
-    instead of one fragment per (append, cid) pair — under the frozen
-    standing centroids.  Rows, assignments, and therefore every probe
-    result are IDENTICAL before/after (pytest-pinned); only the file
-    layout the one-shot build had is restored.
-
-    JOURNALED like :func:`compact_pq_index` (single-dir swap plan,
-    epoch-stamped tmp, journal opens at the TOP so a concurrent append
-    fails loudly instead of being swallowed by the swap).  After
-    publish the standing ``centroids`` dir is re-stamped with the same
-    epoch so the build-time invariant (matching sidecars ⇔ the two
-    dirs belong together) stays true; a crash inside that one sidecar
-    write is benign — no reader or fsck path compares the two sidecars
-    directly, they adjudicate against the journal's epoch."""
-    import shutil
-
-    from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import swap_live_dir
-
-    artifacts.require_clean(path, "IVF index")
-    artifacts.open_compact(path)  # exclusion covers build+swap+publish
-    try:
-        vectors = spark.read.parquet(f"{path}/vectors")
-        tmp = f"{path}/vectors_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            vectors.repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(tmp)
-        )
-        epoch = artifacts.new_epoch()
-        artifacts.write_epoch(tmp, epoch)
-        meta = artifacts.read_meta(path)
-        target = (meta["version"] + 1) if meta is not None else None
-        info = artifacts.journal_compact_swap(path, ["vectors"], epoch, target)
-    except BaseException:
-        artifacts.abort_compact(path)  # no swap ran; tmp is re-derivable
-        raise
-    swap_live_dir(f"{path}/vectors", tmp)
-    artifacts.finish_compact(path, info)
-    artifacts.write_epoch(f"{path}/centroids", epoch)
-
-
-def ivf_drift_recall(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    candidate_iterations: "tuple[int, ...]" = (1, 2),
-    budget: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "qid",
-    query_vec_col: str = "qe",
-) -> DataFrame:
-    """The OPERATIONAL drift-recall monitor for a LIVE append-refreshed
-    :func:`build_ivf_index` artifact (round-12 verdict ask #3 — the
-    sim_ivf_appended_drift_recall fixture's grader, turned into the
-    helper an ingest loop actually calls): grade recall@k of
-
-    - ``appended``      — the artifact AS IT STANDS (stored centroids,
-      stored per-vector cids — i.e. build-time geometry with every
-      append assigned under it), and
-    - ``compact_it{n}`` — what :func:`compact_ivf_index`
-      (``iterations=n``) WOULD give, for each n in
-      ``candidate_iterations`` (re-cluster of the stored corpus,
-      assignment recomputed — computed in-plan, nothing written),
-
-    against exact cosine truth over the stored corpus, for a FIXED
-    ≤``budget`` query sample (deterministic: ``ORDER BY qid LIMIT
-    budget`` — the monitor's cost stays linear in the corpus; an
-    uncapped corpus-proportional sample made the exact-truth grader
-    O(n²), the round-11 scale bug).  Returns one row per variant:
-    (variant, n_queries, k, n_hit, recall_at_k).
-
-    The decision rule (measured in SCALE.md 'Appended-IVF drift
-    recall'): re-cluster when compact_itN's recall exceeds appended's
-    by more than the rebuild is worth — and note the measured sign
-    surprise: a seed-only it1 re-cluster can actively HURT (0.47 vs
-    0.54 appended on the drift fixture) while a Lloyd it2 recovers, so
-    the monitor grades BOTH before the loop pays for
-    :func:`compact_ivf_index`.
-
-    ``queries``: DataFrame with (``query_id_col``, ``query_vec_col``).
-    Queries that are themselves corpus rows are excluded from their
-    own truth/candidates by id.  The corpus-sized legs are one
-    assignment per candidate + one probed scan per variant + ONE
-    exact-truth pass (DISK_ONLY-cut, reused by every variant's
-    hit-join, per the corpus-memory rule)."""
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from hpaste_spark.operators.artifacts import require_clean
-
-    require_clean(path, "IVF index")
-    # the corpus feeds the exact-truth pass, every candidate's
-    # re-cluster + assignment, and every variant's probed scan (~8
-    # consumers) — and an appended vectors tree is fragmented into one
-    # file per (write, cid, task).  Cut it ONCE, DISK_ONLY per the
-    # corpus-memory rule (O(corpus) intermediates never claim executor
-    # storage memory), so the fragmented tree is scanned a single time.
-    corpus = (
-        spark.read.parquet(f"{path}/vectors")
-        .select(F.col(id_col), as_double(F.col(vec_col)).alias("_e"), F.col("cid"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    stored_cent = spark.read.parquet(f"{path}/centroids")
-    # ONE collect feeds the centroid count, the vector dim (k·d gates
-    # the assign broadcast), and the appended variant's local table —
-    # r13 ran a count() + a corpus .first() + a second collect() as
-    # three separate serial driver jobs (r14; the monitor's cost at
-    # sf0.1 is its serial job chain, 44 jobs measured).  K-row table,
-    # not a corpus collect.
-    cent_rows = stored_cent.collect()
-    k_centroids = len(cent_rows)
-    q_df = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            as_double(F.col(query_vec_col)).alias("qe"),
-        )
-        .orderBy("qid")
-        .limit(budget)
-    )
-    nq = q_df.agg(F.count(F.lit(1)).alias("n"))
-
-    wq = Window.partitionBy("qid").orderBy(F.col("_cs").desc(), id_col)
-    exact = (
-        corpus.crossJoin(F.broadcast(q_df))
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_cs", cosine(F.col("_e"), F.col("qe")))
-        .withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= k)
-        .select("qid", id_col)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-
-    bare = corpus.select(id_col, F.col("_e"))
-
-    # Candidate re-clusters built INCREMENTALLY (r13, guide §1.2):
-    # candidates it{n} share their first min(n, n') Lloyd passes, but
-    # ivf_centroids-from-scratch per candidate recomputed the seed
-    # means (and every shared refine pass) once per variant — it1+it2
-    # cost 1 + 3 = 4 corpus passes instead of the 3 the chain needs.
-    # Each refine step assigns against the PREVIOUS candidate's
-    # driver-materialized K-row centroids (the collect roundtrip
-    # preserves ivf_centroids' 6-dp-rounded doubles exactly, and
-    # n_dim_rows keeps the same broadcast-hinted assign plan, so the
-    # per-partition summation order — hence every mean — is identical
-    # to the from-scratch chain's).  The driver materialization itself
-    # is the r12-ADVICE leak fix, unchanged.
-    # the incremental chain below starts at it1 and only refines
-    # FORWARD, so a 0/negative candidate would silently grade the it1
-    # seed model under a mislabeled compact_it0 row (pre-r13 the
-    # from-scratch ivf_centroids call raised for it) — keep the raise
-    if any(n < 1 for n in candidate_iterations):
-        raise ValueError(
-            f"candidate_iterations must all be >= 1: {candidate_iterations}"
-        )
-    # centroid dim == corpus vector dim (build invariant), read from
-    # the already-collected rows — the corpus .first() it replaces
-    # forced the whole DISK_ONLY corpus cut to materialize inside a
-    # blocking driver call before any useful work
-    ndr = k_centroids * len(cent_rows[0]["cvec"])
-    cand_cent: "dict[int, DataFrame]" = {}
-    cand_assign: "dict[int, DataFrame]" = {}
-    done, cur = 0, None
-    for n in sorted(set(candidate_iterations)):
-        if cur is None:
-            cur = ivf_centroids(
-                bare, k_centroids, vec_col="_e", id_col=id_col, iterations=1
-            )
-            done = 1
-        while done < n:
-            step = ivf_assign(
-                bare, cur, vec_col="_e", id_col=id_col, n_dim_rows=ndr
-            )
-            if done in cand_cent:
-                # the refine step's assignment IS candidate it{done}'s
-                # assignment (same driver-local centroid table) — the
-                # variant loop below needed the identical relation and
-                # re-ran the corpus-dim assign for it (r14).  Lazy
-                # DISK_ONLY cut: materializes as a byproduct of this
-                # refine pass's means action, the variant leg then
-                # reads (id, cid) rows instead of replaying the
-                # dim-join.  Corpus-sized ⇒ DISK_ONLY per the
-                # corpus-memory rule.
-                step = step.localCheckpoint(
-                    eager=False, storageLevel=StorageLevel.DISK_ONLY
-                )
-                cand_assign[done] = step
-            cur = _centroid_means(
-                bare.join(step, id_col).select(
-                    "cid", F.col("_e").alias("e")
-                )
-            )
-            done += 1
-        # K-row model table, read by the refine chain AND the variant's
-        # assignment/probe branches: materialize to the driver and
-        # re-create (r12 ADVICE — a persist() here leaked one cached
-        # relation per variant per monitor call).  Bounded by
-        # k_centroids — the ≤|groups| driver-side class, not a corpus
-        # collect.
-        cur = spark.createDataFrame(cur.collect(), cur.schema)
-        cand_cent[n] = cur
-
-    variants: "list[tuple[str, DataFrame, DataFrame]]" = [
-        # the live artifact: stored centroids (driver-local from the
-        # single collect above), stored assignment
-        (
-            "appended",
-            spark.createDataFrame(cent_rows, stored_cent.schema),
-            corpus.select(id_col, "cid"),
-        ),
-    ]
-    for n in candidate_iterations:
-        variants.append((f"compact_it{n}", cand_cent[n], cand_assign.get(n)))
-
-    out = None
-    for name, cent_df, assign in variants:
-        cent = cent_df
-        if assign is None:
-            assign = ivf_assign(
-                bare, cent, vec_col="_e", id_col=id_col, n_dim_rows=ndr
-            )
-        wp = Window.partitionBy("qid").orderBy(F.col("_qc").desc(), "cid")
-        probes = (
-            q_df.crossJoin(F.broadcast(cent))
-            .withColumn("_qc", cosine(F.col("qe"), F.col("cvec")))
-            .withColumn("_rn", F.row_number().over(wp))
-            .filter(F.col("_rn") <= nprobe)
-            .select("qid", "cid")
-        )
-        approx = (
-            bare.join(assign, id_col)
-            .join(F.broadcast(probes), "cid")
-            .filter(F.col(id_col) != F.col("qid"))
-            .join(F.broadcast(q_df), "qid")
-            .withColumn("_cs", cosine(F.col("_e"), F.col("qe")))
-            .withColumn("_rk", F.row_number().over(wq))
-            .filter(F.col("_rk") <= k)
-            .select("qid", id_col)
-        )
-        row = (
-            approx.join(exact, ["qid", id_col])
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-            .crossJoin(F.broadcast(nq))
-            .select(
-                F.lit(name).alias("variant"),
-                F.col("n").cast("long").alias("n_queries"),
-                F.lit(k).alias("k"),
-                F.col("n_hit").cast("long").alias("n_hit"),
-                F.round(F.col("n_hit") / (F.col("n") * float(k)), 4).alias(
-                    "recall_at_k"
-                ),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("variant")
+    return epoch
 
 
 def ivf_topk_indexed(
@@ -1491,8 +1172,7 @@ def pq_codebooks(
         (F.col(id_col) % k).alias("code"),
         F.posexplode(as_double(F.col(vec_col))).alias("pos", "x"),
     ).select(
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
+        *_subspace(sd),
         "code",
         "x",
     )
@@ -1521,7 +1201,7 @@ def _pq_dists(vdims: DataFrame, codebooks: DataFrame, key_cols: list) -> DataFra
     return (
         vdims.join(cdims, ["sub", "wpos"])
         .groupBy(*key_cols, "sub", "code")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("d2"))
+        .agg(_sq_dist("x").alias("d2"))
     )
 
 
@@ -1530,8 +1210,7 @@ def _sub_dims(df: DataFrame, vec_col: str, id_col: str, sd: int) -> DataFrame:
         F.col(id_col), F.posexplode(as_double(F.col(vec_col))).alias("pos", "x")
     ).select(
         id_col,
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
+        *_subspace(sd),
         "x",
     )
 
@@ -1608,8 +1287,7 @@ def pq_topk(
     qdims = query_df.select(
         F.posexplode(as_double(F.col(query_col))).alias("pos", "x")
     ).select(
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
+        *_subspace(sd),
         "x",
         F.lit(1).alias("_q"),
     )
@@ -1689,7 +1367,7 @@ def ivf_pq_topk(
     d2 = (
         vdims.join(cdims, "pos")
         .groupBy(id_col, "cid")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("d2"))
+        .agg(_sq_dist("x").alias("d2"))
     )
     assign = d2.groupBy(id_col).agg(
         F.min_by("cid", F.struct(F.round("d2", 6), F.col("cid"))).alias("cid")
@@ -1701,7 +1379,7 @@ def ivf_pq_topk(
     probed = F.broadcast(
         qdims.join(cdims, "pos")
         .groupBy("cid")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("qd2"))
+        .agg(_sq_dist("x").alias("qd2"))
         .orderBy(F.round("qd2", 6), "cid")
         .limit(nprobe)
         .select("cid")
@@ -1713,8 +1391,7 @@ def ivf_pq_topk(
     qsub = query_df.select(
         F.posexplode(as_double(F.col(query_col))).alias("pos", "x")
     ).select(
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
+        *_subspace(sd),
         "x",
         F.lit(1).alias("_q"),
     )
@@ -1978,9 +1655,8 @@ def build_pq_index(
     doubles and never touches the raw embeddings (what in-plan
     :func:`pq_topk` must re-derive per query).  At 100 TB the codes
     table is ~d·8/m× smaller than the corpus — often the difference
-    between a cached working set and a cold scan."""
-    from hpaste_spark.operators import artifacts
-
+    between a cached working set and a cold scan.  ``meta.json`` last
+    (:func:`_write_index_meta`), pinning ``dim``, ``m`` and ``k``."""
     dim = len(corpus.select(vec_col).first()[0])
     if dim % m != 0:
         raise ValueError(
@@ -1990,280 +1666,10 @@ def build_pq_index(
     cb = pq_codebooks(corpus, m, k, vec_col, id_col).persist()
     try:
         cb.write.mode(mode).parquet(f"{path}/codebooks")
-        pq_encode(corpus, cb, m, vec_col, id_col).write.mode(mode).parquet(
-            f"{path}/codes"
-        )
+        _write_rows(pq_encode(corpus, cb, m, vec_col, id_col), f"{path}/codes", False, mode)
     finally:
         cb.unpersist()
-    # meta LAST (the build_lsh_index discipline), as a JSON sidecar so
-    # fsck can adjudicate torn appends without a SparkSession
-    artifacts.write_meta(
-        path,
-        {
-            "kind": "pq",
-            "version": 1,
-            "dim": int(dim),
-            "m": int(m),
-            "k": int(k),
-            "last_delta_sig": None,
-            "delta_sigs": [],
-            "compacted_version": 1,
-            "trained_version": 1,
-        },
-    )
-
-
-def append_pq_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_pq_index` artifact — the
-    append_ivf_index posture at the COMPRESSION leg: encode ONLY the
-    new vectors under the artifact's STORED codebooks (m inferred from
-    them — the geometry is pinned by the artifact, not a caller
-    parameter) and append the code rows; the standing corpus is never
-    re-encoded and the daily embedding ingest costs one m·k
-    distance-table pass over the delta plus a parquet append.
-
-    Honest semantics, same shape as the IVF append: codebooks are
-    FROZEN at build time, so the appended codes quantize the delta
-    with build-time codewords — if the data distribution drifts, the
-    delta's quantization error grows (recall of ADC search over those
-    codes degrades) and the heavy re-train is the maintenance step.
-    Unlike IVF, the PQ artifact stores only CODES (that is its entire
-    point — m ints per vector), so re-training cannot be derived from
-    the artifact: rebuild with :func:`build_pq_index` against the
-    corpus table, which is the store of record.
-    :func:`compact_pq_index` handles the small-files side.
-
-    TORN-APPEND PROTOCOL (round-12, shared with :func:`append_ivf_index`
-    — see its docstring and :mod:`hpaste_spark.operators.artifacts`):
-    journal → delta codes → meta-last version bump → journal dropped;
-    a torn append is loud and rolls back to the pre-append tree, a
-    retry of the committed append is a signature-recognized no-op
-    (duplicate code rows would otherwise occupy two ADC top-k ranks).
-    The delta's dimensionality is validated against the meta's pinned
-    ``dim`` before encoding (a wrong-dim delta would silently
-    mis-split sub/wpos and emit garbage codes).  Returns the meta
-    version."""
-    meta, sig = _ann_append_open(
-        path, "pq", new_vectors, vec_col, id_col, ["codes"]
-    )
-    if sig is None:
-        return meta["version"]
-    cb = spark.read.parquet(f"{path}/codebooks")
-    pq_encode(new_vectors, cb, int(meta["m"]), vec_col, id_col).write.mode(
-        "append"
-    ).parquet(f"{path}/codes")
-    return _ann_append_commit(path, meta, sig)
-
-
-def compact_pq_index(spark, path: str, num_files: int = 1) -> None:
-    """Small-files compaction for an append-refreshed
-    :func:`build_pq_index` artifact: each append adds one parquet
-    fragment of (id, codes) rows; rewrite the code relation as
-    ``num_files`` files and swap with the narrowed rename-aside
-    sequence.  Rows unchanged — read-back identical (pytest-pinned).
-    NOT a re-train: codes cannot be re-derived from the artifact (it
-    stores no raw vectors); distribution drift is repaired by a fresh
-    :func:`build_pq_index` on the corpus, exactly like an LSM major
-    compaction rereads the base data.
-
-    JOURNALED like :func:`compact_ivf_index` (round-13, r12 ADVICE —
-    this function previously took no exclusion beyond the entry
-    ``require_clean``, so an append committing during the rewrite was
-    silently discarded by the swap): ``compact_pending.json`` opens at
-    the TOP covering build+swap+publish, the swap plan (with an epoch
-    stamp on the tmp) lands before the rename, and
-    :func:`~hpaste_spark.operators.artifacts.finish_compact` bumps the
-    meta and drops the journal — so a crash anywhere is loud and
-    fsck-adjudicated (build-phase → discard tmp; swap-phase → epoch
-    logic; post-swap → finalize)."""
-    import shutil
-
-    from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import swap_live_dir
-
-    artifacts.require_clean(path, "PQ index")
-    artifacts.open_compact(path)  # exclusion covers build+swap+publish
-    try:
-        codes = spark.read.parquet(f"{path}/codes")
-        tmp = f"{path}/codes_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        codes.coalesce(num_files).write.mode("overwrite").parquet(tmp)
-        epoch = artifacts.new_epoch()
-        artifacts.write_epoch(tmp, epoch)
-        meta = artifacts.read_meta(path)
-        target = (meta["version"] + 1) if meta is not None else None
-        info = artifacts.journal_compact_swap(path, ["codes"], epoch, target)
-    except BaseException:
-        artifacts.abort_compact(path)  # no swap ran; tmp is re-derivable
-        raise
-    swap_live_dir(f"{path}/codes", tmp)
-    artifacts.finish_compact(path, info)
-
-
-def pq_drift_recall(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    budget: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "qid",
-    query_vec_col: str = "qe",
-) -> DataFrame:
-    """The drift-recall monitor for the COMPRESSION leg (round-12 —
-    :func:`ivf_drift_recall`'s twin for a :func:`build_pq_index`
-    artifact): appended codes quantize deltas with FROZEN build-time
-    codebooks, and unlike IVF the artifact cannot re-derive a re-train
-    from itself (it stores codes, not vectors) — so the monitor takes
-    the CORPUS (the store of record the artifact was encoded from,
-    standing rows + appended rows) and grades ADC recall@k against
-    exact L2² truth for
-
-    - ``appended``  — the artifact AS IT STANDS (stored codebooks +
-      stored codes), and
-    - ``retrained`` — what a fresh :func:`build_pq_index` on the corpus
-      would give (codebooks + encoding recomputed in-plan, nothing
-      written),
-
-    on a FIXED ≤``budget`` deterministic query sample (ORDER BY qid
-    LIMIT n — grader cost linear in the corpus, the
-    :func:`ivf_drift_recall` budget discipline).  Returns one row per
-    variant: (variant, n_queries, k, n_hit, recall_at_k).  The
-    decision rule: re-train (a fresh build on the corpus) when
-    ``retrained`` exceeds ``appended`` by more than the rebuild is
-    worth.
-
-    Corpus-sized legs: ONE pass for the exact truth, one codebook
-    train + one encode for the candidate, one scan of the stored codes
-    — the corpus is DISK_ONLY-cut once for its three consumers (the
-    corpus-memory rule)."""
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import require_clean
-
-    require_clean(path, "PQ index")
-    meta = artifacts.read_meta(path)
-    if meta is None or meta.get("kind") != "pq":
-        raise ValueError(
-            f"PQ index at {path} has no meta.json — rebuild with "
-            "build_pq_index before monitoring"
-        )
-    m, kk, dim = int(meta["m"]), int(meta["k"]), int(meta["dim"])
-    sd = dim // m
-    base = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_e"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    # the caller names the store of record; grading the artifact
-    # against the WRONG corpus slice would produce silently-skewed
-    # recall (the KMV missing-subset-group precedent) — hard-check the
-    # cardinalities instead (two cheap counts; the corpus count also
-    # materializes the DISK_ONLY cut before the fan-out)
-    n_corpus = base.count()
-    n_coded = _stored_rows(spark, f"{path}/codes")
-    if n_corpus != n_coded:
-        raise ValueError(
-            f"corpus has {n_corpus} rows but the PQ artifact at {path} "
-            f"encodes {n_coded} — the monitor must be given exactly the "
-            "store of record the artifact was built+appended from"
-        )
-    q_df = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            as_double(F.col(query_vec_col)).alias("qe"),
-        )
-        .orderBy("qid")
-        .limit(budget)
-    )
-    nq = q_df.agg(F.count(F.lit(1)).alias("n"))
-
-    # exact L2² truth over the corpus (ROUND(·,6) ordering metric —
-    # the cross-engine contract every PQ leg uses)
-    ed2 = F.aggregate(
-        F.zip_with(F.col("_e"), F.col("qe"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("_rd").asc(), id_col)
-    exact = (
-        base.crossJoin(F.broadcast(q_df))
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_rd", F.round(ed2, 6))
-        .withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= k)
-        .select("qid", id_col)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-
-    qdims = q_df.select(
-        "qid", F.posexplode(F.col("qe")).alias("pos", "x")
-    ).select(
-        "qid",
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
-        "x",
-    )
-
-    stored_cb = spark.read.parquet(f"{path}/codebooks")
-    stored_codes = spark.read.parquet(f"{path}/codes").select(
-        id_col, F.posexplode("codes").alias("sub", "code")
-    )
-    # cut: the candidate codebooks feed BOTH the in-plan encode and the
-    # retrained variant's query table (r13, same as pq_topk's cb)
-    cand_cb = pq_codebooks(
-        base, m, kk, vec_col="_e", id_col=id_col, dim=dim
-    ).localCheckpoint(eager=False)
-    variants = [
-        ("appended", stored_cb, stored_codes),
-        (
-            "retrained",
-            cand_cb,
-            pq_encode(base, cand_cb, m, vec_col="_e", id_col=id_col, dim=dim)
-            .select(id_col, F.posexplode("codes").alias("sub", "code")),
-        ),
-    ]
-
-    wr = Window.partitionBy("qid").orderBy(F.col("_ad").asc(), id_col)
-    out = None
-    for name, cb, coded in variants:
-        qtab = F.broadcast(
-            _pq_dists(qdims, cb, ["qid"]).select("qid", "sub", "code", "d2")
-        )
-        approx = (
-            coded.join(qtab, ["sub", "code"])
-            .groupBy("qid", id_col)
-            .agg(F.round(F.sum("d2"), 6).alias("_ad"))
-            .filter(F.col(id_col) != F.col("qid"))
-            .withColumn("_rk", F.row_number().over(wr))
-            .filter(F.col("_rk") <= k)
-            .select("qid", id_col)
-        )
-        row = (
-            approx.join(exact, ["qid", id_col])
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-            .crossJoin(F.broadcast(nq))
-            .select(
-                F.lit(name).alias("variant"),
-                F.col("n").cast("long").alias("n_queries"),
-                F.lit(k).alias("k"),
-                F.col("n_hit").cast("long").alias("n_hit"),
-                F.round(F.col("n_hit") / (F.col("n") * float(k)), 4).alias(
-                    "recall_at_k"
-                ),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("variant")
+    _write_index_meta(path, "pq", dim, m=int(m), k=int(k))
 
 
 def pq_topk_indexed(
@@ -2292,8 +1698,7 @@ def pq_topk_indexed(
     qdims = query_df.select(
         F.posexplode(as_double(F.col(query_col))).alias("pos", "x")
     ).select(
-        (F.col("pos") / sd).cast("int").alias("sub"),
-        (F.col("pos") % sd).alias("wpos"),
+        *_subspace(sd),
         "x",
         F.lit(1).alias("_q"),
     )
@@ -2317,19 +1722,13 @@ def _ivfadc_model(
     vec_col: str,
     id_col: str,
     dim: int,
-) -> "tuple[DataFrame, DataFrame, DataFrame, DataFrame]":
-    """(cents, assign, rcb, codes) — the four IVFADC model tables:
-    coarse centroids, the L2² nearest-centroid assignment, the
-    RESIDUAL codebooks (sub, code, wpos, c), and the per-vector
-    subspace codes (id, sub, code).  Shared by the in-plan
-    :func:`ivfadc_topk` and the write-once :func:`build_ivfadc_index`
-    so the stored index is definitionally the same model.  Both argmins
-    (assignment, residual encode) are ``min_by`` hash-aggs over a
-    (ROUND(metric, 6), tiebreak) total order — deterministic across
-    engines, no per-id sort."""
-    from pyspark.storagelevel import StorageLevel
-
-    sd = dim // m
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """(cents, rcb, coded) — the IVFADC model tables: coarse centroids,
+    the RESIDUAL codebooks (sub, code, wpos, c), and the stored code
+    rows (id, sub, code, cid) of :func:`_ivfadc_encode`.  Shared by
+    the in-plan :func:`ivfadc_topk`, the write-once
+    :func:`build_ivfadc_index` and the drift monitor's re-train
+    candidate, so the stored index is definitionally the same model."""
     # r13 measured the shared-model lineage cuts (cents/assign/rcb as
     # lazy localCheckpoints) 1.1-1.4x SLOWER at sf0.1 — the replayed
     # subtrees ride otherwise-idle cores inside one job, while each
@@ -2347,6 +1746,34 @@ def _ivfadc_model(
         # model-sized (k rows): default storage, lazy — folds into the
         # first action (the pq_topk codebook-cut posture)
         cents = cents.localCheckpoint(eager=False)
+    rcb, coded = _ivfadc_encode(df, cents, m, vec_col, id_col, dim, k=k, cut=cut)
+    return cents, rcb, coded
+
+
+def _ivfadc_encode(
+    df: DataFrame,
+    cents: DataFrame,
+    m: int,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    rcb: "DataFrame | None" = None,
+    k: "int | None" = None,
+    cut: bool = False,
+) -> "tuple[DataFrame, DataFrame]":
+    """(rcb, coded): assign every vector of ``df`` to its L2²-nearest
+    coarse centroid and residual-encode it — ``coded`` holds the stored
+    code rows (id, sub, code, cid), m per vector.  ``rcb`` is the
+    residual codebook: given, the delta is encoded under it (an
+    append, frozen model); None, it is trained here from the residuals
+    seeded ``id % k`` (the build).  Both argmins (assignment, residual
+    encode) are ``min_by`` hash-aggs over a (ROUND(metric, 6),
+    tiebreak) total order — deterministic across engines, no per-id
+    sort.  ``cut`` turns on the size-gated lineage cuts of
+    :func:`_ivfadc_model`."""
+    from pyspark.storagelevel import StorageLevel
+
+    sd = dim // m
     centdims = F.broadcast(
         cents.select("cid", F.posexplode("cvec").alias("pos", "c"))
     )
@@ -2357,7 +1784,7 @@ def _ivfadc_model(
     ad = (
         vdims.join(centdims, "pos")
         .groupBy(id_col, "cid")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("d2"))
+        .agg(_sq_dist("x").alias("d2"))
     )
     assign = ad.groupBy(id_col).agg(
         F.min_by("cid", F.struct(F.round("d2", 6), F.col("cid"))).alias("cid")
@@ -2365,8 +1792,8 @@ def _ivfadc_model(
     if cut:
         # corpus-sized (one (id, cid) row per vector): DISK_ONLY per
         # the corpus-memory rule.  assign feeds the residual dims AND
-        # the caller's coded relation — uncut, each replays the full
-        # dim-join argmin.
+        # the coded relation — uncut, each replays the full dim-join
+        # argmin.
         assign = assign.localCheckpoint(
             eager=False, storageLevel=StorageLevel.DISK_ONLY
         )
@@ -2377,28 +1804,28 @@ def _ivfadc_model(
         .select(
             id_col,
             "cid",
-            (F.col("pos") / sd).cast("int").alias("sub"),
-            (F.col("pos") % sd).alias("wpos"),
+            *_subspace(sd),
             (F.col("x") - F.col("c")).alias("rx"),
         )
     )
-    rcb = (
-        rdims.select((F.col(id_col) % k).alias("code"), "sub", "wpos", "rx")
-        .groupBy("sub", "code", "wpos")
-        .agg(F.round(F.avg("rx"), 6).alias("c"))
-    )
-    if cut:
-        # model-sized (m·k·sd rows): default storage, lazy
-        rcb = rcb.localCheckpoint(eager=False)
+    if rcb is None:
+        rcb = (
+            rdims.select((F.col(id_col) % k).alias("code"), "sub", "wpos", "rx")
+            .groupBy("sub", "code", "wpos")
+            .agg(F.round(F.avg("rx"), 6).alias("c"))
+        )
+        if cut:
+            # model-sized (m·k·sd rows): default storage, lazy
+            rcb = rcb.localCheckpoint(eager=False)
     rd2 = (
         rdims.join(F.broadcast(rcb), ["sub", "wpos"])
         .groupBy(id_col, "sub", "code")
-        .agg(F.sum((F.col("rx") - F.col("c")) * (F.col("rx") - F.col("c"))).alias("d2"))
+        .agg(_sq_dist("rx").alias("d2"))
     )
     codes = rd2.groupBy(id_col, "sub").agg(
         F.min_by("code", F.struct(F.round("d2", 6), F.col("code"))).alias("code")
     )
-    return cents, assign, rcb, codes
+    return rcb, codes.join(assign, id_col).select(id_col, "sub", "code", "cid")
 
 
 def _ivfadc_query(
@@ -2425,7 +1852,7 @@ def _ivfadc_query(
     probed = F.broadcast(
         qdims.join(centdims, "pos")
         .groupBy("cid")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("qd2"))
+        .agg(_sq_dist("x").alias("qd2"))
         .orderBy(F.round("qd2", 6), "cid")
         .limit(nprobe)
         .select("cid")
@@ -2434,15 +1861,14 @@ def _ivfadc_query(
         qdims.join(centdims.join(probed, "cid"), "pos")
         .select(
             "cid",
-            (F.col("pos") / sd).cast("int").alias("sub"),
-            (F.col("pos") % sd).alias("wpos"),
+            *_subspace(sd),
             (F.col("x") - F.col("c")).alias("rx"),
         )
     )
     qtab = F.broadcast(
         qres.join(F.broadcast(rcb), ["sub", "wpos"])
         .groupBy("cid", "sub", "code")
-        .agg(F.sum((F.col("rx") - F.col("c")) * (F.col("rx") - F.col("c"))).alias("qd2"))
+        .agg(_sq_dist("rx").alias("qd2"))
     )
     scored = (
         coded.join(qtab, ["cid", "sub", "code"])
@@ -2492,13 +1918,12 @@ def ivfadc_topk(
         first = df.select(vec_col).first()
         dim = len(first[0])
     query_df = _require_single_query(query_df)
-    cents, assign, rcb, codes = _ivfadc_model(
+    cents, rcb, coded = _ivfadc_model(
         df, k_centroids, m, k, vec_col, id_col, dim
     )
     centdims = F.broadcast(
         cents.select("cid", F.posexplode("cvec").alias("pos", "c"))
     )
-    coded = codes.join(assign, id_col).select(id_col, "cid", "sub", "code")
     return _ivfadc_query(
         centdims, rcb, coded, query_df, nprobe, m, topk, id_col, query_col,
         dim // m,
@@ -2524,9 +1949,9 @@ def build_ivfadc_index(
     the probe restriction partition-prunes which code files are read
     (the :func:`build_ivf_index` leg) and each read row is m ints, not
     d doubles (the :func:`build_pq_index` leg).  Definitionally the
-    same model as :func:`ivfadc_topk` (shared :func:`_ivfadc_model`)."""
-    from hpaste_spark.operators import artifacts
-
+    same model as :func:`ivfadc_topk` (shared :func:`_ivfadc_model`).
+    ``meta.json`` last (:func:`_write_index_meta`), pinning ``dim``,
+    ``m``, ``k`` and ``k_centroids``."""
     if dim is None:
         first = corpus.select(vec_col).first()
         dim = len(first[0])
@@ -2535,357 +1960,15 @@ def build_ivfadc_index(
             f"IVFADC requires dim % m == 0 (dim={dim}, m={m}) — residual "
             "subvector splits would be ragged"
         )
-    cents, assign, rcb, codes = _ivfadc_model(
+    cents, rcb, coded = _ivfadc_model(
         corpus, k_centroids, m, k, vec_col, id_col, dim
     )
     cents.write.mode(mode).parquet(f"{path}/centroids")
     rcb.write.mode(mode).parquet(f"{path}/codebooks")
-    (
-        codes.join(assign, id_col)
-        .select(id_col, "sub", "code", "cid")
-        .write.mode(mode)
-        .partitionBy("cid")
-        .parquet(f"{path}/codes")
+    _write_rows(coded, f"{path}/codes", True, mode)
+    _write_index_meta(
+        path, "ivfadc", dim, m=int(m), k=int(k), k_centroids=int(k_centroids)
     )
-    # meta LAST, JSON sidecar (fsck adjudicates torn appends with it)
-    artifacts.write_meta(
-        path,
-        {
-            "kind": "ivfadc",
-            "version": 1,
-            "dim": int(dim),
-            "m": int(m),
-            "k": int(k),
-            "k_centroids": int(k_centroids),
-            "last_delta_sig": None,
-            "delta_sigs": [],
-            "compacted_version": 1,
-            "trained_version": 1,
-        },
-    )
-
-
-def append_ivfadc_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: "int | None" = None,
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_ivfadc_index` artifact —
-    the standing-artifact append extended to the COMPLETE production
-    ANN index (round 11; IVF/PQ gained theirs in r10/r11): assign ONLY
-    the new vectors to the artifact's STORED coarse centroids (L2²
-    min_by, the :func:`_ivfadc_model` metric), residual-encode them
-    under the STORED residual codebooks (m inferred from the artifact
-    — both geometries pinned, mismatch impossible by construction),
-    and append the (id, sub, code) rows into their cid partitions.
-    The standing corpus is never re-assigned or re-encoded; probe-side
-    partition pruning is unchanged (new files land INSIDE existing
-    ``cid=`` directories).
-
-    Honest semantics, the compounding of both frozen geometries: an
-    appended index == "train coarse + residual quantizers on the
-    original corpus, assign-and-encode everything under them".
-    Distribution drift degrades BOTH legs (probed-cell coverage AND
-    the delta's quantization error); the heavy re-train is a fresh
-    :func:`build_ivfadc_index` on the corpus — like PQ, the artifact
-    stores codes, not raw vectors, so compaction cannot re-derive the
-    model from the artifact alone.
-
-    The assignment/encode expressions mirror :func:`_ivfadc_model`
-    step for step (same ROUND(·,6)+tiebreak min_by contracts) with the
-    trained tables replaced by reads — pinned equal by
-    ``test_ivfadc_index_append_matches_frozen_model``.
-
-    TORN-APPEND PROTOCOL (round-12, shared with :func:`append_ivf_index`
-    — see its docstring): journal → delta codes → meta-last version
-    bump → journal dropped; torn appends are loud and roll back, a
-    retry of the committed append is a signature-recognized no-op.
-    The delta's dimensionality is validated against the meta's pinned
-    ``dim`` (and ``dim % m == 0``) before encoding.  Returns the meta
-    version."""
-    meta, sig = _ann_append_open(
-        path, "ivfadc", new_vectors, vec_col, id_col, ["codes"]
-    )
-    if sig is None:
-        return meta["version"]
-    if dim is not None and int(dim) != int(meta["dim"]):
-        from hpaste_spark.operators import artifacts as _artifacts
-
-        os.unlink(os.path.join(path, _artifacts.APPEND_PENDING))
-        raise ValueError(
-            f"caller-passed dim {dim} != the artifact's pinned dim "
-            f"{meta['dim']} at {path}; the geometry comes FROM the meta"
-        )
-    cents = spark.read.parquet(f"{path}/centroids")
-    rcb = spark.read.parquet(f"{path}/codebooks")
-    dim = int(meta["dim"])
-    m = int(meta["m"])
-    sd = dim // m
-    centdims = F.broadcast(
-        cents.select("cid", F.posexplode("cvec").alias("pos", "c"))
-    )
-    vdims = new_vectors.select(
-        F.col(id_col), F.posexplode(as_double(F.col(vec_col))).alias("pos", "x")
-    )
-    ad = (
-        vdims.join(centdims, "pos")
-        .groupBy(id_col, "cid")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("d2"))
-    )
-    assign = ad.groupBy(id_col).agg(
-        F.min_by("cid", F.struct(F.round("d2", 6), F.col("cid"))).alias("cid")
-    )
-    rdims = (
-        vdims.join(assign, id_col)
-        .join(centdims, ["cid", "pos"])
-        .select(
-            id_col,
-            "cid",
-            (F.col("pos") / sd).cast("int").alias("sub"),
-            (F.col("pos") % sd).alias("wpos"),
-            (F.col("x") - F.col("c")).alias("rx"),
-        )
-    )
-    rd2 = (
-        rdims.join(F.broadcast(rcb), ["sub", "wpos"])
-        .groupBy(id_col, "sub", "code")
-        .agg(F.sum((F.col("rx") - F.col("c")) * (F.col("rx") - F.col("c"))).alias("d2"))
-    )
-    codes = rd2.groupBy(id_col, "sub").agg(
-        F.min_by("code", F.struct(F.round("d2", 6), F.col("code"))).alias("code")
-    )
-    (
-        codes.join(assign, id_col)
-        .select(id_col, "sub", "code", "cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(f"{path}/codes")
-    )
-    return _ann_append_commit(path, meta, sig)
-
-
-def ivfadc_drift_recall(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    budget: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "qid",
-    query_vec_col: str = "qe",
-) -> DataFrame:
-    """Drift-recall monitor for the COMPLETE production ANN artifact
-    (round 12 — the :func:`ivf_drift_recall` /:func:`pq_drift_recall`
-    family finished): an appended :func:`build_ivfadc_index` compounds
-    BOTH frozen geometries (probed-cell coverage AND the delta's
-    residual quantization error), and like PQ the artifact stores
-    codes, so the re-train candidate comes from the caller-named
-    CORPUS (cardinality-hard-checked).  Grades recall@k of
-
-    - ``appended``  — the artifact AS IT STANDS (stored coarse
-      centroids, stored residual codebooks, stored codes+cids), and
-    - ``retrained`` — a fresh :func:`_ivfadc_model` on the corpus,
-      computed in-plan, nothing written,
-
-    against exact L2² truth, on the fixed ≤``budget`` deterministic
-    query sample, with the per-query per-probed-cell ADC machinery of
-    :func:`_ivfadc_query` generalized to a query BATCH (the qid-keyed
-    distance tables stay broadcast-tiny: |q|·nprobe·m·k rows).
-    Returns (variant, n_queries, k, n_hit, recall_at_k) rows."""
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import require_clean
-
-    require_clean(path, "IVFADC index")
-    meta = artifacts.read_meta(path)
-    if meta is None or meta.get("kind") != "ivfadc":
-        raise ValueError(
-            f"IVFADC index at {path} has no meta.json — rebuild with "
-            "build_ivfadc_index before monitoring"
-        )
-    m, kk, kc, dim = (
-        int(meta["m"]), int(meta["k"]), int(meta["k_centroids"]), int(meta["dim"])
-    )
-    sd = dim // m
-    base = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_e"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    n_corpus = base.count()
-    n_coded = _stored_rows(spark, f"{path}/codes")
-    if n_corpus * m != n_coded:
-        raise ValueError(
-            f"corpus has {n_corpus} rows but the IVFADC artifact at "
-            f"{path} holds {n_coded} code rows (expected {n_corpus * m}) "
-            "— the monitor must be given exactly the store of record"
-        )
-    q_df = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            as_double(F.col(query_vec_col)).alias("qe"),
-        )
-        .orderBy("qid")
-        .limit(budget)
-    )
-    nq = q_df.agg(F.count(F.lit(1)).alias("n"))
-
-    ed2 = F.aggregate(
-        F.zip_with(F.col("_e"), F.col("qe"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("_rd").asc(), id_col)
-    exact = (
-        base.crossJoin(F.broadcast(q_df))
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_rd", F.round(ed2, 6))
-        .withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= k)
-        .select("qid", id_col)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-
-    qdims = q_df.select("qid", F.posexplode(F.col("qe")).alias("pos", "x"))
-
-    stored_cents = spark.read.parquet(f"{path}/centroids")
-    stored_rcb = spark.read.parquet(f"{path}/codebooks")
-    stored_coded = spark.read.parquet(f"{path}/codes").select(
-        id_col, "cid", "sub", "code"
-    )
-    cents2, assign2, rcb2, codes2 = _ivfadc_model(
-        base, kc, m, kk, "_e", id_col, dim
-    )
-    variants = [
-        ("appended", stored_cents, stored_rcb, stored_coded),
-        (
-            "retrained",
-            cents2,
-            rcb2,
-            codes2.join(assign2, id_col).select(id_col, "cid", "sub", "code"),
-        ),
-    ]
-
-    wp = Window.partitionBy("qid").orderBy(F.round("qd2", 6).asc(), F.col("cid"))
-    wr = Window.partitionBy("qid").orderBy(F.col("approx_dist").asc(), id_col)
-    out = None
-    for name, cents, rcb, coded in variants:
-        centdims = F.broadcast(
-            cents.select("cid", F.posexplode("cvec").alias("pos", "c"))
-        )
-        probed = F.broadcast(
-            qdims.join(centdims, "pos")
-            .groupBy("qid", "cid")
-            .agg(
-                F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias(
-                    "qd2"
-                )
-            )
-            .withColumn("_rn", F.row_number().over(wp))
-            .filter(F.col("_rn") <= nprobe)
-            .select("qid", "cid")
-        )
-        qres = qdims.join(centdims.join(probed, "cid"), ["qid", "pos"]).select(
-            "qid",
-            "cid",
-            (F.col("pos") / sd).cast("int").alias("sub"),
-            (F.col("pos") % sd).alias("wpos"),
-            (F.col("x") - F.col("c")).alias("rx"),
-        )
-        qtab = F.broadcast(
-            qres.join(F.broadcast(rcb), ["sub", "wpos"])
-            .groupBy("qid", "cid", "sub", "code")
-            .agg(
-                F.sum((F.col("rx") - F.col("c")) * (F.col("rx") - F.col("c"))).alias(
-                    "qd2"
-                )
-            )
-        )
-        approx = (
-            coded.join(qtab, ["cid", "sub", "code"])
-            .groupBy("qid", id_col)
-            .agg(
-                (F.round(F.sum("qd2"), 6) + F.lit(0.0)).alias("approx_dist"),
-                F.count(F.lit(1)).alias("_nsub"),
-            )
-            .filter((F.col("_nsub") == m) & (F.col(id_col) != F.col("qid")))
-            .withColumn("_rk", F.row_number().over(wr))
-            .filter(F.col("_rk") <= k)
-            .select("qid", id_col)
-        )
-        row = (
-            approx.join(exact, ["qid", id_col])
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-            .crossJoin(F.broadcast(nq))
-            .select(
-                F.lit(name).alias("variant"),
-                F.col("n").cast("long").alias("n_queries"),
-                F.lit(k).alias("k"),
-                F.col("n_hit").cast("long").alias("n_hit"),
-                F.round(F.col("n_hit") / (F.col("n") * float(k)), 4).alias(
-                    "recall_at_k"
-                ),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("variant")
-
-
-def compact_ivfadc_index(spark, path: str) -> None:
-    """Small-files compaction for an append-refreshed
-    :func:`build_ivfadc_index` artifact (round-12 — the last index
-    family whose append had no compaction counterpart): each
-    :func:`append_ivfadc_index` adds one parquet fragment per
-    (append, cid) pair under ``{path}/codes``; rewrite the code
-    relation repartitioned on ``cid`` (one file per cid partition in
-    practice) and swap with the narrowed rename-aside sequence.  Rows
-    unchanged — read-back and probe results identical (pytest-pinned),
-    partition pruning unchanged.  NOT a re-train: like PQ, the
-    artifact stores codes, not raw vectors, so centroid/codebook drift
-    is repaired by a fresh :func:`build_ivfadc_index` on the corpus
-    (the drift monitor's decision); this pass only restores the file
-    layout the one-shot build had.  OFFLINE single-writer, JOURNALED
-    like :func:`compact_ivf_index` (round-13, r12 ADVICE — previously
-    no exclusion beyond the entry ``require_clean``, so an append
-    committing during the rewrite was silently discarded by the swap):
-    the journal opens at the TOP covering build+swap+publish, the swap
-    plan (epoch-stamped tmp) lands before the rename, and
-    :func:`~hpaste_spark.operators.artifacts.finish_compact` bumps the
-    meta and drops the journal."""
-    import shutil
-
-    from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import swap_live_dir
-
-    artifacts.require_clean(path, "IVFADC index")
-    artifacts.open_compact(path)  # exclusion covers build+swap+publish
-    try:
-        codes = spark.read.parquet(f"{path}/codes")
-        tmp = f"{path}/codes_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            codes.repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(tmp)
-        )
-        epoch = artifacts.new_epoch()
-        artifacts.write_epoch(tmp, epoch)
-        meta = artifacts.read_meta(path)
-        target = (meta["version"] + 1) if meta is not None else None
-        info = artifacts.journal_compact_swap(path, ["codes"], epoch, target)
-    except BaseException:
-        artifacts.abort_compact(path)  # no swap ran; tmp is re-derivable
-        raise
-    swap_live_dir(f"{path}/codes", tmp)
-    artifacts.finish_compact(path, info)
 
 
 def ivfadc_topk_indexed(
@@ -2971,19 +2054,7 @@ def ivfadc_rerank(
         .crossJoin(F.broadcast(qe))
         .select(
             id_col,
-            (
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("_e"), F.col("_qe"), lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, d: acc + d,
-                    ),
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("ed2"),
+            (F.round(_l2sq(F.col("_e"), F.col("_qe")), 6) + F.lit(0.0)).alias("ed2"),
         )
     )
     # shortlist is R rows — the rank window is trivially small
@@ -3086,131 +2157,702 @@ def hard_negative_mining(
     )
 
 
-def _retrain_blue_green(
-    spark, corpus: DataFrame, path: str, kind: str, build, build_kwargs: dict
+# ---------------------------------------------------------------------------
+# ANN index lifecycle: append, layout compaction, drift monitor, re-train
+# and the one-call maintenance pass, each written ONCE over a per-family
+# codec (the HPaste move: one HbaseTable lifecycle, a pluggable converter
+# per column — HbaseTable.scala:51, Serialization.scala:155).  The family
+# is read from the artifact's meta.json ``kind``; the codec holds all a
+# lifecycle step needs to know about it — where appends land, how a delta
+# is encoded under the stored model, the exact-truth metric, and which
+# re-train candidates the drift monitor grades.
+# ---------------------------------------------------------------------------
+
+
+@dataclasses.dataclass(frozen=True)
+class _Codec:
+    kind: str
+    #: the data dir appends land in, and whether it is partitioned by cid
+    data: str
+    partitioned: bool
+    #: the artifact stores its full vectors (IVF): it is its own store
+    #: of record, so it re-trains and grades from itself; a code-only
+    #: artifact needs the caller-named corpus
+    stores_vectors: bool
+    #: meta keys a re-train rebuilds with (the pinned geometry)
+    geometry: "tuple[str, ...]"
+    #: sibling dirs whose epoch sidecar must keep matching ``data``'s
+    stamped: "tuple[str, ...]"
+    #: data rows stored per vector (the cardinality check's multiplier)
+    rows_per_vector: Callable[[dict], int]
+    #: build_<kind>_index(corpus, path, **geometry, vec_col, id_col)
+    build: Callable
+    #: (spark, path, meta, df, vec_col, id_col) -> the delta's data rows
+    #: encoded under the STORED model
+    encode: Callable
+    #: (e, qe) -> the exact-truth ordering column (best first)
+    exact_key: Callable
+    #: (spark, path, meta, corpus, id_col, iterations) -> [(variant, model)]
+    candidates: Callable
+    #: (model, q_df, meta, nprobe, id_col) -> (scored (qid, id, ...) rows,
+    #: their ordering column)
+    approx: Callable
+
+    def retrain(self, spark, path, corpus, meta, variant, apply, vec_col, id_col) -> str:
+        """The call that realizes the graded re-train ``variant`` (run
+        when ``apply``), named as the maintenance plan."""
+        if self.stores_vectors:
+            its = int(variant.removeprefix("compact_it"))
+            if apply:
+                compact_ivf_index(
+                    spark, path, iterations=its, vec_col=vec_col, id_col=id_col
+                )
+            return f"compact_ivf_index(path, iterations={its})"
+        if apply:
+            retrain_index(spark, corpus, path, vec_col, id_col)
+        return "retrain_index(corpus, path)  # blue/green root swap; " + ", ".join(
+            f"{g}={meta[g]}" for g in self.geometry
+        )
+
+
+def _l2sq(a: F.Column, b: F.Column) -> F.Column:
+    """Σ(a−b)² of two equal-length arrays, as an array fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _cosine_desc(e: F.Column, qe: F.Column) -> F.Column:
+    return cosine(e, qe).desc()
+
+
+def _l2_asc(e: F.Column, qe: F.Column) -> F.Column:
+    # ROUND(·,6): the cross-engine ordering contract every PQ leg uses
+    return F.round(_l2sq(e, qe), 6).asc()
+
+
+def _ivf_encode(spark, path, meta, df, vec_col, id_col) -> DataFrame:
+    return _ivf_rows(df, spark.read.parquet(f"{path}/centroids"), vec_col, id_col)
+
+
+def _pq_encode_stored(spark, path, meta, df, vec_col, id_col) -> DataFrame:
+    cb = spark.read.parquet(f"{path}/codebooks")
+    return pq_encode(df, cb, int(meta["m"]), vec_col, id_col)
+
+
+def _ivfadc_encode_stored(spark, path, meta, df, vec_col, id_col) -> DataFrame:
+    cents, rcb = (spark.read.parquet(f"{path}/{d}") for d in ("centroids", "codebooks"))
+    m, dim = int(meta["m"]), int(meta["dim"])
+    return _ivfadc_encode(df, cents, m, vec_col, id_col, dim, rcb=rcb)[1]
+
+
+def _ivf_candidates(spark, path, meta, corpus, id_col, candidate_iterations):
+    """``appended`` — the stored centroids (driver-local) over the
+    stored per-vector cids — and ``compact_it{n}``, what
+    :func:`compact_ivf_index` (``iterations=n``) WOULD give: a
+    re-cluster of the stored corpus, assignment recomputed, in-plan,
+    nothing written.  Models are (centroids, corpus rows with cid)."""
+    from pyspark.storagelevel import StorageLevel
+
+    stored_cent = spark.read.parquet(f"{path}/centroids")
+    # ONE collect feeds the centroid count, the vector dim (k·d gates
+    # the assign broadcast), and the appended variant's local table —
+    # r13 ran a count() + a corpus .first() + a second collect() as
+    # three separate serial driver jobs (r14; the monitor's cost at
+    # sf0.1 is its serial job chain, 44 jobs measured).  K-row table,
+    # not a corpus collect.
+    cent_rows = stored_cent.collect()
+    k_centroids = len(cent_rows)
+    bare = corpus.select(id_col, F.col("_e"))
+
+    # Candidate re-clusters built INCREMENTALLY (r13, guide §1.2):
+    # candidates it{n} share their first min(n, n') Lloyd passes, but
+    # ivf_centroids-from-scratch per candidate recomputed the seed
+    # means (and every shared refine pass) once per variant — it1+it2
+    # cost 1 + 3 = 4 corpus passes instead of the 3 the chain needs.
+    # Each refine step assigns against the PREVIOUS candidate's
+    # driver-materialized K-row centroids (the collect roundtrip
+    # preserves ivf_centroids' 6-dp-rounded doubles exactly, and
+    # n_dim_rows keeps the same broadcast-hinted assign plan, so the
+    # per-partition summation order — hence every mean — is identical
+    # to the from-scratch chain's).  The driver materialization itself
+    # is the r12-ADVICE leak fix, unchanged.
+    # the incremental chain below starts at it1 and only refines
+    # FORWARD, so a 0/negative candidate would silently grade the it1
+    # seed model under a mislabeled compact_it0 row (pre-r13 the
+    # from-scratch ivf_centroids call raised for it) — keep the raise
+    if any(n < 1 for n in candidate_iterations):
+        raise ValueError(
+            f"candidate_iterations must all be >= 1: {candidate_iterations}"
+        )
+    # centroid dim == corpus vector dim (build invariant), read from
+    # the already-collected rows — the corpus .first() it replaces
+    # forced the whole DISK_ONLY corpus cut to materialize inside a
+    # blocking driver call before any useful work
+    ndr = k_centroids * len(cent_rows[0]["cvec"])
+    cand_cent: "dict[int, DataFrame]" = {}
+    cand_assign: "dict[int, DataFrame]" = {}
+    done, cur = 0, None
+    for n in sorted(set(candidate_iterations)):
+        if cur is None:
+            cur = ivf_centroids(
+                bare, k_centroids, vec_col="_e", id_col=id_col, iterations=1
+            )
+            done = 1
+        while done < n:
+            step = ivf_assign(
+                bare, cur, vec_col="_e", id_col=id_col, n_dim_rows=ndr
+            )
+            if done in cand_cent:
+                # the refine step's assignment IS candidate it{done}'s
+                # assignment (same driver-local centroid table) — the
+                # variant leg needed the identical relation and re-ran
+                # the corpus-dim assign for it (r14).  Lazy DISK_ONLY
+                # cut: materializes as a byproduct of this refine
+                # pass's means action, the variant leg then reads
+                # (id, cid) rows instead of replaying the dim-join.
+                # Corpus-sized ⇒ DISK_ONLY per the corpus-memory rule.
+                step = step.localCheckpoint(
+                    eager=False, storageLevel=StorageLevel.DISK_ONLY
+                )
+                cand_assign[done] = step
+            cur = _centroid_means(
+                bare.join(step, id_col).select(
+                    "cid", F.col("_e").alias("e")
+                )
+            )
+            done += 1
+        # K-row model table, read by the refine chain AND the variant's
+        # assignment/probe branches: materialize to the driver and
+        # re-create (r12 ADVICE — a persist() here leaked one cached
+        # relation per variant per monitor call).  Bounded by
+        # k_centroids — the ≤|groups| driver-side class, not a corpus
+        # collect.
+        cur = spark.createDataFrame(cur.collect(), cur.schema)
+        cand_cent[n] = cur
+
+    variants = [
+        # the live artifact: stored centroids (driver-local from the
+        # single collect above), stored assignment
+        (
+            "appended",
+            (
+                spark.createDataFrame(cent_rows, stored_cent.schema),
+                corpus.select(id_col, "cid"),
+            ),
+        ),
+    ]
+    for n in candidate_iterations:
+        assign = cand_assign.get(n)
+        if assign is None:
+            assign = ivf_assign(
+                bare, cand_cent[n], vec_col="_e", id_col=id_col, n_dim_rows=ndr
+            )
+        variants.append((f"compact_it{n}", (cand_cent[n], assign)))
+    return [(name, (cent, bare.join(a, id_col))) for name, (cent, a) in variants]
+
+
+def _ivf_approx(model, q_df, meta, nprobe, id_col):
+    """Exact cosine over each query's ``nprobe`` nearest lists."""
+    from pyspark.sql import Window
+
+    cent, assigned = model
+    wp = Window.partitionBy("qid").orderBy(F.col("_qc").desc(), "cid")
+    probes = (
+        q_df.crossJoin(F.broadcast(cent))
+        .withColumn("_qc", cosine(F.col("qe"), F.col("cvec")))
+        .withColumn("_rn", F.row_number().over(wp))
+        .filter(F.col("_rn") <= nprobe)
+        .select("qid", "cid")
+    )
+    scored = (
+        assigned.join(F.broadcast(probes), "cid")
+        .filter(F.col(id_col) != F.col("qid"))
+        .join(F.broadcast(q_df), "qid")
+    )
+    return scored, _cosine_desc(F.col("_e"), F.col("qe"))
+
+
+def _pq_candidates(spark, path, meta, corpus, id_col, candidate_iterations):
+    """``appended`` — the stored codebooks and codes — and
+    ``retrained``, what a fresh :func:`build_pq_index` on the corpus
+    would give (codebooks + encoding in-plan, nothing written).
+    Models are (codebooks, codes rows)."""
+    m, kk, dim = int(meta["m"]), int(meta["k"]), int(meta["dim"])
+    # cut: the candidate codebooks feed BOTH the in-plan encode and the
+    # retrained variant's query table (r13, same as pq_topk's cb)
+    cand_cb = pq_codebooks(
+        corpus, m, kk, vec_col="_e", id_col=id_col, dim=dim
+    ).localCheckpoint(eager=False)
+    return [
+        (
+            "appended",
+            (spark.read.parquet(f"{path}/codebooks"), spark.read.parquet(f"{path}/codes")),
+        ),
+        (
+            "retrained",
+            (cand_cb, pq_encode(corpus, cand_cb, m, vec_col="_e", id_col=id_col, dim=dim)),
+        ),
+    ]
+
+
+def _pq_approx(model, q_df, meta, nprobe, id_col):
+    """ADC over the whole coded corpus, one distance table per query."""
+    cb, codes = model
+    sd = int(meta["dim"]) // int(meta["m"])
+    qdims = q_df.select(
+        "qid", F.posexplode(F.col("qe")).alias("pos", "x")
+    ).select(
+        "qid",
+        *_subspace(sd),
+        "x",
+    )
+    qtab = F.broadcast(
+        _pq_dists(qdims, cb, ["qid"]).select("qid", "sub", "code", "d2")
+    )
+    scored = (
+        codes.select(id_col, F.posexplode("codes").alias("sub", "code"))
+        .join(qtab, ["sub", "code"])
+        .groupBy("qid", id_col)
+        .agg(F.round(F.sum("d2"), 6).alias("_ad"))
+        .filter(F.col(id_col) != F.col("qid"))
+    )
+    return scored, F.col("_ad").asc()
+
+
+def _ivfadc_candidates(spark, path, meta, corpus, id_col, candidate_iterations):
+    """``appended`` — the stored coarse centroids, residual codebooks
+    and codes+cids — and ``retrained``, a fresh :func:`_ivfadc_model`
+    on the corpus, in-plan, nothing written.  Models are (centroids,
+    residual codebooks, code rows)."""
+    return [
+        (
+            "appended",
+            tuple(
+                spark.read.parquet(f"{path}/{d}")
+                for d in ("centroids", "codebooks", "codes")
+            ),
+        ),
+        (
+            "retrained",
+            _ivfadc_model(
+                corpus, int(meta["k_centroids"]), int(meta["m"]), int(meta["k"]),
+                "_e", id_col, int(meta["dim"]),
+            ),
+        ),
+    ]
+
+
+def _ivfadc_approx(model, q_df, meta, nprobe, id_col):
+    """The per-query per-probed-cell ADC machinery of
+    :func:`_ivfadc_query` generalized to a query BATCH (the qid-keyed
+    distance tables stay broadcast-tiny: |q|·nprobe·m·k rows)."""
+    from pyspark.sql import Window
+
+    cents, rcb, coded = model
+    m = int(meta["m"])
+    sd = int(meta["dim"]) // m
+    qdims = q_df.select("qid", F.posexplode(F.col("qe")).alias("pos", "x"))
+    wp = Window.partitionBy("qid").orderBy(F.round("qd2", 6).asc(), F.col("cid"))
+    centdims = F.broadcast(
+        cents.select("cid", F.posexplode("cvec").alias("pos", "c"))
+    )
+    probed = F.broadcast(
+        qdims.join(centdims, "pos")
+        .groupBy("qid", "cid")
+        .agg(_sq_dist("x").alias("qd2"))
+        .withColumn("_rn", F.row_number().over(wp))
+        .filter(F.col("_rn") <= nprobe)
+        .select("qid", "cid")
+    )
+    qres = qdims.join(centdims.join(probed, "cid"), ["qid", "pos"]).select(
+        "qid",
+        "cid",
+        *_subspace(sd),
+        (F.col("x") - F.col("c")).alias("rx"),
+    )
+    qtab = F.broadcast(
+        qres.join(F.broadcast(rcb), ["sub", "wpos"])
+        .groupBy("qid", "cid", "sub", "code")
+        .agg(_sq_dist("rx").alias("qd2"))
+    )
+    scored = (
+        coded.join(qtab, ["cid", "sub", "code"])
+        .groupBy("qid", id_col)
+        .agg(
+            (F.round(F.sum("qd2"), 6) + F.lit(0.0)).alias("approx_dist"),
+            F.count(F.lit(1)).alias("_nsub"),
+        )
+        .filter((F.col("_nsub") == m) & (F.col(id_col) != F.col("qid")))
+    )
+    return scored, F.col("approx_dist").asc()
+
+
+_CODECS = {
+    "ivf": _Codec(
+        kind="ivf",
+        data="vectors",
+        partitioned=True,
+        stores_vectors=True,
+        geometry=("k_centroids",),
+        stamped=("centroids",),
+        rows_per_vector=lambda meta: 1,
+        # late-bound builds: a patched module attribute is honoured
+        build=lambda *a, **kw: build_ivf_index(*a, **kw),
+        encode=_ivf_encode,
+        exact_key=_cosine_desc,
+        candidates=_ivf_candidates,
+        approx=_ivf_approx,
+    ),
+    "pq": _Codec(
+        kind="pq",
+        data="codes",
+        partitioned=False,
+        stores_vectors=False,
+        geometry=("m", "k"),
+        stamped=(),
+        rows_per_vector=lambda meta: 1,
+        build=lambda *a, **kw: build_pq_index(*a, **kw),
+        encode=_pq_encode_stored,
+        exact_key=_l2_asc,
+        candidates=_pq_candidates,
+        approx=_pq_approx,
+    ),
+    "ivfadc": _Codec(
+        kind="ivfadc",
+        data="codes",
+        partitioned=True,
+        stores_vectors=False,
+        geometry=("k_centroids", "m", "k"),
+        stamped=(),
+        rows_per_vector=lambda meta: int(meta["m"]),
+        build=lambda *a, **kw: build_ivfadc_index(*a, **kw),
+        encode=_ivfadc_encode_stored,
+        exact_key=_l2_asc,
+        candidates=_ivfadc_candidates,
+        approx=_ivfadc_approx,
+    ),
+}
+
+
+def _open_index(path: str) -> "tuple[_Codec, dict]":
+    """(codec, meta) of the stored ANN index at ``path`` — refusing,
+    loudly, a tree with a pending journal (a crashed or concurrent
+    append/compaction) and anything that is not a build_*_index
+    artifact."""
+    from hpaste_spark.operators import artifacts
+
+    artifacts.require_clean(path, "ANN index")
+    meta = artifacts.read_meta(path)
+    kind = None if meta is None else meta.get("kind")
+    if kind not in _CODECS:
+        raise ValueError(
+            f"artifact at {path} has kind={kind!r} — not a stored ANN "
+            "index (no meta.json, or another family); build it with "
+            "build_ivf_index / build_pq_index / build_ivfadc_index"
+        )
+    return _CODECS[kind], meta
+
+
+def _ann_append_commit(path: str, meta: dict, sig: str) -> int:
+    """Publish half of the protocol: meta LAST (version bump + the sig
+    recorded in the ``delta_sigs`` replay ring), then drop the
+    journal.  Returns the new version."""
+    from hpaste_spark.operators import artifacts
+
+    meta = dict(meta)
+    meta["version"] = meta["version"] + 1
+    artifacts.record_delta_sig(meta, sig)
+    artifacts.commit_append(path, meta)
+    return meta["version"]
+
+
+def append_index(
+    spark,
+    path: str,
+    new_vectors: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
 ) -> int:
-    """Shared blue/green re-train: build a COMPLETE replacement
-    artifact at the sibling ``path + RETRAIN_TMP_SUFFIX``, carry the
-    version chain forward in its meta, then swap the ROOTS with the
-    narrowed rename-aside sequence.  The old root's compaction journal
-    (opened before the build — appends/compactions against the dying
-    artifact fail loudly for the whole window) leaves with the old
-    root; the new root is born clean.  Crash windows: mid-build →
-    build-phase journal on the live root (fsck discards it) + a
-    re-derivable sibling tmp (:func:`~hpaste_spark.operators.artifacts.
-    recover_artifact_root` deletes it); between the root renames → the
-    complete old artifact parked at ``path + '_old'`` (recover renames
-    it back).  Returns the published version."""
+    """INCREMENTAL refresh of any stored ANN index (the
+    append_lsh_index posture at the ANN layer): encode ONLY the new
+    vectors under the artifact's STORED model — IVF assigns them to
+    the stored centroids, PQ encodes them under the stored codebooks,
+    IVFADC does both under the stored coarse centroids and residual
+    codebooks — and append the rows into the data dir (new files land
+    INSIDE the existing ``cid=`` partitions, so probe-side pruning is
+    unchanged).  The standing corpus is never rescanned, re-clustered
+    or re-encoded; the geometry comes from the artifact, so a mismatch
+    is impossible by construction.
+
+    Honest semantics: the model is FROZEN at build, so an appended
+    index equals "train on the original corpus, then encode the delta
+    under that model" — NOT a re-train on the union.  If the data
+    distribution drifts, recall degrades; :func:`drift_recall` grades
+    by how much and :func:`ann_maintain` decides the re-train, like an
+    LSM major compaction.
+
+    TORN-APPEND PROTOCOL (round-12; see
+    :mod:`hpaste_spark.operators.artifacts`): journal first
+    (``append_pending.json`` with a pre-append file snapshot — its
+    O_EXCL create is also the single-writer lock), delta data next,
+    meta LAST (version bump + the delta's content signature), journal
+    dropped.  A crash anywhere fails readers LOUDLY instead of serving
+    a silently partial delta; ``check_artifact(path, repair=True)``
+    rolls a torn append back to exactly the pre-append tree, after
+    which the RETRY is clean — and a retry of an already-committed
+    append is recognized by its signature and becomes a no-op, never
+    a duplicate-id double insert occupying two top-k ranks.  The
+    delta's dimensionality is validated against the pinned ``dim``
+    before anything is written.  Returns the artifact's (possibly
+    unchanged) meta version."""
+    codec, meta = _open_index(path)
+    meta, sig = _ann_append_open(
+        path, meta, new_vectors, vec_col, id_col, [codec.data]
+    )
+    if sig is None:
+        return meta["version"]
+    _write_rows(
+        codec.encode(spark, path, meta, new_vectors, vec_col, id_col),
+        f"{path}/{codec.data}",
+        codec.partitioned,
+        "append",
+    )
+    return _ann_append_commit(path, meta, sig)
+
+
+def compact_index_files(spark, path: str) -> None:
+    """LAYOUT-ONLY (minor) compaction of any stored ANN index: each
+    append adds one parquet fragment per (append, cid) pair (per
+    append for the unpartitioned PQ codes); rewrite the data dir
+    repartitioned on the STORED ``cid`` (one file per cid partition in
+    practice; PQ's codes as one file) and swap it in.  Rows,
+    assignments, codes and therefore every probe result are IDENTICAL
+    before/after (pytest-pinned, and hash-gated by the ``*_compacted``
+    / ``*_minor_compacted`` queries); only the file layout the
+    one-shot build had is restored.
+
+    NOT a re-train — the HBase minor/major split: the frozen model is
+    exactly as drifted after this pass as before (``trained_version``
+    does not move), so a small-files trigger alone never re-clusters
+    (the drift monitor measured that a cheap ``iterations=1`` IVF
+    re-cluster can actively HURT recall).  JOURNALED
+    (:func:`_rewrite_journaled`: the journal opens at the TOP, so a
+    concurrent append fails loudly instead of being swallowed by the
+    swap).  After publish, IVF's standing ``centroids`` dir is
+    re-stamped with the new epoch so the build-time invariant
+    (matching sidecars ⇔ the two dirs belong together) stays true; a
+    crash inside that one sidecar write is benign — no reader or fsck
+    path compares the two sidecars directly, they adjudicate against
+    the journal's epoch."""
+    from hpaste_spark.operators import artifacts
+
+    codec, _ = _open_index(path)
+
+    def fill(tmp: dict) -> dict:
+        rows = spark.read.parquet(f"{path}/{codec.data}")
+        rows = rows.repartition("cid") if codec.partitioned else rows.coalesce(1)
+        _write_rows(rows, tmp[codec.data], codec.partitioned, "overwrite")
+        return {}
+
+    epoch = _rewrite_journaled(path, [codec.data], fill)
+    for d in codec.stamped:
+        artifacts.write_epoch(f"{path}/{d}", epoch)
+
+
+def drift_recall(
+    spark,
+    path: str,
+    queries: DataFrame,
+    corpus: "DataFrame | None" = None,
+    k: int = 10,
+    nprobe: int = 2,
+    candidate_iterations: "tuple[int, ...]" = (1, 2),
+    budget: int = 100,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    query_id_col: str = "qid",
+    query_vec_col: str = "qe",
+) -> DataFrame:
+    """The OPERATIONAL drift-recall monitor for a LIVE append-refreshed
+    ANN index (round-12 verdict ask #3): grade recall@k of ``appended``
+    — the artifact AS IT STANDS — and of the in-plan re-train
+    candidates against exact truth over the store of record, on a
+    FIXED ≤``budget`` query sample (deterministic: ``ORDER BY qid
+    LIMIT budget`` — the monitor's cost stays linear in the corpus; an
+    uncapped corpus-proportional sample made the exact-truth grader
+    O(n²), the round-11 scale bug).  Returns one row per variant:
+    (variant, n_queries, k, n_hit, recall_at_k).  The re-train is due
+    when a candidate's recall exceeds appended's by more than the
+    rebuild is worth (:func:`ann_maintain`).
+
+    Per family (the codec):
+
+    - IVF — exact cosine truth over the artifact's own stored vectors
+      (``corpus`` is not needed); candidates ``compact_it{n}``, what
+      :func:`compact_ivf_index` (``iterations=n``) WOULD give, for
+      each n in ``candidate_iterations``.  The measured sign surprise
+      (SCALE.md 'Appended-IVF drift recall'): a seed-only it1
+      re-cluster can actively HURT (0.47 vs 0.54 appended on the drift
+      fixture) while a Lloyd it2 recovers, so the monitor grades BOTH.
+    - PQ / IVFADC — the artifact stores codes, not vectors, so the
+      monitor needs ``corpus``, the store of record the artifact was
+      built+appended from (cardinality-hard-checked: grading against
+      the wrong slice would skew recall silently); exact L2² truth;
+      candidate ``retrained``, a fresh build on the corpus; ``nprobe``
+      applies to IVFADC.
+
+    ``queries``: DataFrame with (``query_id_col``, ``query_vec_col``).
+    Queries that are themselves corpus rows are excluded from their
+    own truth/candidates by id.  The corpus is read ONCE (DISK_ONLY
+    cut) for the exact-truth pass, which is itself cut and reused by
+    every variant's hit-join (the corpus-memory rule)."""
+    from pyspark.storagelevel import StorageLevel
+
+    codec, meta = _open_index(path)
+    cols = [F.col(id_col), as_double(F.col(vec_col)).alias("_e")]
+    if codec.stores_vectors:
+        corpus = spark.read.parquet(f"{path}/{codec.data}")
+        cols.append(F.col("cid"))  # the stored assignment
+    elif corpus is None:
+        raise ValueError(
+            f"{codec.kind} drift monitoring needs the store-of-record "
+            "corpus (the artifact stores codes, not vectors)"
+        )
+    # the corpus feeds the exact-truth pass and every candidate's
+    # re-train + scoring (and an appended tree is fragmented into one
+    # file per (write, cid, task)): cut it ONCE, DISK_ONLY per the
+    # corpus-memory rule (O(corpus) intermediates never claim executor
+    # storage memory), so the tree is scanned a single time
+    base = corpus.select(*cols).localCheckpoint(
+        eager=False, storageLevel=StorageLevel.DISK_ONLY
+    )
+    if not codec.stores_vectors:
+        # the corpus count also materializes the DISK_ONLY cut before
+        # the fan-out; the stored count reads parquet footers only
+        n_corpus = base.count()
+        want = n_corpus * codec.rows_per_vector(meta)
+        n_stored = _stored_rows(spark, f"{path}/{codec.data}")
+        if n_stored != want:
+            raise ValueError(
+                f"corpus has {n_corpus} rows but the {codec.kind} artifact "
+                f"at {path} holds {n_stored} {codec.data} rows (expected "
+                f"{want}) — the monitor must be given exactly the store of "
+                "record the artifact was built+appended from"
+            )
+    q_df = (
+        queries.select(
+            F.col(query_id_col).alias("qid"),
+            as_double(F.col(query_vec_col)).alias("qe"),
+        )
+        .orderBy("qid")
+        .limit(budget)
+    )
+    nq = q_df.agg(F.count(F.lit(1)).alias("n"))
+    exact = _per_query_topk(
+        base.crossJoin(F.broadcast(q_df)).filter(F.col(id_col) != F.col("qid")),
+        codec.exact_key(F.col("_e"), F.col("qe")),
+        k,
+        id_col,
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+
+    out = None
+    for name, model in codec.candidates(
+        spark, path, meta, base, id_col, candidate_iterations
+    ):
+        scored, key = codec.approx(model, q_df, meta, nprobe, id_col)
+        row = (
+            _per_query_topk(scored, key, k, id_col)
+            .join(exact, ["qid", id_col])
+            .agg(F.count(F.lit(1)).alias("n_hit"))
+            .crossJoin(F.broadcast(nq))
+            .select(
+                F.lit(name).alias("variant"),
+                F.col("n").cast("long").alias("n_queries"),
+                F.lit(k).alias("k"),
+                F.col("n_hit").cast("long").alias("n_hit"),
+                F.round(F.col("n_hit") / (F.col("n") * float(k)), 4).alias(
+                    "recall_at_k"
+                ),
+            )
+        )
+        out = row if out is None else out.unionByName(row)
+    return out.orderBy("variant")
+
+
+def _per_query_topk(scored: DataFrame, key: F.Column, k: int, id_col: str) -> DataFrame:
+    """(qid, id) of each query's top ``k`` rows by ``key``, id
+    tie-break."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(key, id_col)
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .select("qid", id_col)
+    )
+
+
+def retrain_index(
+    spark,
+    corpus: DataFrame,
+    path: str,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> int:
+    """BLUE/GREEN re-train of a stored ANN index from the caller-named
+    store-of-record ``corpus`` — the action :func:`drift_recall`'s
+    ``retrained`` variant prices for the code-only families (PQ,
+    IVFADC: the artifact stores codes, not vectors, so drift repair is
+    a fresh build; IVF re-trains in place from its own vectors with
+    :func:`compact_ivf_index`).  The geometry is the one pinned in the
+    meta.  An in-place ``mode='overwrite'`` rebuild of a LIVE artifact
+    is not crash-safe (a kill mid-build leaves half-replaced relations
+    with valid-looking meta); instead the replacement is built
+    COMPLETE at the sibling root ``path + RETRAIN_TMP_SUFFIX``, its
+    meta carries the version chain forward (``version = old + 1``,
+    fresh ``compacted_version`` / ``trained_version``, empty replay
+    ring — a new store generation owes no replay protection to the old
+    one's deltas), and the ROOTS swap with the narrowed rename-aside
+    sequence.  The old root's compaction journal (opened before the
+    build — appends/compactions against the dying artifact fail loudly
+    for the whole window) leaves with the old root; the new root is
+    born clean.  Crash windows: mid-build → build-phase journal on the
+    live root (fsck discards it) + a re-derivable sibling tmp
+    (:func:`~hpaste_spark.operators.artifacts.recover_artifact_root`,
+    run automatically at entry, deletes it); between the root renames
+    → the complete old artifact parked at ``path + '_old'`` (recover
+    renames it back).  Reference context: the HBase posture of
+    rebuilding a table NEXT TO the live one and flipping readers, vs
+    truncate-and-reload in place.  Returns the published version."""
     import shutil
 
     from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.artifacts import (
-        RETRAIN_TMP_SUFFIX,
-        swap_live_dir,
-    )
 
     artifacts.recover_artifact_root(path)
-    artifacts.require_clean(path, f"{kind.upper()} index")
-    meta = artifacts.read_meta(path)
-    if meta is None or meta.get("kind") != kind:
-        raise ValueError(
-            f"artifact at {path} is not a {kind} index — retrain serves "
-            f"build_{kind}_index artifacts"
-        )
+    codec, meta = _open_index(path)
     target = meta["version"] + 1
-    tmp = path + RETRAIN_TMP_SUFFIX
+    tmp = path + artifacts.RETRAIN_TMP_SUFFIX
     artifacts.open_compact(path)  # exclusion covers build+swap
     try:
         shutil.rmtree(tmp, ignore_errors=True)
-        build(corpus, tmp, **build_kwargs)
+        codec.build(
+            corpus, tmp, **{g: int(meta[g]) for g in codec.geometry},
+            vec_col=vec_col, id_col=id_col,
+        )
         new_meta = artifacts.read_meta(tmp)
-        new_meta["version"] = target
-        new_meta["compacted_version"] = target
-        new_meta["trained_version"] = target
+        new_meta.update(
+            version=target, compacted_version=target, trained_version=target
+        )
         artifacts.write_meta(tmp, new_meta)
     except BaseException:
         artifacts.abort_compact(path)
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    swap_live_dir(path, tmp)
+    artifacts.swap_live_dir(path, tmp)
     return target
-
-
-def retrain_pq_index(
-    spark,
-    corpus: DataFrame,
-    path: str,
-    m: "int | None" = None,
-    k: "int | None" = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """BLUE/GREEN re-train for a :func:`build_pq_index` artifact — the
-    action :func:`pq_drift_recall`'s ``retrained`` variant prices
-    (round 13; closes the 'reported but never auto-applied' seam):
-    the artifact stores codes, not vectors, so drift repair is a fresh
-    build from the caller-named store-of-record ``corpus`` — and an
-    in-place ``mode='overwrite'`` rebuild of a LIVE artifact is not
-    crash-safe (a kill mid-build leaves half-replaced relations with
-    valid-looking meta).  Instead the replacement is built COMPLETE at
-    a sibling tmp root, its meta carries the version chain forward
-    (``version = old + 1``, fresh ``compacted_version``, empty replay
-    ring — a new store generation owes no replay protection to the old
-    one's deltas), and the roots are swapped rename-aside.  Geometry
-    (``m``, ``k``) defaults to the artifact's pinned values.  Crash
-    recovery: :func:`~hpaste_spark.operators.artifacts.
-    recover_artifact_root` (run automatically at entry) +
-    ``check_artifact`` for the journal the dying root carries.
-    Reference context: the HBase posture of rebuilding a table NEXT TO
-    the live one and flipping readers, vs truncate-and-reload in
-    place."""
-    from hpaste_spark.operators import artifacts as _a
-
-    meta = _a.read_meta(path) or {}
-    return _retrain_blue_green(
-        spark, corpus, path, "pq", build_pq_index,
-        {
-            "m": int(m if m is not None else meta.get("m", 4)),
-            "k": int(k if k is not None else meta.get("k", 16)),
-            "vec_col": vec_col,
-            "id_col": id_col,
-        },
-    )
-
-
-def retrain_ivfadc_index(
-    spark,
-    corpus: DataFrame,
-    path: str,
-    k_centroids: "int | None" = None,
-    m: "int | None" = None,
-    k: "int | None" = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """BLUE/GREEN re-train for a :func:`build_ivfadc_index` artifact —
-    :func:`retrain_pq_index`'s twin for the complete production
-    artifact (both frozen geometries — coarse centroids AND residual
-    codebooks — are refreshed from the store-of-record ``corpus`` in
-    one pass).  Same protocol: complete sibling build, version chain
-    carried forward, root-level rename-aside swap, journal exclusion
-    over the whole window."""
-    from hpaste_spark.operators import artifacts as _a
-
-    meta = _a.read_meta(path) or {}
-    return _retrain_blue_green(
-        spark, corpus, path, "ivfadc", build_ivfadc_index,
-        {
-            "k_centroids": int(
-                k_centroids if k_centroids is not None
-                else meta.get("k_centroids", 8)
-            ),
-            "m": int(m if m is not None else meta.get("m", 4)),
-            "k": int(k if k is not None else meta.get("k", 16)),
-            "vec_col": vec_col,
-            "id_col": id_col,
-        },
-    )
 
 
 def ann_maintain(
@@ -3233,7 +2875,7 @@ def ann_maintain(
     query_vec_col: str = "qe",
 ) -> dict:
     """ONE-CALL maintenance pass for a stored ANN artifact (IVF / PQ /
-    IVFADC, auto-detected from ``meta.json``) — the ingest-loop
+    IVFADC, the family read from ``meta.json``) — the ingest-loop
     consumer the rounds-11..13 machinery was built FOR, composed in
     the order a real loop needs (the reference's analogue is the
     explicit HBase admin cycle around a standing table —
@@ -3260,33 +2902,28 @@ artifacts.artifact_stats`: hygiene compaction is due when
        blue/green re-train, and the IVF major compaction but
        deliberately NOT on layout-only compactions, which reset the
        small-files counter while leaving the frozen codebooks/
-       centroids exactly as drifted as before): the family's
-       monitor — :func:`ivf_drift_recall` (self-contained), or
-       :func:`pq_drift_recall` / :func:`ivfadc_drift_recall` (which
-       require the caller-named store-of-record ``corpus``) — grades
-       the LIVE artifact against its in-plan re-train candidates on
-       the fixed ``budget`` sample.  Re-train is due when the best
-       candidate beats ``appended`` recall by more than
+       centroids exactly as drifted as before): :func:`drift_recall`
+       grades the LIVE artifact against its in-plan re-train
+       candidates on the fixed ``budget`` sample (PQ/IVFADC need the
+       caller-named store-of-record ``corpus``).  Re-train is due when
+       the best candidate beats ``appended`` recall by more than
        ``recall_margin``.
     4. **decide, then (optionally) act** — ``action`` is ``retrain``
        > ``compact`` > ``none``, behind TWO separate switches because
        the costs differ by orders of magnitude: ``apply=True`` runs
-       the HYGIENE pass (the family's layout-only compaction —
-       :func:`compact_ivf_files` / :func:`compact_pq_index` /
-       :func:`compact_ivfadc_index` — recall-invariant by
-       construction, which is exactly why the small-files trigger
-       must not run the IVF re-cluster: the monitor measured a cheap
-       ``it1`` re-cluster HURTING recall), while ``apply_retrain=True``
-       additionally authorizes the RE-TRAIN (O(corpus rebuild)): IVF =
-       :func:`compact_ivf_index` at the measured-best iteration count
-       (in-place, journaled — the artifact stores its own vectors);
-       PQ/IVFADC = :func:`retrain_pq_index` /
-       :func:`retrain_ivfadc_index` on the caller's ``corpus``
-       (blue/green root swap — those artifacts store codes, and an
-       in-place overwrite of a live artifact is not crash-safe).
-       Either way the report's ``plan`` names the exact call with the
-       artifact's pinned geometry, so an un-applied decision is still
-       actionable.
+       the HYGIENE pass (:func:`compact_index_files` — recall-
+       invariant by construction, which is exactly why the small-files
+       trigger must not run the IVF re-cluster: the monitor measured a
+       cheap ``it1`` re-cluster HURTING recall), while
+       ``apply_retrain=True`` additionally authorizes the RE-TRAIN
+       (O(corpus rebuild)): IVF = :func:`compact_ivf_index` at the
+       measured-best iteration count (in place, journaled — the
+       artifact stores its own vectors); PQ/IVFADC =
+       :func:`retrain_index` on the caller's ``corpus`` (blue/green
+       root swap — those artifacts store codes, and an in-place
+       overwrite of a live artifact is not crash-safe).  Either way
+       the report's ``plan`` names the exact call with the artifact's
+       pinned geometry, so an un-applied decision is still actionable.
 
     Returns a driver-side report dict (this is admin-plane work — the
     collected monitor table is ≤3 rows): ``{"family", "fsck",
@@ -3299,14 +2936,7 @@ artifacts.artifact_stats`: hygiene compaction is due when
     fsck += artifacts.check_artifact(
         path, repair=True, max_files_per_dir=max_files_per_dir
     )
-    meta = artifacts.read_meta(path)
-    family = None if meta is None else meta.get("kind")
-    if family not in ("ivf", "pq", "ivfadc"):
-        raise ValueError(
-            f"artifact at {path} has kind={family!r} — ann_maintain "
-            "serves build_ivf_index / build_pq_index / "
-            "build_ivfadc_index artifacts"
-        )
+    codec, meta = _open_index(path)
     stats = artifacts.artifact_stats(path)
     since = stats["appends_since_compact"] or 0
     small_files = since >= compact_every or (
@@ -3315,12 +2945,12 @@ artifacts.artifact_stats`: hygiene compaction is due when
     )
 
     # drift is measured against the last GEOMETRY training, not the
-    # last compaction: PQ/IVFADC layout compactions (and the IVF minor
-    # pass) reset appends_since_compact without touching the frozen
-    # codebooks/centroids, so gating the probe on that counter would
-    # silently stop monitoring a still-drifting artifact the moment a
-    # small-files pass ran.  trained_version moves only on build,
-    # blue/green re-train, and the IVF major compaction.
+    # last compaction: layout compactions reset appends_since_compact
+    # without touching the frozen codebooks/centroids, so gating the
+    # probe on that counter would silently stop monitoring a
+    # still-drifting artifact the moment a small-files pass ran.
+    # trained_version moves only on build, blue/green re-train, and
+    # the IVF major compaction.
     trained = meta.get("trained_version", meta.get("compacted_version", 1))
     geometry_stale = (meta.get("version") or 1) > trained
 
@@ -3328,26 +2958,12 @@ artifacts.artifact_stats`: hygiene compaction is due when
     gap: "float | None" = None
     best_variant: "str | None" = None
     if queries is not None and geometry_stale:
-        if family == "ivf":
-            mon = ivf_drift_recall(
-                spark, path, queries, k=k, nprobe=nprobe,
-                candidate_iterations=candidate_iterations, budget=budget,
-                vec_col=vec_col, id_col=id_col,
-                query_id_col=query_id_col, query_vec_col=query_vec_col,
-            )
-        else:
-            if corpus is None:
-                raise ValueError(
-                    f"{family} drift monitoring needs the store-of-record "
-                    "corpus (the artifact stores codes, not vectors)"
-                )
-            mon_fn = pq_drift_recall if family == "pq" else ivfadc_drift_recall
-            kw = {} if family == "pq" else {"nprobe": nprobe}
-            mon = mon_fn(
-                spark, path, corpus, queries, k=k, budget=budget,
-                vec_col=vec_col, id_col=id_col,
-                query_id_col=query_id_col, query_vec_col=query_vec_col, **kw,
-            )
+        mon = drift_recall(
+            spark, path, queries, corpus, k=k, nprobe=nprobe,
+            candidate_iterations=candidate_iterations, budget=budget,
+            vec_col=vec_col, id_col=id_col,
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
+        )
         drift = {r["variant"]: float(r["recall_at_k"]) for r in mon.collect()}
         cands = {v: r for v, r in drift.items() if v != "appended"}
         best_variant = max(cands, key=lambda v: (cands[v], v))
@@ -3355,58 +2971,20 @@ artifacts.artifact_stats`: hygiene compaction is due when
 
     retrain = gap is not None and gap > recall_margin
     action = "retrain" if retrain else ("compact" if small_files else "none")
-
-    geom = {
-        kk: meta[kk]
-        for kk in ("k_centroids", "m", "k", "dim")
-        if kk in meta
-    }
-    if action == "retrain" and family == "ivf":
-        best_it = int(best_variant.removeprefix("compact_it"))
-        plan = f"compact_ivf_index(path, iterations={best_it})"
-    elif action == "retrain":
-        builder = "retrain_pq_index" if family == "pq" else "retrain_ivfadc_index"
-        plan = (
-            f"{builder}(corpus, path)  # blue/green root swap; "
-            + ", ".join(f"{a}={v}" for a, v in geom.items() if a != "dim")
-        )
-    elif action == "compact":
-        layout = {
-            "ivf": "compact_ivf_files(path)",
-            "pq": "compact_pq_index(path)",
-            "ivfadc": "compact_ivfadc_index(path)",
-        }
-        plan = layout[family]
-    else:
-        plan = "none"
-
+    plan = {"compact": "compact_index_files(path)", "none": "none"}.get(action)
     applied = False
-    if apply_retrain and action == "retrain":
-        if family == "ivf":
-            compact_ivf_index(
-                spark, path, iterations=best_it, vec_col=vec_col, id_col=id_col
-            )
-        elif family == "pq":
-            retrain_pq_index(
-                spark, corpus, path, vec_col=vec_col, id_col=id_col
-            )
-        else:
-            retrain_ivfadc_index(
-                spark, corpus, path, vec_col=vec_col, id_col=id_col
-            )
-        applied = True
+    if action == "retrain":
+        applied = apply_retrain
+        plan = codec.retrain(
+            spark, path, corpus, meta, best_variant, applied, vec_col, id_col
+        )
     elif apply and action == "compact":
-        if family == "ivf":
-            compact_ivf_files(spark, path)
-        elif family == "pq":
-            compact_pq_index(spark, path)
-        else:
-            compact_ivfadc_index(spark, path)
+        compact_index_files(spark, path)
         applied = True
 
     after = artifacts.read_meta(path)
     return {
-        "family": family,
+        "family": codec.kind,
         "fsck": fsck,
         "stats": stats,
         "small_files": small_files,
@@ -3418,3 +2996,4 @@ artifacts.artifact_stats`: hygiene compaction is due when
         "version_before": meta.get("version"),
         "version_after": None if after is None else after.get("version"),
     }
+

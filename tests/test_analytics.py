@@ -2562,14 +2562,14 @@ def test_bloom_filter_compaction(spark, tmp_path):
 
 
 def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
-    """append_ivf_index: the delta lands in the cid partitions of the
+    """append_index: the delta lands in the cid partitions of the
     STORED centroids (no re-cluster), and probing the appended index
     equals probing an index whose vectors are the union assigned under
     the build slice's centroids — the honest appended-IVF semantics."""
     import random
 
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         ivf_assign,
         ivf_knn_join_indexed,
@@ -2585,7 +2585,7 @@ def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
 
     path = str(tmp_path / "ivf_inc")
     build_ivf_index(old, path, k_centroids=4)
-    append_ivf_index(spark, path, delta)
+    append_index(spark, path, delta)
 
     stored = spark.read.parquet(f"{path}/vectors").select("vec_id", "cid")
     cent = spark.read.parquet(f"{path}/centroids")
@@ -2609,19 +2609,19 @@ def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
 
 
 def test_pq_index_append_and_compaction(spark, tmp_path):
-    """append_pq_index: the delta is encoded under the STORED codebooks
+    """append_index: the delta is encoded under the STORED codebooks
     (m inferred from the artifact, no re-train), so the appended codes
     relation equals encoding the whole union under the build-slice
     codebooks; ADC search over the appended index works; and
-    compact_pq_index consolidates the per-append fragments with the
+    compact_index_files consolidates the per-append fragments with the
     code rows read-back-identical."""
     import glob
     import random
 
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
-        compact_pq_index,
+        compact_index_files,
         pq_encode,
         pq_topk_indexed,
     )
@@ -2636,7 +2636,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
 
     path = str(tmp_path / "pq_inc")
     build_pq_index(old, path, m=2, k=4)
-    append_pq_index(spark, path, delta)
+    append_index(spark, path, delta)
 
     stored_cb = spark.read.parquet(f"{path}/codebooks")
     stored_codes = spark.read.parquet(f"{path}/codes")
@@ -2654,7 +2654,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
     assert len(before_topk) == 5
 
     n_before = len(glob.glob(f"{path}/codes/*.parquet"))
-    compact_pq_index(spark, path)
+    compact_index_files(spark, path)
     n_after = len(glob.glob(f"{path}/codes/*.parquet"))
     assert n_after < n_before and n_after <= 1
     assert sorted(map(key, spark.read.parquet(f"{path}/codes").collect())) == sorted(
@@ -2666,7 +2666,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
 
 
 def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
-    """append_ivfadc_index: the standing rows are untouched, and the
+    """append_index: the standing rows are untouched, and the
     delta's (cid, sub, code) rows equal an INDEPENDENT driver-side
     replay of the frozen model (numpy: L2² argmin over the stored
     centroids with the ROUND(·,6)+lowest-cid tiebreak, residual, then
@@ -2676,7 +2676,7 @@ def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
     import random
 
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
     )
 
@@ -2694,7 +2694,7 @@ def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
         map(tuple, spark.read.parquet(f"{path}/codes")
             .select("vec_id", "sub", "code", "cid").collect())
     )
-    append_ivfadc_index(spark, path, delta)
+    append_index(spark, path, delta)
     after = spark.read.parquet(f"{path}/codes").select(
         "vec_id", "sub", "code", "cid"
     )
@@ -2767,7 +2767,7 @@ def test_ivf_assign_zero_vector_and_build_append_rejected(spark, tmp_path):
     assert zero_cid == [min(r["cid"] for r in cent.collect())]
 
     path = str(tmp_path / "ivf_m")
-    with pytest.raises(ValueError, match="append_ivf_index"):
+    with pytest.raises(ValueError, match="append_index"):
         build_ivf_index(emb, path, k_centroids=3, mode="append")
 
 
@@ -2785,7 +2785,7 @@ def test_ivf_compaction_restores_fresh_build(spark, tmp_path):
     import random
 
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         compact_ivf_index,
         ivf_knn_join_indexed,
@@ -2806,7 +2806,7 @@ def test_ivf_compaction_restores_fresh_build(spark, tmp_path):
 
     inc = str(tmp_path / "ivf_inc")
     build_ivf_index(old, inc, k_centroids=4)
-    append_ivf_index(spark, inc, delta)
+    append_index(spark, inc, delta)
     n_files_appended = len(glob.glob(f"{inc}/vectors/cid=*/*.parquet"))
     # k explicit: the build slice (vec_id % 4 != 3) seeds only 3 of 4
     # cid groups, so the artifact's current centroid count (the k
@@ -3094,7 +3094,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
 
     import hpaste_spark.operators.similarity as sim
     from hpaste_spark.operators.artifacts import TornArtifactError, check_artifact
-    from hpaste_spark.operators.similarity import append_ivf_index, build_ivf_index
+    from hpaste_spark.operators.similarity import append_index, build_ivf_index
 
     emb = _rand_emb(spark)
     old = emb.filter(F.col("vec_id") % 4 != 3)
@@ -3103,7 +3103,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
     # control: the uninterrupted lifecycle
     control = str(tmp_path / "control")
     build_ivf_index(old, control, k_centroids=4)
-    assert append_ivf_index(spark, control, delta) == 2
+    assert append_index(spark, control, delta) == 2
     want = _knn_rows(spark, control, emb)
     pre_want = None  # filled below from the torn tree after rollback
 
@@ -3120,7 +3120,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sim, "_ann_append_commit", crash_commit)
     with pytest.raises(OSError, match="simulated crash"):
-        append_ivf_index(spark, path, delta)
+        append_index(spark, path, delta)
     monkeypatch.setattr(sim, "_ann_append_commit", real_commit)
 
     # 1. loud: every stored reader refuses the journaled tree
@@ -3128,7 +3128,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
         _knn_rows(spark, path, emb)
     # ...and so does a blind retry (no silent double-insert path)
     with pytest.raises(Exception, match="append_pending|single-writer"):
-        append_ivf_index(spark, path, delta)
+        append_index(spark, path, delta)
 
     # 2. detect + repair: rollback to the pre-append tree
     report = check_artifact(path, repair=True)
@@ -3140,7 +3140,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
     assert pre_want == want
 
     # 3. clean retry: one delta landing, hash-identical to the control
-    assert append_ivf_index(spark, path, delta) == 2
+    assert append_index(spark, path, delta) == 2
     assert _knn_rows(spark, path, emb) == want
     vec = spark.read.parquet(f"{path}/vectors")
     assert vec.count() == vec.select("vec_id").distinct().count() == 120
@@ -3152,9 +3152,7 @@ def test_ann_append_retry_is_idempotent(spark, tmp_path):
     signature and becomes a no-op for all three ANN families — version
     unchanged, row counts unchanged, results hash-identical."""
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
-        append_ivfadc_index,
-        append_pq_index,
+        append_index,
         build_ivf_index,
         build_ivfadc_index,
         build_pq_index,
@@ -3166,25 +3164,25 @@ def test_ann_append_retry_is_idempotent(spark, tmp_path):
 
     ivf = str(tmp_path / "ivf")
     build_ivf_index(old, ivf, k_centroids=4)
-    assert append_ivf_index(spark, ivf, delta) == 2
+    assert append_index(spark, ivf, delta) == 2
     once = _knn_rows(spark, ivf, emb)
     n_once = spark.read.parquet(f"{ivf}/vectors").count()
-    assert append_ivf_index(spark, ivf, delta) == 2  # retry: no-op
+    assert append_index(spark, ivf, delta) == 2  # retry: no-op
     assert spark.read.parquet(f"{ivf}/vectors").count() == n_once
     assert _knn_rows(spark, ivf, emb) == once
 
     pq = str(tmp_path / "pq")
     build_pq_index(old, pq, m=4, k=8)
-    assert append_pq_index(spark, pq, delta) == 2
+    assert append_index(spark, pq, delta) == 2
     n_codes = spark.read.parquet(f"{pq}/codes").count()
-    assert append_pq_index(spark, pq, delta) == 2
+    assert append_index(spark, pq, delta) == 2
     assert spark.read.parquet(f"{pq}/codes").count() == n_codes == 120
 
     adc = str(tmp_path / "adc")
     build_ivfadc_index(old, adc, k_centroids=4, m=4, k=8)
-    assert append_ivfadc_index(spark, adc, delta) == 2
+    assert append_index(spark, adc, delta) == 2
     n_rows = spark.read.parquet(f"{adc}/codes").count()
-    assert append_ivfadc_index(spark, adc, delta) == 2
+    assert append_index(spark, adc, delta) == 2
     assert spark.read.parquet(f"{adc}/codes").count() == n_rows == 120 * 4
 
 
@@ -3196,9 +3194,7 @@ def test_ann_append_validates_delta_dim(spark, tmp_path):
     import pytest
 
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
-        append_ivfadc_index,
-        append_pq_index,
+        append_index,
         build_ivf_index,
         build_ivfadc_index,
         build_pq_index,
@@ -3209,9 +3205,9 @@ def test_ann_append_validates_delta_dim(spark, tmp_path):
     bad = bad.select((F.col("vec_id") + 500).alias("vec_id"), "embedding")
 
     for build, append, kwargs in [
-        (build_ivf_index, append_ivf_index, {"k_centroids": 4}),
-        (build_pq_index, append_pq_index, {"m": 4, "k": 8}),
-        (build_ivfadc_index, append_ivfadc_index, {"k_centroids": 4, "m": 4, "k": 8}),
+        (build_ivf_index, append_index, {"k_centroids": 4}),
+        (build_pq_index, append_index, {"m": 4, "k": 8}),
+        (build_ivfadc_index, append_index, {"k_centroids": 4, "m": 4, "k": 8}),
     ]:
         path = str(tmp_path / build.__name__)
         build(emb, path, **kwargs)
@@ -3237,7 +3233,7 @@ def test_ivf_compaction_between_swaps_crash_completed_by_fsck(
     import hpaste_spark.operators.artifacts as artifacts
     from hpaste_spark.operators.artifacts import TornArtifactError, read_meta
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         compact_ivf_index,
     )
@@ -3248,14 +3244,14 @@ def test_ivf_compaction_between_swaps_crash_completed_by_fsck(
 
     control = str(tmp_path / "control")
     build_ivf_index(old, control, k_centroids=4)
-    append_ivf_index(spark, control, delta)
+    append_index(spark, control, delta)
     compact_ivf_index(spark, control, k_centroids=4)
     want = _knn_rows(spark, control, emb)
     assert read_meta(control)["version"] == 3
 
     path = str(tmp_path / "crash")
     build_ivf_index(old, path, k_centroids=4)
-    append_ivf_index(spark, path, delta)
+    append_index(spark, path, delta)
 
     real_swap = artifacts.swap_live_dir
     calls = {"n": 0}
@@ -3285,7 +3281,7 @@ def test_ivf_compaction_between_swaps_crash_completed_by_fsck(
 
 
 def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
-    """similarity.ivf_drift_recall (round-12 verdict ask #3): grades a
+    """similarity.drift_recall (round-12 verdict ask #3): grades a
     LIVE built-then-appended artifact — the 'appended' row reflects the
     stored centroids + stored cids, each 'compact_it{n}' row an in-plan
     candidate re-cluster — under the FIXED query budget.  Pins: the
@@ -3295,9 +3291,9 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
     import os as _os
 
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
-        ivf_drift_recall,
+        drift_recall,
     )
 
     emb = _rand_emb(spark, n=80, dim=8, seed=3)
@@ -3307,7 +3303,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "drift")
     build_ivf_index(emb, path, k_centroids=4)
-    append_ivf_index(spark, path, delta)
+    append_index(spark, path, delta)
     files_before = sorted(
         _os.path.join(r, f)
         for r, _d, fs in _os.walk(path)
@@ -3317,7 +3313,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
     qs = delta.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    got = ivf_drift_recall(spark, path, qs, k=5, nprobe=2, budget=6)
+    got = drift_recall(spark, path, qs, k=5, nprobe=2, budget=6)
     rows = {r["variant"]: r for r in got.collect()}
     assert set(rows) == {"appended", "compact_it1", "compact_it2"}
     for r in rows.values():
@@ -3328,7 +3324,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
         assert r["recall_at_k"] == round(r["n_hit"] / 30.0, 4)
 
     # deterministic: same inputs, same numbers
-    again = {r["variant"]: r for r in ivf_drift_recall(
+    again = {r["variant"]: r for r in drift_recall(
         spark, path, qs, k=5, nprobe=2, budget=6
     ).collect()}
     assert {v: (r["n_hit"], r["recall_at_k"]) for v, r in rows.items()} == {
@@ -3345,7 +3341,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
 
     # candidate list is caller-controlled: empty = grade the live
     # artifact alone (the cheap daily probe)
-    only = ivf_drift_recall(
+    only = drift_recall(
         spark, path, qs, k=5, nprobe=2, budget=6, candidate_iterations=()
     ).collect()
     assert [r["variant"] for r in only] == ["appended"]
@@ -3353,7 +3349,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
 
 
 def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
-    """compact_ivfadc_index: after a build + two appends the codes tree
+    """compact_index_files: after a build + two appends the codes tree
     holds one fragment per (write, cid); compaction repartitions on cid
     — strictly fewer files, rows bit-identical, probe results
     bit-identical, partition layout (cid= dirs) preserved, meta version
@@ -3363,9 +3359,9 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
 
     from hpaste_spark.operators.artifacts import read_meta
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
-        compact_ivfadc_index,
+        compact_index_files,
         ivfadc_topk_indexed,
     )
 
@@ -3373,8 +3369,8 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
     path = str(tmp_path / "adc")
     build_ivfadc_index(emb.filter(F.col("vec_id") % 3 == 0), path,
                        k_centroids=4, m=4, k=8)
-    append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 3 == 1))
-    append_ivfadc_index(spark, path, emb.filter(F.col("vec_id") % 3 == 2))
+    append_index(spark, path, emb.filter(F.col("vec_id") % 3 == 1))
+    append_index(spark, path, emb.filter(F.col("vec_id") % 3 == 2))
 
     def parquet_files():
         return sorted(
@@ -3397,7 +3393,7 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
     n_before = len(parquet_files())
     assert read_meta(path)["version"] == 3  # build + 2 appends
 
-    compact_ivfadc_index(spark, path)
+    compact_index_files(spark, path)
     assert len(parquet_files()) < n_before
     assert rows() == before_rows
     assert sorted(map(tuple, ivfadc_topk_indexed(
@@ -3408,8 +3404,8 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
 
 
 def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
-    """similarity.pq_drift_recall (round 12 — the compression-leg twin
-    of ivf_drift_recall): grades a LIVE build+append PQ artifact
+    """similarity.drift_recall (round 12 — the compression-leg twin
+    of drift_recall): grades a LIVE build+append PQ artifact
     against an in-plan re-train on the corpus.  Pins the variant set,
     the binding budget cap, determinism, the read-only contract, and
     the corpus-cardinality hard-check (grading against the wrong slice
@@ -3419,9 +3415,9 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
     import pytest
 
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
-        pq_drift_recall,
+        drift_recall,
     )
 
     emb = _rand_emb(spark, n=80, dim=8, seed=13)
@@ -3431,7 +3427,7 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "pqdrift")
     build_pq_index(emb, path, m=4, k=8)
-    append_pq_index(spark, path, delta)
+    append_index(spark, path, delta)
     union = emb.unionByName(delta)
     files_before = sorted(
         _os.path.join(r, f) for r, _d, fs in _os.walk(path) for f in fs
@@ -3440,7 +3436,7 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
     qs = delta.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    got = pq_drift_recall(spark, path, union, qs, k=5, budget=6)
+    got = drift_recall(spark, path, qs, union, k=5, budget=6)
     rows = {r["variant"]: r for r in got.collect()}
     assert set(rows) == {"appended", "retrained"}
     for r in rows.values():
@@ -3449,7 +3445,7 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
         assert r["recall_at_k"] == round(r["n_hit"] / 30.0, 4)
 
     again = {r["variant"]: (r["n_hit"], r["recall_at_k"])
-             for r in pq_drift_recall(spark, path, union, qs, k=5, budget=6).collect()}
+             for r in drift_recall(spark, path, qs, union, k=5, budget=6).collect()}
     assert again == {v: (r["n_hit"], r["recall_at_k"]) for v, r in rows.items()}
 
     files_after = sorted(
@@ -3458,11 +3454,11 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
     assert files_after == files_before, "the monitor only grades"
 
     with pytest.raises(ValueError, match="store of record"):
-        pq_drift_recall(spark, path, emb, qs, k=5, budget=6)  # wrong slice
+        drift_recall(spark, path, qs, emb, k=5, budget=6)  # wrong slice
 
 
 def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
-    """similarity.ivfadc_drift_recall (round 12 — the monitor family
+    """similarity.drift_recall (round 12 — the monitor family
     complete): grades a LIVE build+append IVFADC artifact against an
     in-plan full re-train.  Pins variant set, binding budget,
     determinism, read-only grading, and the code-row cardinality
@@ -3472,9 +3468,9 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
     import pytest
 
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
-        ivfadc_drift_recall,
+        drift_recall,
     )
 
     emb = _rand_emb(spark, n=80, dim=8, seed=17)
@@ -3484,7 +3480,7 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "adcdrift")
     build_ivfadc_index(emb, path, k_centroids=4, m=4, k=8)
-    append_ivfadc_index(spark, path, delta)
+    append_index(spark, path, delta)
     union = emb.unionByName(delta)
     files_before = sorted(
         _os.path.join(r, f) for r, _d, fs in _os.walk(path) for f in fs
@@ -3493,7 +3489,7 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
     qs = delta.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    got = ivfadc_drift_recall(spark, path, union, qs, k=5, nprobe=2, budget=6)
+    got = drift_recall(spark, path, qs, union, k=5, nprobe=2, budget=6)
     rows = {r["variant"]: r for r in got.collect()}
     assert set(rows) == {"appended", "retrained"}
     for r in rows.values():
@@ -3502,8 +3498,8 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
         assert r["recall_at_k"] == round(r["n_hit"] / 30.0, 4)
 
     again = {r["variant"]: (r["n_hit"], r["recall_at_k"])
-             for r in ivfadc_drift_recall(
-                 spark, path, union, qs, k=5, nprobe=2, budget=6).collect()}
+             for r in drift_recall(
+                 spark, path, qs, union, k=5, nprobe=2, budget=6).collect()}
     assert again == {v: (r["n_hit"], r["recall_at_k"]) for v, r in rows.items()}
 
     files_after = sorted(
@@ -3512,4 +3508,4 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
     assert files_after == files_before
 
     with pytest.raises(ValueError, match="store of record"):
-        ivfadc_drift_recall(spark, path, emb, qs, k=5, budget=6)
+        drift_recall(spark, path, qs, emb, k=5, budget=6)

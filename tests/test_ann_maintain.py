@@ -1,6 +1,6 @@
 """Round-13 tests for the one-call ANN maintenance pass
 (`similarity.ann_maintain`) and the IVF minor compaction it needs
-(`similarity.compact_ivf_files`) — the ingest-loop composition of the
+(`similarity.compact_index_files`) — the ingest-loop composition of the
 rounds-11..13 machinery: fsck first, artifact_stats hygiene signal,
 drift-monitor re-train decision, journaled in-artifact action.
 
@@ -52,16 +52,16 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
     appends_since_compact resets; centroid epoch re-stamped to match."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
-        compact_ivf_files,
+        compact_index_files,
         ivf_topk_indexed,
     )
 
     path = str(tmp_path / "ivf_minor")
     build_ivf_index(_emb(spark, n=80, seed=3), path, k_centroids=4)
-    append_ivf_index(spark, path, _emb(spark, n=15, seed=4, start=1000))
-    append_ivf_index(spark, path, _emb(spark, n=15, seed=5, start=2000))
+    append_index(spark, path, _emb(spark, n=15, seed=4, start=1000))
+    append_index(spark, path, _emb(spark, n=15, seed=5, start=2000))
 
     q = _queries(spark, n=6).filter(F.col("qid") == 2).select(
         F.col("qe").alias("qv")
@@ -74,7 +74,7 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
     )
     frags_before = _n_files(f"{path}/vectors")
 
-    compact_ivf_files(spark, path)
+    compact_index_files(spark, path)
 
     artifacts.require_clean(path)  # journal gone, tree clean
     meta = artifacts.read_meta(path)
@@ -94,7 +94,7 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
         f"{path}/vectors"
     ), "build-time invariant restored: matching epoch sidecars"
     # a second append after the minor pass still lands cleanly
-    append_ivf_index(spark, path, _emb(spark, n=5, seed=6, start=3000))
+    append_index(spark, path, _emb(spark, n=5, seed=6, start=3000))
     assert spark.read.parquet(f"{path}/vectors").count() == 80 + 15 + 15 + 5
 
 
@@ -106,7 +106,7 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import ann_maintain
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
     )
 
@@ -116,7 +116,7 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     drifted = _emb(spark, n=40, seed=11, start=1000).select(
         "vec_id", F.transform("embedding", lambda x: x + 1.5).alias("embedding")
     )
-    append_ivf_index(spark, path, drifted)
+    append_index(spark, path, drifted)
 
     q = _queries(spark, n=10)
     rep = ann_maintain(spark, path, queries=q, k=5, budget=10)
@@ -145,13 +145,13 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     assert artifacts.artifact_stats(path)["appends_since_compact"] == 0
 
     # hygiene-only: no queries, compact_every=1 → the MINOR pass
-    append_ivf_index(spark, path, _emb(spark, n=10, seed=12, start=5000))
+    append_index(spark, path, _emb(spark, n=10, seed=12, start=5000))
     cent = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/centroids").collect()
     )
     rep3 = ann_maintain(spark, path, compact_every=1, apply=True)
     assert rep3["action"] == "compact"
-    assert rep3["plan"] == "compact_ivf_files(path)"
+    assert rep3["plan"] == "compact_index_files(path)"
     assert rep3["applied"] is True
     assert (
         sorted(tuple(r) for r in spark.read.parquet(f"{path}/centroids").collect())
@@ -203,12 +203,12 @@ def test_ann_maintain_repairs_torn_tree_first(spark, tmp_path):
 def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
     """PQ/IVFADC artifacts store codes, not vectors: the re-train is a
     store-of-record rebuild — behind apply_retrain (never plain
-    apply), executed blue/green via retrain_pq_index's root swap; the
+    apply), executed blue/green via retrain_index's root swap; the
     hygiene branch (layout compaction) runs under plain apply."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
         ann_maintain,
-        append_pq_index,
+        append_index,
         build_pq_index,
     )
 
@@ -216,7 +216,7 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
     base = _emb(spark, n=80, seed=3)
     delta = _emb(spark, n=20, seed=4, start=1000)
     build_pq_index(base, path, m=4, k=8)
-    append_pq_index(spark, path, delta)
+    append_index(spark, path, delta)
     corpus = base.unionByName(delta)
 
     q = _queries(spark, n=8)
@@ -227,7 +227,7 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
     assert rep["family"] == "pq"
     assert rep["action"] == "retrain"
     assert rep["applied"] is False, "O(corpus) rebuild needs apply_retrain"
-    assert "retrain_pq_index" in rep["plan"] and "m=4" in rep["plan"]
+    assert "retrain_index" in rep["plan"] and "m=4" in rep["plan"]
     assert set(rep["drift"]) == {"appended", "retrained"}
     assert rep["version_after"] == rep["version_before"] == 2
 
@@ -272,7 +272,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
     from hpaste_spark.operators.similarity import (
         build_ivfadc_index,
         ivfadc_topk_indexed,
-        retrain_ivfadc_index,
+        retrain_index,
     )
 
     path = str(tmp_path / "adc_bg")
@@ -289,7 +289,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "rename", crashing_rename)
     with pytest.raises(OSError, match="simulated kill"):
-        retrain_ivfadc_index(spark, base, path)
+        retrain_index(spark, base, path)
     monkeypatch.setattr(os, "rename", real_rename)
     assert not os.path.isdir(path) and os.path.isdir(path + "_old")
 
@@ -300,7 +300,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
     with pytest.raises(artifacts.TornArtifactError):
         artifacts.require_clean(path)
     artifacts.check_artifact(path, repair=True)
-    v = retrain_ivfadc_index(spark, base, path)  # retry completes
+    v = retrain_index(spark, base, path)  # retry completes
     assert v == 2
     artifacts.require_clean(path)
 
@@ -310,7 +310,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sim, "build_ivfadc_index", boom)
     with pytest.raises(RuntimeError, match="simulated build"):
-        retrain_ivfadc_index(spark, base, path)
+        retrain_index(spark, base, path)
     monkeypatch.undo()
     artifacts.require_clean(path)  # journal rolled back
     assert not os.path.isdir(path + "_retrain_tmp")
@@ -390,3 +390,29 @@ def test_standing_artifact_maintain_hdr_and_bloom(spark, tmp_path):
         standing_artifact_maintain(spark, path, "ivf")
     with pytest.raises(ValueError, match="no bits/"):
         standing_artifact_maintain(spark, path, "bloom")
+
+
+def test_stored_rows_counts_footers_and_fails_loudly(spark, tmp_path):
+    """The artifact cardinality checks' row count: a local tree with no
+    data files is 0 rows with no Spark job; a tree whose footer cannot
+    be read raises naming the file instead of falling back to a count."""
+    from hpaste_spark.operators.similarity import _stored_rows
+
+    sc = spark.sparkContext
+    empty = tmp_path / "empty" / "cid=0"
+    empty.mkdir(parents=True)
+    sc.setJobGroup("stored_rows_empty", "stored_rows_empty")
+    try:
+        assert _stored_rows(spark, str(tmp_path / "empty")) == 0
+    finally:
+        sc.setJobGroup("none", "none")
+    assert sc.statusTracker().getJobIdsForGroup("stored_rows_empty") == []
+
+    tree = tmp_path / "codes"
+    _emb(spark, n=20).write.parquet(str(tree))
+    assert _stored_rows(spark, str(tree)) == 20
+    part = sorted(tree.glob("*.parquet"))[0]
+    data = part.read_bytes()
+    part.write_bytes(data[: len(data) // 2])  # truncated: footer gone
+    with pytest.raises(ValueError, match=part.name):
+        _stored_rows(spark, str(tree))

@@ -220,7 +220,7 @@ class ArtifactProtocolMachine(RuleBasedStateMachine):
     @rule(crash=st.sampled_from(
         ["none", "mid_build", "between_root_renames", "after_root_swap"]))
     def retrain_blue_green(self, crash):
-        """The root-level blue/green rebuild (retrain_pq_index shape,
+        """The root-level blue/green rebuild (retrain_index shape,
         emulated with the same artifacts primitives): complete sibling
         build under the live root's compaction journal, then the root
         rename-aside swap.  Crash states are siblings of the root —

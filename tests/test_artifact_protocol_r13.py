@@ -38,7 +38,7 @@ def test_ann_append_replay_ring_depth(spark, tmp_path):
     last_delta_sig could not recognize (it only remembered B)."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
         ivf_topk_indexed,
     )
@@ -49,14 +49,14 @@ def test_ann_append_replay_ring_depth(spark, tmp_path):
     path = str(tmp_path / "ivf_ring")
     build_ivf_index(base, path, k_centroids=4)
 
-    v1 = append_ivf_index(spark, path, delta_a)
-    v2 = append_ivf_index(spark, path, delta_b)
+    v1 = append_index(spark, path, delta_a)
+    v2 = append_index(spark, path, delta_b)
     assert (v1, v2) == (2, 3)
 
     q = base.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     before = [tuple(r) for r in ivf_topk_indexed(spark, path, q, k=10).collect()]
 
-    v3 = append_ivf_index(spark, path, delta_a)  # the delayed duplicate
+    v3 = append_index(spark, path, delta_a)  # the delayed duplicate
     assert v3 == 3, "replay of a ring-remembered append must not bump"
     meta = artifacts.read_meta(path)
     assert meta["version"] == 3
@@ -97,7 +97,7 @@ def test_append_toctou_rejournals_fresh_target(spark, tmp_path, monkeypatch):
     versions 2 then 3, no lost bump, no clobbered signature."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
     )
 
@@ -114,13 +114,13 @@ def test_append_toctou_rejournals_fresh_target(spark, tmp_path, monkeypatch):
         if not state["fired"]:
             state["fired"] = True
             # the OTHER appender wins the gap: full committed append
-            append_ivf_index(spark, p, delta_other)
+            append_index(spark, p, delta_other)
         return real_begin(p, dirs, sig, target)
 
     # _ann_append_open resolves begin_append through the artifacts
     # module object at call time, so the module-attr patch intercepts it
     monkeypatch.setattr(artifacts, "begin_append", begin_hook)
-    v = append_ivf_index(spark, path, delta_mine)
+    v = append_index(spark, path, delta_mine)
     assert v == 3, "re-journaled target: other's commit was v2, ours v3"
     meta = artifacts.read_meta(path)
     assert meta["version"] == 3
@@ -143,7 +143,7 @@ def test_append_toctou_rejournals_fresh_target(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(artifacts, "begin_append", begin_hook2)
     delta_dup = _emb(spark, n=5, seed=14, start=3000)
-    v2 = append_ivf_index(spark, path, delta_dup)
+    v2 = append_index(spark, path, delta_dup)
     assert v2 == 4, "returns the twin's published version"
     assert artifacts.read_meta(path)["version"] == 4
     assert spark.read.parquet(f"{path}/vectors").count() == 80, (
@@ -160,22 +160,22 @@ def test_compact_exclusion_covers_build_window(spark, tmp_path, monkeypatch):
     (abort_compact) and the retry succeeds."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_pq_index,
+        append_index,
         build_pq_index,
-        compact_pq_index,
+        compact_index_files,
     )
 
     base = _emb(spark, n=60, seed=21)
     delta = _emb(spark, n=10, seed=22, start=1000)
     path = str(tmp_path / "pq_excl")
     build_pq_index(base, path, m=4, k=8)
-    append_pq_index(spark, path, delta)
+    append_index(spark, path, delta)
 
     # simulate the appender arriving mid-build: hold the build-phase
     # journal open and attempt the append
     artifacts.open_compact(path)
     with pytest.raises(artifacts.TornArtifactError, match="compact_pending"):
-        append_pq_index(spark, path, _emb(spark, n=5, seed=23, start=2000))
+        append_index(spark, path, _emb(spark, n=5, seed=23, start=2000))
     artifacts.abort_compact(path)
 
     # a Python failure during the tmp build aborts the journal
@@ -186,14 +186,14 @@ def test_compact_exclusion_covers_build_window(spark, tmp_path, monkeypatch):
     import hpaste_spark.operators.similarity  # noqa: F401  (module object below)
 
     with pytest.raises(RuntimeError, match="simulated build failure"):
-        compact_pq_index(spark, path)
+        compact_index_files(spark, path)
     monkeypatch.undo()
     artifacts.require_clean(path)  # journal rolled back, tree clean
 
     before = sorted(
         map(tuple, spark.read.parquet(f"{path}/codes").collect())
     )
-    compact_pq_index(spark, path)  # retry succeeds
+    compact_index_files(spark, path)  # retry succeeds
     after = sorted(map(tuple, spark.read.parquet(f"{path}/codes").collect()))
     assert after == before, "compaction preserves the code relation"
     meta = artifacts.read_meta(path)
@@ -206,9 +206,9 @@ def test_artifact_stats_tracks_append_compact_lifecycle(spark, tmp_path):
     fires on the fragmented tree."""
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_ivfadc_index,
+        append_index,
         build_ivfadc_index,
-        compact_ivfadc_index,
+        compact_index_files,
     )
 
     base = _emb(spark, n=60, seed=31)
@@ -217,8 +217,8 @@ def test_artifact_stats_tracks_append_compact_lifecycle(spark, tmp_path):
     s0 = artifacts.artifact_stats(path)
     assert s0["appends_since_compact"] == 0 and s0["version"] == 1
 
-    append_ivfadc_index(spark, path, _emb(spark, n=10, seed=32, start=1000))
-    append_ivfadc_index(spark, path, _emb(spark, n=10, seed=33, start=2000))
+    append_index(spark, path, _emb(spark, n=10, seed=32, start=1000))
+    append_index(spark, path, _emb(spark, n=10, seed=33, start=2000))
     s1 = artifacts.artifact_stats(path)
     assert s1["appends_since_compact"] == 2 and s1["version"] == 3
     assert s1["data_dirs"]["codes"] > s0["data_dirs"]["codes"], (
@@ -229,7 +229,7 @@ def test_artifact_stats_tracks_append_compact_lifecycle(spark, tmp_path):
     )
     assert any("small-files growth" in l and "codes" in l for l in report)
 
-    compact_ivfadc_index(spark, path)
+    compact_index_files(spark, path)
     s2 = artifacts.artifact_stats(path)
     assert s2["appends_since_compact"] == 0 and s2["version"] == 4
     assert s2["data_dirs"]["codes"] <= s1["data_dirs"]["codes"]

@@ -8,7 +8,8 @@ against a plain in-memory dict model of the same semantics:
 - put overlays only the cells it names (cell-level last-writer-wins);
   map-family puts overlay by key
 - bare delete removes the row; .family() clears one family;
-  .values() removes named qualifiers
+  .values() removes named qualifiers — both on the map family ``m``
+  and on the typed family ``meta``
 - increment adds to coalesce(stored, 0), creating the row if absent
 - within one batch, a repeated cell in the same op kind overwrites
   (matching HBase Put/Increment familyMap semantics)
@@ -53,13 +54,19 @@ put_op = st.fixed_dictionaries(
         "m": st.dictionaries(st.sampled_from(QUALS), st.integers(-9, 9), max_size=3),
     }
 )
-delete_op = st.fixed_dictionaries(
-    {
-        "kind": st.just("delete"),
-        "key": st.sampled_from(KEYS),
-        "scope": st.sampled_from(["row", "family", "values"]),
-        "quals": st.sets(st.sampled_from(QUALS), min_size=1, max_size=2),
-    }
+delete_op = st.one_of(
+    *(
+        st.fixed_dictionaries(
+            {
+                "kind": st.just("delete"),
+                "key": st.sampled_from(KEYS),
+                "scope": st.sampled_from(["row", "family", "values"]),
+                "fam": st.just(fam),
+                "quals": st.sets(st.sampled_from(quals), min_size=1, max_size=2),
+            }
+        )
+        for fam, quals in (("m", QUALS), ("meta", ["title", "views"]))
+    )
 )
 increment_op = st.fixed_dictionaries(
     {
@@ -94,10 +101,10 @@ def apply_model(model: dict, ops: list[dict]) -> None:
                 del_rows.add(k)
             elif op["scope"] == "family":
                 del_rows.discard(k)
-                del_fams.setdefault(k, set()).add("m")
+                del_fams.setdefault(k, set()).add(op["fam"])
             else:
                 del_rows.discard(k)
-                del_vals.setdefault(k, set()).update(op["quals"])
+                del_vals.setdefault(k, {}).setdefault(op["fam"], set()).update(op["quals"])
         else:
             d = staged_incs.setdefault(k, {"cells": {}, "m": {}})
             if op["views"] is not None:
@@ -106,13 +113,18 @@ def apply_model(model: dict, ops: list[dict]) -> None:
 
     for k in del_rows:
         model.pop(k, None)
-    for k in del_fams:
+    for k, fams in del_fams.items():
         if k in model:
-            model[k]["m"] = {}
-    for k, qs in del_vals.items():
+            if "m" in fams:
+                model[k]["m"] = {}
+            if "meta" in fams:
+                model[k].update(title=None, views=None)
+    for k, fam_quals in del_vals.items():
         if k in model:
-            for q in qs:
+            for q in fam_quals.get("m", ()):
                 model[k]["m"].pop(q, None)
+            for q in fam_quals.get("meta", ()):
+                model[k][q] = None
     for k, d in staged_puts.items():
         if not d["cells"] and not d["m"]:
             continue
@@ -145,9 +157,9 @@ def run_engine(spark, tbl: PropTable, batches: list[list[dict]]) -> dict:
             elif op["kind"] == "delete":
                 ob = (ob.delete(k) if ob is not None else tbl.delete(k))
                 if op["scope"] == "family":
-                    ob = ob.family("m")
+                    ob = ob.family(op["fam"])
                 elif op["scope"] == "values":
-                    ob = ob.values("m", op["quals"])
+                    ob = ob.values(op["fam"], op["quals"])
             else:
                 ob = (ob.increment(k) if ob is not None else tbl.increment(k))
                 if op["views"] is not None:
@@ -175,10 +187,23 @@ PINNED = [
         {"kind": "increment", "key": "b1", "views": 2, "m": {"qb": 3}},
     ],
     [
-        {"kind": "delete", "key": "a1", "scope": "row", "quals": {"qa"}},
+        {"kind": "delete", "key": "a1", "scope": "row", "fam": "m", "quals": {"qa"}},
         {"kind": "put", "key": "a1", "title": "b", "views": None, "m": {}},
         {"kind": "put", "key": "b1", "title": "c", "views": 4, "m": {"qa": 2}},
         {"kind": "increment", "key": "b1", "views": 1, "m": {"qb": 1, "qc": 5}},
+    ],
+]
+
+
+# pinned typed-family deletes: .family("meta") of one key and
+# .values("meta", {"title"}) of another, next to map-family deletes
+# of the same keys in the same batch
+PINNED_TYPED = PINNED + [
+    [
+        {"kind": "delete", "key": "a1", "scope": "family", "fam": "meta", "quals": {"title"}},
+        {"kind": "delete", "key": "a1", "scope": "values", "fam": "m", "quals": {"qa"}},
+        {"kind": "delete", "key": "b1", "scope": "values", "fam": "meta", "quals": {"title"}},
+        {"kind": "delete", "key": "b1", "scope": "family", "fam": "m", "quals": {"qb"}},
     ],
 ]
 
@@ -189,6 +214,7 @@ PINNED = [
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @example(batches=PINNED)
+@example(batches=PINNED_TYPED)
 @given(batches=program)
 def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
     model: dict = {}

@@ -106,6 +106,30 @@ def test_delete_family_and_qualifiers(spark, base_dir):
     assert row.column("title") == "Book"  # other families untouched
 
 
+def test_scoped_deletes_plan_one_projection(spark, base_dir):
+    """A batch's .family()/.values() deletes compose into one projection:
+    the analyzed plan has as many Project nodes for 40 scoped deletes as
+    for one, instead of one per column per key."""
+    from hpaste_spark.operators.mutations import apply_deletes
+
+    _, tbl = example_schema(base_dir, spark)
+    tbl.put("Chris").value("title", "Book").execute(spark)
+    fams = set(tbl.families)
+
+    def n_projects(keys):
+        df = apply_deletes(
+            tbl,
+            tbl.to_df(spark),
+            set(),
+            {k: fams for k in keys},
+            {k: {"viewCounts": {"Today"}} for k in keys},
+        )
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return sum(1 for l in plan.splitlines() if l.lstrip(" :+-").startswith("Project"))
+
+    assert n_projects([f"k{i}" for i in range(40)]) == n_projects(["k0"])
+
+
 def test_increment(spark, base_dir):
     """IncrementOp.scala:26-38; merge semantics M8."""
     _, tbl = example_schema(base_dir, spark)

@@ -366,17 +366,39 @@ def test_pca_no_cartesian(spark, queries):
 def test_drift_psi_windows_only_above_bin_aggregate(spark, queries):
     """prof_drift_psi (r14): the side totals are unpartitioned windows
     over the n_bins-row full-join of the two bin-count AGGREGATES —
-    never over the corpus — and the old broadcast-agg crossJoin that
-    re-ran both corpus bin passes per consumer is gone: each side's
-    events scan appears at most twice in the plan (bounds + bin pass
-    for ref, bin pass for cur; formatted mode prints tree + detail so
-    each physical scan counts double)."""
-    plan = plan_of(queries["prof_drift_psi"](spark, SF_DIR))
-    # every Window input is the joined bin table (HashAggregate-fed);
-    # cheap proxy: the bin-count aggregate exists and the scan count
-    # halved vs the duplicated-total shape (was 16 printed scans)
-    assert "HashAggregate" in plan
-    assert plan.count("Scan parquet") <= 8, plan.count("Scan parquet")
+    never over the corpus: walked on the physical plan, every Window
+    node has a HashAggregate in its child subtree."""
+    df = queries["prof_drift_psi"](spark, SF_DIR)
+    assert "HashAggregate" in plan_of(df)
+
+    def children(node):
+        # AQE wraps the plan (and, after execution, each query stage):
+        # descend into the wrapped plan
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if name.endswith("QueryStage"):
+            return [node.plan()]
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def subtree_names(node):
+        out = [node.nodeName()]
+        for c in children(node):
+            out += subtree_names(c)
+        return out
+
+    def windows(node):
+        here = [node] if node.nodeName() == "Window" else []
+        return here + [w for c in children(node) for w in windows(c)]
+
+    # structural: every Window's input is a bin-count AGGREGATE, never
+    # the corpus scan itself
+    found = windows(df._jdf.queryExecution().executedPlan())
+    assert found, "prof_drift_psi plans no Window"
+    for w in found:
+        below = [n for c in children(w) for n in subtree_names(c)]
+        assert "HashAggregate" in below, below
 
 
 def test_basket_lift_never_self_joins_baskets(spark, queries):

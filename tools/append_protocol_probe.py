@@ -51,7 +51,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.similarity import append_ivf_index, build_ivf_index
+    from hpaste_spark.operators.similarity import append_index, build_ivf_index
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -91,13 +91,13 @@ def main() -> int:
     (files_few, _), _ = timed("snapshot walk (post-build tree)", lambda: (walk(), None))
 
     # full appends (protocol inclusive), 1x then 30x
-    timed("append 1x TOTAL (protocol incl.)", lambda: append_ivf_index(spark, path, d1))
-    timed("append 30x TOTAL (protocol incl.)", lambda: append_ivf_index(spark, path, d30))
+    timed("append 1x TOTAL (protocol incl.)", lambda: append_index(spark, path, d1))
+    timed("append 30x TOTAL (protocol incl.)", lambda: append_index(spark, path, d30))
 
     # inflate file count: 20 more tiny appends, then re-walk
     for i in range(20):
         tiny = synth(spark, 500, id_start=30_000_000 + i * 1000)
-        append_ivf_index(spark, path, tiny)
+        append_index(spark, path, tiny)
     (files_many, _), _ = timed("snapshot walk (post-22-appends tree)", lambda: (walk(), None))
 
     n_few, n_many = len(files_few), len(files_many)

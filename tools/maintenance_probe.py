@@ -3,13 +3,13 @@
 The question SCALE.md must answer with numbers, not prose: when
 artifact_stats flags small-files growth but the drift monitor says the
 geometry is still good, how much does the MINOR pass
-(compact_ivf_files — one repartition-on-stored-cid shuffle, no
+(compact_index_files — one repartition-on-stored-cid shuffle, no
 clustering) actually save versus running the only previously-available
 pass (compact_ivf_index — full re-cluster + re-assign + rewrite)?  And
 do both scale linearly so the split survives 100 TB?
 
 Protocol per scale (1x = 20k rows x 64 dims, 30x = 600k):
-  build_ivf_index on the standing slice, 8 append_ivf_index deltas
+  build_ivf_index on the standing slice, 8 append_index deltas
   (fragmenting the vectors tree exactly the way an ingest loop does),
   copy the fragmented tree aside, then time the minor pass on one copy
   and the major pass on the other (identical initial state; file
@@ -62,9 +62,9 @@ def main() -> int:
 
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_ivf_index,
+        append_index,
         build_ivf_index,
-        compact_ivf_files,
+        compact_index_files,
         compact_ivf_index,
     )
 
@@ -90,7 +90,7 @@ def main() -> int:
         delta_n = max(1, n // (4 * N_APPENDS))  # 8 appends, +25% total
         t0 = time.time()
         for i in range(N_APPENDS):
-            append_ivf_index(
+            append_index(
                 spark,
                 path,
                 synth(spark, delta_n, id_start=10_000_000 + i * delta_n),
@@ -103,7 +103,7 @@ def main() -> int:
         os.rename(path, major_path)
 
         t0 = time.time()
-        compact_ivf_files(spark, minor_path)
+        compact_index_files(spark, minor_path)
         t_minor = time.time() - t0
         minor_files = n_files(os.path.join(minor_path, "vectors"))
         assert artifacts.artifact_stats(minor_path)["appends_since_compact"] == 0
