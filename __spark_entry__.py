@@ -25,7 +25,8 @@ from hpaste_spark.functions import vectors as V
 from hpaste_spark.functions.money import (davg, dsum, dsum_disc, dsum_mul,
     dsum_units_total, money, sql_avg2, sql_money, sql_sum2)
 from hpaste_spark.functions.timeutil import epoch_us
-from hpaste_spark.operators.artifacts import ensure_artifact, scratch_dir
+from hpaste_spark.operators.artifacts import (append_artifact, compact_artifact,
+                                              ensure_artifact, scratch_dir)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -1927,7 +1928,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: bump to invalidate stored IVF indexes when centroid/assignment code changes
-_IVF_INDEX_VERSION = 4  # r13b: trained_version drift clock in meta
+_IVF_INDEX_VERSION = 5  # r16: meta pins vec_col/id_col
 
 
 @q("sim_ivf_topk_stored", _IVF_TOPK_ORACLE)
@@ -2207,7 +2208,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF k-NN over an APPEND-refreshED index (the round-9
     standing-artifact posture at the ANN layer): the index is built on
     the standing corpus slice (vec_id % 5 != 1), then
-    similarity.append_index assigns ONLY the delta slice under the
+    artifacts.append_artifact assigns ONLY the delta slice under the
     artifact's STORED centroids and appends it into the existing cid
     partitions — no re-cluster, no rescan of the standing corpus, and
     probe-side dynamic partition pruning is unchanged.  The honest
@@ -2220,7 +2221,6 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction.  A crash between build and append rebuilds instead
     of serving the half-index (ensure_artifact's completion marker)."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         ivf_knn_join_indexed,
     )
@@ -2231,7 +2231,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_appended", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2251,7 +2251,7 @@ def sim_ivf_knn_join_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPACTION leg of the standing-IVF lifecycle under the hash
     gate (round-11; closes the loop the drift monitor opens): build on
-    the standing slice (vec_id % 5 != 1), append_index the delta —
+    the standing slice (vec_id % 5 != 1), append_artifact the delta —
     at this point the artifact answers with BUILD-SLICE centroids (the
     sim_ivf_knn_join_appended oracle) — then similarity.compact_ivf_index
     re-clusters the whole stored corpus.  The compacted index must now
@@ -2264,7 +2264,6 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever the artifact currently has).  A crash mid-lifecycle
     rebuilds instead of serving a half-state."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         compact_ivf_index,
         ivf_knn_join_indexed,
@@ -2276,7 +2275,7 @@ def sim_ivf_knn_join_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         compact_ivf_index(spark, path, k_centroids=8)
 
     path = ensure_artifact(
@@ -2299,8 +2298,8 @@ def sim_ivf_knn_join_minor_compacted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The MINOR-compaction leg of the standing-IVF lifecycle (round
-    13 — similarity.compact_index_files): build on the standing slice
-    (vec_id % 5 != 1), append_index the delta (one parquet
+    13 — artifacts.compact_artifact): build on the standing slice
+    (vec_id % 5 != 1), append_artifact the delta (one parquet
     fragment per (append, cid) pair — the small-files growth
     artifact_stats signals on), then consolidate the vectors tree
     repartitioned on the STORED cid under the frozen standing
@@ -2308,7 +2307,7 @@ def sim_ivf_knn_join_minor_compacted(
     re-clusters and whose oracle flips to full-corpus centroids), the
     minor pass must leave every probe result bit-identical — this
     query pins that by answering the APPENDED oracle after the
-    rewrite.  This is the pass ann_maintain's hygiene trigger runs
+    rewrite.  This is the pass maintain_artifact's hygiene trigger runs
     when the drift monitor says the geometry is still good but
     artifact_stats says the file count is not (the measured it1
     re-cluster recall hazard makes 'just re-cluster on small-files'
@@ -2316,9 +2315,7 @@ def sim_ivf_knn_join_minor_compacted(
     split (store-file consolidation vs full rewrite) the reference's
     standing tables rely on."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
-        compact_index_files,
         ivf_knn_join_indexed,
     )
 
@@ -2328,8 +2325,8 @@ def sim_ivf_knn_join_minor_compacted(
         build_ivf_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_index_files(spark, path)
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_artifact(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_minor", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2428,7 +2425,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     """The DRIFT-RECALL MONITOR the appended-IVF posture needs (round-11
     verdict ask #2; round-12 ask #3 rewired it through the OPERATIONAL
     helper similarity.drift_recall, which grades a LIVE stored
-    artifact): append_index assigns deltas under FROZEN build-time
+    artifact): append_artifact assigns deltas under FROZEN build-time
     centroids, and its docstring names periodic re-cluster
     (similarity.compact_ivf_index) as the compaction step — but a daily
     ingest loop needs the NUMBER that says when.  This query builds a
@@ -2463,7 +2460,6 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     — exact twins, not bands."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         drift_recall,
     )
@@ -2478,7 +2474,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def build(path: str) -> None:
         build_ivf_index(emb, path, k_centroids=8, vec_col="e")
-        append_index(spark, path, delta, vec_col="e")
+        append_artifact(spark, path, delta)
 
     path = ensure_artifact(
         _SCRATCH, "ivf_index_drift", sf_dir, "embeddings", _IVF_INDEX_VERSION, build
@@ -2489,7 +2485,7 @@ def sim_ivf_appended_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
     return drift_recall(
         spark, path, q_df, k=10, nprobe=2, candidate_iterations=(1, 2),
-        budget=100, vec_col="e",
+        budget=100,
     )
 
 
@@ -5012,7 +5008,7 @@ def stream_sketch_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: bump to invalidate cached HDR baseline artifacts when the bucket
 #: rule or the registry build window changes
-_HDR_BASELINE_VERSION = 2  # r10: meta gained a version column
+_HDR_BASELINE_VERSION = 3  # r16: meta.json, journaled appends
 
 
 @q(
@@ -6699,7 +6695,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: bump to invalidate cached LSH index artifacts when the band family
 #: or the build geometry used by the registry queries changes
-_LSH_INDEX_VERSION = 2  # r10: meta gained a version column
+_LSH_INDEX_VERSION = 3  # r16: meta.json, journaled appends
 
 
 def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
@@ -6754,13 +6750,10 @@ def dedup_incremental_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_lsh_index_appended(spark: SparkSession, sf_dir: str) -> str:
     """Two-step artifact for the append-equivalence gate: build the
     index on PART of the standing corpus (doc_id % 7 != 3 — 'the index
-    as of yesterday'), then append_lsh_index the remainder ('today's
+    as of yesterday'), then append_artifact the remainder ('today's
     ingest').  A crash between build and append leaves no completion
-    marker, so the artifact is rebuilt from scratch (re-appending onto
-    a maybe-partial append would duplicate band rows and inflate
-    n_bands — the idempotence caveat the append_lsh_index docstring
-    documents)."""
-    from hpaste_spark.operators.dedup import append_lsh_index, build_lsh_index
+    marker, so the artifact is rebuilt from scratch."""
+    from hpaste_spark.operators.dedup import build_lsh_index
 
     def build(path: str) -> None:
         corpus = (
@@ -6772,7 +6765,7 @@ def _ensure_lsh_index_appended(spark: SparkSession, sf_dir: str) -> str:
             corpus.filter(F.col("doc_id") % 7 != 3), path,
             num_hashes=16, bands=4, shingle=3,
         )
-        append_lsh_index(spark, path, corpus.filter(F.col("doc_id") % 7 == 3))
+        append_artifact(spark, path, corpus.filter(F.col("doc_id") % 7 == 3))
 
     return ensure_artifact(
         _SCRATCH, "lsh_index_appended", sf_dir, "documents",
@@ -6790,7 +6783,7 @@ _ORACLES["dedup_incremental_lsh_appended"] = _ORACLES["dedup_incremental_lsh"]
 def dedup_incremental_lsh_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time dedup off an APPEND-refreshED LSH band artifact
     (round-9 verdict ask #1): the index is built on 'yesterday's'
-    corpus slice (doc_id % 7 != 3), then append_lsh_index signs ONLY
+    corpus slice (doc_id % 7 != 3), then append_artifact signs ONLY
     the remaining slice under the artifact's pinned geometry and
     appends its band rows — the pre-existing corpus is never re-signed
     (plan-pinned in tests/test_plans.py).  The probe then runs the
@@ -7681,7 +7674,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(emb, qv, m=4, k=16, topk=10)
 
 
-_PQ_INDEX_VERSION = 5  # r13b: trained_version drift clock in meta
+_PQ_INDEX_VERSION = 6  # r16: meta pins vec_col/id_col
 
 
 @q("sim_pq_topk_stored", _PQ_TOPK_ORACLE)
@@ -7722,7 +7715,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-10 over an APPEND-refreshED PQ index — the standing-
     artifact lifecycle extended to the COMPRESSION leg (round 11;
     LSH/Bloom/HDR/IVF gained appends in r10): codebooks train on the
-    standing slice (vec_id % 5 != 1), then similarity.append_index
+    standing slice (vec_id % 5 != 1), then artifacts.append_artifact
     encodes ONLY the delta slice under the artifact's STORED codebooks
     (m inferred from them — pinned geometry) and appends the code
     rows; the standing corpus is never re-encoded.  The honest
@@ -7734,7 +7727,6 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh build_pq_index on the CORPUS (the artifact stores only
     codes, deliberately)."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
         pq_topk_indexed,
     )
@@ -7745,7 +7737,7 @@ def sim_pq_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pq_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_appended", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7764,8 +7756,8 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPACTION leg of the standing-PQ lifecycle under the hash
     gate (round 12; the IVF twin re-clusters and switches oracles —
     this one must NOT): build codebooks on the standing slice
-    (vec_id % 5 != 1), similarity.append_index the delta — each
-    append adds a code-file fragment — then similarity.compact_index_files
+    (vec_id % 5 != 1), artifacts.append_artifact the delta — each
+    append adds a code-file fragment — then artifacts.compact_artifact
     rewrites the code relation as one file and swaps it in.  Rows are
     unchanged BY CONSTRUCTION (compaction is file layout, never a
     re-train: the artifact deliberately stores only codes), so the
@@ -7775,9 +7767,7 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap goes through swap_live_dir and the artifact's meta version
     bumps; readers require_clean."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
-        compact_index_files,
         pq_topk_indexed,
     )
 
@@ -7785,8 +7775,8 @@ def sim_pq_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_index_files(spark, path)
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_artifact(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_compacted", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7820,7 +7810,6 @@ def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression leg made executable, exactly the claim the IVF twin
     (sim_ivf_knn_join_compacted) makes for the coarse leg."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
         pq_topk_indexed,
         retrain_index,
@@ -7830,7 +7819,7 @@ def sim_pq_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_pq_index(emb.filter(F.col("vec_id") % 5 != 1), path, m=4, k=16)
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         retrain_index(spark, emb, path)
 
     path = ensure_artifact(
@@ -7912,7 +7901,7 @@ _PQ_DRIFT_ORACLE = """
 def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift-recall monitor for the COMPRESSION leg (round 12 —
     similarity.drift_recall, the drift_recall twin):
-    append_index quantizes deltas with FROZEN build-time codebooks,
+    append_artifact quantizes deltas with FROZEN build-time codebooks,
     and the artifact cannot re-derive a re-train from itself (it
     stores codes, deliberately), so the monitor grades the LIVE
     build+append artifact against an in-plan re-train on the CORPUS —
@@ -7925,7 +7914,6 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding, ADC scoring, exact truth — exact twins, not bands)."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
         drift_recall,
     )
@@ -7940,7 +7928,7 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_pq_index(emb, path, m=4, k=16, vec_col="e")
-        append_index(spark, path, delta, vec_col="e")
+        append_artifact(spark, path, delta)
 
     path = ensure_artifact(
         _SCRATCH, "pq_index_drift", sf_dir, "embeddings", _PQ_INDEX_VERSION, build
@@ -7951,7 +7939,7 @@ def sim_pq_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ((F.col("vec_id") - 1_000_001) < 5000)
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
     return drift_recall(
-        spark, path, q_df, union, k=10, budget=100, vec_col="e"
+        spark, path, q_df, union, k=10, budget=100
     )
 
 
@@ -8119,7 +8107,7 @@ def dedup_semantic_2level_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TWO_LEVEL_INDEX_VERSION = 2
+_TWO_LEVEL_INDEX_VERSION = 3  # r16: k1/k2 in meta.json
 
 
 def _two_level_index(spark: SparkSession, sf_dir: str) -> str:
@@ -8281,7 +8269,7 @@ def sim_ivfadc_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfadc_topk(emb, qv, k_centroids=8, nprobe=2, m=4, k=16, topk=10)
 
 
-_IVFADC_INDEX_VERSION = 5  # r13b: trained_version drift clock in meta
+_IVFADC_INDEX_VERSION = 6  # r16: meta pins vec_col/id_col
 
 
 @q("sim_ivfadc_topk_stored", _IVFADC_ORACLE)
@@ -8328,7 +8316,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact lifecycle completed across ALL index families (LSH, Bloom,
     HDR, IVF, PQ, and now the combined coarse+residual artifact): the
     index is built on the standing slice (vec_id % 5 != 1), then
-    similarity.append_index assigns the delta to the STORED
+    artifacts.append_artifact assigns the delta to the STORED
     coarse centroids and residual-encodes it under the STORED residual
     codebooks — both geometries pinned by the artifact, the standing
     corpus never re-assigned or re-encoded, partition pruning
@@ -8338,7 +8326,6 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometries here; the re-train is a fresh build_ivfadc_index on the
     corpus (the artifact stores codes, not raw vectors)."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
         ivfadc_topk_indexed,
     )
@@ -8349,7 +8336,7 @@ def sim_ivfadc_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_appended", sf_dir, "embeddings",
@@ -8369,17 +8356,15 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate (round 12 — with this, EVERY index family's full
     build → append → compact chain is gate-visible): build the
     coarse+residual model on the standing slice (vec_id % 5 != 1),
-    similarity.append_index the delta into its cid partitions,
-    then similarity.compact_index_files repartitions the code
+    artifacts.append_artifact the delta into its cid partitions,
+    then artifacts.compact_artifact repartitions the code
     relation on cid (one file per partition in practice) and swaps it
     in.  Rows, cids, and probe-side partition pruning unchanged BY
     CONSTRUCTION — the compacted index answers the residual-ADC
     top-10 bit-identically to the appended one, same oracle, the
     read-back identity made executable."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
-        compact_index_files,
         ivfadc_topk_indexed,
     )
 
@@ -8389,8 +8374,8 @@ def sim_ivfadc_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
-        compact_index_files(spark, path)
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        compact_artifact(spark, path)
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_compacted", sf_dir, "embeddings",
@@ -8417,7 +8402,6 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ivfadc_topk_stored oracle bit-for-bit: recall restoration for
     the coarse AND residual legs in one executable claim."""
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
         ivfadc_topk_indexed,
         retrain_index,
@@ -8429,7 +8413,7 @@ def sim_ivfadc_topk_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfadc_index(
             emb.filter(F.col("vec_id") % 5 != 1), path, k_centroids=8, m=4, k=16
         )
-        append_index(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
+        append_artifact(spark, path, emb.filter(F.col("vec_id") % 5 == 1))
         retrain_index(spark, emb, path)
 
     path = ensure_artifact(
@@ -8554,7 +8538,6 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-(query, probed-cell) distance tables."""
     from hpaste_spark.functions.vectors import as_double
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
         drift_recall,
     )
@@ -8569,7 +8552,7 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         build_ivfadc_index(emb, path, k_centroids=8, m=4, k=16, vec_col="e")
-        append_index(spark, path, delta, vec_col="e")
+        append_artifact(spark, path, delta)
 
     path = ensure_artifact(
         _SCRATCH, "ivfadc_index_drift", sf_dir, "embeddings",
@@ -8581,7 +8564,7 @@ def sim_ivfadc_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ((F.col("vec_id") - 1_000_001) < 5000)
     ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
     return drift_recall(
-        spark, path, q_df, union, k=10, nprobe=2, budget=100, vec_col="e"
+        spark, path, q_df, union, k=10, nprobe=2, budget=100
     )
 
 
@@ -9319,7 +9302,7 @@ def bloom_fp_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 2) — v1 artifacts hold family-1 bits and must rebuild (the ADVICE-r6
 #: stored-index-versioning lesson, applied at the same time as the
 #: family change, not after)
-_BLOOM_FILTER_VERSION = 3  # r10: meta gained a version column
+_BLOOM_FILTER_VERSION = 4  # r16: meta.json, journaled appends
 
 
 def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
@@ -9380,7 +9363,7 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination off an APPEND-refreshed Bloom blocklist (the
     round-9 standing-artifact posture at the Bloom layer): the filter
     is built on HALF the benchmark (src0 docs with even doc_id — 'the
-    eval suites we had'), then append_bloom_filter inserts the other
+    eval suites we had'), then append_artifact inserts the other
     half ('the opt-out list that arrived Tuesday') — only the new
     material is hashed, only its not-yet-set bits are appended, and
     the meta version bumps.  Bloom bits are monotone, so the refreshed
@@ -9391,7 +9374,6 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-filter (whose false negatives would let Tuesday's opt-outs
     ship)."""
     from hpaste_spark.operators.dedup import (
-        append_bloom_filter,
         build_bloom_filter,
         decontaminate_bloom_stored,
     )
@@ -9404,7 +9386,7 @@ def decontaminate_bloom_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
             bench.filter(F.col("doc_id") % 2 == 0), path,
             n=5, m_bits=16384, k_hashes=3,
         )
-        append_bloom_filter(
+        append_artifact(
             spark, path, bench.filter(F.col("doc_id") % 2 == 1)
         )
 
@@ -12287,6 +12269,36 @@ _SEMANTICS_CHANGED = {
     "sim_ivfadc_topk_compacted": 15,
     "sim_ivfadc_topk_retrained": 15,
     "sim_ivfadc_drift_recall": 15,
+    # r16: one standing-artifact lifecycle for all six families
+    # (artifacts.append_artifact / compact_artifact / maintain_artifact
+    # / open_artifact over one codec table; LSH, Bloom, HDR and
+    # two-level metas moved to meta.json, LSH/Bloom/HDR appends
+    # journaled) — artifacts rebuilt under _*_VERSION bumps, same
+    # relations, same oracle, new code path
+    "decontaminate_bloom_stored": 16,
+    "decontaminate_bloom_appended": 16,
+    "dedup_incremental_lsh_stored": 16,
+    "dedup_incremental_lsh_appended": 16,
+    "sketch_hdr_drift": 16,
+    "dedup_semantic_2level_stored": 16,
+    "stream_decontaminate_bloom": 16,
+    "stream_incremental_dedup": 16,
+    "sim_ivf_topk_stored": 16,
+    "sim_ivf_knn_join_stored": 16,
+    "sim_ivf_knn_join_appended": 16,
+    "sim_ivf_knn_join_compacted": 16,
+    "sim_ivf_knn_join_minor_compacted": 16,
+    "sim_ivf_appended_drift_recall": 16,
+    "sim_pq_topk_stored": 16,
+    "sim_pq_topk_appended": 16,
+    "sim_pq_topk_compacted": 16,
+    "sim_pq_topk_retrained": 16,
+    "sim_pq_drift_recall": 16,
+    "sim_ivfadc_topk_stored": 16,
+    "sim_ivfadc_topk_appended": 16,
+    "sim_ivfadc_topk_compacted": 16,
+    "sim_ivfadc_topk_retrained": 16,
+    "sim_ivfadc_drift_recall": 16,
 }
 
 

@@ -183,221 +183,60 @@ def build_lsh_index(
     num_hashes: int = 16,
     bands: int = 4,
     shingle: int = 3,
-    mode: str = "overwrite",
 ) -> None:
     """Write-once LSH band-index artifact (round-8 verdict ask #1):
     sign the standing corpus ONCE and persist the band table so every
     future batch/stream probe is an equi-join against stored parquet —
     no corpus re-signature per run, and, critically, no caller-typed
-    geometry: ``{path}/meta`` pins (num_hashes, bands, shingle,
-    id_col, family), and the stored probes derive their parameters
-    FROM the artifact.  Hand-typed geometry that disagrees with the
-    stored bands is the LSH analog of probing a Bloom filter with the
-    wrong (m, k): band keys simply never collide and every duplicate
-    sails through as unique — a silent false negative, which is why
-    the stored readers hard-error on a family mismatch instead of
-    falling back.
+    geometry: ``{path}/meta.json`` pins (num_hashes, bands, shingle,
+    family) and the column names, and the stored probes derive their
+    parameters FROM the artifact.  Hand-typed geometry that disagrees
+    with the stored bands is the LSH analog of probing a Bloom filter
+    with the wrong (m, k): band keys simply never collide and every
+    duplicate sails through as unique — a silent false negative, which
+    is why the stored readers hard-error on a family mismatch instead
+    of falling back.
 
     Layout: ``{path}/bands`` — the (id, band_idx, band_key) relation
-    of :func:`minhash_band_keys` — then ``{path}/meta`` written LAST,
-    so readers guarding on ``meta/_SUCCESS`` can never see a
-    half-built artifact (the build_bloom_filter discipline).
-    Refreshing with new corpus material is :func:`append_lsh_index`
-    (sign only the delta) — NOT ``mode='append'`` here, which is
-    rejected: an append through the build path would write a SECOND
-    meta row, and a reader picking nondeterministically between two
-    geometry rows is exactly the silent-false-negative hazard the
-    artifact exists to close (r9 ADVICE item)."""
-    if mode == "append":
-        raise ValueError(
-            "build_lsh_index(mode='append') would append a second meta "
-            "row next to the pinned geometry; refresh the artifact with "
-            "append_lsh_index (signs only the new docs under the stored "
-            "geometry and bumps the meta version atomically)"
-        )
+    of :func:`minhash_band_keys` — then ``meta.json`` written LAST
+    (:func:`~hpaste_spark.operators.artifacts.publish_build`), so a
+    reader never sees a half-built artifact.  Refreshing with new
+    corpus material is
+    :func:`~hpaste_spark.operators.artifacts.append_artifact` (signs
+    only the delta under the pinned geometry)."""
+    from hpaste_spark.operators import artifacts
+
     minhash_band_keys(
         corpus, text_col, id_col, num_hashes, bands, shingle
-    ).write.mode(mode).parquet(f"{path}/bands")
-    corpus.sparkSession.createDataFrame(
-        [(num_hashes, bands, shingle, id_col, LSH_FAMILY, 1)],
-        "num_hashes INT, bands INT, shingle INT, id_col STRING, "
-        "family INT, version INT",
-    ).write.mode(mode).parquet(f"{path}/meta")
-
-
-def _single_meta_row(spark, path: str, what: str):
-    """The one distinct row of ``{path}/meta``, hard-erroring if the
-    relation holds conflicting rows: a multi-row meta (e.g. a legacy
-    ``mode='append'`` refresh under different geometry) would make
-    every reader's geometry a nondeterministic pick — the silent-
-    false-negative setup — so it must fail loudly instead."""
-    rows = spark.read.parquet(f"{path}/meta").distinct().collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"{what} at {path} has {len(rows)} distinct meta rows; the "
-            "geometry pin must be unique — rebuild the artifact (a "
-            "second row means an append was done through the build path "
-            "with different geometry)"
-        )
-    return rows[0]
+    ).write.mode("overwrite").parquet(f"{path}/bands")
+    artifacts.publish_build(
+        path, "lsh", family=LSH_FAMILY, num_hashes=num_hashes, bands=bands,
+        shingle=shingle, text_col=text_col, id_col=id_col,
+    )
 
 
 def read_lsh_index(spark, path: str):
-    """(bands DataFrame, meta Row) of a :func:`build_lsh_index`
-    artifact, with the family hard-check every stored reader shares
-    and the single-distinct-meta-row assert (a conflicting second
-    geometry row must fail loudly, never be picked from at random).
-    The bands read is a plain parquet scan — at production scale the
-    table is partition-prunable on the band key and read once per
-    (re)start, never per batch."""
-    meta = _single_meta_row(spark, path, "LSH index")
-    stored_family = meta["family"] if "family" in meta.__fields__ else 0
-    if stored_family != LSH_FAMILY:
-        raise ValueError(
-            f"LSH index at {path} was built under probe family "
-            f"{stored_family}; this build probes family {LSH_FAMILY} — "
-            "band keys from different families never collide (silent "
-            "false negatives), rebuild the artifact with build_lsh_index"
-        )
+    """(bands DataFrame, meta dict) of a :func:`build_lsh_index`
+    artifact, after the check every stored reader shares
+    (:func:`~hpaste_spark.operators.artifacts.open_artifact`: no
+    pending journal, an LSH artifact, this build's probe family).  The
+    bands read is a plain parquet scan — at production scale the table
+    is partition-prunable on the band key and read once per (re)start,
+    never per batch."""
+    from hpaste_spark.operators import artifacts
+
+    _, meta = artifacts.open_artifact(path, "lsh")
     return spark.read.parquet(f"{path}/bands"), meta
 
 
-def append_lsh_delta_bands(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
-):
-    """(delta band DataFrame, meta Row) for an :func:`append_lsh_index`
-    refresh — the exact relation the append writes, exposed so the
-    plan test can pin that it scans ONLY ``new_docs`` (one scan, no
-    reference to the stored bands: the pre-existing corpus is never
-    re-signed).  Geometry comes FROM the artifact's meta; the family
-    hard-check runs before any delta is signed."""
-    _, meta = read_lsh_index(spark, path)
-    delta = minhash_band_keys(
-        new_docs,
-        text_col,
-        meta["id_col"],
-        meta["num_hashes"],
-        meta["bands"],
-        meta["shingle"],
+def _lsh_encode(spark, path: str, meta: dict, docs: DataFrame) -> DataFrame:
+    """The band rows of ``docs`` under the artifact's pinned geometry —
+    the LSH append delta; it scans only ``docs``, never the stored
+    bands (the pre-existing corpus is never re-signed)."""
+    return minhash_band_keys(
+        docs, meta["text_col"], meta["id_col"], meta["num_hashes"],
+        meta["bands"], meta["shingle"],
     )
-    return delta, meta
-
-
-def append_lsh_index(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_lsh_index` artifact
-    (round-9 verdict ask #1): sign ONLY ``new_docs`` under the
-    artifact's pinned geometry, append their band rows to
-    ``{path}/bands``, then rewrite ``{path}/meta`` with the version
-    bumped.  Returns the new version.
-
-    This is the reference's standing-table posture (OpBase.scala:
-    22-109 — mutations accumulate against a persistent table; the
-    daily ingest loop never rebuilds yesterday) applied to the one
-    artifact layer that was still write-once: appending a day of
-    documents costs one signature pass over THE DELTA plus a parquet
-    append — the pre-existing corpus is never rescanned or re-signed
-    (plan-pinned in tests/test_plans.py).
-
-    Safety order: bands are appended FIRST, meta rewritten LAST —
-    a reader racing the append sees either the old index (old meta +
-    possibly some new band files: same geometry, a superset of docs —
-    still a correct index of a between-versions corpus) or the new
-    one; never mixed geometry, because the geometry is read FROM the
-    artifact and never changes across appends.  Geometry is therefore
-    not a caller parameter at all: the one remaining mismatch axis is
-    the probe FAMILY, which :func:`read_lsh_index` hard-checks before
-    any delta is signed.  The meta rewrite is a tiny 1-row overwrite;
-    a crash between bands-append and meta-rewrite leaves a valid
-    (old-version) artifact whose extra band rows a re-run would
-    duplicate — idempotent re-appends should therefore delta on doc
-    ids not yet in the index (band rows are per-doc, so duplicates
-    only inflate candidate n_bands for the duplicated doc, never
-    create false negatives).
-
-    SINGLE-WRITER CONTRACT (round-12 verdict ask #5): the version bump
-    is a read-modify-write of the 1-row meta — two CONCURRENT appenders
-    both read version v and both publish v+1, so while the appended
-    DATA from both survives (the rows are additive), the version
-    undercounts and any version-based freshness check misreads.
-    Appends, like compactions, are OFFLINE single-writer maintenance
-    actions — and since round 12 the contract is ENFORCED, not just
-    documented: every append/compaction on this artifact runs under
-    :func:`~hpaste_spark.operators.artifacts.append_lock` (O_EXCL
-    sentinel, stale-TTL break for crashed holders), so a concurrent
-    second writer raises ConcurrentMaintenanceError instead of losing
-    a version bump.  (The ANN index appends get the same property from
-    their O_EXCL journal; this artifact's meta is a parquet relation
-    fsck cannot adjudicate, hence a lock rather than a journal.)"""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        delta, meta = append_lsh_delta_bands(spark, path, new_docs, text_col)
-        delta.write.mode("append").parquet(f"{path}/bands")
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(
-                meta["num_hashes"], meta["bands"], meta["shingle"],
-                meta["id_col"], LSH_FAMILY, version,
-            )],
-            "num_hashes INT, bands INT, shingle INT, id_col STRING, "
-            "family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
-
-
-def compact_lsh_index(spark, path: str, num_files: int | None = None) -> int:
-    """COMPACTION for an append-refreshed :func:`build_lsh_index`
-    artifact — the LSM-style maintenance step to run after many
-    :func:`append_lsh_index` deltas have accumulated small band files:
-    read the band relation once, repartition it on ``band_key`` into
-    ``num_files`` files (default: Spark's shuffle partitioning), and
-    swap it in; returns the bumped meta version.  Band rows are
-    unchanged — only the FILE layout is rewritten, so probe results
-    are identical by construction (pytest-pinned) — and clustering by
-    band_key restores locality for the probe equi-join (matching keys
-    co-located in few files, the posture the one-shot build had).
-
-    OFFLINE operation: the swap is the rename-aside sequence of
-    :func:`hpaste_spark.operators.artifacts.swap_live_dir` (live →
-    bands_old, tmp → live, delete bands_old — a crash mid-swap parks
-    the complete old relation instead of having deleted it), so a
-    reader racing the compaction fails LOUDLY on a missing path
-    (never silently reads half a relation) — run it in the
-    maintenance window, like an HBase major compaction (reference
-    posture: compactions are explicit admin actions, not ambient —
-    HBaseAdmin major_compact in the reference's operational model)."""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        import shutil
-
-        from hpaste_spark.operators.artifacts import swap_live_dir
-
-        _, meta = read_lsh_index(spark, path)
-        bands = spark.read.parquet(f"{path}/bands")
-        out = bands.repartition(*([num_files] if num_files else []), "band_key")
-        tmp = f"{path}/bands_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        out.write.mode("overwrite").parquet(tmp)
-        swap_live_dir(f"{path}/bands", tmp)
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(
-                meta["num_hashes"], meta["bands"], meta["shingle"],
-                meta["id_col"], LSH_FAMILY, version,
-            )],
-            "num_hashes INT, bands INT, shingle INT, id_col STRING, "
-            "family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
 
 
 def incremental_lsh_candidates_stored(
@@ -409,7 +248,7 @@ def incremental_lsh_candidates_stored(
 ) -> DataFrame:
     """:func:`incremental_lsh_candidates` against a write-once
     :func:`build_lsh_index` artifact: num_hashes/bands/shingle and the
-    id column name come FROM ``{path}/meta`` — the caller supplies
+    id column name come FROM ``{path}/meta.json`` — the caller supplies
     only the batch and its text column, so a geometry mismatch between
     the batch's signature and the stored bands is impossible by
     construction (the hazard the free-parameter form documents away;
@@ -1665,7 +1504,10 @@ def semantic_dedup_two_level_stored(
     clustering instead of re-assigning per run."""
     from hpaste_spark.functions.vectors import as_double, dot
 
-    k2 = _single_meta_row(spark, path, "two-level index")["k2"]
+    from hpaste_spark.operators import artifacts
+
+    artifacts.require_clean(path, "two-level index")
+    k2 = artifacts.read_meta(path)["k2"]
     v = spark.read.parquet(f"{path}/vectors")
     if cells is not None:
         v = v.join(F.broadcast(cells), "cid1")
@@ -2464,7 +2306,6 @@ def build_bloom_filter(
     n: int = 5,
     m_bits: int = 16384,
     k_hashes: int = 3,
-    mode: str = "overwrite",
 ) -> None:
     """Write-once Bloom BLOCKLIST artifact (round-6 verdict ask): at
     100 TB the blocklist — all eval suites + opt-out lists + PII
@@ -2475,152 +2316,49 @@ def build_bloom_filter(
     the in-plan convenience form.
 
     Layout: ``{path}/bits`` — the ≤ m_bits-row set-bit relation — and
-    ``{path}/meta`` — one row (m_bits, k_hashes, n) pinning the filter
-    GEOMETRY, so readers always probe with the same (m, k, shingle
-    width) the bits were inserted under (probing a filter with the
-    wrong geometry silently yields false negatives, the one failure
-    mode a Bloom filter must never have).  Refreshing with new
-    blocklist material is :func:`append_bloom_filter` — Bloom bits are
-    MONOTONE (insert-only set), the friendliest artifact to append;
-    ``mode='append'`` here is rejected for the second-meta-row reason
-    shared with build_lsh_index."""
-    if mode == "append":
-        raise ValueError(
-            "build_bloom_filter(mode='append') would append a second "
-            "meta row next to the pinned geometry; refresh the artifact "
-            "with append_bloom_filter (inserts only the new material's "
-            "bits under the stored geometry and bumps the version)"
-        )
+    ``{path}/meta.json``, written last, pinning the filter GEOMETRY
+    (m_bits, k_hashes, n), the probe family and the column names, so
+    readers always probe with the same (m, k, shingle width) the bits
+    were inserted under (probing a filter with the wrong geometry
+    silently yields false negatives, the one failure mode a Bloom
+    filter must never have).  Refreshing with new blocklist material is
+    :func:`~hpaste_spark.operators.artifacts.append_artifact` — Bloom
+    bits are MONOTONE (insert-only set), the friendliest artifact to
+    append."""
+    from hpaste_spark.operators import artifacts
+
     bloom_bits(
         _doc_grams(benchmark, text_col, id_col, n).select("g"),
         "g",
         m_bits=m_bits,
         k_hashes=k_hashes,
-    ).write.mode(mode).parquet(f"{path}/bits")
-    benchmark.sparkSession.createDataFrame(
-        [(m_bits, k_hashes, n, BLOOM_FAMILY, 1)],
-        "m_bits INT, k_hashes INT, n INT, family INT, version INT",
-    ).write.mode(mode).parquet(f"{path}/meta")
+    ).write.mode("overwrite").parquet(f"{path}/bits")
+    artifacts.publish_build(
+        path, "bloom", family=BLOOM_FAMILY, m_bits=m_bits, k_hashes=k_hashes,
+        n=n, text_col=text_col, id_col=id_col,
+    )
 
 
-def _bloom_meta(spark, path: str):
-    """Meta row of a :func:`build_bloom_filter` artifact with the
-    family hard-check and single-distinct-row assert every stored
-    reader shares (probing with a foreign hash family yields silent
-    FALSE NEGATIVES — the one failure mode a Bloom filter must never
-    have — so mismatches are hard errors, never fallbacks)."""
-    meta = _single_meta_row(spark, path, "bloom filter")
-    stored_family = meta["family"] if "family" in meta.__fields__ else 1
-    if stored_family != BLOOM_FAMILY:
-        raise ValueError(
-            f"bloom filter at {path} was built under probe family "
-            f"{stored_family}; this build probes family {BLOOM_FAMILY} — "
-            "rebuild the artifact with build_bloom_filter"
-        )
-    return meta
-
-
-def append_bloom_filter(
-    spark,
-    path: str,
-    new_benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_bloom_filter` artifact
-    (the append_lsh_index posture at the Bloom layer — round-9 verdict
-    ask #1's class): hash ONLY the new blocklist material under the
-    artifact's pinned geometry (n, m_bits, k_hashes from meta), insert
-    the bits it sets that are NOT already set (a left-anti join against
-    the ≤ m_bits-row stored bit table — so the bits relation stays
-    duplicate-free and append-only), rewrite the 1-row meta with the
-    version bumped, return the new version.
-
-    Bloom bits are MONOTONE — the filter is exactly the union of every
-    insert's bit set — so append(A, B) ≡ build(A ∪ B) bit-for-bit, the
-    strongest equivalence any appended artifact here has (LSH needs
-    per-doc band reasoning; this is plain set union).  Crash safety:
-    bits append first, meta last; a torn append leaves a filter
-    missing some new bits, which a RE-RUN completes idempotently (the
-    anti-join only inserts still-missing bits) — false positives never
-    appear, and false negatives only for material whose append never
-    finished (version unbumped, detectably).
-
-    SINGLE-WRITER CONTRACT (round-12 verdict ask #5): the version bump
-    is a read-modify-write of the 1-row meta — two CONCURRENT appenders
-    both read version v and both publish v+1, so while the appended
-    DATA from both survives (the rows are additive), the version
-    undercounts and any version-based freshness check misreads.
-    Appends, like compactions, are OFFLINE single-writer maintenance
-    actions — and since round 12 the contract is ENFORCED, not just
-    documented: every append/compaction on this artifact runs under
-    :func:`~hpaste_spark.operators.artifacts.append_lock` (O_EXCL
-    sentinel, stale-TTL break for crashed holders), so a concurrent
-    second writer raises ConcurrentMaintenanceError instead of losing
-    a version bump.  (The ANN index appends get the same property from
-    their O_EXCL journal; this artifact's meta is a parquet relation
-    fsck cannot adjudicate, hence a lock rather than a journal.)"""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        meta = _bloom_meta(spark, path)
-        stored = spark.read.parquet(f"{path}/bits")
-        delta = bloom_bits(
-            _doc_grams(new_benchmark, text_col, id_col, meta["n"]).select("g"),
-            "g",
-            m_bits=meta["m_bits"],
-            k_hashes=meta["k_hashes"],
-        )
-        # MATERIALIZE the anti-join before writing to the same directory it
-        # reads (r10 ADVICE): the append only works un-materialized because
-        # Spark snapshots the file listing at read-DataFrame creation — a
-        # self-read-while-append hazard if listing/plan-caching behavior
-        # ever changes.  The missing-bit relation is ≤ m_bits rows, so an
-        # eager localCheckpoint (completes the read BEFORE the write
-        # starts) is cheap and closes the hazard structurally.
-        missing = delta.join(stored, "bit", "left_anti").localCheckpoint()
-        missing.write.mode("append").parquet(f"{path}/bits")
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(meta["m_bits"], meta["k_hashes"], meta["n"], BLOOM_FAMILY, version)],
-            "m_bits INT, k_hashes INT, n INT, family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
-
-
-def compact_bloom_filter(spark, path: str, num_files: int = 1) -> int:
-    """COMPACTION for an append-refreshed :func:`build_bloom_filter`
-    artifact (round-11 verdict ask #4): every append adds one parquet
-    fragment of newly-set bits under ``{path}/bits``; a daily-append
-    year accumulates hundreds of tiny files whose listing + open cost
-    eventually dominates the ≤ m_bits-row read.  Compaction reads the
-    bit relation once, rewrites it as ``num_files`` files (default 1 —
-    the whole relation is bounded by m_bits rows, one file is right),
-    swaps it in with the narrowed rename-aside sequence
-    (:func:`~hpaste_spark.operators.artifacts.swap_live_dir`), and
-    bumps the meta version.  Bit rows are unchanged — read-back is the
-    identical relation (pytest-pinned), only the file layout shrinks.
-    OFFLINE operation, like compact_lsh_index: a reader racing the
-    swap fails loudly on a missing path, never sees half a relation."""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        import shutil
-
-        from hpaste_spark.operators.artifacts import swap_live_dir
-
-        meta = _bloom_meta(spark, path)
-        bits = spark.read.parquet(f"{path}/bits")
-        tmp = f"{path}/bits_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        bits.coalesce(num_files).write.mode("overwrite").parquet(tmp)
-        swap_live_dir(f"{path}/bits", tmp)
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(meta["m_bits"], meta["k_hashes"], meta["n"], BLOOM_FAMILY, version)],
-            "m_bits INT, k_hashes INT, n INT, family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
+def _bloom_encode(spark, path: str, meta: dict, benchmark: DataFrame) -> DataFrame:
+    """The Bloom append delta: the bits the new blocklist material sets
+    under the pinned geometry that are NOT already set — a left-anti
+    join against the ≤ m_bits-row stored bit table, so the bits
+    relation stays duplicate-free and append-only."""
+    stored = spark.read.parquet(f"{path}/bits")
+    delta = bloom_bits(
+        _doc_grams(benchmark, meta["text_col"], meta["id_col"], meta["n"]).select("g"),
+        "g",
+        m_bits=meta["m_bits"],
+        k_hashes=meta["k_hashes"],
+    )
+    # MATERIALIZE the anti-join before writing to the same directory it
+    # reads (r10 ADVICE): the append only works un-materialized because
+    # Spark snapshots the file listing at read-DataFrame creation — a
+    # self-read-while-append hazard if listing/plan-caching behavior
+    # ever changes.  The missing-bit relation is ≤ m_bits rows, so an
+    # eager localCheckpoint (completes the read BEFORE the write
+    # starts) is cheap and closes the hazard structurally.
+    return delta.join(stored, "bit", "left_anti").localCheckpoint()
 
 
 def decontaminate_bloom_stored(
@@ -2636,8 +2374,15 @@ def decontaminate_bloom_stored(
     recomputed bits are identical relations), but the benchmark pass
     is replaced by a ≤ m_bits-row parquet READ.  The corpus side
     streams through the broadcast mask filter exactly as in the
-    in-plan form: never shuffled, no pair expansion."""
-    meta = _bloom_meta(spark, path)
+    in-plan form: never shuffled, no pair expansion.  The geometry
+    comes from the artifact after the check every stored reader shares
+    (:func:`~hpaste_spark.operators.artifacts.open_artifact`: no
+    pending journal, a Bloom artifact, this build's probe family —
+    probing with a foreign hash family yields silent FALSE NEGATIVES,
+    so a mismatch is a hard error, never a fallback)."""
+    from hpaste_spark.operators import artifacts
+
+    _, meta = artifacts.open_artifact(path, "bloom")
     bits = spark.read.parquet(f"{path}/bits")
     return _bloom_flag_counts(
         corpus,

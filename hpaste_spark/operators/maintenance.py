@@ -131,86 +131,3 @@ def changes_between(table, spark: SparkSession, from_version: int, to_version: i
     return classified.select(
         "rowkey", "_change", *[F.col("_vals")[c].alias(c) for c in data_cols]
     )
-
-
-#: the parquet-meta standing artifacts and their layout-compaction
-#: seams: family → (primary data dir, module, compact function).  The
-#: ANN families (IVF/PQ/IVFADC, JSON meta + journals) have their own
-#: richer pass — similarity.ann_maintain — with a drift monitor; these
-#: three are EXACT structures (band rows / bloom bits / HDR counters),
-#: so the only maintenance question is file layout.
-_STANDING_FAMILIES = {
-    "lsh": ("bands", "hpaste_spark.operators.dedup", "compact_lsh_index"),
-    "bloom": ("bits", "hpaste_spark.operators.dedup", "compact_bloom_filter"),
-    "hdr": ("sketch", "hpaste_spark.operators.sketches", "compact_hdr_baseline"),
-}
-
-
-def standing_artifact_maintain(
-    spark: SparkSession,
-    path: str,
-    family: str,
-    max_files_per_dir: int = 64,
-    apply: bool = False,
-) -> dict:
-    """ONE-CALL maintenance pass for the parquet-meta standing
-    artifacts (round 13 — `similarity.ann_maintain`'s sibling for the
-    LSH band index, Bloom blocklist, and HDR baseline, completing the
-    loop story for every standing artifact in the repo): fsck first
-    (`artifacts.check_artifact(repair=True)` — clears parked `*_old` /
-    `*_compact_tmp` leftovers of a crashed swap; these artifacts'
-    appends are journal-free BY DESIGN because their torn states are
-    benign — band rows only inflate candidate counts, bloom inserts
-    are idempotent, HDR partials are additive), then the small-files
-    signal (`artifacts.artifact_stats` file counts on the family's
-    data dir — appends add one fragment per delta, and the listing +
-    footer-open cost is O(#files) per read), then, when over threshold
-    and ``apply=True``, the family's layout compaction — which takes
-    its own `append_lock`, rewrites the relation (rows unchanged;
-    HDR's rewrite is the idempotent hdr_merge), and swaps rename-aside.
-
-    No drift leg: these are exact structures; there is no geometry to
-    go stale (the reason ann_maintain is the richer pass).  Returns
-    the ann_maintain-shaped report dict: ``{"family", "fsck",
-    "stats", "small_files", "action", "plan", "applied",
-    "version_after"}``.
-    """
-    import importlib
-
-    from hpaste_spark.operators import artifacts
-
-    if family not in _STANDING_FAMILIES:
-        raise ValueError(
-            f"unknown standing-artifact family {family!r} — one of "
-            f"{sorted(_STANDING_FAMILIES)} (ANN indexes use "
-            "similarity.ann_maintain)"
-        )
-    data_dir, mod_name, fn_name = _STANDING_FAMILIES[family]
-    fsck = artifacts.check_artifact(
-        path, repair=True, max_files_per_dir=max_files_per_dir
-    )
-    stats = artifacts.artifact_stats(path)
-    if data_dir not in stats["data_dirs"]:
-        raise ValueError(
-            f"artifact at {path} has no {data_dir}/ dir — not a "
-            f"{family} artifact (dirs: {sorted(stats['data_dirs'])})"
-        )
-    small_files = stats["data_dirs"][data_dir] > max_files_per_dir
-    action = "compact" if small_files else "none"
-    plan = f"{fn_name}(path)" if small_files else "none"
-    applied = False
-    version_after = None
-    if apply and small_files:
-        compact = getattr(importlib.import_module(mod_name), fn_name)
-        version_after = compact(spark, path)
-        applied = True
-    return {
-        "family": family,
-        "fsck": fsck,
-        "stats": stats,
-        "small_files": small_files,
-        "action": action,
-        "plan": plan,
-        "applied": applied,
-        "version_after": version_after,
-    }

@@ -330,10 +330,11 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
     family's map) and its ``__ts`` map; ``.values()`` deletes null the
     named typed cells and drop the named keys from a map family and
     from the ``__ts`` map.  Scoped deletes compose, per touched column,
-    into ONE ``CASE WHEN rowkey = …`` expression — family deletes then
-    value deletes for each key, as they apply — issued as one
-    projection, so the plan (and its analysis) does not grow with the
-    number of deletes."""
+    into ONE ``CASE WHEN rowkey = … THEN … ELSE col END`` expression —
+    family deletes then value deletes for each key, as they apply —
+    written as SQL text (the :func:`merge_sql` move) and issued as one
+    projection, so neither the plan nor the Python-side expression
+    building grows a call per (column, key)."""
     if rows:
         df = df.filter(~F.col("rowkey").isin(list(rows)))
     # column -> {key: [cell transform, ...]} in application order
@@ -343,10 +344,11 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
         steps.setdefault(column, {}).setdefault(to_spark_value(key), []).append(step)
 
     def null(column):
-        return lambda c: F.lit(None).cast(dtypes[column])
+        return lambda c: f"CAST(NULL AS {dtypes[column].simpleString()})"
 
     def drop_keys(qs):
-        return lambda c: F.map_filter(c, lambda k, v: ~k.isin(qs))
+        keys = ", ".join(_sql_lit(q) for q in qs)
+        return lambda c: f"map_filter({c}, (k__, v__) -> NOT k__ IN ({keys}))"
 
     for key, fams in families.items():
         for fname in fams:
@@ -371,21 +373,36 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
         return df
     dtypes = {f.name: f.dataType for f in df.schema.fields}
 
-    def cell(column: str):
-        expr = None
+    def cell(column: str) -> str:
+        branches = []
         for key, fns in steps[column].items():
-            value = F.col(column)
+            value = _q(column)
             for fn in fns:
                 value = fn(value)
-            cond = F.col("rowkey") == F.lit(key)
-            expr = F.when(cond, value) if expr is None else expr.when(cond, value)
-        return expr.otherwise(F.col(column)).alias(column)
+            branches.append(f"WHEN rowkey = {_sql_lit(key)} THEN {value}")
+        return f"CASE {' '.join(branches)} ELSE {_q(column)} END AS {_q(column)}"
 
-    return df.select(*[cell(c) if c in steps else F.col(c) for c in df.columns])
+    return df.selectExpr(*[cell(c) if c in steps else _q(c) for c in df.columns])
 
 
 def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_lit(v) -> str:
+    """A row key or qualifier as a SQL literal; strings are quoted with
+    ``\\`` and ``'`` escaped."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    raise TypeError(f"no SQL literal for a delete key of type {type(v).__name__}")
 
 
 def _is_numeric(dtype) -> bool:

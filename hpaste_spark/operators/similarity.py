@@ -689,7 +689,6 @@ def build_ivf_index(
     iterations: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "overwrite",
 ) -> None:
     """Write-once IVF index build: ``{path}/centroids`` (cid, cvec) and
     ``{path}/vectors`` — the corpus stored parquet-PARTITIONED BY its
@@ -701,38 +700,33 @@ def build_ivf_index(
     subsequent query prunes to its ``nprobe`` cid partitions instead of
     re-clustering the corpus (what in-plan :func:`ivf_topk` must do).
     Size ``k_centroids`` ~ sqrt(corpus) so one cid list ≈ one task.
-    ``mode='append'`` is rejected (the build_lsh_index reasoning, worse
-    here: it would append a SECOND centroid relation next to the first,
-    and readers would probe/assign under a mixed geometry); refresh a
-    standing index with :func:`append_index`, re-cluster with
-    :func:`compact_ivf_index`.
+    Refresh a standing index with
+    :func:`~hpaste_spark.operators.artifacts.append_artifact`,
+    re-cluster with :func:`compact_ivf_index`.
 
-    Written LAST: ``{path}/meta.json`` (:func:`_write_index_meta`) —
-    pinned ``dim`` and ``k_centroids`` plus the clustering epoch, also
-    stamped as an ``_epoch`` sidecar inside both data dirs so
-    :func:`~hpaste_spark.operators.artifacts.check_artifact` can
-    adjudicate a crashed two-directory compaction.
+    Written LAST: ``{path}/meta.json`` (:func:`_publish_index`) —
+    pinned ``dim``, ``k_centroids`` and column names plus the
+    clustering epoch, also stamped as an ``_epoch`` sidecar inside both
+    data dirs so :func:`~hpaste_spark.operators.artifacts.check_artifact`
+    can adjudicate a crashed two-directory compaction.
     """
     from hpaste_spark.operators import artifacts
 
-    if mode == "append":
-        raise ValueError(
-            "build_ivf_index(mode='append') would write a second centroid "
-            "set next to the artifact's pinned geometry; append new "
-            "vectors with append_index (assigns the delta under the "
-            "STORED centroids) and re-cluster with compact_ivf_index"
-        )
     dim = len(corpus.select(vec_col).first()[0])
     cent = ivf_centroids(corpus, k_centroids, vec_col, id_col, iterations).persist()
     epoch = artifacts.new_epoch()
     try:
-        cent.write.mode(mode).parquet(f"{path}/centroids")
-        _write_rows(_ivf_rows(corpus, cent, vec_col, id_col), f"{path}/vectors", True, mode)
+        cent.write.mode("overwrite").parquet(f"{path}/centroids")
+        artifacts.write_rows(
+            _ivf_rows(corpus, cent, vec_col, id_col), f"{path}/vectors", "cid"
+        )
     finally:
         cent.unpersist()
     artifacts.write_epoch(f"{path}/centroids", epoch)
     artifacts.write_epoch(f"{path}/vectors", epoch)
-    _write_index_meta(path, "ivf", dim, k_centroids=int(k_centroids), epoch=epoch)
+    _publish_index(
+        path, "ivf", dim, vec_col, id_col, k_centroids=int(k_centroids), epoch=epoch
+    )
 
 
 def _ivf_rows(df: DataFrame, cent: DataFrame, vec_col: str, id_col: str) -> DataFrame:
@@ -741,98 +735,18 @@ def _ivf_rows(df: DataFrame, cent: DataFrame, vec_col: str, id_col: str) -> Data
     return df.join(ivf_assign(df, cent, vec_col, id_col), id_col)
 
 
-def _write_rows(rows: DataFrame, dest: str, partitioned: bool, mode: str) -> None:
-    """Write an index data relation — a partitioned one by ``cid``, one
-    directory per inverted list, so a probe prunes to its lists."""
-    writer = rows.write.mode(mode)
-    (writer.partitionBy("cid") if partitioned else writer).parquet(dest)
-
-
-def _write_index_meta(path: str, kind: str, dim: int, **pinned) -> None:
-    """Publish a fresh build: ``{path}/meta.json``, written LAST (the
-    build_lsh_index discipline) — version 1, the pinned ``dim`` and the
-    family's ``pinned`` geometry, ``delta_sigs`` (the append-retry
-    replay ring) and the ``compacted_version`` / ``trained_version``
-    markers.  A plain JSON file, not a parquet relation, deliberately:
-    fsck adjudicates torn appends without a SparkSession."""
+def _publish_index(
+    path: str, kind: str, dim: int, vec_col: str, id_col: str, **pinned
+) -> None:
+    """Publish a fresh ANN build's ``meta.json`` LAST
+    (:func:`~hpaste_spark.operators.artifacts.publish_build`): the
+    pinned ``dim``, the family's geometry and the column names a delta
+    is read by."""
     from hpaste_spark.operators import artifacts
 
-    artifacts.write_meta(
-        path,
-        {
-            "kind": kind,
-            "version": 1,
-            "dim": int(dim),
-            **pinned,
-            "last_delta_sig": None,
-            "delta_sigs": [],
-            "compacted_version": 1,
-            "trained_version": 1,
-        },
+    artifacts.publish_build(
+        path, kind, dim=int(dim), vec_col=vec_col, id_col=id_col, **pinned
     )
-
-
-def _ann_append_open(
-    path: str,
-    meta: dict,
-    new_vectors: DataFrame,
-    vec_col: str,
-    id_col: str,
-    data_dirs: "list[str]",
-):
-    """Shared open-the-journal half of the ANN torn-append protocol
-    (round-12 verdict ask #1; the LSH delta-first/meta-last posture
-    extended to the index artifacts where a torn or retried append is
-    NOT benign — duplicate ids occupy two top-k ranks).  The caller
-    has refused a tree with a pending journal (loud, single-writer)
-    and read ``meta``; then:
-
-    1. validate the delta's dimensionality against the meta's pinned
-       geometry (a wrong-dim delta would mis-split sub/wpos and encode
-       garbage with no error — r11 ADVICE),
-    2. compute the delta's content signature; if the meta's sig RING
-       (the last :data:`~hpaste_spark.operators.artifacts.
-       DELTA_SIG_RING` committed appends — round-13, deepened from the
-       depth-1 ``last_delta_sig``) remembers it, the call is a replay
-       of a committed append → no-op,
-    3. otherwise open the :data:`~hpaste_spark.operators.artifacts.
-       APPEND_PENDING` journal with a pre-append file snapshot,
-    4. re-read the meta INSIDE the journal's exclusion window (round-13,
-       r12 ADVICE TOCTOU item): if another appender committed between
-       the caller's read and step 3's O_EXCL create, the journaled
-       target version is stale — re-check the replay ring against the
-       fresh meta (abort to a no-op if the race made us a replay) and
-       re-journal with the correct target, so we never publish a
-       version another writer already published or clobber its
-       signature.
-
-    Returns ``(meta, sig)``; ``sig is None`` means no-op (retry replay
-    or empty delta) and the caller must write nothing."""
-    from hpaste_spark.operators import artifacts
-
-    first = new_vectors.select(vec_col).first()
-    if first is None:
-        return meta, None  # empty delta: nothing to journal or write
-    if len(first[0]) != meta["dim"]:
-        raise ValueError(
-            f"append delta dimensionality {len(first[0])} != the "
-            f"artifact's pinned dim {meta['dim']} at {path} — encoding "
-            "it would silently mis-split subvectors; fix the delta or "
-            "rebuild the index at the new dimensionality"
-        )
-    sig = artifacts.delta_signature(new_vectors, id_col, vec_col)
-    if artifacts.sig_is_replay(meta, sig):
-        return meta, None  # replay of a ring-remembered committed append
-    artifacts.begin_append(path, data_dirs, sig, meta["version"] + 1)
-    fresh = artifacts.read_meta(path)
-    if fresh is not None and fresh.get("version") != meta.get("version"):
-        # another appender committed in the read→journal gap
-        if artifacts.sig_is_replay(fresh, sig):
-            artifacts.abort_append(path)
-            return fresh, None
-        artifacts.rejournal_append(path, data_dirs, sig, fresh["version"] + 1)
-        meta = fresh
-    return meta, sig
 
 
 def compact_ivf_index(
@@ -840,8 +754,6 @@ def compact_ivf_index(
     path: str,
     k_centroids: "int | None" = None,
     iterations: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """MAJOR COMPACTION for an append-refreshed :func:`build_ivf_index`
     artifact — IVF's re-train (LSM-style: appends assign the delta
@@ -850,8 +762,9 @@ def compact_ivf_index(
     the WHOLE standing corpus and restores fresh-build recall).  Run
     it when :func:`drift_recall` (appended-index recall vs a fresh
     re-cluster's, graded against exact truth) says the gap is no
-    longer acceptable; :func:`ann_maintain` does, at the measured-best
-    ``iterations``.
+    longer acceptable;
+    :func:`~hpaste_spark.operators.artifacts.maintain_artifact` does,
+    at the measured-best ``iterations``.
 
     Equivalent by construction to ``build_ivf_index(stored corpus,
     path)`` with the same (k_centroids, iterations) — pytest pins that
@@ -861,7 +774,8 @@ def compact_ivf_index(
     the vectors tree: the rewrite repartitions on cid, so each cid
     partition lands as one file in practice.
 
-    OFFLINE, SINGLE-WRITER, JOURNALED (:func:`_rewrite_journaled`):
+    OFFLINE, SINGLE-WRITER, JOURNALED
+    (:func:`~hpaste_spark.operators.artifacts._rewrite_journaled`):
     centroids and vectors are rebuilt into ``*_compact_tmp`` dirs
     stamped with one fresh clustering EPOCH (the two directories
     belong together iff their epochs match), then vectors swap before
@@ -875,7 +789,8 @@ def compact_ivf_index(
     compaction (pytest-pinned)."""
     from hpaste_spark.operators import artifacts
 
-    artifacts.require_clean(path, "IVF index")
+    _, meta = artifacts.open_artifact(path, "ivf")
+    vec_col, id_col = meta["vec_col"], meta["id_col"]
 
     def fill(tmp: dict) -> dict:
         corpus = spark.read.parquet(f"{path}/vectors").drop("cid")
@@ -885,67 +800,17 @@ def compact_ivf_index(
         cent = ivf_centroids(corpus, k, vec_col, id_col, iterations).persist()
         try:
             cent.write.mode("overwrite").parquet(tmp["centroids"])
-            _write_rows(
+            artifacts.write_rows(
                 # consolidate append fragments per cid
                 _ivf_rows(corpus, cent, vec_col, id_col).repartition("cid"),
                 tmp["vectors"],
-                True,
-                "overwrite",
+                "cid",
             )
         finally:
             cent.unpersist()
         return {"k_centroids": int(k)}
 
-    _rewrite_journaled(path, ["vectors", "centroids"], fill, retrains=True)
-
-
-def _rewrite_journaled(path: str, dirs: "list[str]", fill, retrains: bool = False) -> str:
-    """The journaled single-writer rewrite every compaction shares
-    (round-12 verdict ask #2; :mod:`hpaste_spark.operators.artifacts`).
-    The ``compact_pending.json`` journal opens FIRST (round-13, r12
-    ADVICE: its O_EXCL create is the single-writer lock and it must
-    cover the LONG Spark tmp-build too — an append that began and
-    committed during the build would otherwise be silently discarded
-    by the swap while meta kept its version bump and signature,
-    turning the retry into a no-op).  ``fill({dir: tmp_dir})`` then
-    builds every ``<dir>_compact_tmp`` and returns the meta updates to
-    journal; the tmps get one fresh epoch stamp, the swap plan lands
-    in the journal (until then fsck adjudicates a crash as 'before any
-    swap' and discards the re-derivable tmps), the dirs swap in list
-    order with the narrowed rename-aside sequence
-    (:func:`~hpaste_spark.operators.artifacts.swap_live_dir`), and
-    :func:`~hpaste_spark.operators.artifacts.finish_compact` bumps the
-    meta and drops the journal.  ``retrains`` also moves
-    ``trained_version`` — only a geometry re-train may; a layout-only
-    rewrite leaves the frozen geometry exactly as drifted as before.
-    Returns the epoch."""
-    import shutil
-
-    from hpaste_spark.operators import artifacts
-
-    artifacts.open_compact(path)  # exclusion covers build+swap+publish
-    try:
-        tmps = {d: f"{path}/{d}_compact_tmp" for d in dirs}
-        for tmp in tmps.values():
-            shutil.rmtree(tmp, ignore_errors=True)
-        updates = fill(tmps)
-        epoch = artifacts.new_epoch()
-        for tmp in tmps.values():
-            artifacts.write_epoch(tmp, epoch)
-        target = artifacts.read_meta(path)["version"] + 1
-        if retrains:
-            updates["trained_version"] = target
-        info = artifacts.journal_compact_swap(path, dirs, epoch, target, updates)
-    except BaseException:
-        # a Python failure BEFORE any swap: roll the journal back (the
-        # tmp leftovers are re-derivable; the next run clears them).  A
-        # crash after journal_compact_swap is fsck's job, not ours.
-        artifacts.abort_compact(path)
-        raise
-    for d in dirs:
-        artifacts.swap_live_dir(f"{path}/{d}", tmps[d])
-    artifacts.finish_compact(path, info)
-    return epoch
+    artifacts._rewrite_journaled(path, ["vectors", "centroids"], fill, retrains=True)
 
 
 def ivf_topk_indexed(
@@ -1599,13 +1464,13 @@ def build_two_level_index(
     k2: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "overwrite",
 ) -> None:
     """Write-once HIERARCHICAL index build (the :func:`build_ivf_index`
     move applied to :func:`_two_level_model`): ``{path}/centroids``
     (cid1, cvec), ``{path}/subcentroids`` (cid1, scid, cvec),
-    ``{path}/meta`` (one row: k1, k2), and ``{path}/vectors`` — the
-    corpus + (scid, cc) stored parquet-PARTITIONED BY cid1.
+    ``{path}/vectors`` — the corpus + (scid, cc) stored
+    parquet-PARTITIONED BY cid1 — and ``{path}/meta.json`` (k1, k2),
+    written last.
 
     One coarse cell = one partition directory, so per-cell work —
     :func:`~hpaste_spark.operators.dedup.semantic_dedup_two_level_stored`,
@@ -1614,28 +1479,23 @@ def build_two_level_index(
     sweep is embarrassingly parallel over cid1 partitions off this
     write-once layout instead of re-clustering per run.  Cf. the
     reference's region pre-split locality move (mapreduce2.scala:546)."""
+    from hpaste_spark.operators import artifacts
+
     cents1, cents2, assign = _two_level_model(corpus, k1, k2, vec_col, id_col)
     # cents2's lineage re-runs the level-1 assignment and assign's re-runs
     # cents2: persist both so each pass over the corpus happens once
     cents2 = cents2.persist()
     assign = assign.persist()
     try:
-        cents1.withColumnRenamed("cid", "cid1").write.mode(mode).parquet(
+        cents1.withColumnRenamed("cid", "cid1").write.mode("overwrite").parquet(
             f"{path}/centroids"
         )
-        cents2.write.mode(mode).parquet(f"{path}/subcentroids")
-        corpus.sparkSession.createDataFrame(
-            [(int(k1), int(k2))], "k1 int, k2 int"
-        ).write.mode(mode).parquet(f"{path}/meta")
-        (
-            corpus.join(assign, id_col)
-            .write.mode(mode)
-            .partitionBy("cid1")
-            .parquet(f"{path}/vectors")
-        )
+        cents2.write.mode("overwrite").parquet(f"{path}/subcentroids")
+        artifacts.write_rows(corpus.join(assign, id_col), f"{path}/vectors", "cid1")
     finally:
         assign.unpersist()
         cents2.unpersist()
+    artifacts.write_meta(path, {"kind": "two_level", "k1": int(k1), "k2": int(k2)})
 
 
 def build_pq_index(
@@ -1645,7 +1505,6 @@ def build_pq_index(
     k: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "overwrite",
 ) -> None:
     """Write-once PQ index build: ``{path}/codebooks`` (sub, code,
     cvec) and ``{path}/codes`` (id, codes ARRAY<INT>[m]) — the
@@ -1656,7 +1515,10 @@ def build_pq_index(
     :func:`pq_topk` must re-derive per query).  At 100 TB the codes
     table is ~d·8/m× smaller than the corpus — often the difference
     between a cached working set and a cold scan.  ``meta.json`` last
-    (:func:`_write_index_meta`), pinning ``dim``, ``m`` and ``k``."""
+    (:func:`_publish_index`), pinning ``dim``, ``m``, ``k`` and the
+    column names."""
+    from hpaste_spark.operators import artifacts
+
     dim = len(corpus.select(vec_col).first()[0])
     if dim % m != 0:
         raise ValueError(
@@ -1665,11 +1527,13 @@ def build_pq_index(
         )
     cb = pq_codebooks(corpus, m, k, vec_col, id_col).persist()
     try:
-        cb.write.mode(mode).parquet(f"{path}/codebooks")
-        _write_rows(pq_encode(corpus, cb, m, vec_col, id_col), f"{path}/codes", False, mode)
+        cb.write.mode("overwrite").parquet(f"{path}/codebooks")
+        artifacts.write_rows(
+            pq_encode(corpus, cb, m, vec_col, id_col), f"{path}/codes", None
+        )
     finally:
         cb.unpersist()
-    _write_index_meta(path, "pq", dim, m=int(m), k=int(k))
+    _publish_index(path, "pq", dim, vec_col, id_col, m=int(m), k=int(k))
 
 
 def pq_topk_indexed(
@@ -1939,7 +1803,6 @@ def build_ivfadc_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: "int | None" = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write-once build of the COMPLETE production ANN artifact:
     ``{path}/centroids`` (cid, cvec), ``{path}/codebooks`` (the
@@ -1950,8 +1813,10 @@ def build_ivfadc_index(
     (the :func:`build_ivf_index` leg) and each read row is m ints, not
     d doubles (the :func:`build_pq_index` leg).  Definitionally the
     same model as :func:`ivfadc_topk` (shared :func:`_ivfadc_model`).
-    ``meta.json`` last (:func:`_write_index_meta`), pinning ``dim``,
-    ``m``, ``k`` and ``k_centroids``."""
+    ``meta.json`` last (:func:`_publish_index`), pinning ``dim``,
+    ``m``, ``k``, ``k_centroids`` and the column names."""
+    from hpaste_spark.operators import artifacts
+
     if dim is None:
         first = corpus.select(vec_col).first()
         dim = len(first[0])
@@ -1963,11 +1828,12 @@ def build_ivfadc_index(
     cents, rcb, coded = _ivfadc_model(
         corpus, k_centroids, m, k, vec_col, id_col, dim
     )
-    cents.write.mode(mode).parquet(f"{path}/centroids")
-    rcb.write.mode(mode).parquet(f"{path}/codebooks")
-    _write_rows(coded, f"{path}/codes", True, mode)
-    _write_index_meta(
-        path, "ivfadc", dim, m=int(m), k=int(k), k_centroids=int(k_centroids)
+    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    rcb.write.mode("overwrite").parquet(f"{path}/codebooks")
+    artifacts.write_rows(coded, f"{path}/codes", "cid")
+    _publish_index(
+        path, "ivfadc", dim, vec_col, id_col,
+        m=int(m), k=int(k), k_centroids=int(k_centroids),
     )
 
 
@@ -2158,38 +2024,27 @@ def hard_negative_mining(
 
 
 # ---------------------------------------------------------------------------
-# ANN index lifecycle: append, layout compaction, drift monitor, re-train
-# and the one-call maintenance pass, each written ONCE over a per-family
-# codec (the HPaste move: one HbaseTable lifecycle, a pluggable converter
-# per column — HbaseTable.scala:51, Serialization.scala:155).  The family
-# is read from the artifact's meta.json ``kind``; the codec holds all a
-# lifecycle step needs to know about it — where appends land, how a delta
-# is encoded under the stored model, the exact-truth metric, and which
-# re-train candidates the drift monitor grades.
+# The ANN leg of the standing-artifact lifecycle (artifacts.py owns the
+# append, the layout compaction and the maintenance pass for all six
+# families): the delta encoders under the stored model, the drift monitor
+# and the re-train, each written ONCE over a per-family ``_Ann`` — the
+# exact-truth metric, which re-train candidates the monitor grades, and
+# how a candidate is realized.
 # ---------------------------------------------------------------------------
 
 
 @dataclasses.dataclass(frozen=True)
-class _Codec:
-    kind: str
-    #: the data dir appends land in, and whether it is partitioned by cid
-    data: str
-    partitioned: bool
+class _Ann:
     #: the artifact stores its full vectors (IVF): it is its own store
     #: of record, so it re-trains and grades from itself; a code-only
     #: artifact needs the caller-named corpus
     stores_vectors: bool
     #: meta keys a re-train rebuilds with (the pinned geometry)
     geometry: "tuple[str, ...]"
-    #: sibling dirs whose epoch sidecar must keep matching ``data``'s
-    stamped: "tuple[str, ...]"
     #: data rows stored per vector (the cardinality check's multiplier)
     rows_per_vector: Callable[[dict], int]
     #: build_<kind>_index(corpus, path, **geometry, vec_col, id_col)
     build: Callable
-    #: (spark, path, meta, df, vec_col, id_col) -> the delta's data rows
-    #: encoded under the STORED model
-    encode: Callable
     #: (e, qe) -> the exact-truth ordering column (best first)
     exact_key: Callable
     #: (spark, path, meta, corpus, id_col, iterations) -> [(variant, model)]
@@ -2198,18 +2053,16 @@ class _Codec:
     #: their ordering column)
     approx: Callable
 
-    def retrain(self, spark, path, corpus, meta, variant, apply, vec_col, id_col) -> str:
+    def retrain(self, spark, path, corpus, meta, variant, apply) -> str:
         """The call that realizes the graded re-train ``variant`` (run
         when ``apply``), named as the maintenance plan."""
         if self.stores_vectors:
             its = int(variant.removeprefix("compact_it"))
             if apply:
-                compact_ivf_index(
-                    spark, path, iterations=its, vec_col=vec_col, id_col=id_col
-                )
+                compact_ivf_index(spark, path, iterations=its)
             return f"compact_ivf_index(path, iterations={its})"
         if apply:
-            retrain_index(spark, corpus, path, vec_col, id_col)
+            retrain_index(spark, corpus, path)
         return "retrain_index(corpus, path)  # blue/green root swap; " + ", ".join(
             f"{g}={meta[g]}" for g in self.geometry
         )
@@ -2233,19 +2086,22 @@ def _l2_asc(e: F.Column, qe: F.Column) -> F.Column:
     return F.round(_l2sq(e, qe), 6).asc()
 
 
-def _ivf_encode(spark, path, meta, df, vec_col, id_col) -> DataFrame:
-    return _ivf_rows(df, spark.read.parquet(f"{path}/centroids"), vec_col, id_col)
+def _ivf_encode(spark, path, meta, df) -> DataFrame:
+    cent = spark.read.parquet(f"{path}/centroids")
+    return _ivf_rows(df, cent, meta["vec_col"], meta["id_col"])
 
 
-def _pq_encode_stored(spark, path, meta, df, vec_col, id_col) -> DataFrame:
+def _pq_encode_stored(spark, path, meta, df) -> DataFrame:
     cb = spark.read.parquet(f"{path}/codebooks")
-    return pq_encode(df, cb, int(meta["m"]), vec_col, id_col)
+    return pq_encode(df, cb, int(meta["m"]), meta["vec_col"], meta["id_col"])
 
 
-def _ivfadc_encode_stored(spark, path, meta, df, vec_col, id_col) -> DataFrame:
+def _ivfadc_encode_stored(spark, path, meta, df) -> DataFrame:
     cents, rcb = (spark.read.parquet(f"{path}/{d}") for d in ("centroids", "codebooks"))
     m, dim = int(meta["m"]), int(meta["dim"])
-    return _ivfadc_encode(df, cents, m, vec_col, id_col, dim, rcb=rcb)[1]
+    return _ivfadc_encode(
+        df, cents, m, meta["vec_col"], meta["id_col"], dim, rcb=rcb
+    )[1]
 
 
 def _ivf_candidates(spark, path, meta, corpus, id_col, candidate_iterations):
@@ -2490,176 +2346,50 @@ def _ivfadc_approx(model, q_df, meta, nprobe, id_col):
     return scored, F.col("approx_dist").asc()
 
 
-_CODECS = {
-    "ivf": _Codec(
-        kind="ivf",
-        data="vectors",
-        partitioned=True,
-        stores_vectors=True,
-        geometry=("k_centroids",),
-        stamped=("centroids",),
-        rows_per_vector=lambda meta: 1,
-        # late-bound builds: a patched module attribute is honoured
-        build=lambda *a, **kw: build_ivf_index(*a, **kw),
-        encode=_ivf_encode,
-        exact_key=_cosine_desc,
-        candidates=_ivf_candidates,
-        approx=_ivf_approx,
-    ),
-    "pq": _Codec(
-        kind="pq",
-        data="codes",
-        partitioned=False,
-        stores_vectors=False,
-        geometry=("m", "k"),
-        stamped=(),
-        rows_per_vector=lambda meta: 1,
-        build=lambda *a, **kw: build_pq_index(*a, **kw),
-        encode=_pq_encode_stored,
-        exact_key=_l2_asc,
-        candidates=_pq_candidates,
-        approx=_pq_approx,
-    ),
-    "ivfadc": _Codec(
-        kind="ivfadc",
-        data="codes",
-        partitioned=True,
-        stores_vectors=False,
-        geometry=("k_centroids", "m", "k"),
-        stamped=(),
-        rows_per_vector=lambda meta: int(meta["m"]),
-        build=lambda *a, **kw: build_ivfadc_index(*a, **kw),
-        encode=_ivfadc_encode_stored,
-        exact_key=_l2_asc,
-        candidates=_ivfadc_candidates,
-        approx=_ivfadc_approx,
-    ),
-}
+#: late-bound builds: a patched module attribute is honoured
+_IVF = _Ann(
+    stores_vectors=True,
+    geometry=("k_centroids",),
+    rows_per_vector=lambda meta: 1,
+    build=lambda *a, **kw: build_ivf_index(*a, **kw),
+    exact_key=_cosine_desc,
+    candidates=_ivf_candidates,
+    approx=_ivf_approx,
+)
+_PQ = _Ann(
+    stores_vectors=False,
+    geometry=("m", "k"),
+    rows_per_vector=lambda meta: 1,
+    build=lambda *a, **kw: build_pq_index(*a, **kw),
+    exact_key=_l2_asc,
+    candidates=_pq_candidates,
+    approx=_pq_approx,
+)
+_IVFADC = _Ann(
+    stores_vectors=False,
+    geometry=("k_centroids", "m", "k"),
+    rows_per_vector=lambda meta: int(meta["m"]),
+    build=lambda *a, **kw: build_ivfadc_index(*a, **kw),
+    exact_key=_l2_asc,
+    candidates=_ivfadc_candidates,
+    approx=_ivfadc_approx,
+)
 
 
-def _open_index(path: str) -> "tuple[_Codec, dict]":
-    """(codec, meta) of the stored ANN index at ``path`` — refusing,
-    loudly, a tree with a pending journal (a crashed or concurrent
-    append/compaction) and anything that is not a build_*_index
-    artifact."""
+def _open_index(path: str) -> "tuple[object, dict]":
+    """(codec, meta) of the stored ANN index at ``path``: the
+    artifacts check every reader runs, plus a refusal of the families
+    with no drift leg."""
     from hpaste_spark.operators import artifacts
 
-    artifacts.require_clean(path, "ANN index")
-    meta = artifacts.read_meta(path)
-    kind = None if meta is None else meta.get("kind")
-    if kind not in _CODECS:
+    codec, meta = artifacts.open_artifact(path)
+    if codec.ann is None:
         raise ValueError(
-            f"artifact at {path} has kind={kind!r} — not a stored ANN "
-            "index (no meta.json, or another family); build it with "
-            "build_ivf_index / build_pq_index / build_ivfadc_index"
+            f"artifact at {path} has kind={meta['kind']!r} — not a stored "
+            "ANN index; build it with build_ivf_index / build_pq_index / "
+            "build_ivfadc_index"
         )
-    return _CODECS[kind], meta
-
-
-def _ann_append_commit(path: str, meta: dict, sig: str) -> int:
-    """Publish half of the protocol: meta LAST (version bump + the sig
-    recorded in the ``delta_sigs`` replay ring), then drop the
-    journal.  Returns the new version."""
-    from hpaste_spark.operators import artifacts
-
-    meta = dict(meta)
-    meta["version"] = meta["version"] + 1
-    artifacts.record_delta_sig(meta, sig)
-    artifacts.commit_append(path, meta)
-    return meta["version"]
-
-
-def append_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """INCREMENTAL refresh of any stored ANN index (the
-    append_lsh_index posture at the ANN layer): encode ONLY the new
-    vectors under the artifact's STORED model — IVF assigns them to
-    the stored centroids, PQ encodes them under the stored codebooks,
-    IVFADC does both under the stored coarse centroids and residual
-    codebooks — and append the rows into the data dir (new files land
-    INSIDE the existing ``cid=`` partitions, so probe-side pruning is
-    unchanged).  The standing corpus is never rescanned, re-clustered
-    or re-encoded; the geometry comes from the artifact, so a mismatch
-    is impossible by construction.
-
-    Honest semantics: the model is FROZEN at build, so an appended
-    index equals "train on the original corpus, then encode the delta
-    under that model" — NOT a re-train on the union.  If the data
-    distribution drifts, recall degrades; :func:`drift_recall` grades
-    by how much and :func:`ann_maintain` decides the re-train, like an
-    LSM major compaction.
-
-    TORN-APPEND PROTOCOL (round-12; see
-    :mod:`hpaste_spark.operators.artifacts`): journal first
-    (``append_pending.json`` with a pre-append file snapshot — its
-    O_EXCL create is also the single-writer lock), delta data next,
-    meta LAST (version bump + the delta's content signature), journal
-    dropped.  A crash anywhere fails readers LOUDLY instead of serving
-    a silently partial delta; ``check_artifact(path, repair=True)``
-    rolls a torn append back to exactly the pre-append tree, after
-    which the RETRY is clean — and a retry of an already-committed
-    append is recognized by its signature and becomes a no-op, never
-    a duplicate-id double insert occupying two top-k ranks.  The
-    delta's dimensionality is validated against the pinned ``dim``
-    before anything is written.  Returns the artifact's (possibly
-    unchanged) meta version."""
-    codec, meta = _open_index(path)
-    meta, sig = _ann_append_open(
-        path, meta, new_vectors, vec_col, id_col, [codec.data]
-    )
-    if sig is None:
-        return meta["version"]
-    _write_rows(
-        codec.encode(spark, path, meta, new_vectors, vec_col, id_col),
-        f"{path}/{codec.data}",
-        codec.partitioned,
-        "append",
-    )
-    return _ann_append_commit(path, meta, sig)
-
-
-def compact_index_files(spark, path: str) -> None:
-    """LAYOUT-ONLY (minor) compaction of any stored ANN index: each
-    append adds one parquet fragment per (append, cid) pair (per
-    append for the unpartitioned PQ codes); rewrite the data dir
-    repartitioned on the STORED ``cid`` (one file per cid partition in
-    practice; PQ's codes as one file) and swap it in.  Rows,
-    assignments, codes and therefore every probe result are IDENTICAL
-    before/after (pytest-pinned, and hash-gated by the ``*_compacted``
-    / ``*_minor_compacted`` queries); only the file layout the
-    one-shot build had is restored.
-
-    NOT a re-train — the HBase minor/major split: the frozen model is
-    exactly as drifted after this pass as before (``trained_version``
-    does not move), so a small-files trigger alone never re-clusters
-    (the drift monitor measured that a cheap ``iterations=1`` IVF
-    re-cluster can actively HURT recall).  JOURNALED
-    (:func:`_rewrite_journaled`: the journal opens at the TOP, so a
-    concurrent append fails loudly instead of being swallowed by the
-    swap).  After publish, IVF's standing ``centroids`` dir is
-    re-stamped with the new epoch so the build-time invariant
-    (matching sidecars ⇔ the two dirs belong together) stays true; a
-    crash inside that one sidecar write is benign — no reader or fsck
-    path compares the two sidecars directly, they adjudicate against
-    the journal's epoch."""
-    from hpaste_spark.operators import artifacts
-
-    codec, _ = _open_index(path)
-
-    def fill(tmp: dict) -> dict:
-        rows = spark.read.parquet(f"{path}/{codec.data}")
-        rows = rows.repartition("cid") if codec.partitioned else rows.coalesce(1)
-        _write_rows(rows, tmp[codec.data], codec.partitioned, "overwrite")
-        return {}
-
-    epoch = _rewrite_journaled(path, [codec.data], fill)
-    for d in codec.stamped:
-        artifacts.write_epoch(f"{path}/{d}", epoch)
+    return codec, meta
 
 
 def drift_recall(
@@ -2671,8 +2401,6 @@ def drift_recall(
     nprobe: int = 2,
     candidate_iterations: "tuple[int, ...]" = (1, 2),
     budget: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     query_id_col: str = "qid",
     query_vec_col: str = "qe",
 ) -> DataFrame:
@@ -2686,9 +2414,10 @@ def drift_recall(
     O(n²), the round-11 scale bug).  Returns one row per variant:
     (variant, n_queries, k, n_hit, recall_at_k).  The re-train is due
     when a candidate's recall exceeds appended's by more than the
-    rebuild is worth (:func:`ann_maintain`).
+    rebuild is worth
+    (:func:`~hpaste_spark.operators.artifacts.maintain_artifact`).
 
-    Per family (the codec):
+    Per family (the codec's ANN leg):
 
     - IVF — exact cosine truth over the artifact's own stored vectors
       (``corpus`` is not needed); candidates ``compact_it{n}``, what
@@ -2704,7 +2433,8 @@ def drift_recall(
       candidate ``retrained``, a fresh build on the corpus; ``nprobe``
       applies to IVFADC.
 
-    ``queries``: DataFrame with (``query_id_col``, ``query_vec_col``).
+    ``queries``: DataFrame with (``query_id_col``, ``query_vec_col``);
+    the corpus is read by the vector and id columns pinned at build.
     Queries that are themselves corpus rows are excluded from their
     own truth/candidates by id.  The corpus is read ONCE (DISK_ONLY
     cut) for the exact-truth pass, which is itself cut and reused by
@@ -2712,13 +2442,14 @@ def drift_recall(
     from pyspark.storagelevel import StorageLevel
 
     codec, meta = _open_index(path)
-    cols = [F.col(id_col), as_double(F.col(vec_col)).alias("_e")]
-    if codec.stores_vectors:
+    ann, kind, id_col = codec.ann, meta["kind"], meta["id_col"]
+    cols = [F.col(id_col), as_double(F.col(meta["vec_col"])).alias("_e")]
+    if ann.stores_vectors:
         corpus = spark.read.parquet(f"{path}/{codec.data}")
         cols.append(F.col("cid"))  # the stored assignment
     elif corpus is None:
         raise ValueError(
-            f"{codec.kind} drift monitoring needs the store-of-record "
+            f"{kind} drift monitoring needs the store-of-record "
             "corpus (the artifact stores codes, not vectors)"
         )
     # the corpus feeds the exact-truth pass and every candidate's
@@ -2729,15 +2460,15 @@ def drift_recall(
     base = corpus.select(*cols).localCheckpoint(
         eager=False, storageLevel=StorageLevel.DISK_ONLY
     )
-    if not codec.stores_vectors:
+    if not ann.stores_vectors:
         # the corpus count also materializes the DISK_ONLY cut before
         # the fan-out; the stored count reads parquet footers only
         n_corpus = base.count()
-        want = n_corpus * codec.rows_per_vector(meta)
+        want = n_corpus * ann.rows_per_vector(meta)
         n_stored = _stored_rows(spark, f"{path}/{codec.data}")
         if n_stored != want:
             raise ValueError(
-                f"corpus has {n_corpus} rows but the {codec.kind} artifact "
+                f"corpus has {n_corpus} rows but the {kind} artifact "
                 f"at {path} holds {n_stored} {codec.data} rows (expected "
                 f"{want}) — the monitor must be given exactly the store of "
                 "record the artifact was built+appended from"
@@ -2753,16 +2484,16 @@ def drift_recall(
     nq = q_df.agg(F.count(F.lit(1)).alias("n"))
     exact = _per_query_topk(
         base.crossJoin(F.broadcast(q_df)).filter(F.col(id_col) != F.col("qid")),
-        codec.exact_key(F.col("_e"), F.col("qe")),
+        ann.exact_key(F.col("_e"), F.col("qe")),
         k,
         id_col,
     ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
 
     out = None
-    for name, model in codec.candidates(
+    for name, model in ann.candidates(
         spark, path, meta, base, id_col, candidate_iterations
     ):
-        scored, key = codec.approx(model, q_df, meta, nprobe, id_col)
+        scored, key = ann.approx(model, q_df, meta, nprobe, id_col)
         row = (
             _per_query_topk(scored, key, k, id_col)
             .join(exact, ["qid", id_col])
@@ -2795,20 +2526,14 @@ def _per_query_topk(scored: DataFrame, key: F.Column, k: int, id_col: str) -> Da
     )
 
 
-def retrain_index(
-    spark,
-    corpus: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
+def retrain_index(spark, corpus: DataFrame, path: str) -> int:
     """BLUE/GREEN re-train of a stored ANN index from the caller-named
     store-of-record ``corpus`` — the action :func:`drift_recall`'s
     ``retrained`` variant prices for the code-only families (PQ,
     IVFADC: the artifact stores codes, not vectors, so drift repair is
     a fresh build; IVF re-trains in place from its own vectors with
-    :func:`compact_ivf_index`).  The geometry is the one pinned in the
-    meta.  An in-place ``mode='overwrite'`` rebuild of a LIVE artifact
+    :func:`compact_ivf_index`).  The geometry and the column names
+    ``corpus`` is read by are the ones pinned in the meta.  An in-place ``mode='overwrite'`` rebuild of a LIVE artifact
     is not crash-safe (a kill mid-build leaves half-replaced relations
     with valid-looking meta); instead the replacement is built
     COMPLETE at the sibling root ``path + RETRAIN_TMP_SUFFIX``, its
@@ -2838,9 +2563,9 @@ def retrain_index(
     artifacts.open_compact(path)  # exclusion covers build+swap
     try:
         shutil.rmtree(tmp, ignore_errors=True)
-        codec.build(
-            corpus, tmp, **{g: int(meta[g]) for g in codec.geometry},
-            vec_col=vec_col, id_col=id_col,
+        codec.ann.build(
+            corpus, tmp, **{g: int(meta[g]) for g in codec.ann.geometry},
+            vec_col=meta["vec_col"], id_col=meta["id_col"],
         )
         new_meta = artifacts.read_meta(tmp)
         new_meta.update(
@@ -2853,147 +2578,3 @@ def retrain_index(
         raise
     artifacts.swap_live_dir(path, tmp)
     return target
-
-
-def ann_maintain(
-    spark,
-    path: str,
-    queries: "DataFrame | None" = None,
-    corpus: "DataFrame | None" = None,
-    k: int = 10,
-    nprobe: int = 2,
-    budget: int = 100,
-    recall_margin: float = 0.02,
-    compact_every: int = 16,
-    max_files_per_dir: "int | None" = None,
-    candidate_iterations: "tuple[int, ...]" = (1, 2),
-    apply: bool = False,
-    apply_retrain: bool = False,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "qid",
-    query_vec_col: str = "qe",
-) -> dict:
-    """ONE-CALL maintenance pass for a stored ANN artifact (IVF / PQ /
-    IVFADC, the family read from ``meta.json``) — the ingest-loop
-    consumer the rounds-11..13 machinery was built FOR, composed in
-    the order a real loop needs (the reference's analogue is the
-    explicit HBase admin cycle around a standing table —
-    ExampleSchema.scala's create/alter lifecycle plus the
-    region-compaction posture mapreduce2.scala leans on; here the
-    table is a parquet ANN artifact and the decisions are measured,
-    not scheduled):
-
-    1. **fsck first** — ``check_artifact(path, repair=True)``
-       completes or rolls back any crashed append/compaction (the
-       journaled states), so the rest of the pass runs on a clean
-       tree.  A loop that probes BEFORE repairing reads a torn tree's
-       ``TornArtifactError``.
-    2. **small-files signal** — :func:`~hpaste_spark.operators.\
-artifacts.artifact_stats`: hygiene compaction is due when
-       ``appends_since_compact >= compact_every`` (default 16 —
-       matching the delta-sig replay ring's depth, so every retryable
-       append stays inside both windows; SCALE.md ties the file-count
-       threshold to the measured snapshot-walk + footer-open costs) or
-       when any data dir exceeds ``max_files_per_dir`` (if given).
-    3. **drift probe** (only when ``queries`` is given and the
-       artifact has grown past its last GEOMETRY training —
-       ``version > trained_version``, a marker that moves on build,
-       blue/green re-train, and the IVF major compaction but
-       deliberately NOT on layout-only compactions, which reset the
-       small-files counter while leaving the frozen codebooks/
-       centroids exactly as drifted as before): :func:`drift_recall`
-       grades the LIVE artifact against its in-plan re-train
-       candidates on the fixed ``budget`` sample (PQ/IVFADC need the
-       caller-named store-of-record ``corpus``).  Re-train is due when
-       the best candidate beats ``appended`` recall by more than
-       ``recall_margin``.
-    4. **decide, then (optionally) act** — ``action`` is ``retrain``
-       > ``compact`` > ``none``, behind TWO separate switches because
-       the costs differ by orders of magnitude: ``apply=True`` runs
-       the HYGIENE pass (:func:`compact_index_files` — recall-
-       invariant by construction, which is exactly why the small-files
-       trigger must not run the IVF re-cluster: the monitor measured a
-       cheap ``it1`` re-cluster HURTING recall), while
-       ``apply_retrain=True`` additionally authorizes the RE-TRAIN
-       (O(corpus rebuild)): IVF = :func:`compact_ivf_index` at the
-       measured-best iteration count (in place, journaled — the
-       artifact stores its own vectors); PQ/IVFADC =
-       :func:`retrain_index` on the caller's ``corpus`` (blue/green
-       root swap — those artifacts store codes, and an in-place
-       overwrite of a live artifact is not crash-safe).  Either way
-       the report's ``plan`` names the exact call with the artifact's
-       pinned geometry, so an un-applied decision is still actionable.
-
-    Returns a driver-side report dict (this is admin-plane work — the
-    collected monitor table is ≤3 rows): ``{"family", "fsck",
-    "stats", "small_files", "drift", "recall_gap", "action", "plan",
-    "applied", "version_before", "version_after"}``.
-    """
-    from hpaste_spark.operators import artifacts
-
-    fsck = artifacts.recover_artifact_root(path)  # root-level states first
-    fsck += artifacts.check_artifact(
-        path, repair=True, max_files_per_dir=max_files_per_dir
-    )
-    codec, meta = _open_index(path)
-    stats = artifacts.artifact_stats(path)
-    since = stats["appends_since_compact"] or 0
-    small_files = since >= compact_every or (
-        max_files_per_dir is not None
-        and any(n > max_files_per_dir for n in stats["data_dirs"].values())
-    )
-
-    # drift is measured against the last GEOMETRY training, not the
-    # last compaction: layout compactions reset appends_since_compact
-    # without touching the frozen codebooks/centroids, so gating the
-    # probe on that counter would silently stop monitoring a
-    # still-drifting artifact the moment a small-files pass ran.
-    # trained_version moves only on build, blue/green re-train, and
-    # the IVF major compaction.
-    trained = meta.get("trained_version", meta.get("compacted_version", 1))
-    geometry_stale = (meta.get("version") or 1) > trained
-
-    drift: "dict[str, float] | None" = None
-    gap: "float | None" = None
-    best_variant: "str | None" = None
-    if queries is not None and geometry_stale:
-        mon = drift_recall(
-            spark, path, queries, corpus, k=k, nprobe=nprobe,
-            candidate_iterations=candidate_iterations, budget=budget,
-            vec_col=vec_col, id_col=id_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-        )
-        drift = {r["variant"]: float(r["recall_at_k"]) for r in mon.collect()}
-        cands = {v: r for v, r in drift.items() if v != "appended"}
-        best_variant = max(cands, key=lambda v: (cands[v], v))
-        gap = cands[best_variant] - drift["appended"]
-
-    retrain = gap is not None and gap > recall_margin
-    action = "retrain" if retrain else ("compact" if small_files else "none")
-    plan = {"compact": "compact_index_files(path)", "none": "none"}.get(action)
-    applied = False
-    if action == "retrain":
-        applied = apply_retrain
-        plan = codec.retrain(
-            spark, path, corpus, meta, best_variant, applied, vec_col, id_col
-        )
-    elif apply and action == "compact":
-        compact_index_files(spark, path)
-        applied = True
-
-    after = artifacts.read_meta(path)
-    return {
-        "family": codec.kind,
-        "fsck": fsck,
-        "stats": stats,
-        "small_files": small_files,
-        "drift": drift,
-        "recall_gap": gap,
-        "action": action,
-        "plan": plan,
-        "applied": applied,
-        "version_before": meta.get("version"),
-        "version_after": None if after is None else after.get("version"),
-    }
-

@@ -280,141 +280,51 @@ def build_hdr_baseline(
     value_col: str = "v",
     group_col: str | None = None,
     sub_bits: int = 7,
-    mode: str = "overwrite",
 ) -> None:
     """Write-once HDR quantile BASELINE artifact — the telemetry
     posture: a nightly/weekly job sketches the reference window ONCE
-    (``{path}/sketch`` = the counter table, then ``{path}/meta``
-    written LAST pinning (sub_bits, group_col, family)), and every
-    later monitor reads quantile bands from those few rows instead of
-    re-scanning reference history.  Readers derive sub_bits FROM the
-    artifact (bands computed under a different bucket rule than the
-    counters is the silent-wrong-answer analog of probing a Bloom
-    filter with the wrong geometry — hence the family pin and the
-    meta-last build order shared with build_bloom_filter /
-    build_lsh_index).  Refreshing the window is
-    :func:`append_hdr_baseline` — ``mode='append'`` here is rejected
-    for the same second-meta-row reason as build_lsh_index."""
-    if mode == "append":
-        raise ValueError(
-            "build_hdr_baseline(mode='append') would append a second "
-            "meta row next to the pinned bucket rule; refresh the "
-            "artifact with append_hdr_baseline (sketches only the new "
-            "window under the stored sub_bits and bumps the version)"
-        )
-    hdr_sketch(df, value_col, group_col, sub_bits).write.mode(mode).parquet(
+    (``{path}/sketch`` = the counter table, then ``{path}/meta.json``
+    written LAST pinning sub_bits, the bucket rule and the value/group
+    column names), and every later monitor reads quantile bands from
+    those few rows instead of re-scanning reference history.  Readers
+    derive sub_bits FROM the artifact (bands computed under a different
+    bucket rule than the counters is the silent-wrong-answer analog of
+    probing a Bloom filter with the wrong geometry — hence the rule pin
+    shared with build_bloom_filter / build_lsh_index).  Refreshing the
+    window is :func:`~hpaste_spark.operators.artifacts.append_artifact`
+    (sketches only the new window; appending an identical window twice
+    is one append)."""
+    from hpaste_spark.operators import artifacts
+
+    hdr_sketch(df, value_col, group_col, sub_bits).write.mode("overwrite").parquet(
         f"{path}/sketch"
     )
-    df.sparkSession.createDataFrame(
-        [(sub_bits, group_col or "", HDR_FAMILY, 1)],
-        "sub_bits INT, group_col STRING, family INT, version INT",
-    ).write.mode(mode).parquet(f"{path}/meta")
+    artifacts.publish_build(
+        path, "hdr", family=HDR_FAMILY, sub_bits=sub_bits,
+        value_col=value_col, group_col=group_col,
+    )
 
 
 def read_hdr_baseline(spark, path: str):
-    """(sketch DataFrame, meta Row) of a :func:`build_hdr_baseline`
-    artifact, with the family hard-check and the single-distinct-meta
-    assert every stored reader shares.  The sketch comes back MERGED
-    (hdr_merge over the stored rows): for a write-once artifact the
-    merge is the identity — (group, bucket) keys are already unique —
-    and for an :func:`append_hdr_baseline`-refreshed one it collapses
-    the appended per-window partials into one counter table, which is
-    exactly the hdr_merge-additivity the sketch guarantees."""
-    from .dedup import _single_meta_row
+    """(sketch DataFrame, meta dict) of a :func:`build_hdr_baseline`
+    artifact, after the check every stored reader shares
+    (:func:`~hpaste_spark.operators.artifacts.open_artifact`: no
+    pending journal, an HDR artifact, this build's bucket rule).  The
+    sketch comes back MERGED (hdr_merge over the stored rows): for a
+    write-once artifact the merge is the identity — (group, bucket)
+    keys are already unique — and for an appended one it collapses the
+    per-window partials into one counter table, which is exactly the
+    hdr_merge-additivity the sketch guarantees."""
+    from hpaste_spark.operators import artifacts
 
-    meta = _single_meta_row(spark, path, "HDR baseline")
-    stored_family = meta["family"] if "family" in meta.__fields__ else 0
-    if stored_family != HDR_FAMILY:
-        raise ValueError(
-            f"HDR baseline at {path} was built under bucket rule "
-            f"{stored_family}; this build reads rule {HDR_FAMILY} — "
-            "rebuild the artifact with build_hdr_baseline"
-        )
+    _, meta = artifacts.open_artifact(path, "hdr")
     return hdr_merge(spark.read.parquet(f"{path}/sketch")), meta
 
 
-def append_hdr_baseline(
-    spark,
-    path: str,
-    df: DataFrame,
-    value_col: str = "v",
-) -> int:
-    """INCREMENTAL refresh of a :func:`build_hdr_baseline` artifact
-    (round-9 verdict ask #1 applied to the HDR layer): sketch ONLY the
-    new window under the artifact's pinned (sub_bits, group_col),
-    append its counter rows to ``{path}/sketch``, rewrite the 1-row
-    meta with the version bumped, return the new version.  Correct by
-    hdr_merge-additivity — the reader collapses appended partials cell-
-    wise, so append(A, B) reads identically to build(A ∪ B).  Same
-    write order and race posture as dedup.append_lsh_index: counters
-    first, meta last; the bucket rule never changes across appends, so
-    a racing reader can only see a valid (possibly between-versions)
-    counter table.
-
-    SINGLE-WRITER CONTRACT (round-12 verdict ask #5): the version bump
-    is a read-modify-write of the 1-row meta — two CONCURRENT appenders
-    both read version v and both publish v+1, so while the appended
-    DATA from both survives (the rows are additive), the version
-    undercounts and any version-based freshness check misreads.
-    Appends, like compactions, are OFFLINE single-writer maintenance
-    actions — and since round 12 the contract is ENFORCED, not just
-    documented: every append/compaction on this artifact runs under
-    :func:`~hpaste_spark.operators.artifacts.append_lock` (O_EXCL
-    sentinel, stale-TTL break for crashed holders), so a concurrent
-    second writer raises ConcurrentMaintenanceError instead of losing
-    a version bump.  (The ANN index appends get the same property from
-    their O_EXCL journal; this artifact's meta is a parquet relation
-    fsck cannot adjudicate, hence a lock rather than a journal.)"""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        _, meta = read_hdr_baseline(spark, path)
-        group_col = meta["group_col"] or None
-        hdr_sketch(df, value_col, group_col, meta["sub_bits"]).write.mode(
-            "append"
-        ).parquet(f"{path}/sketch")
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(meta["sub_bits"], meta["group_col"], HDR_FAMILY, version)],
-            "sub_bits INT, group_col STRING, family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
-
-
-def compact_hdr_baseline(spark, path: str, num_files: int = 1) -> int:
-    """COMPACTION for an append-refreshed :func:`build_hdr_baseline`
-    artifact (round-11 verdict ask #4): each append adds one parquet
-    fragment of per-window partial counters under ``{path}/sketch``;
-    readers collapse them cell-wise via hdr_merge on every read.
-    Compaction performs that merge ONCE — read the stored rows,
-    hdr_merge them into the canonical one-row-per-(group, bucket)
-    counter table, rewrite as ``num_files`` files (default 1: the
-    merged table is ≤ groups × buckets rows), swap with the narrowed
-    rename-aside sequence
-    (:func:`~hpaste_spark.operators.artifacts.swap_live_dir`), bump
-    the meta version.  Read-back is identical BY hdr_merge-IDEMPOTENCE
-    (merging an already-merged table is the identity — pytest-pinned),
-    and every subsequent read skips the partial-collapse work.
-    OFFLINE operation, same race posture as compact_lsh_index."""
-    from hpaste_spark.operators.artifacts import append_lock
-
-    with append_lock(path):
-        import shutil
-
-        from hpaste_spark.operators.artifacts import swap_live_dir
-
-        _, meta = read_hdr_baseline(spark, path)
-        merged = hdr_merge(spark.read.parquet(f"{path}/sketch"))
-        tmp = f"{path}/sketch_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.coalesce(num_files).write.mode("overwrite").parquet(tmp)
-        swap_live_dir(f"{path}/sketch", tmp)
-        version = (meta["version"] if "version" in meta.__fields__ else 1) + 1
-        spark.createDataFrame(
-            [(meta["sub_bits"], meta["group_col"], HDR_FAMILY, version)],
-            "sub_bits INT, group_col STRING, family INT, version INT",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return version
+def _hdr_encode(spark, path: str, meta: dict, window: DataFrame) -> DataFrame:
+    """The HDR append delta: the new window's counter partial under the
+    pinned (sub_bits, value_col, group_col)."""
+    return hdr_sketch(window, meta["value_col"], meta["group_col"], meta["sub_bits"])
 
 
 #: KMV hash space: token_hash yields 52-bit md5-prefix integers, so

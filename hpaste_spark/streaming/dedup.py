@@ -98,12 +98,13 @@ def stream_incremental_dedup_stored(
     :func:`~hpaste_spark.operators.dedup.build_lsh_index` artifact —
     the production ingest posture (round-8 verdict ask #1): band
     geometry (num_hashes/bands/shingle) and the id column come FROM
-    ``{path}/meta``, never from the caller, closing the
+    ``{path}/meta.json``, never from the caller, closing the
     silent-false-negative hazard the free-parameter form documents
     (probing an index with mismatched banding parameters makes every
     duplicate look unique — exactly the Bloom wrong-geometry failure
     stream_bloom_flags_stored guards against, at the dedup layer).
-    A family mismatch hard-errors via read_lsh_index.
+    A pending journal or a family mismatch hard-errors via
+    read_lsh_index (the check every stored reader shares).
 
     The bands/meta reads happen once per (re)start, not per
     micro-batch; each batch then signs only ITSELF and equi-joins the
@@ -183,20 +184,21 @@ def stream_bloom_flags_stored(
 ) -> DataFrame:
     """:func:`stream_bloom_flags` against a write-once
     :func:`~hpaste_spark.operators.dedup.build_bloom_filter` artifact:
-    reads ``{path}/meta`` and derives n/m_bits/k_hashes FROM THE
+    reads ``{path}/meta.json`` and derives n/m_bits/k_hashes FROM THE
     ARTIFACT instead of trusting the caller — hand-typed geometry that
     disagrees with the bits yields silent FALSE NEGATIVES, the one
     failure mode a Bloom filter must never have, which is why the
-    batch twin (dedup.decontaminate_bloom_stored) hard-errors on a
-    probe-family mismatch and this entry point mirrors that check.
+    batch twin (dedup.decontaminate_bloom_stored) and this entry point
+    share one check (artifacts.open_artifact: no pending journal, a
+    Bloom artifact, this build's probe family).
 
     The bits/meta reads are batch reads of the static side of a
     stream-static join — legal and read once per (re)start, never per
     micro-batch (persist ``bits`` at scale; at ≤ m_bits rows it
     broadcasts regardless)."""
-    from hpaste_spark.operators.dedup import _bloom_meta
+    from hpaste_spark.operators import artifacts
 
-    meta = _bloom_meta(spark, path)
+    _, meta = artifacts.open_artifact(path, "bloom")
     bits = spark.read.parquet(f"{path}/bits")
     return stream_bloom_flags(
         stream_docs,

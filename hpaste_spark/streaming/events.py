@@ -769,16 +769,28 @@ def drain_parquet_with_restart(
 
     Run 1 starts the query (availableNow) and calls ``stop()`` as soon
     as ``stop_after_batches`` data micro-batches have COMMITTED —
-    deliberately mid-stream, possibly mid-batch (a real crash doesn't
-    wait for a clean boundary; the FileStreamSink's ``_spark_metadata``
-    commit log is what makes a torn batch invisible: files written by
-    an uncommitted batch are simply absent from the log and the batch
-    replays on restart).  Run 2 starts the SAME plan against the SAME
-    checkpoint and drains to completion; Spark recovers source offsets
-    from the offset log, the eviction watermark from the commit log,
-    and state-store contents from the checkpointed state, so the
-    landed relation equals an uninterrupted run's — which is exactly
-    what the caller's oracle then asserts.
+    deliberately mid-stream, but ALWAYS at a commit boundary:
+    ``StreamingQuery.stop()`` lets the running micro-batch finish
+    before the query ends, so run 1 never leaves a torn batch behind
+    (a probe that stopped the moment an offset entry ran ahead of the
+    commit log still ended on a boundary).  A real crash does not wait
+    for the boundary; there the FileStreamSink's ``_spark_metadata``
+    commit log is what would make a torn batch invisible — files
+    written by an uncommitted batch are absent from the log and the
+    batch replays on restart — but this drain does not exercise that
+    path.  Run 2 starts the SAME plan against the SAME checkpoint and
+    drains to completion; Spark recovers source offsets from the offset
+    log, the eviction watermark from the commit log, and state-store
+    contents from the checkpointed state.
+
+    What the caller's oracle may assume: the landed relation equals an
+    uninterrupted run's ONLY because the restart replays the same
+    micro-batch boundaries.  Spark's watermark contract is one-sided —
+    data later than the watermark threshold "may or may not" be dropped
+    (Structured Streaming guide) — so which late rows a stateful
+    operator drops depends on where the batches are cut; a restart
+    that re-planned different boundaries could keep rows the
+    uninterrupted run drops, with both runs inside Spark's contract.
 
     Returns ``(run1_batches, run2_batches)`` — the batch ids COMMITTED
     by each run, read from the checkpoint's ``commits/`` log, NOT from

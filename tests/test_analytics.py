@@ -1930,9 +1930,10 @@ def test_stored_bloom_filter_roundtrips_and_pins_geometry(spark, docs, tmp_path)
     """build_bloom_filter → decontaminate_bloom_stored equals the
     in-plan bloom_decontaminate at the same geometry (the md5 probes
     are deterministic, so the persisted bits ARE the computed bits);
-    the meta row pins (m_bits, k_hashes, n) so readers probe with the
+    the meta pins (m_bits, k_hashes, n) so readers probe with the
     insert-time geometry, and the bits relation respects the m_bits
     bound."""
+    from hpaste_spark.operators.artifacts import read_meta
     from hpaste_spark.operators.dedup import (
         bloom_decontaminate,
         build_bloom_filter,
@@ -1944,9 +1945,8 @@ def test_stored_bloom_filter_roundtrips_and_pins_geometry(spark, docs, tmp_path)
     path = str(tmp_path / "bloom")
     build_bloom_filter(bench, path, n=4, m_bits=2048, k_hashes=2)
 
-    meta = spark.read.parquet(f"{path}/meta").collect()
-    assert len(meta) == 1
-    assert (meta[0]["m_bits"], meta[0]["k_hashes"], meta[0]["n"]) == (2048, 2, 4)
+    meta = read_meta(path)
+    assert (meta["m_bits"], meta["k_hashes"], meta["n"]) == (2048, 2, 4)
     assert spark.read.parquet(f"{path}/bits").count() <= 2048
 
     stored = {
@@ -2264,6 +2264,7 @@ def test_lsh_index_artifact_roundtrip_and_family_pin(spark, tmp_path):
     false-negative failure mode the pin exists for)."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import read_meta, write_meta
     from hpaste_spark.operators.dedup import (
         build_lsh_index,
         incremental_lsh_candidates,
@@ -2302,10 +2303,7 @@ def test_lsh_index_artifact_roundtrip_and_family_pin(spark, tmp_path):
     assert stored == inline and len(stored) > 0
 
     # family mismatch: rewrite meta under a foreign family id
-    spark.createDataFrame(
-        [(12, 3, 2, "doc_id", 999)],
-        "num_hashes INT, bands INT, shingle INT, id_col STRING, family INT",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, {**read_meta(path), "family": 999})
     with pytest.raises(ValueError, match="family 999"):
         read_lsh_index(spark, path)
     with pytest.raises(ValueError, match="build_lsh_index"):
@@ -2313,14 +2311,14 @@ def test_lsh_index_artifact_roundtrip_and_family_pin(spark, tmp_path):
 
 
 def test_lsh_index_append_equals_full_build(spark, tmp_path):
-    """append_lsh_index(A-index, B) ≡ build_lsh_index(A ∪ B): same
+    """append_artifact(A-index, B) ≡ build_lsh_index(A ∪ B): same
     band relation bit-for-bit (band rows are per-doc and the geometry
     is pinned), same probe results, version bumped to 2 with geometry
     preserved — the round-9 verdict's standing-artifact refresh gate."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.dedup import (
-        append_lsh_index,
         build_lsh_index,
         incremental_lsh_candidates_stored,
         read_lsh_index,
@@ -2339,7 +2337,7 @@ def test_lsh_index_append_equals_full_build(spark, tmp_path):
     inc_path = str(tmp_path / "lsh_inc")
     full_path = str(tmp_path / "lsh_full")
     build_lsh_index(old, inc_path, num_hashes=12, bands=3, shingle=2)
-    version = append_lsh_index(spark, inc_path, delta)
+    version = append_artifact(spark, inc_path, delta)
     build_lsh_index(both, full_path, num_hashes=12, bands=3, shingle=2)
 
     inc_bands, inc_meta = read_lsh_index(spark, inc_path)
@@ -2365,15 +2363,12 @@ def test_lsh_index_append_equals_full_build(spark, tmp_path):
 
 
 def test_lsh_index_append_hardening(spark, tmp_path):
-    """The append path's failure modes fail LOUDLY: build with
-    mode='append' is rejected (second meta row hazard, r9 ADVICE);
-    appending onto a foreign-family artifact errors before signing
-    anything; and a corrupted multi-geometry meta relation errors in
-    read_lsh_index instead of being picked from nondeterministically."""
+    """The append path's failure modes fail LOUDLY: appending onto a
+    foreign-family artifact errors before signing anything."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact, read_meta, write_meta
     from hpaste_spark.operators.dedup import (
-        append_lsh_index,
         build_lsh_index,
         read_lsh_index,
     )
@@ -2385,41 +2380,23 @@ def test_lsh_index_append_hardening(spark, tmp_path):
     path = str(tmp_path / "lsh_idx")
     build_lsh_index(docs, path, num_hashes=12, bands=3, shingle=2)
 
-    with pytest.raises(ValueError, match="append_lsh_index"):
-        build_lsh_index(docs, path, mode="append")
-
-    # conflicting second geometry row (what a legacy mode='append'
-    # would have produced): single-distinct-row assert fires
-    spark.createDataFrame(
-        [(16, 4, 3, "doc_id", 1, 1)],
-        "num_hashes INT, bands INT, shingle INT, id_col STRING, "
-        "family INT, version INT",
-    ).write.mode("append").parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="distinct meta rows"):
-        read_lsh_index(spark, path)
-    with pytest.raises(ValueError, match="distinct meta rows"):
-        append_lsh_index(spark, path, docs)
-
     # foreign family: hard-error before any delta is signed
-    spark.createDataFrame(
-        [(12, 3, 2, "doc_id", 999, 1)],
-        "num_hashes INT, bands INT, shingle INT, id_col STRING, "
-        "family INT, version INT",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, {**read_meta(path), "family": 999})
     with pytest.raises(ValueError, match="family 999"):
-        append_lsh_index(spark, path, docs)
+        read_lsh_index(spark, path)
+    with pytest.raises(ValueError, match="family 999"):
+        append_artifact(spark, path, docs)
 
 
 def test_lsh_index_compact_preserves_relation(spark, tmp_path):
-    """compact_lsh_index after appends: identical band relation and
+    """compact_artifact after LSH appends: identical band relation and
     probe results, strictly fewer parquet files (the accumulated
     append deltas coalesce), version bumped, geometry preserved."""
     import os
 
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators.dedup import (
-        append_lsh_index,
         build_lsh_index,
-        compact_lsh_index,
         incremental_lsh_candidates_stored,
         read_lsh_index,
     )
@@ -2435,7 +2412,7 @@ def test_lsh_index_compact_preserves_relation(spark, tmp_path):
         path, num_hashes=12, bands=3, shingle=2,
     )
     for lo, hi in ((8, 12), (12, 16), (16, 20)):
-        append_lsh_index(
+        append_artifact(
             spark, path,
             spark.createDataFrame(docs[lo:hi], "doc_id INT, text STRING"),
         )
@@ -2451,7 +2428,7 @@ def test_lsh_index_compact_preserves_relation(spark, tmp_path):
         map(tuple, incremental_lsh_candidates_stored(spark, path, batch).collect())
     )
 
-    v = compact_lsh_index(spark, path, num_files=2)
+    v = compact_artifact(spark, path)
     assert v == 5  # build(1) + 3 appends + compact
     assert nfiles() < before_files and nfiles() <= 2
     _, meta = read_lsh_index(spark, path)
@@ -2463,16 +2440,16 @@ def test_lsh_index_compact_preserves_relation(spark, tmp_path):
 
 
 def test_bloom_filter_append_equals_full_build(spark, tmp_path):
-    """append_bloom_filter(A-filter, B) == build_bloom_filter(A ∪ B)
+    """append_artifact(A-filter, B) == build_bloom_filter(A ∪ B)
     BIT-FOR-BIT (Bloom bits are monotone — the filter is the union of
     every insert's bit set), duplicate-free after append, version
-    bumped, geometry from the artifact; build with mode='append' is
-    rejected and a re-run of the append is idempotent (anti-join
-    inserts nothing new)."""
+    bumped, geometry from the artifact; a re-run of the append is
+    idempotent (a replay of the committed append: nothing inserted,
+    version unchanged)."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.dedup import (
-        append_bloom_filter,
         build_bloom_filter,
         decontaminate_bloom_stored,
     )
@@ -2489,7 +2466,7 @@ def test_bloom_filter_append_equals_full_build(spark, tmp_path):
 
     inc, full = str(tmp_path / "bl_inc"), str(tmp_path / "bl_full")
     build_bloom_filter(old, inc, n=3, m_bits=4096, k_hashes=3)
-    v = append_bloom_filter(spark, inc, delta)
+    v = append_artifact(spark, inc, delta)
     build_bloom_filter(both, full, n=3, m_bits=4096, k_hashes=3)
 
     bits = lambda p: sorted(  # noqa: E731
@@ -2499,30 +2476,26 @@ def test_bloom_filter_append_equals_full_build(spark, tmp_path):
     assert len(bits(inc)) == len(set(bits(inc))), "no duplicate bit rows"
     assert v == 2
 
-    # idempotent re-append: nothing new to insert, version still bumps
-    v2 = append_bloom_filter(spark, inc, delta)
-    assert v2 == 3 and bits(inc) == bits(full)
+    # idempotent re-append: a replay of the committed append is a no-op
+    v2 = append_artifact(spark, inc, delta)
+    assert v2 == 2 and bits(inc) == bits(full)
 
     flags = lambda p: sorted(  # noqa: E731
         map(tuple, decontaminate_bloom_stored(spark, p, probe).collect())
     )
     assert flags(inc) == flags(full) and len(flags(inc)) > 0
 
-    with pytest.raises(ValueError, match="append_bloom_filter"):
-        build_bloom_filter(delta, inc, mode="append")
-
 
 def test_bloom_filter_compaction(spark, tmp_path):
-    """compact_bloom_filter after appends: read-back is the identical
+    """compact_artifact after Bloom appends: read-back is the identical
     bit relation, strictly fewer parquet files (the per-append
     fragments coalesce to one), version bumped, geometry preserved,
     probe results unchanged."""
     import os
 
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators.dedup import (
-        append_bloom_filter,
         build_bloom_filter,
-        compact_bloom_filter,
         decontaminate_bloom_stored,
     )
 
@@ -2537,7 +2510,7 @@ def test_bloom_filter_compaction(spark, tmp_path):
         path, n=3, m_bits=4096, k_hashes=3,
     )
     for lo, hi in ((8, 12), (12, 16), (16, 20)):
-        append_bloom_filter(
+        append_artifact(
             spark, path,
             spark.createDataFrame(docs[lo:hi], "doc_id INT, text STRING"),
         )
@@ -2554,7 +2527,7 @@ def test_bloom_filter_compaction(spark, tmp_path):
     )
     before_files, before_bits, before_flags = nfiles(), bits(), flags()
 
-    v = compact_bloom_filter(spark, path)
+    v = compact_artifact(spark, path)
     assert v == 5  # build(1) + 3 appends + compact
     assert nfiles() < before_files and nfiles() <= 1
     assert bits() == before_bits and len(before_bits) > 0
@@ -2562,14 +2535,14 @@ def test_bloom_filter_compaction(spark, tmp_path):
 
 
 def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
-    """append_index: the delta lands in the cid partitions of the
+    """append_artifact: the delta lands in the cid partitions of the
     STORED centroids (no re-cluster), and probing the appended index
     equals probing an index whose vectors are the union assigned under
     the build slice's centroids — the honest appended-IVF semantics."""
     import random
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         ivf_assign,
         ivf_knn_join_indexed,
@@ -2585,7 +2558,7 @@ def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
 
     path = str(tmp_path / "ivf_inc")
     build_ivf_index(old, path, k_centroids=4)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
 
     stored = spark.read.parquet(f"{path}/vectors").select("vec_id", "cid")
     cent = spark.read.parquet(f"{path}/centroids")
@@ -2609,19 +2582,18 @@ def test_ivf_index_append_assigns_delta_under_stored_centroids(spark, tmp_path):
 
 
 def test_pq_index_append_and_compaction(spark, tmp_path):
-    """append_index: the delta is encoded under the STORED codebooks
+    """append_artifact: the delta is encoded under the STORED codebooks
     (m inferred from the artifact, no re-train), so the appended codes
     relation equals encoding the whole union under the build-slice
     codebooks; ADC search over the appended index works; and
-    compact_index_files consolidates the per-append fragments with the
+    compact_artifact consolidates the per-append fragments with the
     code rows read-back-identical."""
     import glob
     import random
 
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
-        compact_index_files,
         pq_encode,
         pq_topk_indexed,
     )
@@ -2636,7 +2608,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
 
     path = str(tmp_path / "pq_inc")
     build_pq_index(old, path, m=2, k=4)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
 
     stored_cb = spark.read.parquet(f"{path}/codebooks")
     stored_codes = spark.read.parquet(f"{path}/codes")
@@ -2654,7 +2626,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
     assert len(before_topk) == 5
 
     n_before = len(glob.glob(f"{path}/codes/*.parquet"))
-    compact_index_files(spark, path)
+    compact_artifact(spark, path)
     n_after = len(glob.glob(f"{path}/codes/*.parquet"))
     assert n_after < n_before and n_after <= 1
     assert sorted(map(key, spark.read.parquet(f"{path}/codes").collect())) == sorted(
@@ -2666,7 +2638,7 @@ def test_pq_index_append_and_compaction(spark, tmp_path):
 
 
 def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
-    """append_index: the standing rows are untouched, and the
+    """append_artifact: the standing rows are untouched, and the
     delta's (cid, sub, code) rows equal an INDEPENDENT driver-side
     replay of the frozen model (numpy: L2² argmin over the stored
     centroids with the ROUND(·,6)+lowest-cid tiebreak, residual, then
@@ -2675,8 +2647,8 @@ def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
     not a retrain."""
     import random
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
     )
 
@@ -2694,7 +2666,7 @@ def test_ivfadc_index_append_matches_frozen_model(spark, tmp_path):
         map(tuple, spark.read.parquet(f"{path}/codes")
             .select("vec_id", "sub", "code", "cid").collect())
     )
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
     after = spark.read.parquet(f"{path}/codes").select(
         "vec_id", "sub", "code", "cid"
     )
@@ -2746,9 +2718,9 @@ def test_ivf_assign_zero_vector_and_build_append_rejected(spark, tmp_path):
     containing an ALL-ZERO embedding used to die with an ANSI
     ArithmeticException (0/0 in the cosine) — zero vectors now score
     0 against every centroid and deterministically land in the lowest
-    cid; (2) build_ivf_index(mode='append') would write a SECOND
-    centroid relation next to the pinned one — rejected like the
-    LSH/Bloom/HDR builds."""
+    cid; (2) a build has no append mode (it would write a SECOND
+    centroid relation next to the pinned one) — appends go through
+    append_artifact."""
     import pytest
 
     from hpaste_spark.operators.similarity import (
@@ -2767,7 +2739,7 @@ def test_ivf_assign_zero_vector_and_build_append_rejected(spark, tmp_path):
     assert zero_cid == [min(r["cid"] for r in cent.collect())]
 
     path = str(tmp_path / "ivf_m")
-    with pytest.raises(ValueError, match="append_index"):
+    with pytest.raises(TypeError, match="mode"):
         build_ivf_index(emb, path, k_centroids=3, mode="append")
 
 
@@ -2784,8 +2756,8 @@ def test_ivf_compaction_restores_fresh_build(spark, tmp_path):
     import glob
     import random
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         compact_ivf_index,
         ivf_knn_join_indexed,
@@ -2806,7 +2778,7 @@ def test_ivf_compaction_restores_fresh_build(spark, tmp_path):
 
     inc = str(tmp_path / "ivf_inc")
     build_ivf_index(old, inc, k_centroids=4)
-    append_index(spark, inc, delta)
+    append_artifact(spark, inc, delta)
     n_files_appended = len(glob.glob(f"{inc}/vectors/cid=*/*.parquet"))
     # k explicit: the build slice (vec_id % 4 != 3) seeds only 3 of 4
     # cid groups, so the artifact's current centroid count (the k
@@ -2884,10 +2856,9 @@ def test_stream_incremental_dedup_stored_matches_batch(spark, tmp_path):
     }
     assert set(landed) == expected and len(expected) > 0
 
-    spark.createDataFrame(
-        [(12, 3, 2, "doc_id", 0)],
-        "num_hashes INT, bands INT, shingle INT, id_col STRING, family INT",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    from hpaste_spark.operators.artifacts import read_meta, write_meta
+
+    write_meta(path, {**read_meta(path), "family": 0})
     with pytest.raises(ValueError, match="family 0"):
         stream_incremental_dedup_stored(spark, path, stream, sink)
 
@@ -3092,9 +3063,13 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
     interrupted (no duplicate ids, no lost slice)."""
     import pytest
 
-    import hpaste_spark.operators.similarity as sim
-    from hpaste_spark.operators.artifacts import TornArtifactError, check_artifact
-    from hpaste_spark.operators.similarity import append_index, build_ivf_index
+    from hpaste_spark.operators import artifacts
+    from hpaste_spark.operators.artifacts import (
+        TornArtifactError,
+        append_artifact,
+        check_artifact,
+    )
+    from hpaste_spark.operators.similarity import build_ivf_index
 
     emb = _rand_emb(spark)
     old = emb.filter(F.col("vec_id") % 4 != 3)
@@ -3103,7 +3078,7 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
     # control: the uninterrupted lifecycle
     control = str(tmp_path / "control")
     build_ivf_index(old, control, k_centroids=4)
-    assert append_index(spark, control, delta) == 2
+    assert append_artifact(spark, control, delta) == 2
     want = _knn_rows(spark, control, emb)
     pre_want = None  # filled below from the torn tree after rollback
 
@@ -3113,22 +3088,22 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
         f for f in __import__("os").listdir(f"{path}/vectors")
     )
 
-    real_commit = sim._ann_append_commit
+    real_commit = artifacts._append_commit
 
     def crash_commit(p, meta, sig):
         raise OSError("simulated crash between data write and meta publish")
 
-    monkeypatch.setattr(sim, "_ann_append_commit", crash_commit)
+    monkeypatch.setattr(artifacts, "_append_commit", crash_commit)
     with pytest.raises(OSError, match="simulated crash"):
-        append_index(spark, path, delta)
-    monkeypatch.setattr(sim, "_ann_append_commit", real_commit)
+        append_artifact(spark, path, delta)
+    monkeypatch.setattr(artifacts, "_append_commit", real_commit)
 
     # 1. loud: every stored reader refuses the journaled tree
     with pytest.raises(TornArtifactError, match="append_pending"):
         _knn_rows(spark, path, emb)
     # ...and so does a blind retry (no silent double-insert path)
     with pytest.raises(Exception, match="append_pending|single-writer"):
-        append_index(spark, path, delta)
+        append_artifact(spark, path, delta)
 
     # 2. detect + repair: rollback to the pre-append tree
     report = check_artifact(path, repair=True)
@@ -3140,10 +3115,117 @@ def test_ivf_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch):
     assert pre_want == want
 
     # 3. clean retry: one delta landing, hash-identical to the control
-    assert append_index(spark, path, delta) == 2
+    assert append_artifact(spark, path, delta) == 2
     assert _knn_rows(spark, path, emb) == want
     vec = spark.read.parquet(f"{path}/vectors")
     assert vec.count() == vec.select("vec_id").distinct().count() == 120
+
+
+def _exact_family(spark, family):
+    """(build(df, path), old, delta, stored(path), probe(path)) for one
+    of the exact-structure standing families: ``stored`` is the sorted
+    stored relation (LSH band rows, Bloom bits, merged HDR cells) and
+    ``probe`` runs the family's stored reader."""
+    from hpaste_spark.operators.dedup import (
+        build_bloom_filter,
+        build_lsh_index,
+        decontaminate_bloom_stored,
+        read_lsh_index,
+    )
+    from hpaste_spark.operators.sketches import build_hdr_baseline, read_hdr_baseline
+
+    if family == "hdr":
+        rows = [(i % 3, float(i * 37 % 1000)) for i in range(300)]
+        df = spark.createDataFrame(rows, "g INT, v DOUBLE")
+        old, delta = df.filter("v % 2 = 0"), df.filter("v % 2 = 1")
+
+        def stored(p):
+            return sorted(map(tuple, read_hdr_baseline(spark, p)[0].collect()))
+
+        return (
+            lambda d, p: build_hdr_baseline(d, p, "v", "g", sub_bits=5),
+            old, delta, stored, stored,
+        )
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[(i * 3 + j) % len(words)] for j in range(8))) for i in range(24)],
+        "doc_id INT, text STRING",
+    )
+    old, delta = docs.filter("doc_id % 3 != 2"), docs.filter("doc_id % 3 = 2")
+    if family == "lsh":
+        return (
+            lambda d, p: build_lsh_index(d, p, num_hashes=12, bands=3, shingle=2),
+            old, delta,
+            lambda p: sorted(map(tuple, read_lsh_index(spark, p)[0].collect())),
+            lambda p: read_lsh_index(spark, p),
+        )
+    return (
+        lambda d, p: build_bloom_filter(d, p, n=3, m_bits=4096, k_hashes=3),
+        old, delta,
+        lambda p: sorted(r["bit"] for r in spark.read.parquet(f"{p}/bits").collect()),
+        lambda p: decontaminate_bloom_stored(spark, p, docs).collect(),
+    )
+
+
+@pytest.mark.parametrize("family", ["lsh", "bloom", "hdr"])
+def test_exact_family_torn_append_detect_repair_retry(spark, tmp_path, monkeypatch, family):
+    """The IVF torn-append scenario on the LSH, Bloom and HDR artifacts:
+    kill the append between the delta data write and the meta publish
+    → the stored reader fails LOUDLY and a second writer is refused
+    while the journal is open → check_artifact(repair=True) rolls the
+    tree back to its pre-append files → the RETRY equals an
+    uninterrupted append exactly (no duplicated band rows, HDR counts
+    not doubled, Bloom bits equal), and a further retry is a no-op."""
+    from hpaste_spark.operators import artifacts
+
+    build, old, delta, stored, probe = _exact_family(spark, family)
+    control = str(tmp_path / "control")
+    build(old, control)
+    assert artifacts.append_artifact(spark, control, delta) == 2
+    want = stored(control)
+
+    path = str(tmp_path / "torn")
+    build(old, path)
+    data = artifacts.open_artifact(path)[0].data
+    pre_files = artifacts._list_rel_files(f"{path}/{data}")
+    real_commit = artifacts._append_commit
+    refused = []
+
+    def crash_commit(p, meta, sig):
+        # a second writer arriving while the journal is open is refused
+        for open_journal in (
+            lambda: artifacts.begin_append(p, [data], "other", 2),
+            lambda: artifacts.open_compact(p),
+        ):
+            with pytest.raises(artifacts.ConcurrentMaintenanceError):
+                open_journal()
+            refused.append(True)
+        raise OSError("simulated crash between data write and meta publish")
+
+    monkeypatch.setattr(artifacts, "_append_commit", crash_commit)
+    with pytest.raises(OSError, match="simulated crash"):
+        artifacts.append_artifact(spark, path, delta)
+    monkeypatch.setattr(artifacts, "_append_commit", real_commit)
+    assert refused == [True, True]
+    assert artifacts._list_rel_files(f"{path}/{data}") != pre_files, (
+        "the crash must land after the data write"
+    )
+
+    with pytest.raises(artifacts.TornArtifactError, match="append_pending"):
+        probe(path)
+    with pytest.raises(artifacts.TornArtifactError, match="append_pending"):
+        artifacts.append_artifact(spark, path, delta)
+
+    report = artifacts.check_artifact(path, repair=True)
+    assert any("TORN append" in line for line in report)
+    assert artifacts._list_rel_files(f"{path}/{data}") == pre_files
+
+    assert artifacts.append_artifact(spark, path, delta) == 2
+    assert stored(path) == want
+    assert artifacts.append_artifact(spark, path, delta) == 2  # retry: no-op
+    assert stored(path) == want
+    if family == "lsh":
+        assert len(want) == len(set(want)), "no duplicated band rows"
 
 
 def test_ann_append_retry_is_idempotent(spark, tmp_path):
@@ -3151,8 +3233,8 @@ def test_ann_append_retry_is_idempotent(spark, tmp_path):
     retry of the LAST COMMITTED append is recognized by its content
     signature and becomes a no-op for all three ANN families — version
     unchanged, row counts unchanged, results hash-identical."""
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         build_ivfadc_index,
         build_pq_index,
@@ -3164,25 +3246,25 @@ def test_ann_append_retry_is_idempotent(spark, tmp_path):
 
     ivf = str(tmp_path / "ivf")
     build_ivf_index(old, ivf, k_centroids=4)
-    assert append_index(spark, ivf, delta) == 2
+    assert append_artifact(spark, ivf, delta) == 2
     once = _knn_rows(spark, ivf, emb)
     n_once = spark.read.parquet(f"{ivf}/vectors").count()
-    assert append_index(spark, ivf, delta) == 2  # retry: no-op
+    assert append_artifact(spark, ivf, delta) == 2  # retry: no-op
     assert spark.read.parquet(f"{ivf}/vectors").count() == n_once
     assert _knn_rows(spark, ivf, emb) == once
 
     pq = str(tmp_path / "pq")
     build_pq_index(old, pq, m=4, k=8)
-    assert append_index(spark, pq, delta) == 2
+    assert append_artifact(spark, pq, delta) == 2
     n_codes = spark.read.parquet(f"{pq}/codes").count()
-    assert append_index(spark, pq, delta) == 2
+    assert append_artifact(spark, pq, delta) == 2
     assert spark.read.parquet(f"{pq}/codes").count() == n_codes == 120
 
     adc = str(tmp_path / "adc")
     build_ivfadc_index(old, adc, k_centroids=4, m=4, k=8)
-    assert append_index(spark, adc, delta) == 2
+    assert append_artifact(spark, adc, delta) == 2
     n_rows = spark.read.parquet(f"{adc}/codes").count()
-    assert append_index(spark, adc, delta) == 2
+    assert append_artifact(spark, adc, delta) == 2
     assert spark.read.parquet(f"{adc}/codes").count() == n_rows == 120 * 4
 
 
@@ -3193,8 +3275,8 @@ def test_ann_append_validates_delta_dim(spark, tmp_path):
     the IVF append too."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         build_ivfadc_index,
         build_pq_index,
@@ -3205,9 +3287,9 @@ def test_ann_append_validates_delta_dim(spark, tmp_path):
     bad = bad.select((F.col("vec_id") + 500).alias("vec_id"), "embedding")
 
     for build, append, kwargs in [
-        (build_ivf_index, append_index, {"k_centroids": 4}),
-        (build_pq_index, append_index, {"m": 4, "k": 8}),
-        (build_ivfadc_index, append_index, {"k_centroids": 4, "m": 4, "k": 8}),
+        (build_ivf_index, append_artifact, {"k_centroids": 4}),
+        (build_pq_index, append_artifact, {"m": 4, "k": 8}),
+        (build_ivfadc_index, append_artifact, {"k_centroids": 4, "m": 4, "k": 8}),
     ]:
         path = str(tmp_path / build.__name__)
         build(emb, path, **kwargs)
@@ -3231,9 +3313,9 @@ def test_ivf_compaction_between_swaps_crash_completed_by_fsck(
     import pytest
 
     import hpaste_spark.operators.artifacts as artifacts
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.artifacts import TornArtifactError, read_meta
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         compact_ivf_index,
     )
@@ -3244,14 +3326,14 @@ def test_ivf_compaction_between_swaps_crash_completed_by_fsck(
 
     control = str(tmp_path / "control")
     build_ivf_index(old, control, k_centroids=4)
-    append_index(spark, control, delta)
+    append_artifact(spark, control, delta)
     compact_ivf_index(spark, control, k_centroids=4)
     want = _knn_rows(spark, control, emb)
     assert read_meta(control)["version"] == 3
 
     path = str(tmp_path / "crash")
     build_ivf_index(old, path, k_centroids=4)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
 
     real_swap = artifacts.swap_live_dir
     calls = {"n": 0}
@@ -3290,8 +3372,8 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
     written (the candidates are graded, not materialized)."""
     import os as _os
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
         drift_recall,
     )
@@ -3303,7 +3385,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "drift")
     build_ivf_index(emb, path, k_centroids=4)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
     files_before = sorted(
         _os.path.join(r, f)
         for r, _d, fs in _os.walk(path)
@@ -3349,7 +3431,7 @@ def test_ivf_drift_recall_grades_live_artifact(spark, tmp_path):
 
 
 def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
-    """compact_index_files: after a build + two appends the codes tree
+    """compact_artifact: after a build + two appends the codes tree
     holds one fragment per (write, cid); compaction repartitions on cid
     — strictly fewer files, rows bit-identical, probe results
     bit-identical, partition layout (cid= dirs) preserved, meta version
@@ -3357,11 +3439,10 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
     family."""
     import os as _os
 
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators.artifacts import read_meta
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
-        compact_index_files,
         ivfadc_topk_indexed,
     )
 
@@ -3369,8 +3450,8 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
     path = str(tmp_path / "adc")
     build_ivfadc_index(emb.filter(F.col("vec_id") % 3 == 0), path,
                        k_centroids=4, m=4, k=8)
-    append_index(spark, path, emb.filter(F.col("vec_id") % 3 == 1))
-    append_index(spark, path, emb.filter(F.col("vec_id") % 3 == 2))
+    append_artifact(spark, path, emb.filter(F.col("vec_id") % 3 == 1))
+    append_artifact(spark, path, emb.filter(F.col("vec_id") % 3 == 2))
 
     def parquet_files():
         return sorted(
@@ -3393,7 +3474,7 @@ def test_ivfadc_compaction_consolidates_files_identically(spark, tmp_path):
     n_before = len(parquet_files())
     assert read_meta(path)["version"] == 3  # build + 2 appends
 
-    compact_index_files(spark, path)
+    compact_artifact(spark, path)
     assert len(parquet_files()) < n_before
     assert rows() == before_rows
     assert sorted(map(tuple, ivfadc_topk_indexed(
@@ -3414,8 +3495,8 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
 
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_pq_index,
         drift_recall,
     )
@@ -3427,7 +3508,7 @@ def test_pq_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "pqdrift")
     build_pq_index(emb, path, m=4, k=8)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
     union = emb.unionByName(delta)
     files_before = sorted(
         _os.path.join(r, f) for r, _d, fs in _os.walk(path) for f in fs
@@ -3467,8 +3548,8 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
 
     import pytest
 
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivfadc_index,
         drift_recall,
     )
@@ -3480,7 +3561,7 @@ def test_ivfadc_drift_recall_grades_live_artifact(spark, tmp_path):
     )
     path = str(tmp_path / "adcdrift")
     build_ivfadc_index(emb, path, k_centroids=4, m=4, k=8)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
     union = emb.unionByName(delta)
     files_before = sorted(
         _os.path.join(r, f) for r, _d, fs in _os.walk(path) for f in fs

@@ -1,6 +1,6 @@
-"""Round-13 tests for the one-call ANN maintenance pass
-(`similarity.ann_maintain`) and the IVF minor compaction it needs
-(`similarity.compact_index_files`) — the ingest-loop composition of the
+"""Tests for the one-call maintenance pass
+(`artifacts.maintain_artifact`) and the layout compaction it needs
+(`artifacts.compact_artifact`) — the ingest-loop composition of the
 rounds-11..13 machinery: fsck first, artifact_stats hygiene signal,
 drift-monitor re-train decision, journaled in-artifact action.
 
@@ -50,18 +50,17 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
     fragments per cid under the FROZEN standing centroids — rows,
     assignments, and probe results identical; version bumps;
     appends_since_compact resets; centroid epoch re-stamped to match."""
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
-        compact_index_files,
         ivf_topk_indexed,
     )
 
     path = str(tmp_path / "ivf_minor")
     build_ivf_index(_emb(spark, n=80, seed=3), path, k_centroids=4)
-    append_index(spark, path, _emb(spark, n=15, seed=4, start=1000))
-    append_index(spark, path, _emb(spark, n=15, seed=5, start=2000))
+    append_artifact(spark, path, _emb(spark, n=15, seed=4, start=1000))
+    append_artifact(spark, path, _emb(spark, n=15, seed=5, start=2000))
 
     q = _queries(spark, n=6).filter(F.col("qid") == 2).select(
         F.col("qe").alias("qv")
@@ -74,7 +73,7 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
     )
     frags_before = _n_files(f"{path}/vectors")
 
-    compact_index_files(spark, path)
+    compact_artifact(spark, path)
 
     artifacts.require_clean(path)  # journal gone, tree clean
     meta = artifacts.read_meta(path)
@@ -94,7 +93,7 @@ def test_compact_ivf_files_is_recall_invariant(spark, tmp_path):
         f"{path}/vectors"
     ), "build-time invariant restored: matching epoch sidecars"
     # a second append after the minor pass still lands cleanly
-    append_index(spark, path, _emb(spark, n=5, seed=6, start=3000))
+    append_artifact(spark, path, _emb(spark, n=5, seed=6, start=3000))
     assert spark.read.parquet(f"{path}/vectors").count() == 80 + 15 + 15 + 5
 
 
@@ -103,10 +102,9 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     (margin=-1) applies compact_ivf_index at the measured-best
     iteration count under its journal; hygiene-only trigger applies
     the MINOR pass (geometry frozen)."""
+    from hpaste_spark.operators.artifacts import append_artifact, maintain_artifact
     from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.similarity import ann_maintain
     from hpaste_spark.operators.similarity import (
-        append_index,
         build_ivf_index,
     )
 
@@ -116,10 +114,10 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     drifted = _emb(spark, n=40, seed=11, start=1000).select(
         "vec_id", F.transform("embedding", lambda x: x + 1.5).alias("embedding")
     )
-    append_index(spark, path, drifted)
+    append_artifact(spark, path, drifted)
 
     q = _queries(spark, n=10)
-    rep = ann_maintain(spark, path, queries=q, k=5, budget=10)
+    rep = maintain_artifact(spark, path, queries=q, k=5, budget=10)
     assert rep["family"] == "ivf"
     assert rep["fsck"] == []
     assert set(rep["drift"]) == {"appended", "compact_it1", "compact_it2"}
@@ -128,12 +126,12 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
 
     # force the re-train branch; apply=True alone must NOT run it (the
     # O(corpus) action sits behind its own switch)
-    rep1 = ann_maintain(
+    rep1 = maintain_artifact(
         spark, path, queries=q, k=5, budget=10, recall_margin=-1.0, apply=True
     )
     assert rep1["action"] == "retrain" and rep1["applied"] is False
 
-    rep2 = ann_maintain(
+    rep2 = maintain_artifact(
         spark, path, queries=q, k=5, budget=10, recall_margin=-1.0,
         apply_retrain=True,
     )
@@ -145,13 +143,13 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
     assert artifacts.artifact_stats(path)["appends_since_compact"] == 0
 
     # hygiene-only: no queries, compact_every=1 → the MINOR pass
-    append_index(spark, path, _emb(spark, n=10, seed=12, start=5000))
+    append_artifact(spark, path, _emb(spark, n=10, seed=12, start=5000))
     cent = sorted(
         tuple(r) for r in spark.read.parquet(f"{path}/centroids").collect()
     )
-    rep3 = ann_maintain(spark, path, compact_every=1, apply=True)
+    rep3 = maintain_artifact(spark, path, compact_every=1, apply=True)
     assert rep3["action"] == "compact"
-    assert rep3["plan"] == "compact_index_files(path)"
+    assert rep3["plan"] == "compact_artifact(path)"
     assert rep3["applied"] is True
     assert (
         sorted(tuple(r) for r in spark.read.parquet(f"{path}/centroids").collect())
@@ -162,13 +160,14 @@ def test_ann_maintain_ivf_decides_and_applies(spark, tmp_path):
 
 def test_ann_maintain_repairs_torn_tree_first(spark, tmp_path):
     """A loop that probes before repairing dies on TornArtifactError;
-    ann_maintain fscks FIRST — a planted torn append (journal + stray
+    maintain_artifact fscks FIRST — a planted torn append (journal + stray
     delta file) is rolled back and the pass completes on the clean
     tree."""
     import json
 
+    from hpaste_spark.operators.artifacts import maintain_artifact
     from hpaste_spark.operators import artifacts
-    from hpaste_spark.operators.similarity import ann_maintain, build_ivf_index
+    from hpaste_spark.operators.similarity import build_ivf_index
 
     path = str(tmp_path / "ivf_torn")
     build_ivf_index(_emb(spark, n=60, seed=3), path, k_centroids=4)
@@ -193,7 +192,7 @@ def test_ann_maintain_repairs_torn_tree_first(spark, tmp_path):
     with pytest.raises(artifacts.TornArtifactError):
         artifacts.require_clean(path)
 
-    rep = ann_maintain(spark, path)
+    rep = maintain_artifact(spark, path)
     assert any("TORN append" in line for line in rep["fsck"])
     assert not os.path.exists(stray)
     artifacts.require_clean(path)  # clean after the pass
@@ -205,10 +204,9 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
     store-of-record rebuild — behind apply_retrain (never plain
     apply), executed blue/green via retrain_index's root swap; the
     hygiene branch (layout compaction) runs under plain apply."""
+    from hpaste_spark.operators.artifacts import append_artifact, maintain_artifact
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators.similarity import (
-        ann_maintain,
-        append_index,
         build_pq_index,
     )
 
@@ -216,11 +214,11 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
     base = _emb(spark, n=80, seed=3)
     delta = _emb(spark, n=20, seed=4, start=1000)
     build_pq_index(base, path, m=4, k=8)
-    append_index(spark, path, delta)
+    append_artifact(spark, path, delta)
     corpus = base.unionByName(delta)
 
     q = _queries(spark, n=8)
-    rep = ann_maintain(
+    rep = maintain_artifact(
         spark, path, queries=q, corpus=corpus, k=5, budget=8,
         recall_margin=-1.0, apply=True,
     )
@@ -233,11 +231,11 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
 
     # corpus omitted → loud, named requirement
     with pytest.raises(ValueError, match="store-of-record"):
-        ann_maintain(spark, path, queries=q)
+        maintain_artifact(spark, path, queries=q)
 
     # hygiene branch first (plain apply): journaled layout compaction
     frags = _n_files(f"{path}/codes")
-    rep2 = ann_maintain(spark, path, compact_every=1, apply=True)
+    rep2 = maintain_artifact(spark, path, compact_every=1, apply=True)
     assert rep2["action"] == "compact"
     assert rep2["applied"] is True
     assert _n_files(f"{path}/codes") < frags
@@ -246,7 +244,7 @@ def test_ann_maintain_pq_retrain_is_opt_in_blue_green(spark, tmp_path):
 
     # now the opt-in re-train: blue/green root swap, version chain
     # carried forward, fresh replay ring, clean new root
-    rep3 = ann_maintain(
+    rep3 = maintain_artifact(
         spark, path, queries=q, corpus=corpus, k=5, budget=8,
         recall_margin=-1.0, apply_retrain=True,
     )
@@ -267,6 +265,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
     parked complete at <root>_old, recover renames it back (journal
     inside is then fsck'd) and the retry completes; (b) build failure →
     journal aborted, sibling tmp removed."""
+    from hpaste_spark.operators.artifacts import maintain_artifact
     from hpaste_spark.operators import artifacts
     from hpaste_spark.operators import similarity as sim
     from hpaste_spark.operators.similarity import (
@@ -322,7 +321,7 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
 
     # the retrain reset the drift clock: a maintenance pass with
     # queries must SKIP the (expensive) monitor on the fresh geometry
-    rep = sim.ann_maintain(
+    rep = maintain_artifact(
         spark, path, queries=_queries(spark, n=4), corpus=base
     )
     assert rep["drift"] is None and rep["action"] == "none"
@@ -330,16 +329,15 @@ def test_retrain_blue_green_crash_windows(spark, tmp_path, monkeypatch):
 
 
 def test_standing_artifact_maintain_hdr_and_bloom(spark, tmp_path):
-    """ann_maintain's sibling for the parquet-meta artifacts: fsck
+    """The same maintenance pass on the exact-structure families: fsck
     (clears a planted crashed-swap leftover), file-count signal on the
     family's data dir, threshold-gated layout compaction under the
-    family's own append_lock.  No drift leg by design (exact
-    structures)."""
+    compaction journal.  No drift leg (exact structures): queries are
+    ignored."""
     from pyspark.sql import functions as F
 
-    from hpaste_spark.operators.maintenance import standing_artifact_maintain
+    from hpaste_spark.operators.artifacts import append_artifact, maintain_artifact
     from hpaste_spark.operators.sketches import (
-        append_hdr_baseline,
         build_hdr_baseline,
         hdr_merge,
         hdr_quantiles,
@@ -350,7 +348,7 @@ def test_standing_artifact_maintain_hdr_and_bloom(spark, tmp_path):
     vals = spark.range(500).select((F.col("id") % 97 + 1.0).alias("v"))
     build_hdr_baseline(vals, path)
     for i in range(3):
-        append_hdr_baseline(
+        append_artifact(
             spark, path,
             spark.range(100).select((F.col("id") % (50 + i) + 1.0).alias("v")),
         )
@@ -358,38 +356,37 @@ def test_standing_artifact_maintain_hdr_and_bloom(spark, tmp_path):
         hdr_merge(spark.read.parquet(f"{path}/sketch"))
     ).collect()
 
-    rep = standing_artifact_maintain(spark, path, "hdr", max_files_per_dir=2)
+    rep = maintain_artifact(
+        spark, path, queries=_queries(spark, n=2), max_files_per_dir=2
+    )
+    assert rep["family"] == "hdr" and rep["drift"] is None
     assert rep["action"] == "compact" and rep["applied"] is False
-    assert rep["plan"] == "compact_hdr_baseline(path)"
+    assert rep["plan"] == "compact_artifact(path)"
     assert any("max_files_per_dir" in line for line in rep["fsck"])
 
-    rep2 = standing_artifact_maintain(
-        spark, path, "hdr", max_files_per_dir=2, apply=True
-    )
+    rep2 = maintain_artifact(spark, path, max_files_per_dir=2, apply=True)
     assert rep2["applied"] is True and rep2["version_after"] == 5
     q_after = hdr_quantiles(
         hdr_merge(spark.read.parquet(f"{path}/sketch"))
     ).collect()
     assert q_after == q_before, "hdr_merge compaction is read-identical"
-    rep3 = standing_artifact_maintain(spark, path, "hdr", max_files_per_dir=2)
+    rep3 = maintain_artifact(spark, path, max_files_per_dir=2)
     assert rep3["action"] == "none" and rep3["stats"]["data_dirs"]["sketch"] <= 2
 
     # crashed-swap leftover is fsck'd before the signal is read
-    import os
-
     tmp_leftover = os.path.join(path, "sketch_compact_tmp")
     os.makedirs(tmp_leftover)
     with open(os.path.join(tmp_leftover, "part-crashed.parquet"), "w") as fh:
         fh.write("crashed build")
-    rep4 = standing_artifact_maintain(spark, path, "hdr", max_files_per_dir=2)
+    rep4 = maintain_artifact(spark, path, max_files_per_dir=2)
     assert any("crashed compaction build" in line for line in rep4["fsck"])
     assert not os.path.isdir(tmp_leftover)
 
-    # family validation is loud
-    with pytest.raises(ValueError, match="unknown standing-artifact"):
-        standing_artifact_maintain(spark, path, "ivf")
-    with pytest.raises(ValueError, match="no bits/"):
-        standing_artifact_maintain(spark, path, "bloom")
+    # the family comes from meta.json: a tree without one is refused
+    bare = str(tmp_path / "bare")
+    os.makedirs(os.path.join(bare, "bits"))
+    with pytest.raises(ValueError, match="not a standing artifact"):
+        maintain_artifact(spark, bare)
 
 
 def test_stored_rows_counts_footers_and_fails_loudly(spark, tmp_path):

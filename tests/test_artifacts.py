@@ -389,55 +389,9 @@ def test_begin_append_is_single_writer(tmp_path):
         begin_compact(root, ["vectors"], "eeee", 2)
 
 
-def test_append_lock_contended_and_stale(tmp_path):
-    """append_lock (round-12: the documented single-writer contract for
-    the parquet-meta artifacts, now enforced): a second writer inside a
-    live lock raises instead of losing a version bump; a CRASHED
-    holder's lock older than the TTL is broken and the append proceeds;
-    the lock is released on error (it guards concurrency, not crash
-    atomicity)."""
-    import time
-
-    import pytest
-
-    from hpaste_spark.operators.artifacts import (
-        APPEND_LOCK,
-        ConcurrentMaintenanceError,
-        append_lock,
-    )
-
-    root = str(tmp_path / "art")
-    os.makedirs(root)
-
-    with append_lock(root):
-        assert os.path.exists(os.path.join(root, APPEND_LOCK))
-        with pytest.raises(ConcurrentMaintenanceError, match="single-writer"):
-            with append_lock(root):
-                raise AssertionError("second writer must not enter")
-    assert not os.path.exists(os.path.join(root, APPEND_LOCK)), "released on exit"
-
-    # stale lock from a crashed holder: broken after the TTL
-    lockfile = os.path.join(root, APPEND_LOCK)
-    with open(lockfile, "w") as fh:
-        fh.write("pid=0 t=0")
-    past = time.time() - 7200
-    os.utime(lockfile, (past, past))
-    with append_lock(root, ttl_s=3600):
-        pass  # acquired by breaking the stale lock
-    assert not os.path.exists(lockfile)
-
-    # released on error too
-    try:
-        with append_lock(root):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert not os.path.exists(lockfile)
-
-
 # ---------------------------------------------------------------------------
 # round-13: torn JOURNAL files, cross-writer exclusion, sig ring,
-# atomic stale-lock break, artifact_stats
+# artifact_stats
 
 
 def test_torn_append_journal_file_is_adjudicated(tmp_path):
@@ -634,57 +588,6 @@ def test_delta_sig_ring_records_and_replays():
         assert not sig_is_replay(meta, s)
     assert not sig_is_replay(meta, None)
     assert not sig_is_replay(None, sigs[-1])
-
-
-def test_stale_lock_break_is_atomic_single_winner(tmp_path, monkeypatch):
-    """r12 verdict ask #6 (the unlink race): two breakers at one stale
-    lock → exactly one proceeds.  Breaker B completes a full
-    break-and-reacquire between breaker A's staleness stat and A's
-    rename; A's rename then steals B's FRESH lock, the inode check
-    catches it, A restores the lock and raises contended — the old
-    getmtime-then-unlink would have deleted B's fresh lock and let
-    both in."""
-    import time
-
-    import pytest
-
-    import hpaste_spark.operators.artifacts as artifacts
-    from hpaste_spark.operators.artifacts import (
-        APPEND_LOCK,
-        ConcurrentMaintenanceError,
-        append_lock,
-    )
-
-    root = str(tmp_path / "art")
-    os.makedirs(root)
-    lock = os.path.join(root, APPEND_LOCK)
-    with open(lock, "w") as fh:
-        fh.write("pid=0 t=0")  # the crashed holder's stale lock
-    past = time.time() - 7200
-    os.utime(lock, (past, past))
-
-    real_rename = os.rename
-    state = {"fired": False}
-
-    def rename_hook(src, dst):
-        if src == lock and not state["fired"]:
-            state["fired"] = True
-            # breaker B wins the race: full break + reacquire while A
-            # is between its stat and its rename
-            real_rename(lock, lock + ".broken.by_b")
-            os.unlink(lock + ".broken.by_b")
-            with open(lock, "w") as fh:
-                fh.write(f"pid=B t={time.time()}")  # B's FRESH lock
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(artifacts.os, "rename", rename_hook)
-    with pytest.raises(ConcurrentMaintenanceError, match="single-writer"):
-        with append_lock(root, ttl_s=3600):
-            raise AssertionError("A must not acquire — B holds a fresh lock")
-    monkeypatch.setattr(artifacts.os, "rename", real_rename)
-    assert os.path.isfile(lock), "B's fresh lock survives A's aborted break"
-    with open(lock) as fh:
-        assert "pid=B" in fh.read(), "the surviving lock is B's, not a restore-copy"
 
 
 def test_artifact_stats_and_small_files_signal(tmp_path):

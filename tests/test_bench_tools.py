@@ -123,3 +123,52 @@ def test_warm_up_failure_is_reported_by_name(capsys):
     bench._warm("sim_ivf_topk @ /sf0.001", fail)
     err = capsys.readouterr().err
     assert "sim_ivf_topk @ /sf0.001" in err and "cold codegen path" in err
+
+
+def test_perfbench_traced_run_spans_resolve():
+    """The benchmark's traced run wraps 10 engine attributes
+    (``perfbench/run.py::Run.install_spans``) and reads
+    ``storage.snapshot_dir(current_version())`` after every write; a
+    rename of any of them fails only that run, which no other test
+    executes.  Install the spans on a stub run holding a real tracer:
+    all 10 wraps resolve and replace the attribute, and ``unwrap_all``
+    restores every original."""
+    import importlib.util
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    saved_path, saved_mods = list(sys.path), set(sys.modules)
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_run_under_test", os.path.join(root, "perfbench", "run.py")
+    )
+    run = importlib.util.module_from_spec(spec)
+    try:
+        spec.loader.exec_module(run)
+    finally:
+        sys.path[:] = saved_path
+        # drop perfbench's own top-level modules (batch, kv, ops, ...)
+        bench_dir = os.path.join(root, "perfbench")
+        for name in set(sys.modules) - saved_mods:
+            if os.path.dirname(getattr(sys.modules[name], "__file__", None) or "") == bench_dir:
+                del sys.modules[name]
+
+    from hpaste_spark.sources.storage import ParquetStorage
+
+    class Stub:
+        tracer = run.Tracer()
+
+    stub, patched = Stub(), []
+    try:
+        run.Run.install_spans(stub)
+        patched = list(stub.tracer._patched)  # unwrap_all clears the list
+        assert len(patched) == 10
+        for owner, attr, orig in patched:
+            assert getattr(owner, attr) is not orig
+            assert getattr(owner, attr).__wrapped__ is orig
+    finally:
+        stub.tracer.unwrap_all()
+    assert len(patched) == 10
+    for owner, attr, orig in patched:
+        assert getattr(owner, attr) is orig
+    for attr in ("snapshot_dir", "current_version"):
+        assert callable(getattr(ParquetStorage, attr))

@@ -208,6 +208,23 @@ PINNED_TYPED = PINNED + [
 ]
 
 
+# pinned scoped deletes of a key holding a quote and a backslash (the
+# deletes are rendered as SQL text): its map and typed cells are
+# deleted, a neighbouring key's are not
+QUOTED = "a'\\1"
+PINNED_QUOTED = [
+    [
+        {"kind": "put", "key": QUOTED, "title": "a", "views": 1, "m": {"qa": 1, "qb": 2}},
+        {"kind": "put", "key": "a1", "title": "b", "views": 2, "m": {"qa": 3}},
+    ],
+    [
+        {"kind": "delete", "key": QUOTED, "scope": "values", "fam": "m", "quals": {"qa"}},
+        {"kind": "delete", "key": QUOTED, "scope": "family", "fam": "meta", "quals": {"title"}},
+        {"kind": "put", "key": "a1", "title": "c", "views": None, "m": {}},
+    ],
+]
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -215,6 +232,7 @@ PINNED_TYPED = PINNED + [
 )
 @example(batches=PINNED)
 @example(batches=PINNED_TYPED)
+@example(batches=PINNED_QUOTED)
 @given(batches=program)
 def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
     model: dict = {}

@@ -786,12 +786,12 @@ def test_ivf_appended_probe_still_partition_prunes(spark, queries):
 
 
 def test_append_lsh_delta_signs_only_new_docs(spark, queries):
-    """append_lsh_index never rescans the pre-existing corpus: the
-    delta band relation it writes (exposed via append_lsh_delta_bands)
-    references ONLY the new docs — one documents scan, zero reads of
-    the stored bands (geometry arrives via the collected 1-row meta,
-    not a join)."""
-    from hpaste_spark.operators.dedup import append_lsh_delta_bands
+    """The LSH append never rescans the pre-existing corpus: the delta
+    band relation it writes (the LSH codec's encode under the pinned
+    geometry) references ONLY the new docs — one documents scan, zero
+    reads of the stored bands (geometry arrives via meta.json, not a
+    join)."""
+    from hpaste_spark.operators import artifacts
 
     # the registry's appended artifact (already built+refreshed)
     import __spark_entry__ as E
@@ -801,7 +801,8 @@ def test_append_lsh_delta_signs_only_new_docs(spark, queries):
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .filter("length(trim(text)) > 0 AND doc_id % 10 = 0")
     )
-    delta, meta = append_lsh_delta_bands(spark, path, new_docs)
+    codec, meta = artifacts.open_artifact(path, "lsh")
+    delta = codec.encode(spark, path, meta, new_docs)
     plan = plan_of(delta)
     assert plan.count("documents.parquet") == 1, (
         "the delta must sign only the new docs"

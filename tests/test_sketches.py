@@ -97,6 +97,7 @@ def test_hdr_baseline_artifact_family_pin(spark, tmp_path):
     instead of silently reading bands under the wrong rule."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import read_meta, write_meta
     from hpaste_spark.operators.sketches import (
         build_hdr_baseline,
         hdr_sketch,
@@ -117,23 +118,19 @@ def test_hdr_baseline_artifact_family_pin(spark, tmp_path):
     }
     assert stored == direct and len(stored) > 0
 
-    spark.createDataFrame(
-        [(5, "g", 99)], "sub_bits INT, group_col STRING, family INT"
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, {**read_meta(path), "family": 99})
     with pytest.raises(ValueError, match="rule 99"):
         read_hdr_baseline(spark, path)
 
 
 def test_hdr_baseline_append_equals_full_build(spark, tmp_path):
-    """append_hdr_baseline(window1-baseline, window2) reads identically
+    """append_artifact(window1-baseline, window2) reads identically
     to build_hdr_baseline(window1 ∪ window2) — hdr_merge-additivity
     through the artifact: the reader collapses the appended partials
-    cell-wise.  Version bumps; sub_bits comes from the artifact, not
-    the caller; mode='append' on the build path is rejected."""
-    import pytest
-
+    cell-wise.  Version bumps; sub_bits and the value column come from
+    the artifact, not the caller."""
+    from hpaste_spark.operators.artifacts import append_artifact
     from hpaste_spark.operators.sketches import (
-        append_hdr_baseline,
         build_hdr_baseline,
         read_hdr_baseline,
     )
@@ -147,7 +144,7 @@ def test_hdr_baseline_append_equals_full_build(spark, tmp_path):
     inc_path = str(tmp_path / "hdr_inc")
     full_path = str(tmp_path / "hdr_full")
     build_hdr_baseline(w1, inc_path, "v", "g", sub_bits=5)
-    version = append_hdr_baseline(spark, inc_path, w2, "v")
+    version = append_artifact(spark, inc_path, w2)
     build_hdr_baseline(both, full_path, "v", "g", sub_bits=5)
 
     inc_sk, inc_meta = read_hdr_baseline(spark, inc_path)
@@ -159,22 +156,44 @@ def test_hdr_baseline_append_equals_full_build(spark, tmp_path):
     assert version == 2 and inc_meta["version"] == 2
     assert inc_meta["sub_bits"] == 5
 
-    with pytest.raises(ValueError, match="append_hdr_baseline"):
-        build_hdr_baseline(w2, inc_path, "v", "g", mode="append")
+
+def test_hdr_identical_window_appends_once(spark, tmp_path):
+    """HDR windows carry no ids, so the append's content signature is
+    the window's (group, value) rows: appending an identical window
+    twice — a retry, a replayed job, or genuinely the same window — is
+    ONE append (version and counts unchanged), never a silent double
+    count; a window that differs in any row is a new append."""
+    from hpaste_spark.operators.artifacts import append_artifact
+    from hpaste_spark.operators.sketches import build_hdr_baseline, read_hdr_baseline
+
+    path = str(tmp_path / "hdr_same")
+    w = spark.createDataFrame([("a", v) for v in range(1, 120)], "g string, v long")
+    build_hdr_baseline(w, path, "v", "g", sub_bits=5)
+    cells = lambda: {  # noqa: E731
+        (r["g"], r["bucket_lo"]): r["cnt"]
+        for r in read_hdr_baseline(spark, path)[0].collect()
+    }
+    assert append_artifact(spark, path, w) == 2
+    once = cells()
+    assert append_artifact(spark, path, w) == 2, "identical window: one append"
+    assert cells() == once
+    assert sum(once.values()) == 2 * 119
+    w2 = w.unionAll(spark.createDataFrame([("a", 5)], "g string, v long"))
+    assert append_artifact(spark, path, w2) == 3
+    assert sum(cells().values()) == 3 * 119 + 1
 
 
 def test_hdr_baseline_compaction(spark, tmp_path):
-    """compact_hdr_baseline after appends: read-back is the identical
+    """compact_artifact after appends: read-back is the identical
     merged counter table (hdr_merge idempotence), strictly fewer
     parquet files AND fewer stored rows (the per-window partials
     collapse once at compaction instead of on every read), version
     bumped, bucket rule preserved."""
     import os
 
+    from hpaste_spark.operators.artifacts import append_artifact, compact_artifact
     from hpaste_spark.operators.sketches import (
-        append_hdr_baseline,
         build_hdr_baseline,
-        compact_hdr_baseline,
         read_hdr_baseline,
     )
 
@@ -186,11 +205,10 @@ def test_hdr_baseline_compaction(spark, tmp_path):
         path, "v", "g", sub_bits=5,
     )
     for lo, hi in ((90, 260), (240, 400), (10, 60)):
-        append_hdr_baseline(
+        append_artifact(
             spark,
             path,
             spark.createDataFrame([("a", v) for v in range(lo, hi)], "g string, v long"),
-            "v",
         )
 
     nfiles = lambda: len(  # noqa: E731
@@ -203,7 +221,7 @@ def test_hdr_baseline_compaction(spark, tmp_path):
     before_rows = spark.read.parquet(f"{path}/sketch").count()
     before_cells = cells(read_hdr_baseline(spark, path)[0])
 
-    v = compact_hdr_baseline(spark, path)
+    v = compact_artifact(spark, path)
     assert v == 5  # build(1) + 3 appends + compact
     assert nfiles() < before_files and nfiles() <= 1
     assert spark.read.parquet(f"{path}/sketch").count() < before_rows

@@ -780,12 +780,13 @@ def test_stream_bloom_flags_stored_derives_geometry_and_pins_family(
     spark, tmp_path
 ):
     """The stored-artifact entry point must derive n/m_bits/k_hashes
-    from {path}/meta (hand-typed geometry that disagrees with the bits
+    from {path}/meta.json (hand-typed geometry that disagrees with the bits
     yields silent false negatives — ADVICE r7), emit exactly the batch
     stored-probe rows, and hard-error on a probe-family mismatch like
     its batch twin decontaminate_bloom_stored."""
     import pytest
 
+    from hpaste_spark.operators.artifacts import read_meta, write_meta
     from hpaste_spark.operators.dedup import (
         _doc_grams,
         bloom_membership,
@@ -833,9 +834,7 @@ def test_stream_bloom_flags_stored_derives_geometry_and_pins_family(
     # must be rejected before any probe runs
     bad = str(tmp_path / "bloom_bad_family")
     bits.write.parquet(f"{bad}/bits")
-    spark.createDataFrame(
-        [(8192, 2, 4, 1)], "m_bits INT, k_hashes INT, n INT, family INT"
-    ).write.parquet(f"{bad}/meta")
+    write_meta(bad, {**read_meta(path), "family": 1})
     with pytest.raises(ValueError, match="probe family"):
         stream_bloom_flags_stored(spark, bad, stream)
 
