@@ -191,22 +191,30 @@ def delta_signature(df, *cols: str) -> str:
     of rows cancels in both XOR and SUM simultaneously unless the
     hashes themselves collide.  The sum runs over ``decimal(38,0)`` so
     it cannot overflow (Spark ANSI) below ~10^18 rows per delta."""
+    return _delta_pass(df, list(cols))[0]
+
+
+def _delta_pass(df, cols: "list[str]", vec_col: "str | None" = None):
+    """One aggregation over an append delta: its :func:`delta_signature`
+    string, its row count and, with ``vec_col``, the smallest and the
+    largest ``size(vec_col)`` (else None, None)."""
     from pyspark.sql import functions as F
 
+    h = F.xxhash64(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    sizes = [F.size(vec_col).alias("d")] if vec_col else []
+    dims = [F.min("d").alias("lo"), F.max("d").alias("hi")] if vec_col else []
     row = (
-        df.select(
-            F.xxhash64(
-                F.to_json(F.struct(*[F.col(c) for c in cols]))
-            ).alias("h")
-        )
+        df.select(h.alias("h"), *sizes)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(h)").alias("x"),
             F.sum(F.col("h").cast("decimal(38,0)")).alias("s"),
+            *dims,
         )
         .first()
     )
-    return f"{row['n']}:{row['x']}:{row['s']}"
+    lo, hi = (row["lo"], row["hi"]) if vec_col else (None, None)
+    return f"{row['n']}:{row['x']}:{row['s']}", row["n"], lo, hi
 
 
 def sig_is_replay(meta: "dict | None", sig: "str | None") -> bool:
@@ -1085,12 +1093,13 @@ def _append_open(path: str, meta: dict, delta, cols: "list[str]", data_dirs: "li
     verdict ask #1).  The caller has refused a tree with a pending
     journal (loud, single-writer) and read ``meta``; then:
 
-    1. validate the delta's dimensionality against the meta's pinned
-       ``dim``, for the families that pin one (a wrong-dim delta would
-       mis-split sub/wpos and encode garbage with no error — r11
-       ADVICE),
-    2. compute the delta's content signature over ``cols``; if the
-       meta's sig RING (the last :data:`DELTA_SIG_RING` committed
+    1. in one Spark pass over the delta, compute its content signature
+       over ``cols``, its row count (0: empty delta, no-op) and, for
+       the families that pin a ``dim``, the least and greatest vector
+       size, and validate both against the pinned ``dim`` (a wrong-dim
+       delta would mis-split sub/wpos and encode garbage with no error
+       — r11 ADVICE),
+    2. if the meta's sig RING (the last :data:`DELTA_SIG_RING` committed
        appends) remembers it, the call is a replay of a committed
        append → no-op,
     3. otherwise open the :data:`APPEND_PENDING` journal with a
@@ -1106,17 +1115,16 @@ def _append_open(path: str, meta: dict, delta, cols: "list[str]", data_dirs: "li
 
     Returns ``(meta, sig)``; ``sig is None`` means no-op (retry replay
     or empty delta) and the caller must write nothing."""
-    first = delta.select(*cols).first()
-    if first is None:
+    sig, n, lo, hi = _delta_pass(delta, cols, meta["vec_col"] if "dim" in meta else None)
+    if n == 0:
         return meta, None  # empty delta: nothing to journal or write
-    if "dim" in meta and len(first[meta["vec_col"]]) != meta["dim"]:
+    if "dim" in meta and (lo, hi) != (meta["dim"], meta["dim"]):
         raise ValueError(
-            f"append delta dimensionality {len(first[meta['vec_col']])} != "
+            f"append delta dimensionality {lo if lo != meta['dim'] else hi} != "
             f"the artifact's pinned dim {meta['dim']} at {path} — encoding "
             "it would silently mis-split subvectors; fix the delta or "
             "rebuild the index at the new dimensionality"
         )
-    sig = delta_signature(delta, *cols)
     if sig_is_replay(meta, sig):
         return meta, None  # replay of a ring-remembered committed append
     begin_append(path, data_dirs, sig, meta["version"] + 1)

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 
 from hpaste_spark.schema.row import HRow, build_rows
 from hpaste_spark.schema.table import Column, ColumnFamily, HTable
-
-# Above this many keys a multi-get joins against a keys DataFrame
-# instead of an IN-list literal (scale path: the key set itself may be
-# big; a broadcast-hash semi-join is what HBase's batched multi-get
-# approximated with one RPC per region, Query2.scala:690-825).
-ISIN_THRESHOLD = 512
+from hpaste_spark.sources.storage import ISIN_THRESHOLD
 
 
 class CellFilter:
@@ -556,7 +551,10 @@ class Query2Builder:
         construction' phase of the reference (SURVEY §3.1 steps 2-5) —
         Catalyst owns pushdown/pruning from here."""
         df = self.table.to_df(
-            self.spark, version=self.snapshot_version, **self._prefix_prune_args()
+            self.spark,
+            version=self.snapshot_version,
+            keys=self.keys or None,
+            **self._prefix_prune_args(),
         )
         df = self._key_filter(df)
         if self.start_row is not None:

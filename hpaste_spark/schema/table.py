@@ -252,7 +252,13 @@ class HTable:
         key_prefixes: list[str] | None = None,
         key_prefix_range: tuple[str | None, str | None] | None = None,
         version: int | None = None,
+        keys: list | None = None,
     ) -> DataFrame:
+        """The table as a DataFrame (a snapshot of its storage, or its
+        connector's DataFrame).  ``keys`` names the row keys a point get
+        or multi-get wants: storage may then return only those rows
+        (see :meth:`ParquetStorage.read`), so the caller still applies
+        its own key filter."""
         if self.df_provider is not None:
             if version is not None:
                 raise ValueError(
@@ -266,6 +272,7 @@ class HTable:
             key_prefixes=key_prefixes,
             key_prefix_range=key_prefix_range,
             version=version,
+            keys=keys,
         )
 
     def overwrite(self, df: DataFrame, marker_file: "tuple[str, str] | None" = None) -> int:

@@ -18,16 +18,29 @@ start/stop-row pruning HBase got from its sorted regions
 
 from __future__ import annotations
 
+import bisect
+import contextlib
 import os
 import shutil
 import time
 from collections.abc import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 VERSION_FILE = "_VERSION"
+
+# Above this many keys a keyed read is a scan, not a point lookup: the
+# storage layer leaves it to Spark's file scan, and Query2 joins against
+# a keys DataFrame instead of an IN-list literal (scale path: the key
+# set itself may be big; a broadcast-hash semi-join is what HBase's
+# batched multi-get approximated with one RPC per region,
+# Query2.scala:690-825).
+ISIN_THRESHOLD = 512
+
+_INTEGRAL_KEYS = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -133,6 +146,7 @@ class ParquetStorage:
         key_prefixes: list[str] | None = None,
         key_prefix_range: tuple[str | None, str | None] | None = None,
         version: int | None = None,
+        keys: list | None = None,
     ) -> DataFrame:
         """Read the current snapshot — or, with ``version=N``, time
         travel to any snapshot still on disk (snapshots are immutable
@@ -146,7 +160,27 @@ class ParquetStorage:
         snapshot is prefix-partitioned, so no job runs to infer it.
         Stored columns the schema lacks are not read; declared columns a
         snapshot lacks read as null.  ``schema=None`` infers the schema
-        from the files."""
+        from the files.
+
+        With ``keys`` too (a point get or multi-get), the snapshot is
+        read on the driver, as an HBase Get reads the region holding the
+        key: only the data files of the keys' ``_kp`` directories (every
+        data file of an unpartitioned snapshot) are listed, only the row
+        groups whose ``rowkey`` min/max stats bracket a key (or carry no
+        usable stats) are read, with pyarrow, and the rows holding a key
+        come back as a local relation.  Catalyst folds the caller's
+        filters and projections into a local relation, so its ``take``
+        or ``collect`` runs no Spark job.  Spark's own scan serves the
+        read instead when there are more than ``ISIN_THRESHOLD`` keys,
+        when the keys are not all ``str`` on a string rowkey or all
+        ``int`` on an integral one, when the candidate files exceed
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (past
+        it Spark itself lists files with a job, not on the driver) or
+        when the selected row groups exceed
+        ``spark.sql.autoBroadcastJoinThreshold`` compressed (what Spark
+        already moves through the driver for a broadcast).  Both scans
+        return the rows holding a key; the keyed one returns no others,
+        so a caller that filters to its keys gets the same rows."""
         if not self.exists():
             if schema is None:
                 raise FileNotFoundError(f"table {self.name} does not exist")
@@ -159,14 +193,18 @@ class ParquetStorage:
                 f"(available: {self.versions()})"
             )
         snap = self.snapshot_dir(version)
-        partitioned = any(e.startswith("_kp=") for e in os.listdir(snap))
+        kp_dirs = [e for e in os.listdir(snap) if e.startswith("_kp=")]
+        if keys and schema is not None:
+            df = self._keyed_scan(spark, schema, snap, kp_dirs, keys)
+            if df is not None:
+                return df
         if schema is None:
             df = spark.read.parquet(snap)
         else:
-            if partitioned:
+            if kp_dirs:
                 schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
             df = spark.read.schema(schema).parquet(snap)
-        if partitioned:
+        if kp_dirs:
             if key_prefixes is not None:
                 df = df.filter(F.col("_kp").isin([*key_prefixes]))
             if key_prefix_range is not None:
@@ -178,6 +216,70 @@ class ParquetStorage:
                     df = df.filter(F.col("_kp") <= hi)
             df = df.drop("_kp")
         return df
+
+    def _keyed_scan(
+        self, spark: SparkSession, schema: T.StructType, snap: str, kp_dirs: list[str], keys: list
+    ) -> DataFrame | None:
+        """The driver-side scan of :meth:`read` for ``keys``, or None
+        when the read is past one of its bounds."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        key_type = schema["rowkey"].dataType
+        if len(keys) > ISIN_THRESHOLD or not (
+            isinstance(key_type, T.StringType) and all(type(k) is str for k in keys)
+            or isinstance(key_type, _INTEGRAL_KEYS) and all(type(k) is int for k in keys)
+        ):
+            return None
+        if not kp_dirs:
+            dirs = [snap]
+        elif self.partition_prefix_len:
+            prefixes = {str(k)[: self.partition_prefix_len] for k in keys}
+            dirs = [os.path.join(snap, e) for e in kp_dirs if _partition_value(e) in prefixes]
+        else:
+            return None  # a partitioned snapshot of unknown prefix length
+        conf = spark._jsparkSession.sessionState().conf()
+        max_files, files = conf.parallelPartitionDiscoveryThreshold(), []
+        for d in dirs:
+            files += [os.path.join(d, f) for f in sorted(os.listdir(d)) if not f.startswith(("_", "."))]
+            if len(files) > max_files:
+                return None
+        budget, selected = conf.autoBroadcastJoinThreshold(), 0
+        wanted = sorted(set(keys))
+        target = to_arrow_schema(schema)
+        with contextlib.ExitStack() as files_open:
+            picked = []
+            for path in files:
+                # Spark writes timestamps as INT96; at the default ns unit
+                # instants outside 1677-2262 would overflow
+                pf = files_open.enter_context(pq.ParquetFile(path, coerce_int96_timestamp_unit="us"))
+                md = pf.metadata
+                leaves = [md.schema.column(j).path for j in range(md.num_columns)]
+                if "rowkey" not in leaves:
+                    continue  # every row's rowkey reads as null: none is a key
+                j = leaves.index("rowkey")
+                groups = []
+                for i in range(md.num_row_groups):
+                    rg = md.row_group(i)
+                    if _brackets(rg.column(j).statistics, wanted):
+                        groups.append(i)
+                        selected += sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
+                if selected > budget:
+                    return None
+                if groups:
+                    picked.append((pf, groups))
+            value_set = pa.array(wanted)
+            parts = []
+            for pf, groups in picked:
+                stored = set(pf.schema_arrow.names)
+                t = pf.read_row_groups(groups, columns=[n for n in target.names if n in stored])
+                t = t.filter(pc.is_in(t["rowkey"], value_set=value_set))
+                cols = [t[f.name] if f.name in stored else pa.nulls(t.num_rows, f.type) for f in target]
+                parts.append(pa.Table.from_arrays(cols, names=target.names).cast(target))
+        table = pa.concat_tables(parts) if parts else target.empty_table()
+        return _local_relation(spark, table, schema)
 
     # -- commit protocol --------------------------------------------------
     # Two concurrent batches (MultiTableBatch from two drivers, or a
@@ -411,3 +513,47 @@ class ParquetStorage:
 
         return self._commit(fill)
 
+
+def _local_relation(spark: SparkSession, table, schema: T.StructType) -> DataFrame:
+    """``table``, already cast to ``to_arrow_schema(schema)``, as a Spark
+    local relation: ``spark.createDataFrame(table, schema)`` without its
+    timestamp-localizing pass.  That pass has nothing to do on UTC-zoned
+    microsecond timestamps, but before pyarrow 17 it rebuilds every map
+    holding timestamps without the map's validity bitmap (SPARK-48302),
+    so a null ``<family>__ts`` map would come back as an empty one."""
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+
+    jvm = spark._jvm
+    batches = spark.sparkContext._serialize_to_jvm(
+        table.to_batches(),
+        ArrowStreamSerializer(),
+        lambda path: jvm.PythonSQLUtils.readArrowStreamFromFile(path),
+        lambda: jvm.ArrowIteratorServer(),
+    )
+    return DataFrame(jvm.PythonSQLUtils.toDataFrame(batches, schema.json(), spark._jsparkSession), spark)
+
+
+def _partition_value(entry: str) -> str | None:
+    """The ``_kp`` value a ``_kp=<escaped>`` directory holds, unescaped
+    as Spark's partition discovery does (``%XX`` → the character; the
+    Hive default partition is null)."""
+    raw = entry[len("_kp="):]
+    return None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+
+
+def _brackets(stats, wanted: list) -> bool:
+    """True when a row group whose ``rowkey`` column has ``stats`` may
+    hold one of the sorted keys ``wanted``: its min/max brackets a key,
+    or the stats are missing, inexact or not comparable to the keys."""
+    if (
+        stats is None
+        or not stats.has_min_max
+        or not getattr(stats, "is_min_exact", True)
+        or not getattr(stats, "is_max_exact", True)
+    ):
+        return True
+    try:
+        i = bisect.bisect_left(wanted, stats.min)
+        return i < len(wanted) and wanted[i] <= stats.max
+    except TypeError:
+        return True

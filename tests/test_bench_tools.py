@@ -1,4 +1,4 @@
-"""Unit tests for the bench tooling (no Spark session needed).
+"""Unit tests for the bench tooling (one needs a Spark session).
 
 tools/bench_compare.py is the round-over-round adjudication path the
 judge and the builder both read; round 11 added host-drift
@@ -125,14 +125,9 @@ def test_warm_up_failure_is_reported_by_name(capsys):
     assert "sim_ivf_topk @ /sf0.001" in err and "cold codegen path" in err
 
 
-def test_perfbench_traced_run_spans_resolve():
-    """The benchmark's traced run wraps 10 engine attributes
-    (``perfbench/run.py::Run.install_spans``) and reads
-    ``storage.snapshot_dir(current_version())`` after every write; a
-    rename of any of them fails only that run, which no other test
-    executes.  Install the spans on a stub run holding a real tracer:
-    all 10 wraps resolve and replace the attribute, and ``unwrap_all``
-    restores every original."""
+def _perfbench_run():
+    """``perfbench/run.py`` loaded as a module, with perfbench's own
+    top-level modules (batch, kv, ops, ...) dropped again afterwards."""
     import importlib.util
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -146,11 +141,22 @@ def test_perfbench_traced_run_spans_resolve():
         spec.loader.exec_module(run)
     finally:
         sys.path[:] = saved_path
-        # drop perfbench's own top-level modules (batch, kv, ops, ...)
         bench_dir = os.path.join(root, "perfbench")
         for name in set(sys.modules) - saved_mods:
             if os.path.dirname(getattr(sys.modules[name], "__file__", None) or "") == bench_dir:
                 del sys.modules[name]
+    return run
+
+
+def test_perfbench_traced_run_spans_resolve():
+    """The benchmark's traced run wraps 10 engine attributes
+    (``perfbench/run.py::Run.install_spans``) and reads
+    ``storage.snapshot_dir(current_version())`` after every write; a
+    rename of any of them fails only that run, which no other test
+    executes.  Install the spans on a stub run holding a real tracer:
+    all 10 wraps resolve and replace the attribute, and ``unwrap_all``
+    restores every original."""
+    run = _perfbench_run()
 
     from hpaste_spark.sources.storage import ParquetStorage
 
@@ -172,3 +178,50 @@ def test_perfbench_traced_run_spans_resolve():
         assert getattr(owner, attr) is orig
     for attr in ("snapshot_dir", "current_version"):
         assert callable(getattr(ParquetStorage, attr))
+
+
+def test_perfbench_traced_run_measures_every_layer(spark, tmp_path):
+    """A traced benchmark run fails when a declared per-layer metric
+    goes unmeasured, which happens when the engine stops calling a
+    wrapped name (say, a read path that bypasses
+    ``ParquetStorage.read``).  Install the spans on a stub whose tracer
+    is enabled and run one ``OpBase`` batch, one ``single_option``, one
+    ``multi_map`` and one ``bulk_merge_increments`` on a tiny
+    prefix-partitioned table: every span name ``Run.layer_metrics``
+    reads is recorded."""
+    from pyspark.sql import functions as F
+
+    from hpaste_spark.operators import mutations
+    from hpaste_spark.schema import HTable, Schema
+
+    run = _perfbench_run()
+
+    class Stub:
+        tracer = run.Tracer()
+
+    stub = Stub()
+    sch = Schema(base_dir=str(tmp_path / "tables"))
+    tbl = HTable(sch, "traced", key_type=str, partition_prefix_len=1)
+    tbl.column(tbl.family("meta"), "v", "long")
+    tbl.family_map("hits", str, int)
+    sch.create_all(spark)
+    try:
+        run.Run.install_spans(stub)
+        stub.tracer.enabled = True
+        tbl.put("a1").value("v", 1).put("b1").value("v", 2).execute(spark)
+        assert tbl.query2(spark).with_key("a1").with_all_columns().single_option().column("v") == 1
+        assert len(tbl.query2(spark).with_keys(["a1", "b1"]).with_all_columns().multi_map()) == 2
+        deltas = spark.createDataFrame([("a1", {"w": 3})], "rowkey STRING, hits MAP<STRING, BIGINT>")
+        # through the module attribute, as the benchmark calls it
+        mutations.bulk_merge_increments(tbl, deltas.select(*[
+            (F.col(f.name) if f.name in deltas.columns else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in tbl.spark_schema().fields
+        ]))
+    finally:
+        stub.tracer.enabled = False
+        stub.tracer.unwrap_all()
+    names = {s.name for s in stub.tracer.spans}
+    assert {
+        "storage.read", "storage.write", "storage.vacuum", "query.to_df", "query.exec",
+        "row.build_rows", "mutations.execute", "mutations.bulk_merge",
+    } <= names, names

@@ -31,6 +31,7 @@ from hpaste_spark.schema import HTable, Schema
 
 # two key prefixes: the prefix-partitioned layout gets two partitions
 KEYS = ["a1", "a2", "b1"]
+ABSENT = "a9"  # never written; shares a prefix with written keys
 QUALS = ["qa", "qb", "qc"]
 
 
@@ -254,3 +255,14 @@ def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
         sch.create_all(spark)
         got = run_engine(spark, tbl, batches)
         assert norm(got) == norm(model), f"partition_prefix_len={prefix_len}"
+        # point gets and a multi-get of every model key and an absent
+        # one return exactly the scanned rows (the keyed scan)
+        scanned = {r["rowkey"]: r.asDict() for r in tbl.to_df(spark).collect()}
+        wanted = [*model, ABSENT]
+        for k in wanted:
+            row = tbl.query2(spark).with_key(k).with_all_columns().single_option()
+            assert (row and row.as_dict()) == scanned.get(k), f"get {k!r}, prefix_len={prefix_len}"
+        multi = tbl.query2(spark).with_keys(wanted).with_all_columns().multi_map()
+        assert {k: r.as_dict() for k, r in multi.items()} == {
+            k: scanned[k] for k in wanted if k in scanned
+        }, f"multi-get, partition_prefix_len={prefix_len}"

@@ -29,14 +29,25 @@ def _make(spark, base_dir):
     return tbl
 
 
-def test_point_get_prunes_partition_dirs(spark, base_dir):
+def test_point_get_prunes_partition_dirs(spark, base_dir, monkeypatch):
+    """A point get opens only the data files of its key's ``_kp``
+    partition directory (the keyed scan reads them on the driver, so
+    the pruning shows in the files opened, not in a Spark plan)."""
+    import pyarrow.parquet as pq
+
     tbl = _make(spark, base_dir)
+    opened, real = [], pq.ParquetFile
+
+    def record(path, **kw):
+        opened.append(path)
+        return real(path, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", record)
     q = tbl.query2(spark).with_key("a1").with_all_columns()
-    plan = plan_of(q.to_df())
-    assert "PartitionFilters" in plan and "_kp" in plan, (
+    assert q.single().column("v") == 1
+    assert opened and all("/_kp=a/" in p for p in opened), (
         "point get must constrain the _kp partition directory"
     )
-    assert q.single().column("v") == 1
 
 
 def test_range_scan_prunes_and_matches(spark, base_dir):
@@ -233,3 +244,129 @@ def test_batch_commit_is_shuffle_free(spark, base_dir, monkeypatch):
     get = tbl.query2(spark).with_key("c2").with_all_columns()
     assert _jobs_in(spark, get.single) <= 2
     assert get.single().column("v") == 5
+
+
+def test_keyed_gets_run_no_job(spark, base_dir):
+    """A warm point get and a multi-get read the snapshot on the driver
+    and return a local relation, so neither runs a Spark job; an absent
+    key is absent from both."""
+    tbl = _make(spark, base_dir)
+    get = tbl.query2(spark).with_key("c2").with_all_columns()
+    assert get.single().column("v") == 5
+    assert _jobs_in(spark, get.single_option) == 0
+    multi = tbl.query2(spark).with_keys(["a1", "c2", "zz"]).with_all_columns()
+    assert _jobs_in(spark, multi.multi_map) == 0
+    assert {k: r.column("v") for k, r in multi.multi_map().items()} == {"a1": 1, "c2": 5}
+    assert tbl.query2(spark).with_key("zz").with_all_columns().single_option() is None
+
+
+def test_keyed_get_reads_named_snapshot(spark, base_dir):
+    """``as_of_version(N)`` on a point get reads snapshot N, not the
+    current one."""
+    tbl = _make(spark, base_dir)
+    old = tbl.storage.current_version()
+    tbl.put("a1").value("v", 100).execute(spark)
+
+    def get():
+        return tbl.query2(spark).with_key("a1").with_all_columns()
+
+    assert get().single().column("v") == 100
+    assert get().as_of_version(old).single().column("v") == 1
+    assert get().as_of_version(old + 1).single().column("v") == 100
+
+
+class TsTable(HTable):
+    def __init__(self, schema: Schema):
+        super().__init__(schema, "ts_table", key_type=str, partition_prefix_len=1)
+        meta = self.family("meta")
+        self.at = self.column(meta, "at", "timestamp")
+
+
+def test_keyed_get_timestamps_match_scan(spark, base_dir, monkeypatch):
+    """Timestamps read by a get equal those of the Spark scan: under a
+    non-UTC ``TZ`` (the keyed scan hands Spark zoned instants, which a
+    naive local-time reading would shift), and for instants outside
+    the 1677-2262 range a nanosecond INT96 read would overflow."""
+    import datetime as dt
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        sch = Schema(base_dir=base_dir)
+        tbl = TsTable(sch)
+        sch.create_all(spark)
+        at = {
+            "a1": dt.datetime(2013, 7, 1, 10, 30),
+            "a2": dt.datetime(1500, 3, 1, 12, 0),
+            "b1": dt.datetime(9999, 6, 1, 12, 0),
+        }
+        op = None
+        for k, t in at.items():
+            op = (op.put(k) if op else tbl.put(k)).value("at", t)
+        op.execute(spark)
+        scanned = {r["rowkey"]: r["at"] for r in tbl.to_df(spark).collect()}
+        got = tbl.query2(spark).with_keys(list(at)).with_all_columns().multi_map()
+        assert {k: r.column("at") for k, r in got.items()} == scanned == at
+        assert tbl.query2(spark).with_key("a1").with_all_columns().single().column("at") == at["a1"]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_int_keyed_table_takes_keyed_path(spark, base_dir):
+    """A table keyed by ``int`` serves gets and multi-gets from the
+    keyed scan too: no Spark job, the same rows."""
+
+    class IntTable(HTable):
+        def __init__(self, schema: Schema):
+            super().__init__(schema, "int_table", key_type=int, partition_prefix_len=1)
+            meta = self.family("meta")
+            self.v = self.column(meta, "v", "long")
+
+    sch = Schema(base_dir=base_dir)
+    tbl = IntTable(sch)
+    sch.create_all(spark)
+    op = None
+    for k in (7, 12, 19, 230):
+        op = (op.put(k) if op else tbl.put(k)).value("v", k * 10)
+    op.execute(spark)
+    get = tbl.query2(spark).with_key(12).with_all_columns()
+    assert get.single().column("v") == 120
+    assert _jobs_in(spark, get.single) == 0
+    multi = tbl.query2(spark).with_keys([7, 19, 230, 8])
+    got = multi.with_all_columns().multi_map()
+    assert {k: r.column("v") for k, r in got.items()} == {7: 70, 19: 190, 230: 2300}
+
+
+def test_get_past_file_bound_takes_spark_scan(spark, base_dir):
+    """A snapshot with more data files than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) is
+    read by Spark's scan (at least one job), with the same rows.  An
+    ``OpBase`` commit to an unpartitioned table re-packs it into a few
+    files, so the snapshot is one overwrite of 40 single-row files."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    sch = Schema(base_dir=base_dir)
+
+    class Plain(HTable):
+        def __init__(self, schema):
+            super().__init__(schema, "many_files", key_type=str)
+            meta = self.family("meta")
+            self.v = self.column(meta, "v", "long")
+
+    tbl = Plain(sch)
+    sch.create_all(spark)
+    rows = spark.range(0, 40, 1, numPartitions=40).select(
+        F.format_string("k%02d", "id").alias("rowkey"),
+        F.col("id").alias("v"),
+        F.lit(None).cast("map<string,timestamp>").alias("meta__ts"),
+    )
+    tbl.overwrite(rows)
+    snap = tbl.storage.snapshot_dir(tbl.storage.current_version())
+    assert len([f for f in os.listdir(snap) if not f.startswith(("_", "."))]) > 32
+    multi = tbl.query2(spark).with_keys(["k03", "k39", "zz"]).with_all_columns()
+    assert _jobs_in(spark, multi.multi_map) >= 1
+    assert {k: r.column("v") for k, r in multi.multi_map().items()} == {"k03": 3, "k39": 39}
