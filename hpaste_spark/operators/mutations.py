@@ -9,23 +9,26 @@ deletes → puts → increments in that documented order
 empty batches are no-ops (OpBase.scala:69-71).  Returns
 ``OpsResult(numDeletes, numPuts, numIncrements)`` (OpBase.scala:112-114).
 
-Spark design: the client-staged batch becomes ONE small relation (one
-row per touched key, built from an Arrow table, so it plans as a local
-relation) that merges with the stored snapshot without a shuffle:
-``current LEFT JOIN broadcast(staged)`` updates the stored rows and
-``staged LEFT ANTI JOIN broadcast(current ⋂ batch keys)`` adds the
-inserts.  Both broadcast sides are bounded by the batch the driver
-already holds, so the merge scans only the stored rows it reads (with
-prefix-partitioned storage, only the touched partitions) and never
-sorts or shuffles the table.  The cell rules are SQL text, one
-expression per column (:func:`merge_sql`): cell-level last-writer-wins
-— a put only replaces the cells it names; map-family puts overlay by
-key (map_concat semantics, M2); increments add to ``coalesce(old, 0)``.
-The bulk sinks (:func:`bulk_merge_put`, :func:`bulk_merge_increments`)
-take unbounded DataFrames of rows, so they keep a full-outer join on
-``rowkey`` with the same cell rules.  Atomicity unit is the
-``execute()`` batch (one snapshot commit) — documented divergence from
-HBase's row-level atomicity (SURVEY §7.2).
+Spark design: a client-staged batch names its keys up front, so it is
+merged on the driver, the way an HBase client's Put only names the cells
+it writes.  ``OpBase.execute`` reads the batch keys' current rows at one
+snapshot version (the storage's keyed read, a local relation), applies
+the deletes, aligns those rows with the staged cells in ONE local
+relation and collects the projection of the cell rules over it — no
+Spark job.  The storage then publishes the merged rows as an overlay
+over the unchanged base (``ParquetStorage.write_partial``), and
+compacts the overlay into the base only once it passes the keyed-read
+bounds.  The cell rules are SQL text, one expression per column
+(:func:`merge_sql`): cell-level last-writer-wins — a put only replaces
+the cells it names; map-family puts overlay by key (map_concat
+semantics, M2); increments add to ``coalesce(old, 0)``.  The bulk sinks
+(:func:`bulk_merge_put`, :func:`bulk_merge_increments`) take unbounded
+DataFrames of rows, so they keep a full-outer join on ``rowkey`` with
+the same cell rules and write a whole new snapshot.  Every commit
+names the version its merge read and fails with
+``ConcurrentWriteError`` if the table has moved since.  Atomicity unit
+is the ``execute()`` batch (one snapshot commit) — documented divergence
+from HBase's row-level atomicity (SURVEY §7.2).
 """
 
 from __future__ import annotations
@@ -37,8 +40,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
 
 from hpaste_spark.schema.types import to_spark_value
+from hpaste_spark.sources.storage import _local_relation, rowkey_in, sql_literal
 
 
 @dataclasses.dataclass
@@ -199,19 +204,12 @@ class OpBase:
         return out
 
     # -- staging -------------------------------------------------------------
-    def _staged(
-        self, spark: SparkSession, puts: dict, increments: dict, default_ts
-    ) -> tuple[DataFrame, list]:
-        """The batch as one relation with one row per touched key:
-        ``rowkey``, the put cells ``p_<column>``, the increment deltas
-        ``i_<column>`` and each kind's per-family timestamp maps
-        (``p_<family>__ts`` / ``i_<family>__ts``).  Only the columns the
-        batch names are staged.  It is built from an Arrow table, so it
-        plans as a local relation: no Python worker, no job.  Naive
-        datetimes are read as local time, as ``createDataFrame`` of a
-        row list reads them.  Returns the relation and its row keys."""
-        from pyspark.sql.conversion import LocalDataToArrowConversion
-
+    def _staged(self, puts: dict, increments: dict, default_ts) -> tuple[list, dict]:
+        """The batch's cells, one entry per touched key: the put cells
+        ``p_<column>``, the increment deltas ``i_<column>`` and each
+        kind's per-family timestamp maps (``p_<family>__ts`` /
+        ``i_<family>__ts``).  Returns the fields of the columns the
+        batch names and, per row key, its cells by field name."""
         rows: dict[Any, dict[str, Any]] = {}
         for prefix, staged in (("p_", puts), ("i_", increments)):
             for key, ops in staged.items():
@@ -225,23 +223,29 @@ class OpBase:
                     row.setdefault(prefix + self.table.families[fname].ts_name, {}).update(
                         {k: (ts or default_ts) for k, (v, ts) in cells.items()}
                     )
-        table_fields = self.table.spark_schema().fields
         present = {n for row in rows.values() for n in row}
-        fields = [table_fields[0]] + [
+        fields = [
             T.StructField(prefix + f.name, f.dataType)
             for prefix in ("p_", "i_")
-            for f in table_fields[1:]
+            for f in self.table.spark_schema().fields[1:]
             if prefix + f.name in present
         ]
-        schema = T.StructType(fields)
-        data = [(k, *(row.get(f.name) for f in fields[1:])) for k, row in rows.items()]
-        arrow = LocalDataToArrowConversion.convert(data, schema, False)
-        return spark.createDataFrame(arrow, schema), list(rows)
+        return fields, rows
 
     # -- execute ------------------------------------------------------------
     def execute(self, spark: SparkSession | None = None, write_to_wal: bool = True) -> OpsResult:
         """Apply deletes → puts → increments (README.markdown:299), commit
-        one new snapshot.  Empty batch = no-op (OpBase.scala:69-71)."""
+        one new snapshot.  Empty batch = no-op (OpBase.scala:69-71).
+
+        The batch's keys are read at the current version (a keyed read:
+        with at most ``ISIN_THRESHOLD`` keys it runs on the driver) and
+        the deletes applied to them.  One relation then aligns, per key,
+        its current cells ``c_<column>`` (null for a new key) with the
+        staged ones; :func:`merge_sql` over it is a projection of a
+        local relation, which Catalyst folds, so the merged rows are
+        collected without a Spark job.  The storage commits them as an
+        overlay (``ParquetStorage.write_partial``); a key whose row is
+        deleted and not written again becomes a tombstone."""
         total_ops = self._put_count + self._delete_count + self._increment_count
         has_cells = any(o.cells or o.map_cells for o in self.puts.values()) or bool(
             self.delete_rows or self.delete_families or self.delete_values
@@ -253,26 +257,10 @@ class OpBase:
 
             spark = _S.getActiveSession()
         default_ts = _dt.datetime.now(_dt.timezone.utc)
+        storage = self.table._require_storage()
+        version = storage.current_version()
         schema = self.table.spark_schema()
 
-        # Partial-rewrite fast path: on prefix-partitioned storage every
-        # mutation key names its partition up front, so the merge reads
-        # and rewrites ONLY the touched partitions; everything else is
-        # hardlinked into the new snapshot (storage.write_partial).
-        prefixes = self._touched_prefixes()
-        storage = getattr(self.table, "storage", None)
-        partial = (
-            prefixes is not None
-            and storage is not None
-            and self.table.df_provider is None
-            and storage.supports_partial_rewrite()
-        )
-        if partial:
-            df = self.table.to_df(spark, key_prefixes=prefixes)
-        else:
-            df = self.table.to_df(spark)
-
-        df = apply_deletes(self.table, df, self.delete_rows, self.delete_families, self.delete_values)
         # Reference parity (OpBase.scala prepareOperations !put.isEmpty
         # guard): a .put(key) chain that never set a cell is skipped
         # entirely — it must not merge as a phantom all-null row — and is
@@ -286,37 +274,31 @@ class OpBase:
             if any(o.cells or o.map_cells for o in self.increments.values())
             else {}
         )
-        if real_puts or increments:
-            staged, keys = self._staged(spark, real_puts, increments, default_ts)
-            df = merge_staged(self.table, df, staged, keys)
-
-        out = df.select(*[f.name for f in schema.fields])
-        if partial:
-            storage.write_partial(out, prefixes)
-        else:
-            self.table.overwrite(out)
+        staged_fields, staged = self._staged(real_puts, increments, default_ts)
+        deleted = [*self.delete_rows, *self.delete_families, *self.delete_values]
+        keys = list(dict.fromkeys([*(to_spark_value(k) for k in deleted), *staged]))
+        current = self.table.to_df(spark, keys=keys, version=version).filter(rowkey_in(keys))
+        current = apply_deletes(self.table, current, self.delete_rows, self.delete_families, self.delete_values)
+        cells = {r[0]: r[1:] for r in current.collect()}
+        rows = []
+        if cells or staged:
+            stored = [T.StructField("c_" + f.name, f.dataType) for f in schema.fields[1:]]
+            aligned = T.StructType([schema.fields[0], *stored, *staged_fields])
+            none = (None,) * len(stored)
+            data = [
+                (k, *cells.get(k, none), *(staged.get(k, {}).get(f.name) for f in staged_fields))
+                for k in dict.fromkeys([*cells, *staged])
+            ]
+            put = {f.name[2:]: _q(f.name) for f in staged_fields if f.name.startswith("p_")} or None
+            inc = {f.name[2:]: _q(f.name) for f in staged_fields if f.name.startswith("i_")} or None
+            relation = _local_relation(spark, LocalDataToArrowConversion.convert(data, aligned, False), aligned)
+            rows = relation.selectExpr(
+                "rowkey", *merge_sql(self.table, lambda n: _q("c_" + n), put, inc)
+            ).collect()
+        storage.write_partial(spark, schema, rows, keys, read_version=version)
         return OpsResult(
             self._delete_count, self._put_count - empty_put_chains, self._increment_count
         )
-
-    def _touched_prefixes(self) -> list[str] | None:
-        """Distinct key prefixes this batch touches, or None when the
-        storage isn't prefix-partitioned / a key isn't a string."""
-        storage = getattr(self.table, "storage", None)
-        n = getattr(storage, "partition_prefix_len", None) if storage else None
-        if not n:
-            return None
-        keys = (
-            set(self.puts) | set(self.increments) | set(self.delete_rows)
-            | set(self.delete_families) | set(self.delete_values)
-        )
-        out = set()
-        for k in keys:
-            v = to_spark_value(k)
-            if not isinstance(v, str):
-                return None
-            out.add(v[:n])
-        return sorted(out)
 
 
 # ---------------------------------------------------------------------------
@@ -336,7 +318,7 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
     projection, so neither the plan nor the Python-side expression
     building grows a call per (column, key)."""
     if rows:
-        df = df.filter(~F.col("rowkey").isin(list(rows)))
+        df = df.filter(~rowkey_in([to_spark_value(k) for k in rows]))
     # column -> {key: [cell transform, ...]} in application order
     steps: dict[str, dict[Any, list]] = {}
 
@@ -347,7 +329,7 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
         return lambda c: f"CAST(NULL AS {dtypes[column].simpleString()})"
 
     def drop_keys(qs):
-        keys = ", ".join(_sql_lit(q) for q in qs)
+        keys = ", ".join(sql_literal(q) for q in qs)
         return lambda c: f"map_filter({c}, (k__, v__) -> NOT k__ IN ({keys}))"
 
     for key, fams in families.items():
@@ -379,7 +361,7 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
             value = _q(column)
             for fn in fns:
                 value = fn(value)
-            branches.append(f"WHEN rowkey = {_sql_lit(key)} THEN {value}")
+            branches.append(f"WHEN rowkey = {sql_literal(key)} THEN {value}")
         return f"CASE {' '.join(branches)} ELSE {_q(column)} END AS {_q(column)}"
 
     return df.selectExpr(*[cell(c) if c in steps else _q(c) for c in df.columns])
@@ -387,22 +369,6 @@ def apply_deletes(table, df: DataFrame, rows: set, families: dict, values: dict)
 
 def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_lit(v) -> str:
-    """A row key or qualifier as a SQL literal; strings are quoted with
-    ``\\`` and ``'`` escaped."""
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        return f"CAST('{v!r}' AS DOUBLE)"
-    if isinstance(v, (bytes, bytearray)):
-        return f"X'{bytes(v).hex()}'"
-    raise TypeError(f"no SQL literal for a delete key of type {type(v).__name__}")
 
 
 def _is_numeric(dtype) -> bool:
@@ -471,28 +437,6 @@ def merge_sql(table, old, put: dict | None = None, inc: dict | None = None) -> l
     return out
 
 
-def merge_staged(table, current: DataFrame, staged: DataFrame, keys: list) -> DataFrame:
-    """Merge an ``OpBase`` batch staged by ``OpBase._staged`` (its row
-    keys: ``keys``) into ``current`` with no shuffle, as the union of
-
-    - ``current LEFT JOIN broadcast(staged)``: every stored row, with the
-      batch applied where it names the row;
-    - ``staged LEFT ANTI JOIN broadcast(current ⋂ keys)``: the inserts.
-
-    Both broadcast sides are bounded by the batch the driver holds."""
-    put = {n[2:]: f"new.{_q(n)}" for n in staged.columns if n.startswith("p_")} or None
-    inc = {n[2:]: f"new.{_q(n)}" for n in staged.columns if n.startswith("i_")} or None
-    new = staged.alias("new")
-    updated = current.alias("cur").join(
-        F.broadcast(new), F.col("cur.rowkey") == F.col("new.rowkey"), "left"
-    ).selectExpr("cur.rowkey AS rowkey", *merge_sql(table, lambda n: f"cur.{_q(n)}", put, inc))
-    stored = current.filter(F.col("rowkey").isin(keys)).select(F.col("rowkey").alias("key"))
-    inserted = new.join(
-        F.broadcast(stored), F.col("new.rowkey") == F.col("key"), "left_anti"
-    ).selectExpr("new.rowkey AS rowkey", *merge_sql(table, lambda n: "NULL", put, inc))
-    return updated.union(inserted)
-
-
 def _merge_full_outer(table, current: DataFrame, batch: DataFrame, increments: bool) -> DataFrame:
     """Full-outer merge of a DataFrame batch in the table schema (its
     keys are unbounded, so neither side can be broadcast): the batch's
@@ -526,8 +470,10 @@ def bulk_merge_increments(
     from pyspark.sql import SparkSession as _S
 
     spark = _S.getActiveSession()
-    current = table.to_df(spark)
-    table.overwrite(_merge_full_outer(table, current, batch_df, increments=True), marker_file=marker_file)
+    version = table._require_storage().current_version()
+    current = table.to_df(spark, version=version)
+    merged = _merge_full_outer(table, current, batch_df, increments=True)
+    table.overwrite(merged, marker_file=marker_file, read_version=version)
 
 
 def bulk_merge_put(table, batch_df: DataFrame) -> None:
@@ -537,8 +483,9 @@ def bulk_merge_put(table, batch_df: DataFrame) -> None:
     from pyspark.sql import SparkSession as _S
 
     spark = _S.getActiveSession()
-    current = table.to_df(spark)
-    table.overwrite(_merge_full_outer(table, current, batch_df, increments=False))
+    version = table._require_storage().current_version()
+    current = table.to_df(spark, version=version)
+    table.overwrite(_merge_full_outer(table, current, batch_df, increments=False), read_version=version)
 
 
 class MultiTableBatch:

@@ -275,8 +275,21 @@ class HTable:
             keys=keys,
         )
 
-    def overwrite(self, df: DataFrame, marker_file: "tuple[str, str] | None" = None) -> int:
-        return self._require_storage().write(df, marker_file=marker_file)
+    def overwrite(
+        self,
+        df: DataFrame,
+        marker_file: "tuple[str, str] | None" = None,
+        read_version: int | None = None,
+    ) -> int:
+        """Publish ``df`` as the whole table (see
+        :meth:`ParquetStorage.write`)."""
+        return self._require_storage().write(df, marker_file=marker_file, read_version=read_version)
+
+    def compact(self, spark: SparkSession) -> int:
+        """Fold the overlay the mutation batches left into the base
+        files (HBase ``major_compact``; see
+        :meth:`ParquetStorage.compact`).  Returns the table's version."""
+        return self._require_storage().compact(spark, self.spark_schema())
 
     # -- DSL entry points --------------------------------------------------
     def query2(self, spark: SparkSession):

@@ -2,7 +2,7 @@
 
 The reference writes through HBase (GravityTableOutputFormat.java:50-215,
 WAL off, autoFlush off).  Our durability unit is an atomic snapshot
-swap: each mutation batch writes a brand-new snapshot directory
+swap: each commit writes a brand-new snapshot directory
 ``<table>/v=N`` and then atomically repoints the ``_VERSION`` file.
 Readers always read the version named by ``_VERSION``, so a reader never
 observes a half-written table and a writer never overwrites the
@@ -10,10 +10,22 @@ directory a concurrent reader (or its own merge plan) is scanning —
 Spark cannot safely ``mode=overwrite`` a path that feeds the same plan,
 and at 100 TB a read-modify-write must never be driver-materialized.
 
-Scale posture: snapshots are plain parquet dirs (zstd), optionally
-sorted by ``rowkey`` so min/max row-group stats give the same
-start/stop-row pruning HBase got from its sorted regions
-(Query2.scala:903-908).
+A snapshot is a base plus at most one overlay, as an HBase region is
+its store files plus what the memstore flushed since the last
+compaction.  The base is plain parquet (zstd) written by Spark, sorted
+by ``rowkey`` so min/max row-group stats give the same start/stop-row
+pruning HBase got from its sorted regions (Query2.scala:903-908),
+optionally under ``_kp=<prefix>`` partition directories.  The overlay,
+``_delta/overlay.parquet``, holds the fully merged rows of every key
+committed by :meth:`ParquetStorage.write_partial` since the last
+compaction, plus row tombstones.  Such a commit hardlinks the base and
+writes one small overlay file with pyarrow, so it runs no Spark job.
+Every read replaces base rows by key from the overlay.  A commit
+compacts instead — rewrites the overlay's partitions with each overlay
+row replacing its base row in place — once the overlay would pass the
+bounds of a keyed read: ``ISIN_THRESHOLD`` keys (the overlay's keys are
+an IN-list on every scan) or ``spark.sql.autoBroadcastJoinThreshold``
+bytes (its rows are held on the driver).
 """
 
 from __future__ import annotations
@@ -26,11 +38,18 @@ import time
 from collections.abc import Callable
 from urllib.parse import unquote
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 VERSION_FILE = "_VERSION"
+# the overlay: underscore-prefixed, so Spark's file listing, the
+# sticky-marker copy and partition discovery all pass it by
+DELTA_DIR = "_delta"
+OVERLAY_FILE = "overlay.parquet"
+TOMBSTONE = "_deleted"  # overlay column: the row is deleted
 
 # Above this many keys a keyed read is a scan, not a point lookup: the
 # storage layer leaves it to Spark's file scan, and Query2 joins against
@@ -58,7 +77,8 @@ class ParquetStorage:
     (PartitionFilters), not just row groups; at 100 TB that is the
     difference between listing a handful of files and listing the
     table.  The ``_kp`` column is derived on write and stripped on
-    read, so the logical schema never sees it."""
+    read, so the logical schema never sees it; the overlay lives
+    outside the ``_kp=`` tree, so partition discovery never sees it."""
 
     def __init__(
         self,
@@ -180,7 +200,14 @@ class ParquetStorage:
         ``spark.sql.autoBroadcastJoinThreshold`` compressed (what Spark
         already moves through the driver for a broadcast).  Both scans
         return the rows holding a key; the keyed one returns no others,
-        so a caller that filters to its keys gets the same rows."""
+        so a caller that filters to its keys gets the same rows.
+
+        Both scans fold the snapshot's overlay over its base, on the
+        driver: base rows whose key the overlay holds are dropped, and
+        the overlay's live rows (restricted like the base: to the wanted
+        keys, or to the ``_kp`` constraints) are added.  The overlay is
+        read with pyarrow, so a keyed read of an overlaid snapshot still
+        runs no Spark job."""
         if not self.exists():
             if schema is None:
                 raise FileNotFoundError(f"table {self.name} does not exist")
@@ -193,39 +220,84 @@ class ParquetStorage:
                 f"(available: {self.versions()})"
             )
         snap = self.snapshot_dir(version)
-        kp_dirs = [e for e in os.listdir(snap) if e.startswith("_kp=")]
+        kp_dirs = _kp_dirs(snap)
+        overlay = _read_overlay(snap)
         if keys and schema is not None:
-            df = self._keyed_scan(spark, schema, snap, kp_dirs, keys)
-            if df is not None:
-                return df
-        if schema is None:
-            df = spark.read.parquet(snap)
-        else:
+            table = self._keyed_scan(spark, schema, snap, kp_dirs, keys)
+            if table is not None:
+                if overlay is not None:
+                    table = _fold(table, overlay, keys)
+                return _local_relation(spark, table, schema)
+        df = self._scan(spark, schema, snap, kp_dirs, key_prefixes, key_prefix_range)
+        if overlay is None:
+            return df
+        # the overlay's keys are an IN-list (at most ISIN_THRESHOLD of
+        # them, the compaction bound); its live rows a local relation
+        df = df.filter(~rowkey_in(overlay["rowkey"].to_pylist()))
+        live = _live(overlay)
+        n = self.partition_prefix_len
+        if kp_dirs and n and (key_prefixes is not None or key_prefix_range is not None):
+            lo, hi = key_prefix_range or (None, None)
+            admitted = [_admits(str(k)[:n], key_prefixes, lo, hi) for k in live["rowkey"].to_pylist()]
+            live = live.filter(pa.array(admitted, pa.bool_()))
+        if live.num_rows == 0:
+            return df
+        return df.union(_local_relation(spark, _aligned(live, to_arrow_schema(df.schema)), df.schema))
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        schema,
+        snap: str,
+        kp_dirs: list[str],
+        key_prefixes: list[str] | None,
+        key_prefix_range: tuple[str | None, str | None] | None,
+    ) -> DataFrame:
+        """Spark's scan of the snapshot's base files.  When ``_kp``
+        constraints admit at most half of the partition directories,
+        only those are listed, under ``basePath`` so ``_kp`` stays a
+        partition column; past that, listing the snapshot root costs
+        less than listing each directory as its own path.  The filters
+        stay either way, so the plan shows them as PartitionFilters."""
+        reader = spark.read
+        if schema is not None:
             if kp_dirs:
                 schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
-            df = spark.read.schema(schema).parquet(snap)
-        if kp_dirs:
-            if key_prefixes is not None:
-                df = df.filter(F.col("_kp").isin([*key_prefixes]))
-            if key_prefix_range is not None:
-                lo, hi = key_prefix_range
-                if lo is not None:
-                    df = df.filter(F.col("_kp") >= lo)
-                if hi is not None:
-                    # prefix truncation makes the upper bound inclusive
-                    df = df.filter(F.col("_kp") <= hi)
-            df = df.drop("_kp")
-        return df
+            reader = reader.schema(schema)
+        if not kp_dirs:
+            return reader.parquet(snap)
+        lo, hi = key_prefix_range or (None, None)
+        paths = [snap]
+        if key_prefixes is not None or key_prefix_range is not None:
+            admitted = [
+                os.path.join(snap, e) for e in kp_dirs
+                if _admits(_partition_value(e), key_prefixes, lo, hi)
+            ]
+            if 2 * len(admitted) <= len(kp_dirs):
+                paths = admitted
+        if paths:
+            df = reader.option("basePath", snap).parquet(*paths)
+        elif schema is not None:
+            df = spark.createDataFrame([], schema)
+        else:
+            df = reader.parquet(snap)
+        if key_prefixes is not None:
+            df = df.filter(F.col("_kp").isin([*key_prefixes]))
+        if lo is not None:
+            df = df.filter(F.col("_kp") >= lo)
+        if hi is not None:
+            # prefix truncation makes the upper bound inclusive
+            df = df.filter(F.col("_kp") <= hi)
+        return df.drop("_kp")
 
     def _keyed_scan(
         self, spark: SparkSession, schema: T.StructType, snap: str, kp_dirs: list[str], keys: list
-    ) -> DataFrame | None:
-        """The driver-side scan of :meth:`read` for ``keys``, or None
-        when the read is past one of its bounds."""
-        import pyarrow as pa
+    ):
+        """The base rows of the driver-side scan of :meth:`read` for
+        ``keys``, as an Arrow table cast to ``to_arrow_schema(schema)``,
+        or None when the read is past one of its bounds."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         key_type = schema["rowkey"].dataType
         if len(keys) > ISIN_THRESHOLD or not (
@@ -270,16 +342,14 @@ class ParquetStorage:
                     return None
                 if groups:
                     picked.append((pf, groups))
-            value_set = pa.array(wanted)
+            value_set = pa.array(wanted, target.field("rowkey").type)
             parts = []
             for pf, groups in picked:
                 stored = set(pf.schema_arrow.names)
                 t = pf.read_row_groups(groups, columns=[n for n in target.names if n in stored])
                 t = t.filter(pc.is_in(t["rowkey"], value_set=value_set))
-                cols = [t[f.name] if f.name in stored else pa.nulls(t.num_rows, f.type) for f in target]
-                parts.append(pa.Table.from_arrays(cols, names=target.names).cast(target))
-        table = pa.concat_tables(parts) if parts else target.empty_table()
-        return _local_relation(spark, table, schema)
+                parts.append(_aligned(t, target))
+        return pa.concat_tables(parts) if parts else target.empty_table()
 
     # -- commit protocol --------------------------------------------------
     # Two concurrent batches (MultiTableBatch from two drivers, or a
@@ -309,10 +379,7 @@ class ParquetStorage:
                     continue  # holder just released; retry the O_EXCL create
                 if attempt == 0 and age > self.claim_ttl_s:
                     # crashed writer's leftover: break it and retry once
-                    try:
-                        os.unlink(path)
-                    except FileNotFoundError:
-                        pass
+                    _unlink(path)
                     continue
                 raise ConcurrentWriteError(
                     f"table {self.name}: version {new_version} is claimed by a "
@@ -336,29 +403,39 @@ class ParquetStorage:
             shutil.rmtree(self.snapshot_dir(new_version), ignore_errors=True)
             raise
         finally:
-            try:
-                os.unlink(claim_path)
-            except FileNotFoundError:
-                pass
+            _unlink(claim_path)
 
-    def _commit(self, fill: Callable[[int, str], None]) -> int:
-        """The one commit path of :meth:`write` and :meth:`write_partial`:
-        claim the next version, ``fill(base_version, snapshot_dir)``,
-        publish, vacuum.  A ``fill`` that raises removes the half-written
-        snapshot directory and the claim, so a failed write never leaves
-        an unpublished snapshot that :meth:`versions` would list and
-        ``read(version=...)`` would serve."""
+    def _commit(self, fill: Callable[[int, str], None], read_version: int | None = None) -> int:
+        """The one commit path of :meth:`write`, :meth:`write_partial`
+        and :meth:`compact`: claim the next version, check that the
+        table is still at ``read_version`` (the version the caller's
+        merge read; None when the caller read nothing),
+        ``fill(base_version, snapshot_dir)``, publish, vacuum.  A table
+        that moved since the read raises :class:`ConcurrentWriteError`:
+        the batch was merged from rows another writer has replaced, so
+        publishing it would lose that writer's update.  A ``fill`` that
+        raises removes the half-written snapshot directory and the
+        claim, so a failed write never leaves an unpublished snapshot
+        that :meth:`versions` would list and ``read(version=...)`` would
+        serve."""
         base_version = self.current_version()
         new_version = base_version + 1
         claim = self._claim(new_version)
+        # a writer that published new_version has released its claim, so
+        # holding the claim does not prove the base is still current
+        cur = self.current_version()
+        if cur != base_version or read_version not in (None, base_version):
+            _unlink(claim)
+            raise ConcurrentWriteError(
+                f"table {self.name}: the batch read version "
+                f"{base_version if read_version is None else read_version} but the table "
+                f"is at {cur}; this batch was NOT applied"
+            )
         try:
             fill(base_version, self.snapshot_dir(new_version))
         except Exception:
             shutil.rmtree(self.snapshot_dir(new_version), ignore_errors=True)
-            try:
-                os.unlink(claim)
-            except FileNotFoundError:
-                pass
+            _unlink(claim)
             raise
         self._publish(base_version, new_version, claim)
         self.vacuum_versions()
@@ -370,10 +447,14 @@ class ParquetStorage:
         sort_by_rowkey: bool = True,
         partition: bool = True,
         marker_file: "tuple[str, str] | None" = None,
+        read_version: int | None = None,
     ) -> int:
         """Write a new snapshot and atomically publish it. Returns version.
         Raises ConcurrentWriteError (batch not applied) if another writer
-        holds the next version — never a silent lost update.
+        holds the next version, or, for a ``df`` merged from snapshot
+        ``read_version``, if the table has moved since — never a silent
+        lost update.  The new snapshot has no overlay: ``df`` is the
+        whole table.
 
         ``marker_file=(name, content)`` writes a sidecar file into the
         snapshot directory BEFORE the version pointer flips, so the
@@ -422,7 +503,7 @@ class ParquetStorage:
                     fh.write(marker_file[1])
             self._carry_markers(base_version, out, marker_file)
 
-        return self._commit(fill)
+        return self._commit(fill, read_version)
 
     def _carry_markers(
         self,
@@ -473,45 +554,145 @@ class ParquetStorage:
 
     def supports_partial_rewrite(self) -> bool:
         """True when the CURRENT snapshot is prefix-partitioned, so a
-        mutation batch can rewrite only its touched partitions."""
+        compaction rewrites only the overlay's partitions."""
         if not (self.partition_prefix_len and self.exists()):
             return False
         cur = self.snapshot_dir(self.current_version())
-        try:
-            return any(e.startswith("_kp=") for e in os.listdir(cur))
-        except FileNotFoundError:
-            return False
+        return os.path.isdir(cur) and bool(_kp_dirs(cur))
 
-    def write_partial(self, df: DataFrame, touched_prefixes: list[str]) -> int:
-        """Commit a snapshot that rewrites ONLY the touched key-prefix
-        partitions; every other partition directory is hardlinked from
-        the previous snapshot (O(files) metadata work, no data copied —
-        the snapshot-manifest trick of production table formats).  At
-        100 TB this makes a point-put cost ∝ its partition, not the
-        table.  GC stays safe: removing an old snapshot just unlinks,
-        the shared inodes survive."""
-        assert self.supports_partial_rewrite()
-        touched = {f"_kp={p}" for p in touched_prefixes}
-        if "rowkey" in df.columns:
-            df = df.sortWithinPartitions(F.col("rowkey"))
-        df = df.drop("_kp").withColumn(
-            "_kp", F.substring(F.col("rowkey").cast("string"), 1, self.partition_prefix_len)
-        )
+    def write_partial(
+        self, spark: SparkSession, schema: T.StructType, rows: list, keys: list, read_version: int
+    ) -> int:
+        """Commit a batch of keyed rows as an overlay over snapshot
+        ``read_version``, the version the rows were merged from.
+        Returns the new version.
+
+        ``rows`` are the batch's merged rows in ``schema``, the table's
+        declared one.  Each of ``keys`` (the batch's row keys) without a
+        row becomes a tombstone.  The new overlay is the base's overlay
+        minus ``keys``, plus these rows, written with pyarrow.  The new
+        snapshot hardlinks every base file (O(files) metadata work, no
+        data copied — the snapshot-manifest trick of production table
+        formats), so the commit runs no Spark job and costs in
+        proportion to the overlay, not to the table.  GC stays safe:
+        removing an old snapshot just unlinks, the shared inodes
+        survive.
+
+        The commit compacts instead (see :meth:`compact`) when the new
+        overlay would hold more than ``ISIN_THRESHOLD`` keys or more than
+        ``spark.sql.autoBroadcastJoinThreshold`` bytes, or when the base
+        is not in the table's ``_kp`` layout yet (the unpartitioned
+        snapshot :meth:`create` leaves)."""
+        import pyarrow.compute as pc
+
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+
+        target = _overlay_schema(schema)
+        key_type = target.field("rowkey").type
+        parts = []
+        old = _read_overlay(self.snapshot_dir(read_version))
+        if old is not None:
+            old = _aligned(old, target)
+            parts.append(old.filter(pc.invert(pc.is_in(old["rowkey"], value_set=pa.array(keys, key_type)))))
+        if rows:
+            merged = LocalDataToArrowConversion.convert(rows, schema, False)
+            parts.append(_aligned(merged.append_column(TOMBSTONE, pa.repeat(False, len(rows))), target))
+        written = {r[0] for r in rows}
+        gone = list(dict.fromkeys(k for k in keys if k not in written))
+        if gone:
+            tombs = pa.table({"rowkey": pa.array(gone, key_type), TOMBSTONE: pa.repeat(True, len(gone))})
+            parts.append(_aligned(tombs, target))
+        overlay = pa.concat_tables(parts)
+        conf = spark._jsparkSession.sessionState().conf()
+        compact = overlay.num_rows > ISIN_THRESHOLD or overlay.nbytes > conf.autoBroadcastJoinThreshold()
 
         def fill(base_version: int, out: str) -> None:
             prev = self.snapshot_dir(base_version)
-            os.makedirs(out, exist_ok=True)
-            for entry in os.listdir(prev):
-                if entry.startswith("_kp=") and entry not in touched:
-                    src = os.path.join(prev, entry)
-                    dst = os.path.join(out, entry)
-                    os.makedirs(dst, exist_ok=True)
-                    for f in os.listdir(src):
-                        os.link(os.path.join(src, f), os.path.join(dst, f))
-            df.write.mode("append").partitionBy("_kp").parquet(out)
+            # a base not in the table's layout yet (no snapshot, or the
+            # unpartitioned one create() leaves) is rewritten into it
+            if compact or not os.path.isdir(prev) or self.partition_prefix_len and not _kp_dirs(prev):
+                self._compact_into(spark, schema, overlay, prev, out)
+            else:
+                import pyarrow.parquet as pq
+
+                data = [e for e in os.listdir(prev) if e.startswith("_kp=") or not e.startswith("_")]
+                _link(prev, out, data)
+                os.makedirs(os.path.join(out, DELTA_DIR))
+                pq.write_table(overlay, os.path.join(out, DELTA_DIR, OVERLAY_FILE), compression="zstd")
             self._carry_markers(base_version, out)
 
-        return self._commit(fill)
+        return self._commit(fill, read_version)
+
+    def compact(self, spark: SparkSession, schema: T.StructType) -> int:
+        """Fold the current snapshot's overlay into its base (HBase's
+        ``major_compact``) and publish the result, a snapshot with no
+        overlay; ``schema`` is the table's declared one.  Returns the
+        new version, or the current one when there is no overlay."""
+        version = self.current_version()
+        overlay = _read_overlay(self.snapshot_dir(version))
+        if overlay is None:
+            return version
+        overlay = _aligned(overlay, _overlay_schema(schema))
+
+        def fill(base_version: int, out: str) -> None:
+            self._compact_into(spark, schema, overlay, self.snapshot_dir(base_version), out)
+            self._carry_markers(base_version, out)
+
+        return self._commit(fill, version)
+
+    def _compact_into(
+        self, spark: SparkSession, schema: T.StructType, overlay, prev: str, out: str
+    ) -> None:
+        """Write snapshot ``prev`` with ``overlay`` applied into ``out``,
+        with no overlay.  A prefix-partitioned base rewrites only the
+        ``_kp`` partitions holding an overlay key and hardlinks the
+        rest; any other base is rewritten whole, into the table's layout.
+
+        An overlay row replaces its base row inside the base file's own
+        task (``base LEFT JOIN broadcast(overlay)``), so no shuffle runs
+        and an update-only compaction leaves each partition's file count
+        as it was; only keys new to the base are added, in one more
+        task (``coalesce(1)``)."""
+        n = self.partition_prefix_len
+        entries = os.listdir(prev) if os.path.isdir(prev) else []
+        kp_dirs = [e for e in entries if e.startswith("_kp=")]
+        read_schema = schema
+        if kp_dirs:
+            read_schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
+        if kp_dirs and n:
+            prefixes = {str(k)[:n] for k in overlay["rowkey"].to_pylist()}
+            touched = [e for e in kp_dirs if _partition_value(e) in prefixes]
+            _link(prev, out, [e for e in kp_dirs if e not in touched])
+            paths = [os.path.join(prev, e) for e in touched]
+        else:
+            paths = [prev] if any(not e.startswith(("_", ".")) for e in entries) else []
+        if paths:
+            base = spark.read.schema(read_schema).option("basePath", prev).parquet(*paths)
+            base = base.select(*schema.fieldNames())
+        else:
+            base = spark.createDataFrame([], schema)
+        ov = _local_relation(spark, overlay, _with_tombstone(schema))
+        hit = ov["rowkey"].isNotNull()
+        kept = base.join(F.broadcast(ov), base["rowkey"] == ov["rowkey"], "left").where(
+            ~hit | ~ov[TOMBSTONE]
+        ).select(
+            base["rowkey"],
+            *[F.when(hit, ov[c]).otherwise(base[c]).alias(c) for c in schema.fieldNames()[1:]],
+        )
+        stored = base.select("rowkey").join(F.broadcast(ov.select("rowkey")), "rowkey", "left_semi")
+        added = (
+            ov.where(~ov[TOMBSTONE])
+            .join(F.broadcast(stored), "rowkey", "left_anti")
+            .select(*schema.fieldNames())
+            .coalesce(1)
+        )
+        df = kept.union(added)
+        os.makedirs(out, exist_ok=True)
+        if n:
+            df = df.withColumn("_kp", F.substring(F.col("rowkey").cast("string"), 1, n))
+            df.sortWithinPartitions("_kp", "rowkey").write.mode("append").partitionBy("_kp").parquet(out)
+        else:
+            df.sortWithinPartitions("rowkey").write.mode("append").parquet(out)
 
 
 def _local_relation(spark: SparkSession, table, schema: T.StructType) -> DataFrame:
@@ -531,6 +712,121 @@ def _local_relation(spark: SparkSession, table, schema: T.StructType) -> DataFra
         lambda: jvm.ArrowIteratorServer(),
     )
     return DataFrame(jvm.PythonSQLUtils.toDataFrame(batches, schema.json(), spark._jsparkSession), spark)
+
+
+def _overlay_schema(schema: T.StructType):
+    """The Arrow schema of an overlay of a table declared ``schema``."""
+    return to_arrow_schema(_with_tombstone(schema))
+
+
+def _with_tombstone(schema: T.StructType) -> T.StructType:
+    return T.StructType([*schema.fields, T.StructField(TOMBSTONE, T.BooleanType(), False)])
+
+
+def _read_overlay(snap: str):
+    """The overlay of snapshot ``snap`` as stored (an Arrow table), or
+    None when the snapshot has none."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(snap, DELTA_DIR, OVERLAY_FILE)
+    if not os.path.exists(path):
+        return None
+    with pq.ParquetFile(path) as pf:
+        return pf.read()
+
+
+def _live(overlay):
+    """The overlay's rows that are not tombstones."""
+    import pyarrow.compute as pc
+
+    return overlay.filter(pc.invert(overlay[TOMBSTONE]))
+
+
+def _fold(base, overlay, keys: list):
+    """``base`` (rows of the wanted ``keys``, cast to the read schema)
+    with ``overlay`` applied: a row whose key the overlay holds gives
+    way to the overlay's row of that key, or to nothing for a
+    tombstone."""
+    import pyarrow.compute as pc
+
+    wanted = pa.array(keys, base.schema.field("rowkey").type)
+    hit = overlay.filter(pc.is_in(overlay["rowkey"], value_set=wanted))
+    base = base.filter(pc.invert(pc.is_in(base["rowkey"], value_set=hit["rowkey"])))
+    return pa.concat_tables([base, _aligned(_live(hit), base.schema)])
+
+
+def _aligned(table, target):
+    """``table``'s columns in ``target``'s order, cast to ``target``'s
+    types; a column ``table`` lacks reads as null.  How a stored file
+    (a base file of an older schema, an overlay) meets the read
+    schema."""
+    cols = [
+        table[f.name] if f.name in table.column_names else pa.nulls(table.num_rows, f.type)
+        for f in target
+    ]
+    return pa.Table.from_arrays(cols, names=target.names).cast(target)
+
+
+def _admits(value: str | None, prefixes: list[str] | None, lo: str | None, hi: str | None) -> bool:
+    """True when the ``_kp`` value ``value`` meets a read's ``_kp``
+    constraints: one of ``prefixes`` (when given) and within
+    ``[lo, hi]`` (either end open when None).  A null value meets
+    none."""
+    return value is not None and (
+        (prefixes is None or value in prefixes)
+        and (lo is None or value >= lo)
+        and (hi is None or value <= hi)
+    )
+
+
+def _kp_dirs(snap: str) -> list[str]:
+    return [e for e in os.listdir(snap) if e.startswith("_kp=")]
+
+
+def _link(prev: str, out: str, entries: list[str]) -> None:
+    """Hardlink ``entries`` of snapshot ``prev`` into ``out``: a file,
+    or a directory's files."""
+    os.makedirs(out, exist_ok=True)
+    for entry in entries:
+        src, dst = os.path.join(prev, entry), os.path.join(out, entry)
+        if os.path.isdir(src):
+            os.makedirs(dst, exist_ok=True)
+            for f in os.listdir(src):
+                os.link(os.path.join(src, f), os.path.join(dst, f))
+        else:
+            os.link(src, dst)
+
+
+def _unlink(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
+def sql_literal(v) -> str:
+    """A row key or qualifier as a SQL literal; strings are quoted with
+    ``\\`` and ``'`` escaped."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    raise TypeError(f"no SQL literal for a key of type {type(v).__name__}")
+
+
+def rowkey_in(keys) -> "F.Column":
+    """``rowkey IN (keys)``, as SQL text when every key has a literal
+    (one expression, not a JVM call per key)."""
+    try:
+        return F.expr(f"rowkey IN ({', '.join(sql_literal(k) for k in keys)})")
+    except TypeError:
+        return F.col("rowkey").isin(list(keys))
 
 
 def _partition_value(entry: str) -> str | None:

@@ -188,7 +188,9 @@ def test_perfbench_traced_run_measures_every_layer(spark, tmp_path):
     is enabled and run one ``OpBase`` batch, one ``single_option``, one
     ``multi_map`` and one ``bulk_merge_increments`` on a tiny
     prefix-partitioned table: every span name ``Run.layer_metrics``
-    reads is recorded."""
+    reads is recorded, and the ``OpBase`` batch alone records the write
+    path's (``bulk_merge_increments`` records storage spans of its own,
+    so the union would hide an ``OpBase`` that bypasses storage)."""
     from pyspark.sql import functions as F
 
     from hpaste_spark.operators import mutations
@@ -209,6 +211,11 @@ def test_perfbench_traced_run_measures_every_layer(spark, tmp_path):
         run.Run.install_spans(stub)
         stub.tracer.enabled = True
         tbl.put("a1").value("v", 1).put("b1").value("v", 2).execute(spark)
+        # the first batch laid the table out in partitions; this one
+        # commits an overlay
+        n = len(stub.tracer.spans)
+        tbl.increment("b1").value("v", 1).execute(spark)
+        batch_spans = {s.name for s in stub.tracer.spans[n:]}
         assert tbl.query2(spark).with_key("a1").with_all_columns().single_option().column("v") == 1
         assert len(tbl.query2(spark).with_keys(["a1", "b1"]).with_all_columns().multi_map()) == 2
         deltas = spark.createDataFrame([("a1", {"w": 3})], "rowkey STRING, hits MAP<STRING, BIGINT>")
@@ -225,3 +232,6 @@ def test_perfbench_traced_run_measures_every_layer(spark, tmp_path):
         "storage.read", "storage.write", "storage.vacuum", "query.to_df", "query.exec",
         "row.build_rows", "mutations.execute", "mutations.bulk_merge",
     } <= names, names
+    assert {
+        "storage.read", "storage.write", "storage.vacuum", "mutations.execute",
+    } <= batch_spans, batch_spans

@@ -14,11 +14,12 @@ against a plain in-memory dict model of the same semantics:
 - within one batch, a repeated cell in the same op kind overwrites
   (matching HBase Put/Increment familyMap semantics)
 
-This fuzzes the distributed join/merge machinery the behavioral tests
-only probe pointwise.  Every program runs on two layouts: an
-unpartitioned table, and a ``partition_prefix_len=1`` table whose keys
-fall into two prefixes, so the batches after the first take the
-partial-rewrite path (read and rewrite the touched partitions only).
+This fuzzes the merge, the overlay commits and their compaction, which
+the behavioral tests only probe pointwise.  Every program runs on two
+layouts: an unpartitioned table, and a ``partition_prefix_len=1`` table
+whose keys fall into two prefixes, so a compaction there rewrites the
+overlay's partitions only.  Compactions follow hypothesis-drawn
+batches, and the table is checked against the model after every batch.
 """
 
 import dataclasses
@@ -142,41 +143,38 @@ def apply_model(model: dict, ops: list[dict]) -> None:
             row["m"][q] = row["m"].get(q, 0) + delta
 
 
-def run_engine(spark, tbl: PropTable, batches: list[list[dict]]) -> dict:
-    for ops in batches:
-        ob = None
-        for op in ops:
-            k = op["key"]
-            if op["kind"] == "put":
-                ob = (ob.put(k) if ob is not None else tbl.put(k))
-                if op["title"] is not None:
-                    ob = ob.value("title", op["title"])
-                if op["views"] is not None:
-                    ob = ob.value("views", op["views"])
-                if op["m"]:
-                    ob = ob.value_map("m", op["m"])
-            elif op["kind"] == "delete":
-                ob = (ob.delete(k) if ob is not None else tbl.delete(k))
-                if op["scope"] == "family":
-                    ob = ob.family(op["fam"])
-                elif op["scope"] == "values":
-                    ob = ob.values(op["fam"], op["quals"])
-            else:
-                ob = (ob.increment(k) if ob is not None else tbl.increment(k))
-                if op["views"] is not None:
-                    ob = ob.value("views", op["views"])
-                if op["m"]:
-                    ob = ob.value_map("m", op["m"])
-        ob.execute(spark)
+def run_batch(spark, tbl: PropTable, ops: list[dict]) -> None:
+    ob = None
+    for op in ops:
+        k = op["key"]
+        if op["kind"] == "put":
+            ob = (ob.put(k) if ob is not None else tbl.put(k))
+            if op["title"] is not None:
+                ob = ob.value("title", op["title"])
+            if op["views"] is not None:
+                ob = ob.value("views", op["views"])
+            if op["m"]:
+                ob = ob.value_map("m", op["m"])
+        elif op["kind"] == "delete":
+            ob = (ob.delete(k) if ob is not None else tbl.delete(k))
+            if op["scope"] == "family":
+                ob = ob.family(op["fam"])
+            elif op["scope"] == "values":
+                ob = ob.values(op["fam"], op["quals"])
+        else:
+            ob = (ob.increment(k) if ob is not None else tbl.increment(k))
+            if op["views"] is not None:
+                ob = ob.value("views", op["views"])
+            if op["m"]:
+                ob = ob.value_map("m", op["m"])
+    ob.execute(spark)
 
-    out = {}
-    for r in tbl.to_df(spark).collect():
-        out[r["rowkey"]] = {
-            "title": r["title"],
-            "views": r["views"],
-            "m": dict(r["m"] or {}),
-        }
-    return out
+
+def state(rows) -> dict:
+    return {
+        r["rowkey"]: {"title": r["title"], "views": r["views"], "m": dict(r["m"] or {})}
+        for r in rows
+    }
 
 
 # pinned cases: inserts of absent keys in both prefixes; then, in one
@@ -231,14 +229,13 @@ PINNED_QUOTED = [
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@example(batches=PINNED)
-@example(batches=PINNED_TYPED)
-@example(batches=PINNED_QUOTED)
-@given(batches=program)
-def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
-    model: dict = {}
-    for ops in batches:
-        apply_model(model, ops)
+@example(batches=PINNED, compact_after={0})
+@example(batches=PINNED_TYPED, compact_after={1})
+@example(batches=PINNED_QUOTED, compact_after=set())
+@given(batches=program, compact_after=st.sets(st.integers(0, 2), max_size=2))
+def test_mutation_merge_matches_model(spark, tmp_path_factory, batches, compact_after):
+    """After every batch — and after the compactions drawn to follow
+    some of them — a full scan and a keyed multi-get match the model."""
 
     # engine may keep a row whose cells were all deleted/none; normalize:
     # drop fully-empty rows on both sides
@@ -253,16 +250,23 @@ def test_mutation_merge_matches_model(spark, tmp_path_factory, batches):
         sch = Schema(base_dir=str(tmp_path_factory.mktemp("prop")))
         tbl = PropTable(sch, partition_prefix_len=prefix_len)
         sch.create_all(spark)
-        got = run_engine(spark, tbl, batches)
-        assert norm(got) == norm(model), f"partition_prefix_len={prefix_len}"
-        # point gets and a multi-get of every model key and an absent
-        # one return exactly the scanned rows (the keyed scan)
+        model: dict = {}
+        for i, ops in enumerate(batches):
+            apply_model(model, ops)
+            run_batch(spark, tbl, ops)
+            if i in compact_after:
+                tbl.compact(spark)
+            where = f"batch {i}, partition_prefix_len={prefix_len}"
+            scanned = tbl.to_df(spark).collect()
+            assert norm(state(scanned)) == norm(model), where
+            wanted = [*KEYS, QUOTED, ABSENT]
+            multi = tbl.query2(spark).with_keys(wanted).with_all_columns().multi_map()
+            assert {k: r.as_dict() for k, r in multi.items()} == {
+                r["rowkey"]: r.asDict() for r in scanned
+            }, f"multi-get, {where}"
+        # point gets of every model key and an absent one return exactly
+        # the scanned rows (the keyed scan)
         scanned = {r["rowkey"]: r.asDict() for r in tbl.to_df(spark).collect()}
-        wanted = [*model, ABSENT]
-        for k in wanted:
+        for k in [*model, ABSENT]:
             row = tbl.query2(spark).with_key(k).with_all_columns().single_option()
             assert (row and row.as_dict()) == scanned.get(k), f"get {k!r}, prefix_len={prefix_len}"
-        multi = tbl.query2(spark).with_keys(wanted).with_all_columns().multi_map()
-        assert {k: r.as_dict() for k, r in multi.items()} == {
-            k: scanned[k] for k in wanted if k in scanned
-        }, f"multi-get, partition_prefix_len={prefix_len}"

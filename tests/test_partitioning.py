@@ -2,6 +2,9 @@
 gets and rowkey ranges (the HBase sorted-region analog, SURVEY §1.4).
 """
 
+import datetime as dt
+import os
+
 from hpaste_spark.schema import HTable, Schema
 
 
@@ -159,6 +162,47 @@ def test_concurrent_writers_never_lose_updates(spark, base_dir):
     assert got == ["k1", "k3"]
     assert not os.path.exists(claim), "claim released after publish"
 
+    # a writer publishes between another batch's read and its commit:
+    # the batch merged from the replaced snapshot fails, the writer's
+    # update survives
+    from hpaste_spark.sources.storage import ParquetStorage
+
+    write_partial = ParquetStorage.write_partial
+
+    def racing(self, *args, **kwargs):
+        ParquetStorage.write_partial = write_partial
+        tbl.put("a3").value("v", 3).execute(spark)
+        return write_partial(self, *args, **kwargs)
+
+    ParquetStorage.write_partial = racing
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            tbl.put("a2").value("v", 2).execute(spark)
+    finally:
+        ParquetStorage.write_partial = write_partial
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"k1": 1, "k3": 3, "a3": 3}
+
+    # the bulk sink's full rewrite has the same window
+    from hpaste_spark.operators.mutations import bulk_merge_put
+
+    write = ParquetStorage.write
+
+    def racing_write(self, *args, **kwargs):
+        ParquetStorage.write = write
+        tbl.put("a4").value("v", 4).execute(spark)
+        return write(self, *args, **kwargs)
+
+    batch = spark.createDataFrame([("b1", 5, None)], tbl.spark_schema())
+    ParquetStorage.write = racing_write
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            bulk_merge_put(tbl, batch)
+    finally:
+        ParquetStorage.write = write
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"k1": 1, "k3": 3, "a3": 3, "a4": 4}
+
 
 def test_failed_write_leaves_no_unpublished_snapshot(spark, base_dir, monkeypatch):
     """A write that fails after its data landed (here in the sticky-
@@ -218,32 +262,129 @@ def _jobs_in(spark, action) -> int:
 
 def test_batch_commit_is_shuffle_free(spark, base_dir, monkeypatch):
     """On prefix-partitioned storage an OpBase batch of puts, increments
-    and inserts merges with broadcast joins only: at most 3 jobs (two
-    broadcasts and the write) and no hash-partitioned exchange in the
-    written plan.  A point get runs at most 2 jobs (no schema
-    inference: the declared schema is read)."""
-    from hpaste_spark.sources.storage import ParquetStorage
+    and inserts commits in at most 3 jobs, and compacting its overlay
+    writes a plan with no hash-partitioned exchange (the overlay is
+    broadcast into the base files' own tasks).  A point get runs at
+    most 2 jobs (no schema inference: the declared schema is read)."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
     tbl = _make(spark, base_dir)
     assert tbl.storage.supports_partial_rewrite()
-    written = []
-    write_partial = ParquetStorage.write_partial
-
-    def capture(self, df, touched):
-        written.append(df)
-        return write_partial(self, df, touched)
-
-    monkeypatch.setattr(ParquetStorage, "write_partial", capture)
     op = tbl.put("a1").value("v", 10).increment("b1").value("v", 4).put("c9").value("v", 9)
     assert _jobs_in(spark, lambda: op.execute(spark)) <= 3
+    expected = {"a1": 10, "a2": 2, "b1": 7, "c1": 4, "c2": 5, "c9": 9}
+    assert {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()} == expected
+
+    written, parquet = [], DataFrameWriter.parquet
+
+    def capture(self, path, *a, **k):
+        written.append(self._df)
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    tbl.compact(spark)
     assert len(written) == 1
     assert "Exchange hashpartitioning" not in plan_of(written[0])
 
-    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
-    assert rows == {"a1": 10, "a2": 2, "b1": 7, "c1": 4, "c2": 5, "c9": 9}
+    assert {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()} == expected
     get = tbl.query2(spark).with_key("c2").with_all_columns()
     assert _jobs_in(spark, get.single) <= 2
     assert get.single().column("v") == 5
+
+
+def test_overlay_commit_and_get_run_no_job(spark, base_dir):
+    """An OpBase commit on a prefix-partitioned table reads its keys,
+    merges and publishes its overlay on the driver: no Spark job.  A get
+    and a multi-get of the overlaid snapshot run none either, and see
+    the overlay's puts, inserts and deletes."""
+    tbl = _make(spark, base_dir)
+    op = tbl.put("a1").value("v", 10).increment("b1").value("v", 4).put("c9").value("v", 9)
+    assert _jobs_in(spark, lambda: op.execute(spark)) == 0
+    assert _jobs_in(spark, lambda: tbl.delete("c1").execute(spark)) == 0
+    get = tbl.query2(spark).with_key("b1").with_all_columns()
+    assert _jobs_in(spark, get.single_option) == 0
+    assert get.single().column("v") == 7
+    multi = tbl.query2(spark).with_keys(["a1", "a2", "c1", "c9"]).with_all_columns()
+    assert _jobs_in(spark, multi.multi_map) == 0
+    assert {k: r.column("v") for k, r in multi.multi_map().items()} == {"a1": 10, "a2": 2, "c9": 9}
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"a1": 10, "a2": 2, "b1": 7, "c2": 5, "c9": 9}
+
+
+def test_read_version_reads_its_own_overlay(spark, base_dir):
+    """``read(version=N)`` folds snapshot N's overlay, not the current
+    one's: each version's scan and keyed read return that version's
+    rows."""
+    from hpaste_spark.sources.storage import DELTA_DIR
+
+    tbl = _make(spark, base_dir)
+    st = tbl.storage
+    st.keep_versions = 10
+    states = {}
+    for key, v in [("a1", 11), ("b2", 12), ("a1", 13)]:
+        tbl.put(key).value("v", v).execute(spark)
+        states[st.current_version()] = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    tbl.delete("a2").execute(spark)
+    for version, rows in states.items():
+        assert os.path.isdir(os.path.join(st.snapshot_dir(version), DELTA_DIR))
+        scanned = {r["rowkey"]: r["v"] for r in st.read(spark, tbl.spark_schema(), version=version).collect()}
+        assert scanned == rows, version
+        got = tbl.query2(spark).with_keys(["a1", "a2", "b2"]).with_all_columns().as_of_version(version)
+        assert {k: r.column("v") for k, r in got.multi_map().items()} == {
+            k: rows[k] for k in ("a1", "a2", "b2") if k in rows
+        }, version
+
+
+def _kp_file_counts(tbl) -> dict:
+    snap = tbl.storage.snapshot_dir(tbl.storage.current_version())
+    return {
+        e: len([f for f in os.listdir(os.path.join(snap, e)) if f.endswith(".parquet")])
+        for e in os.listdir(snap)
+        if e.startswith("_kp=")
+    }
+
+
+def test_update_only_compactions_keep_file_counts(spark, base_dir):
+    """Compacting an overlay of updates replaces each row inside its
+    base file's task: five update-then-compact rounds leave every
+    ``_kp`` partition with the files it had, and no overlay."""
+    from hpaste_spark.sources.storage import DELTA_DIR
+
+    tbl = _make(spark, base_dir)
+    counts = _kp_file_counts(tbl)
+    assert set(counts) == {"_kp=a", "_kp=b", "_kp=c"}
+    expected = {"a1": 1, "a2": 2, "b1": 3, "c1": 4, "c2": 5}
+    for i in range(5):
+        op = tbl.put("a1").value("v", 100 + i).increment("c2").value("v", 1)
+        op.execute(spark)
+        expected["a1"] = 100 + i
+        expected["c2"] += 1
+        tbl.compact(spark)
+        snap = tbl.storage.snapshot_dir(tbl.storage.current_version())
+        assert not os.path.exists(os.path.join(snap, DELTA_DIR))
+        assert _kp_file_counts(tbl) == counts, i
+        assert {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()} == expected
+
+
+def test_overlay_past_isin_threshold_compacts(spark, base_dir):
+    """A commit whose overlay would hold more than ``ISIN_THRESHOLD``
+    keys compacts inline: the published snapshot has no overlay, holds
+    every row, and has dropped the row the overlay deleted."""
+    from hpaste_spark.sources.storage import DELTA_DIR, ISIN_THRESHOLD
+
+    tbl = _make(spark, base_dir)
+    tbl.put("a1").value("v", -1).delete("c1").execute(spark)
+    snap = tbl.storage.snapshot_dir(tbl.storage.current_version())
+    assert os.path.isdir(os.path.join(snap, DELTA_DIR))
+    keys = [f"b{i:04d}" for i in range(ISIN_THRESHOLD + 1)]
+    op = None
+    for i, k in enumerate(keys):
+        op = (op.put(k) if op else tbl.put(k)).value("v", i)
+    op.execute(spark)
+    snap = tbl.storage.snapshot_dir(tbl.storage.current_version())
+    assert not os.path.exists(os.path.join(snap, DELTA_DIR))
+    rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
+    assert rows == {"a1": -1, "a2": 2, "b1": 3, "c2": 5, **{k: i for i, k in enumerate(keys)}}
 
 
 def test_keyed_gets_run_no_job(spark, base_dir):
@@ -370,3 +511,38 @@ def test_get_past_file_bound_takes_spark_scan(spark, base_dir):
     multi = tbl.query2(spark).with_keys(["k03", "k39", "zz"]).with_all_columns()
     assert _jobs_in(spark, multi.multi_map) >= 1
     assert {k: r.column("v") for k, r in multi.multi_map().items()} == {"k03": 3, "k39": 39}
+
+
+def test_stored_null_maps_stay_null(spark, base_dir):
+    """A stored null map stays null through commits that do not name
+    it: a put of another key of its partition (only the batch's keys
+    are merged), a scoped delete of another family of its own row (the
+    merge's relation carries the stored null map as null, not as an
+    empty map), and a compaction."""
+
+    class MapTable(HTable):
+        def __init__(self, schema: Schema):
+            super().__init__(schema, "map_table", key_type=str, partition_prefix_len=1)
+            self.v = self.column(self.family("meta"), "v", "long")
+            self.m = self.family_map("m", str, int)
+
+    sch = Schema(base_dir=base_dir)
+    tbl = MapTable(sch)
+    sch.create_all(spark)
+    tbl.overwrite(spark.createDataFrame(
+        [("a1", 1, {"v": dt.datetime(2020, 1, 1)}, None, None), ("a2", 2, None, None, None)],
+        tbl.spark_schema(),
+    ))
+
+    def maps(key):
+        row = {r["rowkey"]: r for r in tbl.to_df(spark).collect()}[key]
+        got = tbl.query2(spark).with_key(key).with_all_columns().single().as_dict()
+        assert (got["m"], got["m__ts"]) == (row["m"], row["m__ts"])
+        return row["m"], row["m__ts"]
+
+    tbl.put("a3").value("v", 3).execute(spark)
+    assert maps("a1") == maps("a2") == (None, None)
+    tbl.delete("a1").values("meta", ["v"]).execute(spark)
+    assert maps("a1") == (None, None)
+    tbl.compact(spark)
+    assert maps("a1") == maps("a2") == (None, None)
