@@ -198,9 +198,11 @@ class ParquetStorage:
         it Spark itself lists files with a job, not on the driver) or
         when the selected row groups exceed
         ``spark.sql.autoBroadcastJoinThreshold`` compressed (what Spark
-        already moves through the driver for a broadcast).  Both scans
-        return the rows holding a key; the keyed one returns no others,
-        so a caller that filters to its keys gets the same rows.
+        already moves through the driver for a broadcast); on a
+        prefix-partitioned snapshot it then reads only the keys' ``_kp``
+        partitions.  Both scans return the rows holding a key; the keyed
+        one returns no others, so a caller that filters to its keys gets
+        the same rows.
 
         Both scans fold the snapshot's overlay over its base, on the
         driver: base rows whose key the overlay holds are dropped, and
@@ -222,12 +224,16 @@ class ParquetStorage:
         snap = self.snapshot_dir(version)
         kp_dirs = _kp_dirs(snap)
         overlay = _read_overlay(snap)
-        if keys and schema is not None:
+        n = self.partition_prefix_len
+        if keys and schema is not None and _native_keys(schema["rowkey"].dataType, keys):
             table = self._keyed_scan(spark, schema, snap, kp_dirs, keys)
             if table is not None:
                 if overlay is not None:
                     table = _fold(table, overlay, keys)
                 return _local_relation(spark, table, schema)
+            if kp_dirs and n and key_prefixes is None:
+                # Spark's scan still reads only the keys' partitions
+                key_prefixes = sorted({str(k)[:n] for k in keys})
         df = self._scan(spark, schema, snap, kp_dirs, key_prefixes, key_prefix_range)
         if overlay is None:
             return df
@@ -235,7 +241,6 @@ class ParquetStorage:
         # them, the compaction bound); its live rows a local relation
         df = df.filter(~rowkey_in(overlay["rowkey"].to_pylist()))
         live = _live(overlay)
-        n = self.partition_prefix_len
         if kp_dirs and n and (key_prefixes is not None or key_prefix_range is not None):
             lo, hi = key_prefix_range or (None, None)
             admitted = [_admits(str(k)[:n], key_prefixes, lo, hi) for k in live["rowkey"].to_pylist()]
@@ -253,36 +258,21 @@ class ParquetStorage:
         key_prefixes: list[str] | None,
         key_prefix_range: tuple[str | None, str | None] | None,
     ) -> DataFrame:
-        """Spark's scan of the snapshot's base files.  When ``_kp``
-        constraints admit at most half of the partition directories,
-        only those are listed, under ``basePath`` so ``_kp`` stays a
-        partition column; past that, listing the snapshot root costs
-        less than listing each directory as its own path.  The filters
-        stay either way, so the plan shows them as PartitionFilters."""
-        reader = spark.read
-        if schema is not None:
+        """Spark's scan of the snapshot's base files.  The ``_kp``
+        constraints filter the partition column before it is dropped,
+        so the plan shows them as PartitionFilters and only the admitted
+        directories' files are read."""
+        if schema is None:
+            df = spark.read.parquet(snap)
+        else:
             if kp_dirs:
                 schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
-            reader = reader.schema(schema)
+            df = spark.read.schema(schema).parquet(snap)
         if not kp_dirs:
-            return reader.parquet(snap)
-        lo, hi = key_prefix_range or (None, None)
-        paths = [snap]
-        if key_prefixes is not None or key_prefix_range is not None:
-            admitted = [
-                os.path.join(snap, e) for e in kp_dirs
-                if _admits(_partition_value(e), key_prefixes, lo, hi)
-            ]
-            if 2 * len(admitted) <= len(kp_dirs):
-                paths = admitted
-        if paths:
-            df = reader.option("basePath", snap).parquet(*paths)
-        elif schema is not None:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = reader.parquet(snap)
+            return df
         if key_prefixes is not None:
             df = df.filter(F.col("_kp").isin([*key_prefixes]))
+        lo, hi = key_prefix_range or (None, None)
         if lo is not None:
             df = df.filter(F.col("_kp") >= lo)
         if hi is not None:
@@ -294,16 +284,13 @@ class ParquetStorage:
         self, spark: SparkSession, schema: T.StructType, snap: str, kp_dirs: list[str], keys: list
     ):
         """The base rows of the driver-side scan of :meth:`read` for
-        ``keys``, as an Arrow table cast to ``to_arrow_schema(schema)``,
-        or None when the read is past one of its bounds."""
+        ``keys`` (see :func:`_native_keys`), as an Arrow table cast to
+        ``to_arrow_schema(schema)``, or None when the read is past one
+        of its bounds."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        key_type = schema["rowkey"].dataType
-        if len(keys) > ISIN_THRESHOLD or not (
-            isinstance(key_type, T.StringType) and all(type(k) is str for k in keys)
-            or isinstance(key_type, _INTEGRAL_KEYS) and all(type(k) is int for k in keys)
-        ):
+        if len(keys) > ISIN_THRESHOLD:
             return None
         if not kp_dirs:
             dirs = [snap]
@@ -552,14 +539,6 @@ class ParquetStorage:
         except FileNotFoundError:
             return None
 
-    def supports_partial_rewrite(self) -> bool:
-        """True when the CURRENT snapshot is prefix-partitioned, so a
-        compaction rewrites only the overlay's partitions."""
-        if not (self.partition_prefix_len and self.exists()):
-            return False
-        cur = self.snapshot_dir(self.current_version())
-        return os.path.isdir(cur) and bool(_kp_dirs(cur))
-
     def write_partial(
         self, spark: SparkSession, schema: T.StructType, rows: list, keys: list, read_version: int
     ) -> int:
@@ -655,20 +634,13 @@ class ParquetStorage:
         task (``coalesce(1)``)."""
         n = self.partition_prefix_len
         entries = os.listdir(prev) if os.path.isdir(prev) else []
-        kp_dirs = [e for e in entries if e.startswith("_kp=")]
-        read_schema = schema
-        if kp_dirs:
-            read_schema = T.StructType([*schema.fields, T.StructField("_kp", T.StringType())])
+        kp_dirs = _kp_dirs(prev) if entries else []
+        prefixes = None
         if kp_dirs and n:
-            prefixes = {str(k)[:n] for k in overlay["rowkey"].to_pylist()}
-            touched = [e for e in kp_dirs if _partition_value(e) in prefixes]
-            _link(prev, out, [e for e in kp_dirs if e not in touched])
-            paths = [os.path.join(prev, e) for e in touched]
-        else:
-            paths = [prev] if any(not e.startswith(("_", ".")) for e in entries) else []
-        if paths:
-            base = spark.read.schema(read_schema).option("basePath", prev).parquet(*paths)
-            base = base.select(*schema.fieldNames())
+            prefixes = sorted({str(k)[:n] for k in overlay["rowkey"].to_pylist()})
+            _link(prev, out, [e for e in kp_dirs if _partition_value(e) not in prefixes])
+        if kp_dirs or any(not e.startswith(("_", ".")) for e in entries):
+            base = self._scan(spark, schema, prev, kp_dirs, prefixes, None)
         else:
             base = spark.createDataFrame([], schema)
         ov = _local_relation(spark, overlay, _with_tombstone(schema))
@@ -712,6 +684,17 @@ def _local_relation(spark: SparkSession, table, schema: T.StructType) -> DataFra
         lambda: jvm.ArrowIteratorServer(),
     )
     return DataFrame(jvm.PythonSQLUtils.toDataFrame(batches, schema.json(), spark._jsparkSession), spark)
+
+
+def _native_keys(key_type: T.DataType, keys: list) -> bool:
+    """True when ``keys`` are all ``str`` on a string rowkey or all
+    ``int`` on an integral one: keys pyarrow can match against the
+    stored rowkeys, and whose Python ``str`` is the rowkey cast to
+    string, so ``str(k)[:n]`` names the key's ``_kp`` directory."""
+    return (
+        isinstance(key_type, T.StringType) and all(type(k) is str for k in keys)
+        or isinstance(key_type, _INTEGRAL_KEYS) and all(type(k) is int for k in keys)
+    )
 
 
 def _overlay_schema(schema: T.StructType):

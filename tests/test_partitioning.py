@@ -214,11 +214,11 @@ def test_failed_write_leaves_no_unpublished_snapshot(spark, base_dir, monkeypatc
 
     import pytest
 
-    from hpaste_spark.sources.storage import ParquetStorage
+    from hpaste_spark.sources.storage import ParquetStorage, _kp_dirs
 
     tbl = _make(spark, base_dir)
     storage = tbl.storage
-    assert storage.supports_partial_rewrite()
+    assert _kp_dirs(storage.snapshot_dir(storage.current_version()))
     cur, on_disk = storage.current_version(), storage.versions()
 
     def fail(*_a, **_k):
@@ -268,8 +268,10 @@ def test_batch_commit_is_shuffle_free(spark, base_dir, monkeypatch):
     most 2 jobs (no schema inference: the declared schema is read)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from hpaste_spark.sources.storage import _kp_dirs
+
     tbl = _make(spark, base_dir)
-    assert tbl.storage.supports_partial_rewrite()
+    assert _kp_dirs(tbl.storage.snapshot_dir(tbl.storage.current_version()))
     op = tbl.put("a1").value("v", 10).increment("b1").value("v", 4).put("c9").value("v", 9)
     assert _jobs_in(spark, lambda: op.execute(spark)) <= 3
     expected = {"a1": 10, "a2": 2, "b1": 7, "c1": 4, "c2": 5, "c9": 9}
@@ -385,6 +387,23 @@ def test_overlay_past_isin_threshold_compacts(spark, base_dir):
     assert not os.path.exists(os.path.join(snap, DELTA_DIR))
     rows = {r["rowkey"]: r["v"] for r in tbl.to_df(spark).collect()}
     assert rows == {"a1": -1, "a2": 2, "b1": 3, "c2": 5, **{k: i for i, k in enumerate(keys)}}
+
+
+def test_read_past_isin_threshold_reads_keys_partitions(spark, base_dir):
+    """More than ``ISIN_THRESHOLD`` keys (the read of an ``OpBase``
+    batch that size) take Spark's scan, which still reads only the
+    keys' ``_kp`` partitions: the scan's PartitionFilters name the keys'
+    prefix, and the overlay's rows of other partitions stay out."""
+    from hpaste_spark.sources.storage import ISIN_THRESHOLD, rowkey_in
+
+    tbl = _make(spark, base_dir)
+    tbl.put("b2").value("v", 20).put("a9").value("v", 90).execute(spark)
+    keys = ["b1", "b2", *[f"b{i:04d}" for i in range(ISIN_THRESHOLD)]]
+    df = tbl.to_df(spark, keys=keys)
+    filters = [line for line in plan_of(df).splitlines() if "PartitionFilters" in line]
+    assert filters and all("_kp" in line and "= b)" in line for line in filters), filters
+    assert {r["rowkey"]: r["v"] for r in df.collect()} == {"b1": 3, "b2": 20}
+    assert {r["rowkey"] for r in df.filter(rowkey_in(keys)).collect()} == {"b1", "b2"}
 
 
 def test_keyed_gets_run_no_job(spark, base_dir):
